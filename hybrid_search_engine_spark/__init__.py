@@ -8,11 +8,11 @@ A from-scratch rebuild of the query semantics of
 - Text extraction/tokenization via vectorized Arrow pandas UDFs whose
   pure-Python core (:mod:`.reference_semantics`) is shared with the test
   oracle, making byte-parity per url a tautology enforced by tests.
-- Term-partitioned posting lists with delta-gap varint block compression,
-  skip pointers and block-max metadata (``operators/postings.py``).
-- Block-max WAND top-k over posting partitions, merged globally
-  (``operators/wand.py``); a naive exact broadcast-join scorer
-  (``operators/score.py``) is the correctness backstop.
+- Doc-sharded posting blocks built in Spark SQL and stored as plain
+  Parquet columns with a block-max bound (``operators/postings.py``).
+- One BM25 scorer: blocks exploded and scored in the JVM, single query or
+  batch, merged globally (``operators/score.py``); a broadcast join over
+  the tf table is the correctness backstop.
 - Resumable builds with per-partition lineage manifest (``build/manifest.py``).
 - Training-data-pipeline operators: dedup (exact / MinHash-LSH / SimHash /
   n-gram Jaccard / embedding-cosine), similarity search, text analysis,

@@ -4,7 +4,7 @@ The manifest is a JSON-lines file at ``<index_dir>/_manifest.jsonl``; one
 record per completed shard:
 
     {"shard_id": 3, "status": "done", "n_terms":..., "n_blocks":...,
-     "n_postings":..., "payload_bytes":..., "skew_ratio":...,
+     "n_postings":..., "skew_ratio":...,
      "source_fingerprint": {"n_docs":..., "max_warc_ts":...},
      "built_at":..., "attempt":..., "elapsed_s":..., "docs_per_sec":...}
 
@@ -27,13 +27,16 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.postings import (
+    POSTINGS_FORMAT,
     build_postings,
     read_postings,
     shard_metrics,
@@ -66,18 +69,38 @@ def _manifest_path(index_dir: str) -> str:
 
 
 def read_manifest(index_dir: str) -> list[dict]:
+    """Every committed record. A crash in the middle of an append leaves an
+    unterminated final line; it never committed, so it is skipped."""
     p = _manifest_path(index_dir)
     if not os.path.exists(p):
         return []
     with open(p) as f:
-        return [json.loads(line) for line in f if line.strip()]
+        lines = f.read().split("\n")
+    # the last piece is "" when the file ends in a newline, else torn
+    return [json.loads(line) for line in lines[:-1] if line.strip()]
 
 
 def append_manifest(index_dir: str, records: list[dict]) -> None:
     os.makedirs(index_dir, exist_ok=True)
-    with open(_manifest_path(index_dir), "a") as f:
+    p = _manifest_path(index_dir)
+    if os.path.exists(p):
+        # drop a torn tail first, so the new records start on their own line
+        with open(p, "rb+") as f:
+            data = f.read()
+            if data and not data.endswith(b"\n"):
+                f.truncate(data.rfind(b"\n") + 1)
+    with open(p, "a") as f:
         for r in records:
             f.write(json.dumps(r, sort_keys=True) + "\n")
+
+
+def _write_json_atomic(path: str, obj) -> None:
+    """Write ``obj`` as JSON so a crash leaves the old file or the new one,
+    never a torn one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
 
 
 def source_fingerprint(docs: DataFrame) -> dict:
@@ -133,7 +156,7 @@ def build_index(
     the bit-parity driver-side xxhash64 — rank-identity between the two
     domains is pinned by test. "string" is the portable/debug tier
     (postings introspectable by eye; the domain streaming segments use,
-    since compact_segments decodes term values back out of blocks).
+    since compact_segments reads term values back out of blocks).
     None (the default) resolves to $HSE_BUILD_TERM_DOMAIN or "hash" —
     the env override exists so benchmark harnesses can A/B the domains
     without threading a parameter through every entry point."""
@@ -156,10 +179,12 @@ def build_index(
         raise ValueError(f"term_domain must be 'string' or 'hash', "
                          f"got {term_domain!r}")
     fp = source_fingerprint(docs)  # one agg: count + content hash (fused)
-    # the term domain is part of build lineage: shards/tf built in one
-    # domain must not satisfy a resume in the other (keys differ), so it
-    # rides inside the fingerprint every resume check compares
+    # the term domain and the posting format are part of build lineage:
+    # shards/tf built in one domain or format must not satisfy a resume in
+    # another (keys or columns differ), so both ride inside the fingerprint
+    # every resume check compares
     fp["term_domain"] = term_domain
+    fp["postings_format"] = POSTINGS_FORMAT
     _log("fingerprint done")
     done = done_shards(index_dir, fp)
     todo = [s for s in range(n_shards) if s not in done]
@@ -202,8 +227,7 @@ def build_index(
         tfdl = term_frequencies_with_doclen(docs, n_partitions=p_stats,
                                             term_domain=term_domain)
         tfdl.write.mode("overwrite").parquet(tf_dir)
-        with open(tf_marker, "w") as f:
-            json.dump(fp, f)
+        _write_json_atomic(tf_marker, fp)
         _log("tf table written")
     tf = spark.read.parquet(tf_dir)
 
@@ -261,7 +285,11 @@ def build_index(
         )
         # dynamic partition overwrite: only the shards in `todo` are
         # replaced; previously-completed shard dirs are untouched, and a
-        # crashed shard's partial files are replaced exactly on retry
+        # crashed shard's partial files are replaced exactly on retry. A
+        # build that reuses no shard starts empty, so no shard dir of an
+        # earlier source or format (e.g. one left empty now) survives it.
+        if not done:
+            shutil.rmtree(posting_path, ignore_errors=True)
         write_postings(postings, posting_path, mode="overwrite")
         _log("postings written")
         # per-shard metrics from what we just wrote
@@ -277,14 +305,13 @@ def build_index(
         records = []
         for s in todo:
             m = metrics.get(s, {"n_terms": 0, "n_blocks": 0, "n_postings": 0,
-                                "payload_bytes": 0, "shard_id": s})
+                                "shard_id": s})
             records.append({
                 "shard_id": s,
                 "status": "done",
                 "n_terms": int(m["n_terms"]),
                 "n_blocks": int(m["n_blocks"]),
                 "n_postings": int(m["n_postings"]),
-                "payload_bytes": int(m["payload_bytes"]),
                 "skew_ratio": round(m["n_postings"] / mean_postings, 4),
                 "source_fingerprint": fp,
                 "built_at": now,
@@ -305,13 +332,11 @@ def build_index(
             raise doc_stats_err[0]
         _log("stats tables written")
     if not simulate_crash:
-        with open(os.path.join(index_dir, "stats", "corpus.json"), "w") as f:
-            json.dump({"doc_count": n_docs,
-                       "avg_doc_len": avg_doc_len,
-                       "k1": k1, "b": b, "n_shards": n_shards,
-                       "block_size": block_size,
-                       "term_domain": term_domain,
-                       "source_fingerprint": fp}, f)
+        _write_json_atomic(corpus_json, {
+            "doc_count": n_docs, "avg_doc_len": avg_doc_len,
+            "k1": k1, "b": b, "n_shards": n_shards,
+            "block_size": block_size, "term_domain": term_domain,
+            "source_fingerprint": fp})
 
     elapsed = time.time() - t0
     result = IndexBuildResult(
@@ -333,33 +358,25 @@ class IndexReader:
     whenever the vocabulary fits driver memory. At web scale leave it False:
     queries then do a parquet point-lookup pruned by the term IN-list.
 
-    ``cache_postings=True`` caches the postings hash-partitioned by
-    shard_id. The per-query plan is ``groupBy(shard_id).applyInPandas``:
-    against a raw parquet read it needs an exchange every query; against
-    the shard-partitioned cache the ClusteredDistribution(shard_id)
-    requirement is already satisfied, so a query is ONE stage (scan matched
-    terms → shard scorer) plus the k·P TakeOrdered merge — the warm-path
-    latency fix. Costs one upfront job + executor memory for the cache.
+    ``cache_postings=True`` caches the posting blocks hash-partitioned by
+    shard_id and term-sorted within each partition. The scorer's
+    ``groupBy(shard_id, doc_id)`` is then satisfied by the cache's
+    partitioning, so a single query is ONE stage (filter → explode → BM25
+    → sum) plus the driver-side TakeOrdered merge, and the term filter
+    skips cached batches by their min/max. Costs one upfront job and
+    executor memory for the blocks. Without the cache a query reads the
+    parquet and pays one exchange.
 
-    ``cache_tf=True`` additionally caches the build's materialized tf table
-    (doc_id, term, tf, doc_len) hash-partitioned by doc_id and term-sorted
-    within partitions, and ``search(mode="exact")`` scores it JVM-only with
-    zero joins and zero exchanges (literal term→weight map + exchange-free
-    doc-grain agg — ONE stage plus the driver TakeOrdered merge): measured
-    decomposition showed the pruned path's per-query floor is the
-    Arrow/python stage launch (~230 ms of a ~530 ms p50 at 1M docs), so the
-    latency tier stays entirely in codegen; the term-sorted batches give
-    in-memory batch min/max pruning on the isin filter. Memory cost ≈
-    decoded tf size — right for a latency-serving deployment, wrong for a
-    10^12-doc batch cluster (leave it off there; the pruned path is the
-    scale tier).
+    ``cache_tf=True`` is kept for callers written against the former
+    JVM-only tf-cache tier: the posting blocks now serve that tier, so it
+    means "cache the postings". Likewise ``search(mode=...)`` accepts
+    "pruned" or "exact" and scores exactly either way.
     """
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  cache_term_stats: bool = True,
                  cache_postings: bool = False,
-                 cache_tf: bool = False,
-                 tf_cache_width_mult: int = 4):
+                 cache_tf: bool = False):
         self.spark = spark
         self.postings = read_postings(spark, os.path.join(index_dir, "postings"))
         self.term_stats = spark.read.parquet(
@@ -374,109 +391,54 @@ class IndexReader:
         if self.corpus.get("term_domain", "string") == "hash":
             from ..functions.hashing import spark_xxhash64_str
             self._term_key = spark_xxhash64_str
-        if cache_postings:
+        if cache_postings or cache_tf:
             # partition count = min(n_shards, total cores): hash-partitioning
-            # by shard_id at ANY width satisfies the per-query
-            # groupBy(shard_id) ClusteredDistribution (several shards may
-            # share a partition; applyInPandas still sees whole groups), and
-            # a per-query job then runs exactly one task per core — ONE
-            # task wave. The previous fixed n_shards width ran 32 tasks on
-            # a 16-core cluster: two waves, double the per-query floor.
+            # by shard_id at ANY width satisfies the scorer's
+            # ClusteredDistribution(shard_id, doc_id), and a query then runs
+            # exactly one task per core — ONE task wave
             p = max(1, min(int(self.corpus["n_shards"]),
                            spark.sparkContext.defaultParallelism))
-            self.postings = self.postings.repartition(p, "shard_id").cache()
+            self.postings = (self.postings.repartition(p, "shard_id")
+                             .sortWithinPartitions("term").cache())
             self.postings.count()
-        # hash-partitioned cache ⇒ whole shards per partition ⇒ the scorer
-        # can run as mapInPandas instead of groupBy().applyInPandas
-        self._shard_clustered = bool(cache_postings)
+        # the scorers name the postings in SQL text; the view lives as long
+        # as the reader (dropping a view uncaches its plan)
+        self._view = f"hse_postings_{uuid.uuid4().hex}"
+        self.postings.createOrReplaceTempView(self._view)
         self._tstats_arg = self.term_stats
         if cache_term_stats:
             self._tstats_arg = {
                 r["term"]: float(r["idf"])
                 for r in self.term_stats.select("term", "idf").collect()
             }
-        self.tf = None
-        if cache_tf:
-            # hash-partitioned by doc_id so the exact tier's
-            # groupBy(doc_id) aggregation needs NO exchange (the cache's
-            # HashPartitioning satisfies the agg's ClusteredDistribution):
-            # a query is ONE stage + the driver TakeOrdered merge. Batches
-            # inside each partition stay term-sorted so the isin(term)
-            # filter still prunes cached batches by min/max stats.
-            # Width = tf_cache_width_mult × cores (default 4), NOT cores:
-            # HashPartitioning(doc_id) satisfies the agg's
-            # ClusteredDistribution at ANY width, but the per-partition
-            # term sort is the cache build's dominant cost (294 s of a
-            # 339 s build at 88M rows / 16 partitions — external-sort
-            # spill; BENCH/BASELINE.md round-4 section), and 4× narrower
-            # sorts stay in memory. Query-side the extra tasks are pruned
-            # batch scans, not extra stages — but every query still
-            # schedules mult×cores tasks, so a latency deployment on a
-            # big cluster can set tf_cache_width_mult=1 (minimum per-query
-            # task count) and eat the one-time build-sort spill, while a
-            # memory-tight build keeps 4. The multiplier is a constructor
-            # knob precisely because it couples a build-time concern
-            # (sort working set) to a steady-state one (tasks per query).
-            p = max(tf_cache_width_mult
-                    * spark.sparkContext.defaultParallelism, 8)
-            self.tf = (
-                spark.read.parquet(os.path.join(index_dir, "tf"))
-                .repartition(p, "doc_id")
-                .sortWithinPartitions("term")
-                .cache()
-            )
-            self.tf.count()
+
+    def _weights(self, queries: list, mode: str) -> dict:
+        if mode not in ("pruned", "exact"):
+            raise ValueError(f"mode must be 'pruned' or 'exact', got {mode!r}")
+        from ..operators.score import query_weights
+
+        return query_weights(queries, self._tstats_arg, self._term_key)
 
     def search(self, query: str, k: int = 10, mode: str = "pruned"):
-        """mode: 'pruned' (block-max, scale tier), 'exact' (JVM-only over
-        the tf cache when cache_tf=True — latency tier — else the pruned
-        machinery's exact scorer)."""
-        if mode == "exact" and self.tf is not None:
-            return self._search_exact_cached(query, k)
-        from ..operators.wand import search_index
+        """Top-k → (doc_id, score)."""
+        from ..operators.score import search_postings
 
-        return search_index(
-            self.spark, self.postings, self._tstats_arg,
-            self.corpus["avg_doc_len"], query, k=k,
-            k1=self.corpus["k1"], b=self.corpus["b"], mode=mode,
-            shard_clustered=self._shard_clustered,
-            term_key=self._term_key,
-        )
-
-    def _search_exact_cached(self, query: str, k: int):
-        from collections import Counter
-
-        from ..operators.score import (
-            score_single_query_onestage,
-            topk_single,
-        )
-        from ..operators.wand import resolve_term_idf
-        from ..reference_semantics import tokenize
-
-        toks = tokenize(query, remove_stopwords=True)
-        if self._term_key is not None:
-            toks = [self._term_key(t) for t in toks]
-        toks = Counter(toks)
-        idf = resolve_term_idf(self._tstats_arg, sorted(toks))
-        weights = {t: idf[t] * float(w) for t, w in toks.items() if t in idf}
+        weights = self._weights([(0, query)], mode)
         if not weights:
             return local_df(self.spark, [], "doc_id long, score double")
-        # no query-side DataFrame and no join at all: term→idf·qweight rides
-        # as a literal map expression; the doc_id-partitioned cache makes the
-        # aggregation exchange-free (see __init__) — one stage end-to-end
-        scores = score_single_query_onestage(
-            self.tf, weights, self.corpus["avg_doc_len"],
-            k1=self.corpus["k1"], b=self.corpus["b"])
-        return topk_single(scores, k)
+        return search_postings(
+            self.spark, self._view, weights[0], self.corpus["avg_doc_len"],
+            k=k, k1=self.corpus["k1"], b=self.corpus["b"])
 
     def search_batch(self, queries: list, k: int = 10, mode: str = "pruned"):
         """[(query_id, text)] → (query_id, rank, doc_id, score), one plan."""
-        from ..operators.wand import search_index_batch
+        from ..operators.score import search_postings_batch
 
-        return search_index_batch(
-            self.spark, self.postings, self._tstats_arg,
-            self.corpus["avg_doc_len"], queries, k=k,
-            k1=self.corpus["k1"], b=self.corpus["b"], mode=mode,
-            shard_clustered=self._shard_clustered,
-            term_key=self._term_key,
-        )
+        weights = self._weights(queries, mode)
+        if not weights:
+            return local_df(
+                self.spark, [],
+                "query_id int, rank int, doc_id long, score double")
+        return search_postings_batch(
+            self.spark, self._view, weights, self.corpus["avg_doc_len"],
+            k=k, k1=self.corpus["k1"], b=self.corpus["b"])

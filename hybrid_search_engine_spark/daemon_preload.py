@@ -5,8 +5,9 @@ mapInPandas/applyInPandas/mapInArrow JOB forks a fresh set of workers from
 the daemon (measured: new worker PIDs on every query, with
 ``spark.python.worker.reuse=true`` explicit). Each fork then imports
 pandas + pyarrow on first use — ~250 ms of CPU per worker, paid per job,
-which dominated the single-query latency floor (~220 ms of a ~375 ms p50
-at 1M docs / local[16]; see bench_query_floor.py).
+which dominated the former Python-scored single-query latency floor
+(~220 ms of a ~375 ms p50 at 1M docs / local[16]); the Arrow UDFs of the
+extraction and dedup stages still pay it per job.
 
 Forking is copy-on-write: anything the daemon has already imported is
 instantly available in every forked worker. This module is a drop-in

@@ -319,14 +319,6 @@ def _hit_ratio(toks: Column, words: list[str]) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def lang_scores(text_col) -> list[Column]:
-    toks = lang_tokens(text_col)
-    return [
-        _hit_ratio(toks, ws).alias(f"score_{lang}")
-        for lang, ws in LANG_FUNCTION_WORDS.items()
-    ]
-
-
 def detect_language(text_col) -> Column:
     """Two-tier language ID, all native expressions (reference semantics
     model: language.py:66-138 wraps langdetect, ~50 languages; this covers
@@ -811,17 +803,6 @@ def rolling_prefix_hash(text_col, prefix_chars: int = 256) -> Column:
 # ---------------------------------------------------------------------------
 # repetition signals (Gopher-style, Rae et al. 2021 appendix A1.1)
 # ---------------------------------------------------------------------------
-
-def _ordered_ngrams(toks: Column, n: int) -> Column:
-    """Strict consecutive token n-grams — empty array when the doc has
-    fewer than n tokens (unlike dedup.token_ngrams, which degrades to a
-    whole-doc gram for the Jaccard use case)."""
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(F.sequence(F.lit(0), F.size(toks) - n),
-                    lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))),
-    ).otherwise(F.array().cast("array<string>"))
-
 
 _REP_STATS_UDF = None
 

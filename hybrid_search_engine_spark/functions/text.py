@@ -64,11 +64,6 @@ NONWS_CLASS_SQL = ("[^" + "".join(f"\\x{{{ord(c):02x}}}" for c in PY_WS)
 # --------------------------------------------------------------------------
 
 @pandas_udf(T.StringType())
-def strip_html_udf(html: pd.Series) -> pd.Series:
-    return html.map(strip_html)
-
-
-@pandas_udf(T.StringType())
 def preprocess_udf(text: pd.Series) -> pd.Series:
     return text.map(preprocess_text)
 

@@ -81,7 +81,6 @@ def main(argv: list[str] | None = None) -> None:
         "max_skew_ratio": max(
             (r.get("skew_ratio", 0.0) for r in shards.values()), default=0.0),
         "total_postings": sum(r.get("n_postings", 0) for r in shards.values()),
-        "payload_bytes": sum(r.get("payload_bytes", 0) for r in shards.values()),
     }), flush=True)
 
 

@@ -3,14 +3,16 @@
     spark-submit --py-files hse_spark.zip \\
         hybrid_search_engine_spark/jobs/query_job.py \\
         --index-dir <dir> (--query "..." ... | --queries-file f.txt)
-        [--k 10] [--mode pruned|exact] [--output <parquet-dir>]
+        [--k 10] [--output <parquet-dir>]
         [--no-cache-postings] [--local-cores N]
 
-All queries run as ONE batch plan (operators/wand.search_index_batch) —
-the per-query plan-compile cost is amortized, which is the throughput-path
-answer measured in BENCH/BASELINE.md. Results go to --output as parquet
-(query_id, rank, doc_id, score) or, without --output, to stdout as JSON
-lines per query.
+All queries run as ONE batch plan (IndexReader.search_batch →
+operators/score.search_postings_batch: the posting blocks of every query
+term, broadcast-joined to the (query_id, term, idf, qweight) table and
+scored in the JVM) — the per-query plan-compile cost is amortized, which
+is the throughput-path answer measured in BENCH/BASELINE.md. Results go
+to --output as parquet (query_id, rank, doc_id, score) or, without
+--output, to stdout as JSON lines per query.
 """
 
 from __future__ import annotations
@@ -29,7 +31,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--queries-file", default=None,
                     help="one query per line; ids are line numbers")
     ap.add_argument("--k", type=int, default=10)
-    ap.add_argument("--mode", choices=["pruned", "exact"], default="pruned")
     ap.add_argument("--output", default=None,
                     help="parquet output dir (default: JSON lines on stdout)")
     ap.add_argument("--no-cache-postings", action="store_true",
@@ -52,8 +53,7 @@ def main(argv: list[str] | None = None) -> None:
     t0 = time.time()
     reader = IndexReader(spark, args.index_dir,
                          cache_postings=not args.no_cache_postings)
-    out = reader.search_batch(list(enumerate(queries)), k=args.k,
-                              mode=args.mode)
+    out = reader.search_batch(list(enumerate(queries)), k=args.k)
     if args.output:
         out.write.mode("overwrite").parquet(args.output)
         n = spark.read.parquet(args.output).count()

@@ -563,9 +563,8 @@ def _verify_pairs_broadcast(cand: DataFrame, arrs: DataFrame,
     Why it exists: the join form ships each doc's array once per pair
     membership; on a dense near-dup corpus (sf0.1 bench: 230k candidate
     pairs over 4.9k docs, avg degree ~95) that is ~5.5 GB of array
-    traffic to verify a 40 MB array set. Same switch the WAND batch path
-    makes at BATCH_BROADCAST_MIN — when the side data fits a worker,
-    broadcast it and keep the big side skinny. The join plans remain the
+    traffic to verify a 40 MB array set. When the side data fits a
+    worker, broadcast it and keep the big side skinny. The join plans remain the
     scale path when candidate docs exceed VERIFY_BROADCAST_BUDGET.
 
     The LUT ships FLAT-PACKED — (sorted doc ids, offsets, one contiguous

@@ -32,15 +32,6 @@ def minmax_normalize(df: DataFrame, score_col: str, out_col: str,
     )
 
 
-def max_normalize(df: DataFrame, score_col: str, out_col: str,
-                  partition_cols: list[str] | None = None) -> DataFrame:
-    """x / max (HybridBM25Pipeline variant); max == 0 → 0."""
-    w = Window.partitionBy(*(partition_cols or []))
-    mx = F.max(score_col).over(w)
-    return df.withColumn(
-        out_col, F.when(mx == 0, F.lit(0.0)).otherwise(F.col(score_col) / mx))
-
-
 def fuse_hybrid(sem: DataFrame, lex: DataFrame, w_sem: float = 0.7,
                 w_lex: float = 0.3, id_col: str = "doc_id",
                 query_col: str | None = "query_id", k: int | None = None,
@@ -221,17 +212,4 @@ def evaluate_rankings(results: DataFrame, truth: DataFrame, k: int = 10
                 ).alias("mrr"),
         F.round(F.when(F.col("n_relevant") > 0, F.col("dcg") / idcg)
                 .otherwise(F.lit(0.0)), 9).alias("ndcg_at_k"),
-    )
-
-
-def evaluation_summary(per_query: DataFrame) -> DataFrame:
-    """Means + latency-style exact percentiles (evaluation.py:211-224 uses
-    np.percentile → exact `percentile`, not approx)."""
-    return per_query.agg(
-        F.round(F.avg("precision_at_k"), 9).alias("avg_precision"),
-        F.round(F.avg("recall_at_k"), 9).alias("avg_recall"),
-        F.round(F.avg("f1"), 9).alias("avg_f1"),
-        F.round(F.avg("mrr"), 9).alias("avg_mrr"),
-        F.round(F.avg("ndcg_at_k"), 9).alias("avg_ndcg"),
-        F.count(F.lit(1)).alias("n_queries"),
     )

@@ -112,20 +112,3 @@ def mmr_rerank(candidates: DataFrame, k: int, lambda_param: float = 0.5,
         })
 
     return df.groupBy("query_id").applyInPandas(fn, schema=schema)
-
-
-def diversify_fused(fused: DataFrame, emb: DataFrame, k: int,
-                    lambda_param: float = 0.5, id_col: str = "doc_id",
-                    vec_id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
-    """Optional stage after fusion.fuse_hybrid (the reference's
-    DiversityPipeline ordering: rank → fetch embeddings → MMR,
-    pipelines.py:570-604): hydrate the fused candidate pool with its
-    embeddings (broadcast-sized join — the pool is k-bounded) and MMR-select
-    the top k."""
-    cand = fused.join(
-        emb.select(F.col(vec_id_col).alias(id_col), vec_col), id_col)
-    return mmr_rerank(cand, k=k, lambda_param=lambda_param,
-                      query_col="query_id" if "query_id" in fused.columns else None,
-                      id_col=id_col, score_col="hybrid_score",
-                      vec_col=vec_col)

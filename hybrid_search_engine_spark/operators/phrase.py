@@ -23,8 +23,9 @@ Two tiers, proven equivalent by unit + property tests
   adjacency check. Cost is bounded by the rarest term's document
   frequency, not the corpus — the property that makes phrase queries
   interactive at 10^12 docs. Positions are monotonically sorted ints, so
-  the delta-gap varint codec in operators/codec.py applies unchanged when
-  the postings are serialized (documented, not duplicated here).
+  delta encoding applies when the postings are serialized (Parquet v2's
+  DELTA_BINARY_PACKED; the BM25 posting blocks in operators/postings.py
+  are written with that writer).
 
 Semantics: tokens are the parity tokenizer's `[a-z0-9_]+` findall over
 lowercased text, positions 1-based; a phrase of n terms matches at start

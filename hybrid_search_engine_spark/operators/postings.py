@@ -1,4 +1,4 @@
-"""Posting-list construction: term-partitioned encode, doc-shard layout.
+"""Posting-list construction: columnar blocks built in Spark SQL.
 
 Dataflow (explicit shapes — Catalyst won't invent these, SURVEY.md §4).
 Build path (build/manifest.py): tf arrives from the materialized tf table
@@ -6,30 +6,33 @@ WITH doc_len already attached (stats.term_frequencies_with_doclen), so the
 ONLY tf-grain shuffle in the posting build is the shard repartition:
 
     tf(doc_id, term, tf, doc_len)           [tf parquet — no doc_id join]
-      ⋈ broadcast(term_stats(term, idf))    [vocabulary-sized broadcast]
       → repartition(P, shard_id, term_bucket)  [THE tf-grain shuffle]
-      → sortWithinPartitions(shard_id, term, doc_id)
-      → mapInArrow(block encoder)           [Arrow-batch streaming, carries
-                                             (shard, term) runs across batches]
-      → postings(shard_id, term, block_id, first_doc, last_doc, n,
-                 deltas, tfs, dls, max_tf, max_score)
-      → write parquet partitioned by shard_id (idempotent per-shard overwrite)
+      ⋈ broadcast(term_stats(term, idf))    [vocabulary-sized broadcast]
+      → row_number() OVER (shard_id, term_bucket, term ORDER BY doc_id)
+        block_id = (rn - 1) div block_size  [the exchange above already
+                                             clusters the window: no sort
+                                             beyond the in-partition one]
+      → groupBy(shard_id, term_bucket, term, block_id):
+            postings  = sort_array(collect_list(struct(doc_id, tf, doc_len)))
+            max_score = max(BM25 contribution)   [block-max bound]
+      → write parquet partitioned by shard_id, writer v2 (idempotent
+        per-shard overwrite)
 
-(A caller with a bare tf(doc_id, term, tf) can still pass ``dstats`` — the
-co-keyed join path — but the fused form avoids sorting the whole tf relation
-twice for a sort-merge join at scale.)
+Every block is a plain Parquet column — ``array<struct<doc_id, tf,
+doc_len>>`` written by the Parquet v2 writer — so a query explodes
+and scores it in whole-stage codegen (operators/score.py) with no Python
+worker on either side of the index.
 
 Sharding doubles as the **explicit hot-term salting**: shard_id =
 pmod(hash(doc_id), n_shards), so a Zipf-head term's posting list is split
-into n_shards independently-encoded sub-lists of ~df/n_shards entries each —
-no single sort-run or encode call ever sees a whole hot term. Block-max
-metadata is shard-local and stays sound (SURVEY.md §7.3.4). Uniform doc
-hashing also bounds per-cell size for the sort: the largest (shard, term)
-cell is ~|docs in shard|, independent of term df.
+into n_shards independently-blocked sub-lists of ~df/n_shards entries each.
+``max_score`` is shard-local and stays a sound block-max bound (SURVEY.md
+§7.3.4), so block-max pruning can return as a SQL filter with no format
+change.
 
 The doc-shard layout is simultaneously the query-time unit: each shard holds
-complete postings (all terms) for its doc subset, so per-shard top-k is exact
-and the global merge is a k·P-row TakeOrderedAndProject (operators/wand.py).
+complete postings (all terms) for its doc subset, so a cache hash-partitioned
+by shard_id scores a query with no exchange (IndexReader).
 
 At 100 TB: n_shards scales with corpus size (target ~256 MB of postings per
 shard); the same plan runs unchanged — the repartition is the only full
@@ -38,149 +41,15 @@ shuffle of (doc,term,tf)-grain data, everything downstream is shard-local.
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from .codec import BLOCK_SIZE_DEFAULT
+from .score import bm25_contribution
 
-def _posting_schema(term_type: "T.DataType") -> T.StructType:
-    """Posting-block schema; ``term`` is StringType in the portable domain
-    and LongType in the hash domain (build/manifest.py term_domain)."""
-    return T.StructType([
-        T.StructField("shard_id", T.IntegerType(), False),
-        T.StructField("term", term_type, False),
-        T.StructField("block_id", T.IntegerType(), False),
-        T.StructField("first_doc", T.LongType(), False),
-        T.StructField("last_doc", T.LongType(), False),
-        T.StructField("n", T.IntegerType(), False),
-        T.StructField("deltas", T.BinaryType(), False),
-        T.StructField("tfs", T.BinaryType(), False),
-        T.StructField("dls", T.BinaryType(), False),
-        T.StructField("max_tf", T.IntegerType(), False),
-        T.StructField("max_score", T.DoubleType(), False),
-    ])
-
-
-POSTING_SCHEMA = _posting_schema(T.StringType())
-
-
-def with_shard(df: DataFrame, n_shards: int, doc_col: str = "doc_id") -> DataFrame:
-    """shard_id = pmod(hash(doc_id), n_shards) — deterministic, uniform."""
-    return df.withColumn(
-        "shard_id", F.pmod(F.hash(F.col(doc_col)), F.lit(n_shards)).cast("int")
-    )
-
-
-def _encoder_stream(k1: float, b: float, avgdl: float, block_size: int):
-    """mapInArrow iterator: rows sorted by (shard_id, term, doc_id) within
-    the partition; vectorized block encoding (codec._encode_runs_core) per
-    Arrow batch, carrying the unfinished (shard, term) run across batches.
-
-    Arrow-native on purpose: the previous mapInPandas form materialized a
-    Python str object PER POSTING ROW (Arrow→pandas conversion of the term
-    column — 15M allocations per 1M docs) just to find run boundaries.
-    Here term boundaries come from a C++ adjacent-inequality
-    (pc.not_equal over two slices), the numeric columns convert zero-copy,
-    the output term column is a `take` of the input Arrow array (one value
-    per BLOCK, not per row), and the varint payloads are wrapped as Arrow
-    BinaryArrays directly over the encoder's contiguous buffers — no
-    per-row Python objects anywhere in the hot path."""
-
-    # driver-side import: _encode_runs_core travels by value inside the
-    # closure (ensure_udf_serializable), so the worker needs no package on
-    # its sys.path; pyarrow is a plain site-packages import, safe on workers
-    from .codec import _encode_runs_core
-
-    def fn(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        def new_run_mask(tbl: "pa.Table") -> np.ndarray:
-            n = tbl.num_rows
-            shard = tbl.column("shard_id").chunk(0).to_numpy()
-            mask = np.empty(n, dtype=bool)
-            mask[0] = True
-            if n > 1:
-                terms = tbl.column("term").chunk(0)
-                ne_term = pc.not_equal(
-                    terms.slice(1), terms.slice(0, n - 1)
-                ).to_numpy(zero_copy_only=False)
-                mask[1:] = (shard[1:] != shard[:-1]) | ne_term
-            return mask
-
-        def encode_head(tbl: "pa.Table", new_run: np.ndarray) -> "pa.RecordBatch":
-            col = {name: tbl.column(name).chunk(0) for name in
-                   ("shard_id", "term", "doc_id", "tf", "doc_len", "idf")}
-            c = _encode_runs_core(
-                col["shard_id"].to_numpy(), new_run,
-                col["doc_id"].to_numpy(), col["tf"].to_numpy(),
-                col["doc_len"].to_numpy(), col["idf"].to_numpy(),
-                avgdl=avgdl, k1=k1, b=b, block_size=block_size,
-            )
-
-            def binarr(buf: bytes, off: np.ndarray) -> "pa.Array":
-                # zero-copy BinaryArray: the encoder's contiguous varint
-                # stream IS the values buffer; per-block offsets wrap it.
-                # pa.binary() offsets are int32 — fail loudly rather than
-                # silently wrap if one Arrow batch's varint payload ever
-                # exceeds 2^31-1 bytes (conceivable for a Zipf-head
-                # (shard,term) run carried across a giant batch).
-                if off.size and int(off[-1]) > np.iinfo(np.int32).max:
-                    raise ValueError(
-                        f"posting payload {int(off[-1])} bytes overflows "
-                        "int32 binary offsets; lower "
-                        "spark.sql.execution.arrow.maxRecordsPerBatch or "
-                        "raise n_shards to split hot terms")
-                return pa.Array.from_buffers(
-                    pa.binary(), off.size - 1,
-                    [None, pa.py_buffer(np.ascontiguousarray(off, np.int32)),
-                     pa.py_buffer(buf)])
-
-            # keep the input term dtype (string in the portable domain,
-            # int64 in the hash domain) — take() on a pa.Array returns a
-            # pa.Array of the same type, so no cast is needed
-            term_out = col["term"].take(pa.array(c["starts"], pa.int64()))
-            if isinstance(term_out, pa.ChunkedArray):
-                term_out = term_out.combine_chunks()
-            return pa.RecordBatch.from_arrays(
-                [pa.array(c["shard_id"], pa.int32()),
-                 term_out,
-                 pa.array(c["block_id"], pa.int32()),
-                 pa.array(c["first_doc"], pa.int64()),
-                 pa.array(c["last_doc"], pa.int64()),
-                 pa.array(c["n"], pa.int32()),
-                 binarr(c["gap_buf"], c["gap_off"]),
-                 binarr(c["tf_buf"], c["tf_off"]),
-                 binarr(c["dl_buf"], c["dl_off"]),
-                 pa.array(c["max_tf"], pa.int32()),
-                 pa.array(c["max_score"], pa.float64())],
-                names=[f.name for f in POSTING_SCHEMA.fields],
-            )
-
-        carry = None  # pa.Table holding the unfinished (shard, term) run
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            if carry is not None:
-                tbl = pa.concat_tables([carry, tbl])
-                carry = None
-            tbl = tbl.combine_chunks()
-            n = tbl.num_rows
-            if n == 0:
-                continue
-            # hold back the trailing run — it may continue in the next batch
-            mask = new_run_mask(tbl)
-            tail_start = int(np.flatnonzero(mask)[-1])
-            carry = tbl.slice(tail_start)
-            if tail_start > 0:
-                yield encode_head(tbl.slice(0, tail_start),
-                                  mask[:tail_start])
-        if carry is not None and carry.num_rows > 0:
-            carry = carry.combine_chunks()
-            yield encode_head(carry, new_run_mask(carry))
-
-    return fn
+BLOCK_SIZE_DEFAULT = 128
+# recorded in every build's lineage fingerprint: an index written in an
+# earlier posting format is rebuilt, never resumed
+POSTINGS_FORMAT = "sql-blocks-1"
 
 
 def build_postings(tf: DataFrame, dstats: DataFrame | None, tstats: DataFrame,
@@ -189,70 +58,66 @@ def build_postings(tf: DataFrame, dstats: DataFrame | None, tstats: DataFrame,
                    block_size: int = BLOCK_SIZE_DEFAULT,
                    build_partitions: int | None = None,
                    shard_filter: list[int] | None = None) -> DataFrame:
-    """→ posting-block DataFrame (not yet written). ``shard_filter`` limits
-    the build to specific shards (resume path).
+    """→ posting-block DataFrame (shard_id, term, block_id, postings,
+    max_score), not yet written. ``shard_filter`` limits the build to
+    specific shards (resume path).
 
     ``dstats=None`` when ``tf`` already carries a ``doc_len`` column
     (stats.term_frequencies_with_doclen — the build path): skips the
     doc_id join entirely, leaving the shard repartition as the ONLY
     tf-grain shuffle in the posting build."""
-    from .. import ensure_udf_serializable
-
-    ensure_udf_serializable()
     enriched = tf if dstats is None else tf.join(dstats, "doc_id")
     shard_expr = F.pmod(F.hash(F.col("doc_id")), F.lit(n_shards)).cast("int")
     if shard_filter is not None:
         enriched = enriched.where(
             shard_expr.isin([int(s) for s in shard_filter]))
-    # Partition the ENCODE stage by (shard_id, term_bucket), not shard_id
-    # alone: hashing only n_shards distinct keys into n_shards partitions is
-    # balls-in-bins (empty partitions + 3-4× stragglers). The sub-bucket on
-    # term keeps every (shard, term) run intact within one partition while
-    # spreading each shard's vocabulary across `sub` partitions — encode
-    # parallelism is then n_shards × sub regardless of key collisions, and
-    # the Zipf-head term of a shard still lands in a bounded cell.
+    # Partition by (shard_id, term_bucket), not shard_id alone: hashing
+    # only n_shards distinct keys into n_shards partitions is balls-in-bins
+    # (empty partitions + 3-4× stragglers). The sub-bucket on term keeps
+    # every (shard, term) run intact within one partition while spreading
+    # each shard's vocabulary across `sub` partitions.
     p = build_partitions or 2 * n_shards
     sub = max(1, (p + n_shards - 1) // n_shards)
-    bucket_expr = F.pmod(F.xxhash64("term"), F.lit(sub)).cast("int")
-    # Shuffle-payload diet (the tf-grain exchange is THE dominant shuffle
-    # of the whole build, so every byte per row is ~15 bytes/doc at 15
-    # tokens/doc): partition keys are passed as EXPRESSIONS so neither
-    # shard_id nor term_bucket rides the wire (both recomputable from
-    # doc_id/term post-shuffle); tf and doc_len travel as int32 (doc_len <
-    # 2^31 by construction — a single doc's token count); idf does NOT
-    # travel at all — it is a per-term constant that the pre-shuffle join
-    # would duplicate onto every tf row, so the vocabulary-sized broadcast
-    # join runs AFTER the exchange instead (BroadcastHashJoin streams, so
-    # per-partition cost is unchanged; rows gain idf only between the
-    # exchange and the sort). Measured: 38 → 22 shuffle bytes/row at sf1.
+    # tf and doc_len travel as int32 (doc_len < 2^31 by construction); idf
+    # does not travel at all — the vocabulary-sized broadcast join runs
+    # AFTER the exchange, so it is never duplicated onto shuffled rows
     slim = enriched.select(
+        shard_expr.alias("shard_id"),
+        F.pmod(F.xxhash64("term"), F.lit(sub)).cast("int").alias("term_bucket"),
         "term", "doc_id",
         F.col("tf").cast("int").alias("tf"),
         F.col("doc_len").cast("int").alias("doc_len"),
-    ).repartition(n_shards * sub, shard_expr, bucket_expr)
-    sorted_runs = (
+    ).repartition(n_shards * sub, "shard_id", "term_bucket")
+    rn = F.row_number().over(
+        Window.partitionBy("shard_id", "term_bucket", "term").orderBy("doc_id"))
+    return (
         slim.join(F.broadcast(tstats.select("term", "idf")), "term")
-        .select(shard_expr.alias("shard_id"), "term", "doc_id", "tf",
-                "doc_len", "idf")
-        .sortWithinPartitions("shard_id", "term", "doc_id")
-    )
-    # output schema follows the tf table's term domain: string (portable)
-    # or bigint (hash tier — build/manifest.py term_domain="hash")
-    term_type = (T.LongType()
-                 if dict(tf.dtypes).get("term") == "bigint"
-                 else T.StringType())
-    return sorted_runs.mapInArrow(
-        _encoder_stream(k1, b, avgdl, block_size),
-        schema=_posting_schema(term_type),
+        .withColumn("avgdl", F.lit(float(avgdl)))
+        .select("shard_id", "term", "doc_id", "tf", "doc_len",
+                "term_bucket",
+                F.floor((rn - 1) / block_size).cast("int").alias("block_id"),
+                bm25_contribution(k1, b).alias("impact"))
+        # term_bucket stays a grouping key so the exchange's
+        # HashPartitioning(shard_id, term_bucket) satisfies the aggregate
+        .groupBy("shard_id", "term_bucket", "term", "block_id")
+        .agg(F.sort_array(F.collect_list(
+                F.struct("doc_id", "tf", "doc_len"))).alias("postings"),
+             F.max("impact").alias("max_score"))
+        .drop("term_bucket")
     )
 
 
 def write_postings(postings: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Parquet partitioned by shard_id; dynamic overwrite → per-shard
-    idempotent rewrites (the resume path re-emits only missing shards)."""
+    """Parquet partitioned by shard_id, term-sorted within each file (row
+    group min/max then prune the query's term filter); dynamic overwrite →
+    per-shard idempotent rewrites (the resume path re-emits only missing
+    shards). With writer v2 an integer column whose dictionary does not pay
+    falls back to DELTA_BINARY_PACKED instead of PLAIN."""
     (
-        postings.write.partitionBy("shard_id")
+        postings.sortWithinPartitions("shard_id", "term", "block_id")
+        .write.partitionBy("shard_id")
         .option("partitionOverwriteMode", "dynamic")
+        .option("parquet.writer.version", "v2")
         .mode(mode)
         .parquet(path)
     )
@@ -263,12 +128,10 @@ def read_postings(spark, path: str) -> DataFrame:
 
 
 def shard_metrics(postings: DataFrame) -> DataFrame:
-    """Per-shard build metrics (skew evidence for the manifest): posting
-    counts, block counts, encoded bytes."""
+    """Per-shard build metrics (skew evidence for the manifest): term,
+    block and posting counts."""
     return postings.groupBy("shard_id").agg(
         F.countDistinct("term").alias("n_terms"),
         F.count(F.lit(1)).alias("n_blocks"),
-        F.sum("n").alias("n_postings"),
-        (F.sum(F.length("deltas")) + F.sum(F.length("tfs"))
-         + F.sum(F.length("dls"))).alias("payload_bytes"),
+        F.sum(F.size("postings")).alias("n_postings"),
     )

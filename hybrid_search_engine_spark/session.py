@@ -15,6 +15,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Half of the host's physical memory: the local-mode driver JVM holds
+    every executor thread's working set, and the other half is left to its
+    off-heap buffers, the Python workers and the OS page cache."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "4g"
+    return f"{max(1024, total // 2**21)}m"
+
+
 def get_spark(
     app: str = "hybrid_search_engine_spark",
     cores: int | None = None,
@@ -55,7 +66,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -76,7 +88,7 @@ def get_spark(
     # and each fork pays the pandas+pyarrow import (~250 ms CPU × one per
     # core, per job). Pre-import them in the daemon so forks inherit the
     # modules copy-on-write: measured 767 → 460 ms on a 16-task toy job and
-    # ~-200 ms on the single-query p50 floor (bench_query_floor.py). The
+    # ~-200 ms on the former Python-scored single-query p50 floor. The
     # daemon module must be importable by the executor-side python at
     # daemon launch, hence the explicit PYTHONPATH (local/local-cluster
     # share this filesystem; on a distributed cluster ship the package via

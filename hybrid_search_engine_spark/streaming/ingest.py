@@ -326,46 +326,20 @@ def compact_segments(spark: SparkSession, index_root: str, out_dir: str,
     across segments (df/idf are global), so the merge recomputes global
     stats from the segments' doc-level tf — implemented as: union segment
     doc_stats + re-derive postings via the standard build over the union of
-    per-segment (doc_id, term, tf) obtained by DECODING posting blocks in
-    parallel (mapInPandas), then repartition+sortWithinPartitions+encode.
+    per-segment (doc_id, term, tf, doc_len) rows obtained by EXPLODING the
+    posting blocks, then the standard shard repartition + block build.
     Cost is one shuffle of tf-grain data — the same as a fresh build minus
     extraction and tokenization (the expensive parts at web scale)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .. import ensure_udf_serializable
-    from ..operators.codec import decode_block
     from ..operators.postings import build_postings
     from ..operators.stats import term_stats
 
-    ensure_udf_serializable()
     segs = list_segments(index_root)
     if not segs:
         raise ValueError(f"no segments under {index_root}")
 
     posting_paths = [os.path.join(s, "postings") for s in segs]
-    blocks = spark.read.parquet(*posting_paths)
-
-    tf_schema = T.StructType([
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("term", T.StringType(), False),
-        T.StructField("tf", T.LongType(), False),
-        T.StructField("doc_len", T.LongType(), False),
-    ])
-
-    def decode_fn(batches):
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                d, tfv, dl = decode_block(r.first_doc, r.n, r.deltas, r.tfs,
-                                          r.dls)
-                outs.append(pd.DataFrame({
-                    "doc_id": d, "term": r.term, "tf": tfv, "doc_len": dl}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    tf_full = blocks.mapInPandas(decode_fn, schema=tf_schema)
+    tf_full = (spark.read.parquet(*posting_paths)
+               .select("term", F.inline("postings")))
     # tombstones (deleted source docs — see tombstone_deleted_docs) are
     # applied HERE: compaction is the point where deletes become
     # query-invisible. Anti-join at tf grain before stats/postings are

@@ -5,7 +5,8 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TEST_CORES = int(os.environ.get("SPARK_TEST_CPUS", "8"))
+TEST_CORES = int(os.environ.get("SPARK_TEST_CPUS")
+                 or os.environ.get("SPARK_GRAFT_CPUS", "8"))
 
 
 @pytest.fixture(scope="session")

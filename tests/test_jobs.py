@@ -36,7 +36,7 @@ def test_build_job_reports_and_resumes(built_index, pages_1k_path, capsys):
     assert rep["doc_count"] == 1000
     assert rep["built_shards"] == []
     assert rep["skipped_shards"] == [0, 1, 2, 3]
-    assert rep["total_postings"] > 0 and rep["payload_bytes"] > 0
+    assert rep["total_postings"] > 0
 
 
 def test_query_job_stdout_matches_reader(built_index, spark, capsys):

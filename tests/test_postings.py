@@ -1,10 +1,11 @@
-"""Posting build + block-max query path: triangulated parity.
+"""Posting blocks + the JVM query path: triangulated parity.
 
-oracle (pure python) == naive broadcast scorer == postings exact ==
-postings pruned, on the synthetic pages corpus across the query set.
+The blocks a build writes, exploded, must equal the oracle's tf and doc
+lengths, sorted by doc_id within each (shard, term); and oracle (pure
+python) == IndexReader.search == IndexReader.search_batch, on cached and
+uncached readers alike, across the synthetic pages corpus's query set.
 """
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,6 +13,7 @@ from fixtures.gen_corpus import DEMO_QUERIES, all_queries
 from oracle.bm25_oracle import BM25Oracle
 
 N_SHARDS = 8
+BLOCK_SIZE = 16
 
 
 @pytest.fixture(scope="module")
@@ -27,55 +29,76 @@ def oracle(corpus):
 
 
 @pytest.fixture(scope="module")
-def index(spark, corpus, tmp_path_factory):
-    from hybrid_search_engine_spark.operators.postings import (
-        build_postings,
-        read_postings,
-        write_postings,
-    )
-    from hybrid_search_engine_spark.operators.stats import build_statistics
+def index_dir(spark, corpus, tmp_path_factory):
+    from hybrid_search_engine_spark.build.manifest import build_index
 
     df = spark.createDataFrame(list(corpus.items()), "doc_id long, text string")
-    tf, dstats, tstats, scalars = build_statistics(df)
-    postings = build_postings(tf, dstats, tstats, scalars.avg_doc_len,
-                              n_shards=N_SHARDS, block_size=16)
-    path = str(tmp_path_factory.mktemp("index") / "postings")
-    write_postings(postings, path)
-    stored = read_postings(spark, path).cache()
-    stored.count()
-    tstats = tstats.cache()
-    return stored, tstats, scalars
+    d = str(tmp_path_factory.mktemp("index") / "idx")
+    build_index(spark, df, d, n_shards=N_SHARDS, block_size=BLOCK_SIZE,
+                term_domain="string")
+    return d
 
 
-def test_posting_blocks_roundtrip_vs_tf(spark, index, oracle):
-    """Decoded postings == oracle tf dicts (content equality after the
-    shuffle+sort+encode pipeline)."""
-    from hybrid_search_engine_spark.operators.codec import decode_posting_blocks
+@pytest.fixture(scope="module")
+def readers(spark, index_dir):
+    from hybrid_search_engine_spark.build.manifest import IndexReader
 
-    stored, _, _ = index
-    sample_terms = ["quick", "learning", "data", "journey"]
-    got = {}
-    pdfs = stored.where(F.col("term").isin(sample_terms)).toPandas()
-    for (term, shard), grp in pdfs.groupby(["term", "shard_id"]):
-        grp = grp.sort_values("first_doc")
-        docs, tfs, dls = decode_posting_blocks(grp.to_dict("records"))
-        assert np.all(np.diff(docs) > 0)  # sorted within (term, shard)
-        for d, t, l in zip(docs, tfs, dls):
-            got[(term, d)] = (t, l)
-    for term in sample_terms:
-        want = {
-            (term, did): (cnt[term], oracle.doc_len[did])
-            for did, cnt in oracle.tf.items() if term in cnt
-        }
-        got_term = {kv: v for kv, v in got.items() if kv[0] == term}
-        assert got_term == want, term
+    cached = IndexReader(spark, index_dir, cache_postings=True)
+    yield {"uncached": IndexReader(spark, index_dir), "cached": cached}
+    cached.postings.unpersist()
 
 
-def test_shard_metrics(index):
+def _rows(df):
+    return [(r["doc_id"], round(r["score"], 9)) for r in df.collect()]
+
+
+def _exploded(readers):
+    return (readers["uncached"].postings
+            .select("shard_id", "term", "block_id", "max_score",
+                    F.posexplode("postings").alias("pos", "p"))
+            .select("shard_id", "term", "block_id", "max_score", "pos",
+                    "p.doc_id", "p.tf", "p.doc_len")
+            .toPandas())
+
+
+def test_posting_blocks_roundtrip_vs_tf(readers, oracle):
+    """Exploded blocks == the oracle's tf and doc lengths, for every
+    (term, doc) of the corpus (content equality after the shuffle, window
+    numbering and block aggregation)."""
+    got = {(r.term, int(r.doc_id)): (int(r.tf), int(r.doc_len))
+           for r in _exploded(readers).itertuples(index=False)}
+    want = {(term, did): (n, oracle.doc_len[did])
+            for did, cnt in oracle.tf.items() for term, n in cnt.items()}
+    assert got == want
+
+
+def test_doc_ids_sorted_within_shard_term(readers, oracle):
+    """Within each (shard, term), blocks in block_id order hold strictly
+    increasing doc_ids, block ids run 0..last, every block but the last is
+    full, and max_score is the block's largest BM25 contribution (the
+    block-max bound)."""
+    cell = ["shard_id", "term"]
+    pdf = _exploded(readers).sort_values(cell + ["block_id", "pos"])
+    prev = pdf.groupby(cell)["doc_id"].shift()
+    assert (prev.isna() | (pdf["doc_id"] > prev)).all()
+
+    k1, b, avgdl = oracle.k1, oracle.b, oracle.avgdl
+    tf, dl = pdf["tf"].astype(float), pdf["doc_len"].astype(float)
+    pdf["impact"] = (pdf["term"].map(oracle.idf) * tf * (k1 + 1.0)
+                     / (tf + k1 * (1.0 - b + b * dl / avgdl)))
+    blocks = pdf.groupby(cell + ["block_id"]).agg(
+        n=("doc_id", "size"), got=("max_score", "first"),
+        want=("impact", "max")).reset_index()
+    last = blocks.groupby(cell)["block_id"].transform("max")
+    assert (blocks.groupby(cell)["block_id"].transform("size") == last + 1).all()
+    assert ((blocks["n"] == BLOCK_SIZE) | (blocks["block_id"] == last)).all()
+    assert ((blocks["got"] - blocks["want"]).abs() <= 1e-12).all()
+
+
+def test_shard_metrics(readers):
     from hybrid_search_engine_spark.operators.postings import shard_metrics
 
-    stored, _, _ = index
-    m = shard_metrics(stored).collect()
+    m = shard_metrics(readers["uncached"].postings).collect()
     assert len(m) == N_SHARDS
     total = sum(r["n_postings"] for r in m)
     counts = [r["n_postings"] for r in m]
@@ -84,164 +107,79 @@ def test_shard_metrics(index):
 
 
 @pytest.mark.parametrize("query", DEMO_QUERIES)
-def test_pruned_matches_oracle_demo(spark, index, oracle, query):
-    _assert_parity(spark, index, oracle, query, k=10)
+def test_pruned_matches_oracle_demo(readers, oracle, query):
+    _assert_parity(readers["cached"], oracle, query, k=10)
 
 
-def test_pruned_matches_oracle_generated(spark, index, oracle):
+def test_pruned_matches_oracle_generated(readers, oracle):
     for q in all_queries()[5:35]:
-        _assert_parity(spark, index, oracle, q, k=10)
+        _assert_parity(readers["cached"], oracle, q, k=10)
 
 
-def test_pruned_equals_exact_mode(spark, index):
-    from hybrid_search_engine_spark.operators.wand import search_index
-
-    stored, tstats, scalars = index
+def test_pruned_equals_exact_mode(readers):
+    """``mode`` is kept for callers of the former pruned/exact tiers: both
+    values score exactly, identically; anything else is rejected."""
+    r = readers["cached"]
     for q in ["data machine learning", "the quick brown fox", "programming"]:
-        a = search_index(spark, stored, tstats, scalars.avg_doc_len, q,
-                         k=25, mode="pruned").collect()
-        b = search_index(spark, stored, tstats, scalars.avg_doc_len, q,
-                         k=25, mode="exact").collect()
-        assert [(r.doc_id, round(r.score, 9)) for r in a] == \
-               [(r.doc_id, round(r.score, 9)) for r in b], q
+        assert _rows(r.search(q, k=25, mode="pruned")) == \
+               _rows(r.search(q, k=25, mode="exact")), q
+    with pytest.raises(ValueError, match="mode"):
+        r.search("programming", mode="approximate")
 
 
-def test_shard_clustered_path_rank_identical(spark, index):
-    """shard_clustered=True (mapInPandas over a shard-hash-partitioned
-    cache — IndexReader's warm path) must be rank-identical to the
-    groupBy().applyInPandas plan on both the single and batch APIs."""
-    from hybrid_search_engine_spark.operators.wand import (
-        search_index,
-        search_index_batch,
-    )
-
-    stored, tstats, scalars = index
-    clustered = stored.repartition(4, "shard_id").cache()
-    clustered.count()
-    try:
-        queries = ["data machine learning", "the quick brown fox",
-                   "programming", "how to write tests"]
-        for q in queries:
-            a = search_index(spark, stored, tstats, scalars.avg_doc_len, q,
-                             k=15).collect()
-            b = search_index(spark, clustered, tstats, scalars.avg_doc_len,
-                             q, k=15, shard_clustered=True).collect()
-            assert [(r.doc_id, round(r.score, 9)) for r in a] == \
-                   [(r.doc_id, round(r.score, 9)) for r in b], q
-        batch = list(enumerate(queries))
-        a = search_index_batch(spark, stored, tstats, scalars.avg_doc_len,
-                               batch, k=15).collect()
-        b = search_index_batch(spark, clustered, tstats, scalars.avg_doc_len,
-                               batch, k=15, shard_clustered=True).collect()
-        assert sorted([(r.query_id, r.rank, r.doc_id, round(r.score, 9))
-                       for r in a]) == \
-               sorted([(r.query_id, r.rank, r.doc_id, round(r.score, 9))
-                       for r in b])
-    finally:
-        clustered.unpersist()
+def test_shard_clustered_path_rank_identical(readers):
+    """The shard-partitioned postings cache (exchange-free scoring) must be
+    rank- and score-identical to the uncached parquet read, on both the
+    single and the batch API."""
+    queries = all_queries()[:30] + ["the quick brown fox", "zz_oov_term"]
+    for q in queries:
+        assert _rows(readers["cached"].search(q, k=15)) == \
+               _rows(readers["uncached"].search(q, k=15)), q
+    batch = list(enumerate(queries))
+    key = lambda r: sorted(  # noqa: E731
+        (x["query_id"], x["rank"], x["doc_id"], round(x["score"], 9))
+        for x in r.search_batch(batch, k=15).collect())
+    assert key(readers["cached"]) == key(readers["uncached"])
 
 
-def test_batch_search_matches_oracle(spark, index, oracle):
-    """search_index_batch (one plan, shared decode caches) rank-identical to
-    the oracle for every query in the batch."""
-    from hybrid_search_engine_spark.operators.wand import search_index_batch
-
-    stored, tstats, scalars = index
-    queries = list(enumerate(all_queries()[:30]))
-    got = search_index_batch(spark, stored, tstats, scalars.avg_doc_len,
-                             queries, k=10).collect()
+def test_batch_search_matches_oracle(readers, oracle):
+    """search_batch (one plan for all queries) == search, query by query,
+    rank- and score-identical, and both rank-identical to the oracle."""
+    r = readers["cached"]
+    queries = list(enumerate(all_queries()[:30] + ["zz_oov_term"]))
     by_q = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], r["score"]))
+    for x in r.search_batch(queries, k=10).collect():
+        by_q.setdefault(x["query_id"], []).append(
+            (x["rank"], x["doc_id"], round(x["score"], 9)))
     for qid, query in queries:
+        batch = [(d, s) for _, d, s in sorted(by_q.get(qid, []))]
+        assert batch == _rows(r.search(query, k=10)), query
         want = oracle.topk_nonzero(query, k=10)
-        rows = sorted(by_q.get(qid, []))
-        assert [d for _, d, _ in rows] == [d for d, _ in want], query
-        for (_, _, s_got), (_, s_want) in zip(rows, want):
+        assert [d for d, _ in batch] == [d for d, _ in want], query
+        for (_, s_got), (_, s_want) in zip(batch, want):
             assert abs(s_got - s_want) <= 1e-6 * max(1.0, abs(s_want)), query
 
 
-def test_search_with_dict_tstats(spark, index, oracle):
+def test_search_with_dict_tstats(spark, index_dir, readers, oracle):
     """Driver-cached term→idf dict path == DataFrame stats path."""
-    from hybrid_search_engine_spark.operators.wand import search_index
+    from hybrid_search_engine_spark.build.manifest import IndexReader
 
-    stored, tstats, scalars = index
-    tdict = {r["term"]: float(r["idf"])
-             for r in tstats.select("term", "idf").collect()}
     q = "machine learning and AI"
-    a = search_index(spark, stored, tdict, scalars.avg_doc_len, q, k=10).collect()
-    want = oracle.topk_nonzero(q, k=10)
-    assert [r["doc_id"] for r in a] == [d for d, _ in want]
+    lookup = IndexReader(spark, index_dir, cache_term_stats=False)
+    a = _rows(lookup.search(q, k=10))
+    assert a == _rows(readers["uncached"].search(q, k=10))
+    assert [d for d, _ in a] == [d for d, _ in oracle.topk_nonzero(q, k=10)]
 
 
-def test_k_variants(spark, index, oracle):
+def test_k_variants(readers, oracle):
     for k in (1, 5, 100):
-        _assert_parity(spark, index, oracle, "machine learning and AI", k=k)
+        _assert_parity(readers["cached"], oracle, "machine learning and AI",
+                       k=k)
 
 
-def _assert_parity(spark, index, oracle, query, k):
-    from hybrid_search_engine_spark.operators.wand import search_index
-
-    stored, tstats, scalars = index
-    got = search_index(spark, stored, tstats, scalars.avg_doc_len, query,
-                       k=k).collect()
+def _assert_parity(reader, oracle, query, k):
+    got = reader.search(query, k=k).collect()
     want = oracle.topk_nonzero(query, k=k)
     assert [r["doc_id"] for r in got] == [d for d, _ in want], query
     for r, (_, s) in zip(got, want):
         assert abs(r["score"] - s) <= 1e-6 * max(1.0, abs(s)), (query, r)
-
-
-def test_arrow_encoder_stream_matches_pandas_encoder():
-    """The mapInArrow block-encoder stream (zero per-row Python objects)
-    must be byte-identical to the reference pandas encode_runs, including
-    runs split across Arrow batch boundaries (carry logic). Pure-Python —
-    drives the stream iterator directly, no Spark session needed."""
-    import pyarrow as pa
-
-    from hybrid_search_engine_spark.operators.codec import encode_runs
-    from hybrid_search_engine_spark.operators.postings import (
-        POSTING_SCHEMA,
-        _encoder_stream,
-    )
-
-    rng = np.random.RandomState(7)
-    rows = []
-    for shard in range(3):
-        for term in ["alpha", "beta", "gamma", "z"]:
-            docs = np.sort(rng.choice(10_000, size=rng.randint(1, 300),
-                                      replace=False))
-            for d in docs:
-                rows.append((shard, term, int(d), int(rng.randint(1, 5)),
-                             int(rng.randint(5, 50)), 1.25))
-    arr = list(zip(*rows))
-    tbl = pa.table({
-        "shard_id": pa.array(arr[0], pa.int32()),
-        "term": pa.array(arr[1], pa.string()),
-        "doc_id": pa.array(arr[2], pa.int64()),
-        "tf": pa.array(arr[3], pa.int64()),
-        "doc_len": pa.array(arr[4], pa.int64()),
-        "idf": pa.array(arr[5], pa.float64()),
-    })
-    # awkward batch sizes force runs to straddle batch boundaries
-    batches, i = [], 0
-    for sz in [1, 7, 130, 55, 10**9]:
-        b = tbl.slice(i, sz)
-        if b.num_rows:
-            batches.append(b.combine_chunks().to_batches()[0])
-        i += sz
-
-    fn = _encoder_stream(k1=1.5, b=0.75, avgdl=20.0, block_size=64)
-    got = pa.Table.from_batches(list(fn(iter(batches)))).to_pandas()
-    want = encode_runs(
-        np.array(arr[0], np.int32), np.array(arr[1], object),
-        np.array(arr[2], np.int64), np.array(arr[3], np.int64),
-        np.array(arr[4], np.int64), np.array(arr[5], np.float64),
-        avgdl=20.0, k1=1.5, b=0.75, block_size=64)
-
-    assert len(got) == len(want)
-    for c in ["shard_id", "term", "block_id", "first_doc", "last_doc",
-              "n", "max_tf"]:
-        assert list(got[c]) == list(want[c]), c
-    for c in ["deltas", "tfs", "dls"]:
-        assert [bytes(x) for x in got[c]] == [bytes(x) for x in want[c]], c
-    assert np.allclose(got["max_score"], want["max_score"])

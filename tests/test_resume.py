@@ -29,8 +29,8 @@ def _content_hash(spark, index_dir):
     p = read_postings(spark, os.path.join(index_dir, "postings"))
     row = (
         p.select(
-            F.xxhash64("shard_id", "term", "block_id", "first_doc",
-                       "last_doc", "n", "deltas", "tfs", "dls").alias("h")
+            F.xxhash64("shard_id", "term", "block_id", "postings",
+                       "max_score").alias("h")
         )
         .agg(F.expr("bit_xor(h)").alias("s"), F.count(F.lit(1)).alias("c"))
         .first()
@@ -76,8 +76,46 @@ def test_crash_resume_bitwise_equal(spark, docs, tmp_path_factory):
     assert {r["shard_id"] for r in m2} == set(range(N_SHARDS))
     fps = {json.dumps(r["source_fingerprint"], sort_keys=True) for r in m2}
     assert len(fps) == 1
-    assert all(r["n_postings"] > 0 and r["payload_bytes"] > 0 for r in m2)
+    assert all(r["n_postings"] > 0 for r in m2)
     assert all("skew_ratio" in r for r in m2)
+
+
+def test_resume_after_torn_manifest_line(spark, docs, tmp_path_factory):
+    """A crash in the middle of a manifest append leaves an unterminated
+    last line. The next build skips that record, rebuilds its shard, and
+    the resumed index equals an uninterrupted build."""
+    from hybrid_search_engine_spark.build.manifest import (
+        MANIFEST_NAME,
+        build_index,
+        read_manifest,
+    )
+
+    base = str(tmp_path_factory.mktemp("torn"))
+    full_dir = os.path.join(base, "full")
+    part_dir = os.path.join(base, "partial")
+    build_index(spark, docs, full_dir, n_shards=N_SHARDS, block_size=32)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        build_index(spark, docs, part_dir, n_shards=N_SHARDS, block_size=32,
+                    fail_after_shards=3)
+    path = os.path.join(part_dir, MANIFEST_NAME)
+    with open(path) as f:
+        text = f.read()
+    cut = text.rstrip("\n").rfind("\n") + 1  # start of the last record
+    torn_shard = json.loads(text[cut:])["shard_id"]
+    with open(path, "w") as f:
+        f.write(text[:cut + (len(text) - cut) // 2])  # half a record, no \n
+    kept = read_manifest(part_dir)
+    assert len(kept) == 2
+    assert torn_shard not in {r["shard_id"] for r in kept}
+
+    res = build_index(spark, docs, part_dir, n_shards=N_SHARDS, block_size=32)
+    assert torn_shard in res.built_shards
+    assert sorted(res.built_shards + res.skipped_shards) == list(range(N_SHARDS))
+    assert _content_hash(spark, part_dir) == _content_hash(spark, full_dir)
+    # the torn tail was dropped before the resume appended its records
+    done = read_manifest(part_dir)
+    assert len(done) == N_SHARDS
+    assert {r["shard_id"] for r in done} == set(range(N_SHARDS))
 
 
 def test_resume_noop_when_complete(spark, docs, tmp_path_factory):
@@ -99,6 +137,35 @@ def test_changed_source_invalidates(spark, docs, tmp_path_factory):
     res = build_index(spark, fewer, d, n_shards=4, block_size=32)
     # fingerprint changed → all shards rebuilt
     assert sorted(res.built_shards) == [0, 1, 2, 3]
+
+
+def test_other_postings_format_rebuilds(spark, docs, tmp_path_factory):
+    """An index written in another posting format is rebuilt, not resumed,
+    and no file of the old postings survives the rebuild."""
+    from hybrid_search_engine_spark.build.manifest import (
+        MANIFEST_NAME,
+        IndexReader,
+        build_index,
+    )
+
+    d = str(tmp_path_factory.mktemp("format"))
+    build_index(spark, docs, d, n_shards=4, block_size=32)
+    path = os.path.join(d, MANIFEST_NAME)
+    with open(path) as f:
+        records = [json.loads(line) for line in f]
+    for r in records:
+        r["source_fingerprint"]["postings_format"] = "earlier-format"
+    with open(path, "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in records)
+    stray = os.path.join(d, "postings", "shard_id=7")
+    os.makedirs(stray)
+    with open(os.path.join(stray, "part-0.parquet"), "w") as f:
+        f.write("not parquet")
+
+    res = build_index(spark, docs, d, n_shards=4, block_size=32)
+    assert sorted(res.built_shards) == [0, 1, 2, 3]
+    assert not os.path.exists(stray)
+    assert IndexReader(spark, d).search("machine learning", k=5).collect()
 
 
 def test_index_reader_end_to_end(spark, docs, tmp_path_factory):
@@ -141,7 +208,7 @@ def test_manifest_metrics_match_written_postings(spark, docs,
 
     assert set(recomputed) <= set(recorded)
     for s, m in recomputed.items():
-        for k in ("n_terms", "n_blocks", "n_postings", "payload_bytes"):
+        for k in ("n_terms", "n_blocks", "n_postings"):
             assert recorded[s][k] == int(m[k]), (s, k, recorded[s][k], m[k])
     # shards absent from the grouped recompute (no postings) must be
     # recorded as all-zero, exactly as the fallback form records them

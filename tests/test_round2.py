@@ -585,13 +585,13 @@ def test_knn_batch_tie_break_prefers_low_id(spark):
 
 
 # ---------------------------------------------------------------------------
-# JVM-only exact latency tier (IndexReader cache_tf + mode="exact")
+# postings cache (IndexReader cache_postings / its cache_tf alias)
 # ---------------------------------------------------------------------------
 
 def test_exact_cached_tier_rank_identical(spark, extracted_1k, tmp_path):
-    """search(mode='exact') over the term-sorted tf cache must be
-    rank-identical (doc ids AND round-9 scores) to the block-max pruned
-    path — triangulating the codegen scorer against the Python scorer."""
+    """The keywords the former tf-cache tier took (``cache_tf=True``,
+    ``mode="exact"``) now select the postings cache; it must be
+    rank-identical (doc ids AND round-9 scores) to the uncached reader."""
     from fixtures.gen_corpus import all_queries
     from hybrid_search_engine_spark.build.manifest import IndexReader, build_index
     from hybrid_search_engine_spark.sources.pages import pages_to_docs
@@ -599,39 +599,60 @@ def test_exact_cached_tier_rank_identical(spark, extracted_1k, tmp_path):
     docs = pages_to_docs(extracted_1k, extract=False)
     idx = str(tmp_path / "idx")
     build_index(spark, docs, idx, n_shards=4, block_size=32)
+    cold = IndexReader(spark, idx)
     reader = IndexReader(spark, idx, cache_postings=False, cache_tf=True)
-
-    for q in all_queries()[:20] + ["zz_completely_oov"]:
-        exact = [(r["doc_id"], round(r["score"], 9))
-                 for r in reader.search(q, k=10, mode="exact").collect()]
-        pruned = [(r["doc_id"], round(r["score"], 9))
-                  for r in reader.search(q, k=10, mode="pruned").collect()]
-        assert exact == pruned, f"tier mismatch for {q!r}"
-    reader.tf.unpersist()
+    try:
+        assert reader.postings.is_cached
+        for q in all_queries()[:20] + ["zz_completely_oov"]:
+            exact = [(r["doc_id"], round(r["score"], 9))
+                     for r in reader.search(q, k=10, mode="exact").collect()]
+            want = [(r["doc_id"], round(r["score"], 9))
+                    for r in cold.search(q, k=10).collect()]
+            assert exact == want, f"tier mismatch for {q!r}"
+    finally:
+        reader.postings.unpersist()
 
 
 def test_exact_cached_tier_is_single_stage(spark, extracted_1k, tmp_path):
-    """The serving tier's query plan must contain NO exchange: the tf cache
-    is hash-partitioned by doc_id, so groupBy(doc_id) reuses the cache
-    partitioning and the whole query is one stage plus the driver-side
-    TakeOrdered merge. (The only Exchange allowed is inside the
-    InMemoryRelation's one-time cache-build plan.)"""
+    """With the postings cache hash-partitioned by shard_id, a single
+    query's plan has NO exchange and no Python operator: the scorer's
+    groupBy(shard_id, doc_id) reuses the cache partitioning, so the query
+    is one JVM stage plus the driver-side TakeOrdered merge. A batch plan
+    has exactly one exchange, by query_id, for the per-query top-k window.
+    (Exchanges inside the InMemoryRelation belong to the one-time cache
+    build and are not counted.)"""
+    import re
+
     from hybrid_search_engine_spark.build.manifest import IndexReader, build_index
     from hybrid_search_engine_spark.sources.pages import pages_to_docs
+
+    python_ops = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                  "MapInArrow", "FlatMapGroupsInPandas", "PythonUDF")
+
+    def query_side(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.split("InMemoryRelation", 1)[0]
 
     docs = pages_to_docs(extracted_1k, extract=False)
     idx = str(tmp_path / "idx")
     build_index(spark, docs, idx, n_shards=4, block_size=32)
-    reader = IndexReader(spark, idx, cache_postings=False, cache_tf=True)
+    reader = IndexReader(spark, idx, cache_postings=True)
     try:
-        df = reader.search("the quick brown fox jumps over", k=10,
-                           mode="exact")
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        query_side = plan.split("InMemoryRelation", 1)[0]
-        assert "InMemoryTableScan" in query_side
-        assert "Exchange" not in query_side, query_side
-        assert "TakeOrderedAndProject" in query_side
-        # and it is the literal-map scorer: no join operator anywhere
-        assert "Join" not in query_side
+        single = query_side(reader.search("the quick brown fox jumps over",
+                                          k=10))
+        assert "InMemoryTableScan" in single
+        assert "Exchange" not in single, single
+        assert "TakeOrderedAndProject" in single
+        assert "Join" not in single  # term weights ride as literal maps
+        assert not [op for op in python_ops if op in single], single
+
+        batch = query_side(reader.search_batch(
+            [(0, "machine learning"), (1, "the quick brown fox"),
+             (2, "programming languages")], k=10))
+        shuffles = re.findall(r"\bExchange (\w+)\(([^,)]*)", batch)
+        assert len(shuffles) == 1, batch
+        assert shuffles[0][0] == "hashpartitioning"
+        assert shuffles[0][1].startswith("query_id#"), shuffles
+        assert not [op for op in python_ops if op in batch], batch
     finally:
-        reader.tf.unpersist()
+        reader.postings.unpersist()
