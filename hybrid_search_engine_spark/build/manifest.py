@@ -136,7 +136,7 @@ def build_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     fail_after_shards: int | None = None,
-    term_domain: str | None = None,
+    term_domain: str = "hash",
 ) -> IndexBuildResult:
     """Build (or resume) the full index for ``docs(doc_id, text, ...)``.
 
@@ -156,14 +156,8 @@ def build_index(
     the bit-parity driver-side xxhash64 — rank-identity between the two
     domains is pinned by test. "string" is the portable/debug tier
     (postings introspectable by eye; the domain streaming segments use,
-    since compact_segments reads term values back out of blocks).
-    None (the default) resolves to $HSE_BUILD_TERM_DOMAIN or "hash" —
-    the env override exists so benchmark harnesses can A/B the domains
-    without threading a parameter through every entry point."""
+    since compact_segments reads term values back out of blocks)."""
     import sys
-
-    if term_domain is None:
-        term_domain = os.environ.get("HSE_BUILD_TERM_DOMAIN", "hash")
 
     verbose = os.environ.get("HSE_BUILD_VERBOSE") == "1"
 

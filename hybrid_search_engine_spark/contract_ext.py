@@ -66,7 +66,7 @@ FROM sh GROUP BY doc_id
 def q_lsh_pairs(spark, sf_dir):
     """The COMPLETE minhash_lsh_pairs pipeline — signatures → banded
     self-join → exact verify — oracle-checked end-to-end: md5 signature
-    tier (DuckDB-replayable) with the engine's vectorized numpy verify.
+    tier (DuckDB-replayable) with the engine's numpy exact verify.
     The oracle replays the banding in SQL and computes the same exact
     char-3-shingle Jaccard via list_intersect, so a hash-domain or
     band-join bug on EITHER stage breaks the row."""
@@ -74,8 +74,7 @@ def q_lsh_pairs(spark, sf_dir):
 
     pairs = minhash_lsh_pairs(_docs(spark, sf_dir), num_perm=4, bands=2,
                               shingle_k=3, jaccard_threshold=0.5,
-                              band_bucket_cap=0, signatures="md5",
-                              verify="vectorized")
+                              band_bucket_cap=0, signatures="md5")
     return pairs.select("doc_a", "doc_b",
                         F.round("jaccard", 6).alias("jaccard_r"))
 
@@ -84,8 +83,9 @@ def q_lsh_pairs(spark, sf_dir):
 # md5(s0 || '|' || s1), band 1 = md5(s2 || '|' || s3) (operators/dedup.py::
 # minhash_band_hashes, md5 path: F.md5(F.concat_ws("|", ...))). The verify
 # counts DISTINCT char-3-shingles of the normalized text exactly — the
-# engine does it over 64-bit shingle hashes (collision odds §_exploded_
-# shingles), the oracle over the strings; values match to the rounding.
+# engine does it over 64-bit shingle hashes (collision odds in
+# _shingle_arr_udf), the oracle over the strings; values match to the
+# rounding.
 SQL_LSH_PAIRS = f"""
 WITH pos AS (
   SELECT doc_id, t,

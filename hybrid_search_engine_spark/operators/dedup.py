@@ -378,12 +378,13 @@ _ARR_UDFS: dict = {}
 def _shingle_arr_udf(k: int):
     """Arrow-vectorized per-row shingle SET: text → sorted distinct
     array<bigint> of the row's k-gram rolling hashes — the verify-side doc
-    representation of ``minhash_lsh_pairs(verify="vectorized")``. Same
-    hash domain as the signature UDF (``_rolling_shingle_hashes``), so set
-    Jaccard over these arrays equals Jaccard over the character shingles
-    themselves up to 64-bit collisions inside one pair's union
-    (P ≈ |union|²/2⁶⁵ — the same analysis as ``_exploded_shingles``; a
-    collision perturbs that pair's jaccard by 1/|union|)."""
+    representation of ``_verify_pairs``. Same hash domain as the signature
+    UDF (``_rolling_shingle_hashes``), so set Jaccard over these arrays
+    equals Jaccard over the character shingles themselves unless two
+    distinct shingles of one pair's union collide in 64 bits
+    (P ≈ |union|²/2⁶⁵ ≈ 10⁻¹³ for 10⁴-shingle docs; a collision perturbs
+    that pair's jaccard by 1/|union|). Identical shingle sets hash
+    identically, so exact duplicates stay J = 1.0 bit for bit."""
     if k in _ARR_UDFS:
         return _ARR_UDFS[k]
     from pyspark.sql.types import ArrayType, LongType
@@ -431,31 +432,6 @@ def minhash_signatures_fast(docs: DataFrame, text_col: str = "text",
                                udf(F.col(text_col)).alias("sig"))
 
 
-def _exploded_shingles(docs: DataFrame, text_col: str, id_col: str,
-                       k: int, hashed: bool = False) -> DataFrame:
-    """→ (doc_id, sh): distinct character k-shingles, one row each — the
-    verify-side input (normalization bound before the per-position HOF).
-
-    ``hashed=True`` maps each shingle to ``xxhash64(sh)`` (bigint). The
-    verify joins/aggregates are then over fixed-width 8-byte keys instead
-    of variable-width strings — the (doc, shingle)-grain intermediate is
-    the largest thing the verify shuffles, so this is where width matters.
-    Set-Jaccard over hashed shingles equals Jaccard over the shingles
-    themselves unless two distinct shingles of one pair's union collide in
-    64 bits (P ≈ |union|²/2⁶⁵ ≈ 10⁻¹³ for 10⁴-shingle docs — and a
-    collision only perturbs that one pair's jaccard by 1/|union|).
-    Identical shingle sets still hash identically, so exact dups stay
-    J=1.0 bit-for-bit."""
-    ex = (docs.select(F.col(id_col).alias("doc_id"),
-                      norm_content(F.col(text_col)).alias("__t"))
-          .select("doc_id",
-                  F.explode(F.array_distinct(
-                      shingles_of(F.col("__t"), k))).alias("sh")))
-    if hashed:
-        ex = ex.select("doc_id", F.xxhash64("sh").alias("sh"))
-    return ex
-
-
 def minhash_band_hashes(docs: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", num_perm: int = 16,
                         bands: int = 4, shingle_k: int = 3,
@@ -495,26 +471,33 @@ def minhash_band_hashes(docs: DataFrame, text_col: str = "text",
         ])).alias("b"),
     ).select("doc_id", "b.band_id", "b.band_hash")
 
-    if band_bucket_cap:
-        # Pin the window's exchange at the session parallelism: the banded
-        # table is only a few narrow MB at bench scale, so AQE's partition
-        # coalescing folds the hash exchange to ~1 partition and the
-        # window sort runs on one core (measured 1.7-2.0 s vs 0.9 s at
-        # 200k rows / local[32]). An explicit numPartitions repartition is
-        # never AQE-coalesced, and HashPartitioning(band_id, band_hash)
-        # satisfies the window's clustered distribution, so this is the
-        # window's ONE exchange, just at a pinned width. At cluster scale
-        # defaultParallelism = total cores and banded rows are ~30 bytes,
-        # so per-task sorts stay small.
-        par = docs.sparkSession.sparkContext.defaultParallelism
-        wcap = Window.partitionBy("band_id", "band_hash")
-        banded = (
-            banded.repartition(par, "band_id", "band_hash")
+    return _cap_buckets(banded, band_bucket_cap)
+
+
+def _cap_buckets(banded: DataFrame, cap: int) -> DataFrame:
+    """Drop every (band_id, band_hash) bucket holding more than ``cap``
+    rows of a band table; ``cap`` 0 keeps them all. Shared by the batch
+    cap (``minhash_band_hashes``) and the probe-time cap
+    (``near_dup_check_incremental``).
+
+    The window's exchange is pinned at the session parallelism: the
+    banded table is only a few narrow MB at bench scale, so AQE's
+    partition coalescing folds the hash exchange to ~1 partition and the
+    window sort runs on one core (measured 1.7-2.0 s vs 0.9 s at 200k
+    rows / local[32]). An explicit numPartitions repartition is never
+    AQE-coalesced, and HashPartitioning(band_id, band_hash) satisfies the
+    window's clustered distribution, so this is the window's ONE
+    exchange, just at a pinned width. At cluster scale
+    defaultParallelism = total cores and banded rows are ~30 bytes, so
+    per-task sorts stay small."""
+    if not cap:
+        return banded
+    par = banded.sparkSession.sparkContext.defaultParallelism
+    wcap = Window.partitionBy("band_id", "band_hash")
+    return (banded.repartition(par, "band_id", "band_hash")
             .withColumn("bucket_n", F.count(F.lit(1)).over(wcap))
-            .where(F.col("bucket_n") <= band_bucket_cap)
-            .drop("bucket_n")
-        )
-    return banded
+            .where(F.col("bucket_n") <= cap)
+            .drop("bucket_n"))
 
 
 _JACCARD_UDF: list = []
@@ -546,36 +529,70 @@ def _jaccard_of_arrays():
     return jacc
 
 
-# Per-worker copy budget for the broadcast verify tier: the candidate-doc
+# Per-worker copy budget of the broadcast verify plan: the candidate-doc
 # shingle arrays are collected once and broadcast, and EVERY python worker
 # unpickles its own copy, so the budget is per-worker memory, not cluster
-# memory (32 local workers × 128 MB = 4 GB worst case here).
+# memory (32 local workers × 128 MB = 4 GB worst case here). Read at call
+# time by ``_verify_pairs``.
 VERIFY_BROADCAST_BUDGET = 128 << 20
 
 
-def _verify_pairs_broadcast(cand: DataFrame, arrs: DataFrame,
+def _packed_arrays(arrs: DataFrame):
+    """Collect (doc_id, sh_arr) rows flat-packed: (sorted doc ids, offsets,
+    one contiguous int64 hash buffer) — doc ``ids[i]``'s array is
+    ``buf[offs[i]:offs[i + 1]]``."""
+    pdf = arrs.toPandas()
+    ids = pdf["doc_id"].to_numpy()
+    order = np.argsort(ids, kind="stable")
+    arr_list = pdf["sh_arr"].to_numpy()[order]
+    lens = np.fromiter((len(x) for x in arr_list), np.int64, len(arr_list))
+    offs = np.zeros(len(arr_list) + 1, np.int64)
+    np.cumsum(lens, out=offs[1:])
+    buf = (np.concatenate([np.asarray(x, np.int64) for x in arr_list])
+           if len(arr_list) else np.empty(0, np.int64))
+    return ids[order], offs, buf
+
+
+def _lut_rows(ids_s: np.ndarray, want: np.ndarray, side: str) -> np.ndarray:
+    """Row of each id of ``want`` in the sorted id array ``ids_s``.
+    Raises ValueError naming the first id that is not there: searchsorted
+    alone returns an insertion point for it, which would read a
+    neighbour's shingle slice (a plausible but wrong jaccard) or run off
+    the end of the offsets."""
+    i = np.searchsorted(ids_s, want)
+    hit = i < ids_s.size
+    hit[hit] = ids_s[i[hit]] == want[hit]
+    if not hit.all():
+        raise ValueError(f"verify: {side} id {want[~hit][0]!r} "
+                         f"has no shingle array")
+    return i
+
+
+def _verify_pairs_broadcast(cand: DataFrame, arrs_a: DataFrame,
+                            arrs_b: DataFrame,
                             jaccard_threshold: float) -> DataFrame:
     """Exact-Jaccard verify, broadcast form: collect the candidate-doc
-    shingle arrays ONCE (Arrow), broadcast the doc_id→array dict, and
-    compute per-pair Jaccard map-side over the skinny (doc_a, doc_b)
-    rows with ``mapInPandas`` — zero joins, zero array duplication.
+    shingle arrays ONCE (Arrow), broadcast them, and compute per-pair
+    Jaccard map-side over the skinny (doc_a, doc_b) rows with
+    ``mapInPandas`` — zero joins, zero array duplication. doc_a reads
+    ``arrs_a``, doc_b reads ``arrs_b``; pass one frame twice for a
+    self-join and it is collected and shipped once.
 
     Why it exists: the join form ships each doc's array once per pair
     membership; on a dense near-dup corpus (sf0.1 bench: 230k candidate
     pairs over 4.9k docs, avg degree ~95) that is ~5.5 GB of array
     traffic to verify a 40 MB array set. When the side data fits a
-    worker, broadcast it and keep the big side skinny. The join plans remain the
-    scale path when candidate docs exceed VERIFY_BROADCAST_BUDGET.
+    worker, broadcast it and keep the big side skinny.
 
-    The LUT ships FLAT-PACKED — (sorted doc ids, offsets, one contiguous
-    int64 hash buffer) — not as a doc→array dict: unpickling three numpy
-    buffers is a memcpy, while a dict of ~10⁴-10⁵ small arrays costs a
-    per-object loop in EVERY freshly-forked python worker (PySpark 4
-    forks per job), and the driver-side pack itself is ~0.7 s cheaper at
-    the 37k-doc bench corpus. Per batch, doc ids map to slices with two
-    vectorized searchsorted calls. The pair rows are also coalesced to
-    defaultParallelism first: the mapInPandas boundary has a fixed
-    per-task cost that dominated the verify at 128 post-shuffle
+    The arrays ship FLAT-PACKED (``_packed_arrays``), not as a doc→array
+    dict: unpickling three numpy buffers is a memcpy, while a dict of
+    ~10⁴-10⁵ small arrays costs a per-object loop in EVERY freshly-forked
+    python worker (PySpark 4 forks per job), and the driver-side pack
+    itself is ~0.7 s cheaper at the 37k-doc bench corpus. Per batch, doc
+    ids map to slices with two vectorized searchsorted calls, and an id
+    with no array raises (``_lut_rows``). The pair rows are also
+    coalesced to defaultParallelism first: the mapInPandas boundary has a
+    fixed per-task cost that dominated the verify at 128 post-shuffle
     partitions (measured: a pass-through mapInPandas over the same rows
     cost 1.0-1.4 s at 128 partitions vs ~0.5 s at 32 — guide §4's
     "fewer, larger batches" applied to task granularity)."""
@@ -584,32 +601,25 @@ def _verify_pairs_broadcast(cand: DataFrame, arrs: DataFrame,
     from .. import ensure_udf_serializable
     ensure_udf_serializable()
 
-    pdf = arrs.toPandas()
-    ids = pdf["doc_id"].to_numpy()
-    order = np.argsort(ids, kind="stable")
-    ids_s = ids[order]
-    arr_list = pdf["sh_arr"].to_numpy()[order]
-    lens = np.fromiter((len(x) for x in arr_list), np.int64, len(arr_list))
-    offs = np.zeros(len(arr_list) + 1, np.int64)
-    np.cumsum(lens, out=offs[1:])
-    buf = (np.concatenate([np.asarray(x, np.int64) for x in arr_list])
-           if len(arr_list) else np.empty(0, np.int64))
-    bpack = cand.sparkSession.sparkContext.broadcast((ids_s, offs, buf))
+    pack_a = _packed_arrays(arrs_a)
+    pack_b = pack_a if arrs_b is arrs_a else _packed_arrays(arrs_b)
+    # pickle memoizes a repeated object, so a self-join ships one pack
+    bpack = cand.sparkSession.sparkContext.broadcast((pack_a, pack_b))
     schema = T.StructType(list(cand.schema.fields)
                           + [T.StructField("jaccard", T.DoubleType())])
 
     def gen(batches):
-        ids_s, offs, buf = bpack.value
+        (ids_a, offs_a, buf_a), (ids_b, offs_b, buf_b) = bpack.value
         for b in batches:
             m = len(b)
-            ia = np.searchsorted(ids_s, b["doc_a"].to_numpy())
-            ib = np.searchsorted(ids_s, b["doc_b"].to_numpy())
-            sa, ea = offs[ia].tolist(), offs[ia + 1].tolist()
-            sb, eb = offs[ib].tolist(), offs[ib + 1].tolist()
+            ia = _lut_rows(ids_a, b["doc_a"].to_numpy(), "doc_a")
+            ib = _lut_rows(ids_b, b["doc_b"].to_numpy(), "doc_b")
+            sa, ea = offs_a[ia].tolist(), offs_a[ia + 1].tolist()
+            sb, eb = offs_b[ib].tolist(), offs_b[ib + 1].tolist()
             j = np.empty(m, np.float64)
             for i in range(m):
-                xa = buf[sa[i]:ea[i]]
-                xb = buf[sb[i]:eb[i]]
+                xa = buf_a[sa[i]:ea[i]]
+                xb = buf_b[sb[i]:eb[i]]
                 inter = np.intersect1d(xa, xb, assume_unique=True).size
                 denom = xa.size + xb.size - inter
                 j[i] = inter / denom if denom else 1.0
@@ -620,28 +630,85 @@ def _verify_pairs_broadcast(cand: DataFrame, arrs: DataFrame,
     return cand.coalesce(par).mapInPandas(gen, schema=schema)
 
 
-def _verify_pairs_vectorized(cand: DataFrame, arrs: DataFrame,
+def _verify_pairs_vectorized(cand: DataFrame, arrs_a: DataFrame,
+                             arrs_b: DataFrame,
                              jaccard_threshold: float) -> DataFrame:
-    """Exact-Jaccard verify, array form: join each candidate doc's sorted
-    shingle-hash array onto the pair (two hash joins over |pairs| wide
-    rows) and intersect per pair in numpy. See minhash_lsh_pairs(verify=)
-    for when this beats the inverted-index form.
+    """Exact-Jaccard verify, array-join form: join each candidate doc's
+    sorted shingle-hash array onto the pair (two hash joins over |pairs|
+    wide rows) and intersect per pair in numpy. The plan for candidate
+    docs whose arrays do not fit a worker (``_verify_pairs``).
 
     Memory shape: one Arrow batch of the jaccard UDF holds up to
     maxRecordsPerBatch pairs × two shingle arrays (~8 bytes/distinct
     shingle) — ~400 MB/batch at 10k rows × 2.5k-shingle web pages, scaling
     linearly with document length. For very-long-document corpora lower
-    spark.sql.execution.arrow.maxRecordsPerBatch or use
-    verify="inverted", whose per-task footprint is independent of
-    document length."""
+    spark.sql.execution.arrow.maxRecordsPerBatch."""
     j = (cand
-         .join(arrs.select(F.col("doc_id").alias("doc_a"),
-                           F.col("sh_arr").alias("arr_a")), "doc_a")
-         .join(arrs.select(F.col("doc_id").alias("doc_b"),
-                           F.col("sh_arr").alias("arr_b")), "doc_b"))
+         .join(arrs_a.select(F.col("doc_id").alias("doc_a"),
+                             F.col("sh_arr").alias("arr_a")), "doc_a")
+         .join(arrs_b.select(F.col("doc_id").alias("doc_b"),
+                             F.col("sh_arr").alias("arr_b")), "doc_b"))
     return (j.select("doc_a", "doc_b",
                      _jaccard_of_arrays()("arr_a", "arr_b").alias("jaccard"))
             .where(F.col("jaccard") >= jaccard_threshold))
+
+
+def _verify_pairs(cand: DataFrame, left: DataFrame, right: DataFrame,
+                  text_col: str, id_col: str, shingle_k: int,
+                  jaccard_threshold: float) -> DataFrame:
+    """→ (doc_a, doc_b, jaccard), materialized: the candidate pairs
+    ``cand(doc_a, doc_b)`` whose exact set Jaccard of distinct char
+    k-shingles is ≥ ``jaccard_threshold``. doc_a's text is read from
+    ``left``, doc_b's from ``right``; pass the same frame for both sides
+    of a self-join and its arrays are built once. The one verify of
+    ``minhash_lsh_pairs`` and ``near_dup_check_incremental``.
+
+    Verify cost is O(candidates), not O(corpus): each side is semi-joined
+    to the ids that appear in some candidate pair before its sorted
+    shingle-hash arrays (``_shingle_arr_udf``) are built (SCALE.md §8).
+    The plan is then picked from the measured array payload (one
+    aggregate over the persisted arrays): broadcast
+    (``_verify_pairs_broadcast``) when it fits
+    ``VERIFY_BROADCAST_BUDGET``, the array join
+    (``_verify_pairs_vectorized``) above it. Both compute the same
+    numpy intersection; only where the arrays travel differs.
+
+    Lifetime: ``cand`` and the arrays are persisted while they feed the
+    id semi-joins, the payload measure and the verify, the result is
+    materialized with an eager ``localCheckpoint``, and then both are
+    unpersisted, also when the verify raises. The verify runs once per call however many actions
+    follow, and no cache-manager entry outlives the call; only the
+    result's checkpoint blocks remain, for as long as the result is
+    referenced."""
+    held = [cand.persist()]
+
+    def arrays(frame, cols):
+        ids = cand.select(F.col(cols[0]).alias(id_col))
+        for c in cols[1:]:
+            ids = ids.union(cand.select(F.col(c).alias(id_col)))
+        arrs = (frame.join(ids.distinct(), id_col, "left_semi")
+                .select(F.col(id_col).alias("doc_id"),
+                        _shingle_arr_udf(shingle_k)(F.col(text_col))
+                        .alias("sh_arr"))
+                .persist())
+        held.append(arrs)
+        return arrs
+
+    try:
+        if right is left:
+            arrs_a = arrs_b = arrays(left, ("doc_a", "doc_b"))
+        else:
+            arrs_a = arrays(left, ("doc_a",))
+            arrs_b = arrays(right, ("doc_b",))
+        payload = 8 * sum(
+            a.agg(F.coalesce(F.sum(F.size("sh_arr")), F.lit(0))).first()[0]
+            for a in held[1:])
+        plan = (_verify_pairs_broadcast if payload <= VERIFY_BROADCAST_BUDGET
+                else _verify_pairs_vectorized)
+        return plan(cand, arrs_a, arrs_b, jaccard_threshold).localCheckpoint()
+    finally:
+        for df in held:
+            df.unpersist()
 
 
 def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
@@ -649,56 +716,23 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
                       bands: int = 4, shingle_k: int = 3,
                       jaccard_threshold: float = 0.8,
                       band_bucket_cap: int = 200,
-                      signatures: str = "fast",
-                      verify: str = "auto",
-                      broadcast_budget_bytes: int = VERIFY_BROADCAST_BUDGET,
-                      ) -> DataFrame:
-    """→ (doc_a, doc_b, jaccard) near-duplicate pairs.
+                      signatures: str = "fast") -> DataFrame:
+    """→ (doc_a, doc_b, jaccard) near-duplicate pairs, materialized.
 
     Pipeline: signatures → explode into `bands` band-hashes → self-equi-join
     on (band_id, band_hash) with doc_a < doc_b → exact shingle-Jaccard
-    verify ≥ threshold. Candidate generation cost is Σ_buckets B², hence the
-    cap on degenerate buckets.
+    verify ≥ threshold (``_verify_pairs``). Candidate generation cost is
+    Σ_buckets B², hence the cap on degenerate buckets.
 
     ``signatures``: 'fast' (default — xxhash64 bigint sigs, the engine
     tier) or 'md5' (portable tier, replayable in the SQL oracle). The
     final pairs are exact-Jaccard verified either way, so the choice only
     moves candidate-recall, which the planted-dup tests pin for both.
 
-    ``verify``: 'auto' (default), 'broadcast', 'vectorized' or 'inverted'
-    — plans for the same exact set-Jaccard over hashed shingles (all keep
-    the O(candidates)-not-O(corpus) semi-join and hash shingles to 64-bit
-    keys, see _exploded_shingles for the collision analysis):
-
-    - 'auto': measure the candidate-doc array payload (one agg over the
-      persisted arrays); 'broadcast' when it fits
-      ``broadcast_budget_bytes`` (per python-worker copy), else
-      'vectorized'. The right default at every scale: dense small-corpus
-      verifies take the zero-join path, web-scale candidate sets fall
-      back to the distributed join.
-    - 'broadcast': collect the candidate-doc arrays once, broadcast the
-      doc→array dict, per-pair Jaccard map-side over the skinny pair
-      rows (``_verify_pairs_broadcast``). Measured 3.5× over
-      'vectorized' on the sf0.1 bench corpus (230k candidates / 4.9k
-      docs / ~40 MB of arrays).
-    - 'vectorized': each candidate doc → ONE sorted distinct int64
-      shingle-hash array (``_shingle_arr_udf`` — a single Arrow pass, no
-      explode), arrays joined onto the pairs (wide rows, |pairs| of them),
-      |a∩b| per pair by numpy sorted-array intersection. Join traffic is
-      Σ_pairs(|a|+|b|) int64s in |pairs| rows; on a DENSE near-dup corpus
-      (sf0.1 bench: 5k docs, 142k true pairs at J≥0.5) this replaces the
-      inverted plan's Σ_pairs|a|-ROW shuffle (~355M skinny rows through
-      two joins + a 355M-row groupBy) — measured 3.2× on that workload.
-      Per-doc arrays are duplicated once per pair membership; degree is
-      bounded by band_bucket_cap (≤ bands·cap), which bounds the blowup.
-    - 'inverted': shingle-grain inverted-index joins (explode → two
-      codegen hash joins → count). No per-doc array materialization at
-      all, so it stays the right shape when SPARSE candidates meet very
-      LONG documents (array duplication would dominate) — and it is the
-      shape the incremental probe (near_dup_check_incremental) shares."""
-    if verify not in ("auto", "broadcast", "vectorized", "inverted"):
-        raise ValueError(f"verify must be 'auto', 'broadcast', "
-                         f"'vectorized' or 'inverted', got {verify!r}")
+    The result is checkpointed before it is returned and the call's
+    intermediates are released (see ``_verify_pairs``), so later actions
+    — ``dedup_groups``, counts, writes — reread the verified pairs
+    instead of rerunning signatures, band join and verify."""
     # Candidate generation: banded self-join. A bucket-gather alternative
     # (groupBy collect_list + vectorized intra-bucket pair emission, ONE
     # exchange) was built and A/B'd in round 6 and measured SLOWER at
@@ -718,75 +752,9 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
         .select(F.col("a.doc_id").alias("doc_a"),
                 F.col("b.doc_id").alias("doc_b"))
         .distinct()
-        # cand feeds BOTH the candidate-doc semi-join below and the
-        # intersection join; without persistence the signature + band
-        # self-join pipeline would execute twice
-        .persist()
     )
-
-    # Exact-Jaccard verify in inverted form (same shape as
-    # ngram_jaccard_pairs): explode distinct shingles once, count shared
-    # shingles per candidate pair with codegen hash joins, and derive the
-    # union from the two set sizes. The earlier array form carried two
-    # ~|doc|-element string arrays through the candidate join and ran
-    # interpreted array_intersect/array_union per pair — measured 3.0×
-    # slower on a dense corpus (sf0.1, ~140k candidates surviving the
-    # bucket cap, 253 verified pairs: 49.8 s → 16.5 s, identical output).
-    #
-    # Verify cost must be O(candidates), NOT O(corpus): only docs that
-    # appear in some candidate pair need their shingles. Exploding every
-    # doc made the verify shuffle ~|corpus|·|shingles per doc| rows
-    # (measured: 1M docs × ~1k distinct 3-shingles filled a 250 GB disk
-    # with shuffle spill before failing); the semi-join prunes the explode
-    # to the collided minority, the same shape near_dup_check_incremental
-    # already uses for its corpus side.
-    cand_ids = (cand.select(F.col("doc_a").alias(id_col))
-                .union(cand.select(F.col("doc_b").alias(id_col)))
-                .distinct())
-    docs_c = docs.join(cand_ids, id_col, "left_semi")
-
-    if verify in ("auto", "broadcast", "vectorized"):
-        # persisted: the join plan references the arrays on BOTH sides of
-        # the pair and 'auto' sizes them first — without persistence the
-        # shingle UDF would run once per consumer
-        arrs = docs_c.select(
-            F.col(id_col).alias("doc_id"),
-            _shingle_arr_udf(shingle_k)(F.col(text_col)).alias("sh_arr"),
-        ).persist()
-        if verify == "auto":
-            payload = 8 * (arrs.agg(F.coalesce(F.sum(F.size("sh_arr")),
-                                               F.lit(0))).first()[0] or 0)
-            verify = ("broadcast" if payload <= broadcast_budget_bytes
-                      else "vectorized")
-        if verify == "broadcast":
-            return _verify_pairs_broadcast(cand, arrs, jaccard_threshold)
-        return _verify_pairs_vectorized(cand, arrs, jaccard_threshold)
-
-    # hashed=True: the verify's (doc, shingle) table and its two joins run
-    # over 8-byte keys; jaccard is over the hash domain (see
-    # _exploded_shingles — indistinguishable from string-domain Jaccard)
-    ex = _exploded_shingles(docs_c, text_col, id_col, shingle_k,
-                            hashed=True)
-    sz = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    inter = (
-        ex.withColumnRenamed("doc_id", "doc_a").join(cand, "doc_a")
-        .join(ex.select(F.col("doc_id").alias("doc_b"), "sh"),
-              ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b").agg(F.count(F.lit(1)).alias("inter"))
-    )
-    verified = (
-        inter
-        .join(sz.select(F.col("doc_id").alias("doc_a"),
-                        F.col("sz").alias("sz_a")), "doc_a")
-        .join(sz.select(F.col("doc_id").alias("doc_b"),
-                        F.col("sz").alias("sz_b")), "doc_b")
-        .withColumn("jaccard",
-                    F.col("inter").cast("double")
-                    / (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-    return verified
+    return _verify_pairs(cand, docs, docs, text_col, id_col, shingle_k,
+                         jaccard_threshold)
 
 
 def near_dup_check_incremental(new_docs: DataFrame, corpus_docs: DataFrame,
@@ -797,18 +765,20 @@ def near_dup_check_incremental(new_docs: DataFrame, corpus_docs: DataFrame,
                                jaccard_threshold: float = 0.8,
                                probe_bucket_cap: int = 200,
                                signatures: str = "fast") -> DataFrame:
-    """→ (doc_id, dup_of, jaccard): for each NEW doc, the existing corpus
-    docs it near-duplicates — the reference's per-insert dedup check
-    (DeduplicationEngine.check_and_handle, deduplication.py:196-241)
-    re-expressed as a batch probe, the shape a streaming ingest needs: run
-    it per micro-batch in ``foreachBatch`` and append the surviving docs'
-    ``minhash_band_hashes`` rows to the persisted band table.
+    """→ (doc_id, dup_of, jaccard), materialized: for each NEW doc, the
+    existing corpus docs it near-duplicates — the reference's per-insert
+    dedup check (DeduplicationEngine.check_and_handle,
+    deduplication.py:196-241) re-expressed as a batch probe, the shape a
+    streaming ingest needs: run it per micro-batch in ``foreachBatch`` and
+    append the surviving docs' ``minhash_band_hashes`` rows to the
+    persisted band table.
 
     Plan: band-hash only the NEW docs (the corpus is never re-signed when
     ``band_table`` is supplied), equi-join the probes against the table on
-    (band_id, band_hash), then exact-Jaccard-verify each candidate against
-    only the collided corpus docs — the corpus text scan is semi-joined
-    down to candidates first, so probe cost scales with the batch and its
+    (band_id, band_hash), then exact-Jaccard-verify each candidate with
+    the same ``_verify_pairs`` as ``minhash_lsh_pairs`` — new docs on the
+    left, corpus docs on the right, each side semi-joined down to its
+    candidate ids first, so probe cost scales with the batch and its
     collisions, not the corpus. ``probe_bucket_cap`` drops degenerate
     table buckets at probe time (a boilerplate band shared by millions of
     corpus docs would otherwise fan every probe out by that bucket size).
@@ -819,52 +789,20 @@ def near_dup_check_incremental(new_docs: DataFrame, corpus_docs: DataFrame,
         band_table = minhash_band_hashes(
             corpus_docs, text_col, id_col, num_perm, bands, shingle_k,
             signatures)
-    if probe_bucket_cap:
-        # pinned exchange width: same AQE-over-coalescing fix as the
-        # band_bucket_cap window in minhash_band_hashes (see there)
-        par = new_docs.sparkSession.sparkContext.defaultParallelism
-        wcap = Window.partitionBy("band_id", "band_hash")
-        band_table = (band_table
-                      .repartition(par, "band_id", "band_hash")
-                      .withColumn("bucket_n", F.count(F.lit(1)).over(wcap))
-                      .where(F.col("bucket_n") <= probe_bucket_cap)
-                      .drop("bucket_n"))
+    band_table = _cap_buckets(band_table, probe_bucket_cap)
     probes = minhash_band_hashes(new_docs, text_col, id_col, num_perm,
                                  bands, shingle_k, signatures)
-    cand = (probes.select(F.col("doc_id").alias("new_id"),
+    cand = (probes.select(F.col("doc_id").alias("doc_a"),
                           "band_id", "band_hash")
-            .join(band_table.select(F.col("doc_id").alias("old_id"),
+            .join(band_table.select(F.col("doc_id").alias("doc_b"),
                                     "band_id", "band_hash"),
                   ["band_id", "band_hash"])
-            .where(F.col("new_id") != F.col("old_id"))
-            .select("new_id", "old_id").distinct())
-
-    # hashed shingles: same fixed-width-key verify as minhash_lsh_pairs
-    ex_new = _exploded_shingles(new_docs, text_col, id_col, shingle_k,
-                                hashed=True)
-    # scan only the collided corpus docs' text
-    hit_old = corpus_docs.join(
-        cand.select(F.col("old_id").alias(id_col)).distinct(), id_col,
-        "left_semi")
-    ex_old = _exploded_shingles(hit_old, text_col, id_col, shingle_k,
-                                hashed=True)
-    sz_new = ex_new.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    sz_old = ex_old.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    inter = (ex_new.withColumnRenamed("doc_id", "new_id").join(cand, "new_id")
-             .join(ex_old.select(F.col("doc_id").alias("old_id"), "sh"),
-                   ["old_id", "sh"])
-             .groupBy("new_id", "old_id").agg(F.count(F.lit(1)).alias("inter")))
-    return (inter
-            .join(sz_new.select(F.col("doc_id").alias("new_id"),
-                                F.col("sz").alias("sz_a")), "new_id")
-            .join(sz_old.select(F.col("doc_id").alias("old_id"),
-                                F.col("sz").alias("sz_b")), "old_id")
-            .withColumn("jaccard",
-                        F.col("inter").cast("double")
-                        / (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
-            .where(F.col("jaccard") >= jaccard_threshold)
-            .select(F.col("new_id").alias("doc_id"),
-                    F.col("old_id").alias("dup_of"), "jaccard"))
+            .where(F.col("doc_a") != F.col("doc_b"))
+            .select("doc_a", "doc_b").distinct())
+    return (_verify_pairs(cand, new_docs, corpus_docs, text_col, id_col,
+                          shingle_k, jaccard_threshold)
+            .select(F.col("doc_a").alias("doc_id"),
+                    F.col("doc_b").alias("dup_of"), "jaccard"))
 
 
 # ---------------------------------------------------------------------------
@@ -1033,7 +971,7 @@ def embedding_near_dup_pairs(emb: DataFrame, vec_col: str = "embedding",
     it lands in the same bucket only ~43% of the time.
 
     Two standard recall levers, both on by default:
-    - **multiprobe** (hamming-1, mirroring similarity.ann_search): each
+    - **multiprobe** (hamming-1): each
       vector also probes the n_planes buckets one sign-flip away;
     - **multi-table** (``n_tables`` independent plane sets, union of
       candidates): per-table miss rates multiply — with hamming-1 probes
@@ -1210,11 +1148,19 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     operations). Nodes absent from ``pairs`` (singletons) do not appear;
     callers left-join and coalesce to the node's own id.
 
-    ``local_threshold``: once the live edge set is at most this many rows
-    (checked before the first round and after every round — the star
-    rounds only ever shrink distinct edges toward one per non-root node),
-    the remainder is finished with a driver-side union-find instead of
-    more distributed rounds. Each distributed round costs several
+    ``local_threshold``: when the edges fit in this many rows, the graph
+    is finished with a driver-side union-find instead of distributed
+    rounds. Before the first round the gate is one probe that collects
+    at most ``local_threshold + 1`` RAW canonical edge rows, duplicate
+    rows included, not the distinct edge set: heavily duplicated input
+    can take the distributed path although its distinct edges would fit.
+    After every round the gate is the distinct live edge count (the star
+    rounds only ever shrink distinct edges toward one per non-root
+    node). Above the threshold, ``pairs`` is computed twice, once by the
+    probe and once by the ``canon.distinct()`` checkpoint, so an input
+    that is not materialized runs its whole lineage twice;
+    ``minhash_lsh_pairs`` output is checkpointed, so for it both only
+    reread its blocks. Each distributed round costs several
     fixed-overhead jobs; below ~10⁶ edges that overhead dwarfs the O(E)
     local pass (warm-measured on a 253-edge graph: 3.0 s of round
     scheduling vs 1.1 s local finish; re-measured round 6 at 0.9M edges:

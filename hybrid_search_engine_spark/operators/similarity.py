@@ -7,18 +7,18 @@
   pandas-UDF pass (numpy matmul per batch) — the throughput path; at 100 TB
   this is a broadcast of the query matrix into a mapInPandas over the
   embedding table, no shuffle at all until the final per-query merge.
-- ann_lsh: random-hyperplane LSH bucket index + probe — the scale path:
-  candidates come from the query's bucket (and optionally multi-probe
-  neighbors), exact cosine re-rank on candidates only.
-- ivf_*: inverted-file ANN — spherical-k-means coarse quantizer trained on
-  a deterministic driver sample, vectors assigned to their nearest
-  centroid's list, probes scan only the nprobe nearest lists. The
-  data-adaptive alternative to the LSH buckets (FAISS IndexIVFFlat shape).
+- ivf_*: inverted-file ANN, the scale path — spherical-k-means coarse
+  quantizer trained on a deterministic driver sample, vectors assigned to
+  their nearest centroid's list, probes scan only the nprobe nearest
+  lists, exact cosine re-rank on candidates only (FAISS IndexIVFFlat
+  shape).
+- hyperplane_bucket: random-hyperplane sign bucket as a native
+  expression — the banding key of dedup.embedding_near_dup_pairs.
 
 Reference semantics: the engine's semantic side holds the full matrix in
 driver RAM and brute-forces (indexer.py:229-243, utils.py:28-54) with an
 optional FAISS sidecar (core.py:244-252) — both replaced by distributed
-scans/buckets here.
+scans and IVF lists here.
 """
 
 from __future__ import annotations
@@ -30,8 +30,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..localdf import local_df
 
 
 def _dot_lit(vec_col, qvec: list[float]):
@@ -115,7 +113,7 @@ def knn_batch_pandas(spark: SparkSession, emb: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# LSH-bucketed ANN
+# Random-hyperplane buckets
 # ---------------------------------------------------------------------------
 
 def hyperplane_bucket(vec_col, n_planes: int = 8, seed: int = 7):
@@ -143,44 +141,6 @@ def hyperplane_bucket(vec_col, n_planes: int = 8, seed: int = 7):
     for j in range(n_planes):
         b = b * 2 + sign_bit(j)
     return b
-
-
-def build_ann_index(emb: DataFrame, vec_col: str = "embedding",
-                    id_col: str = "vec_id", n_planes: int = 8,
-                    seed: int = 7) -> DataFrame:
-    """Bucketed table (bucket int, vec_id, embedding) — write partitioned /
-    bucketed by `bucket` for probe-time partition pruning at scale."""
-    return emb.select(
-        hyperplane_bucket(F.col(vec_col), n_planes, seed).alias("bucket"),
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-    )
-
-
-def save_ann_index(ann_index: DataFrame, path: str, n_planes: int = 8,
-                   seed: int = 7) -> None:
-    """S6: persist the bucketed ANN table partitioned by `bucket`, plus a
-    sidecar meta file carrying the plane parameters — the analogue of the
-    reference's FAISS index sidecar (core.py:244-252, indexer.py:229-243),
-    as a partition-pruned table instead of a single-process binary blob.
-    A probe then reads ONLY the probed bucket directories."""
-    import json
-    import os
-
-    ann_index.write.partitionBy("bucket").mode("overwrite").parquet(path)
-    with open(os.path.join(path, "_ann_meta.json"), "w") as f:
-        json.dump({"n_planes": int(n_planes), "seed": int(seed)}, f)
-
-
-def load_ann_index(spark: SparkSession, path: str):
-    """→ (ann_index DataFrame, n_planes, seed). Round-trip of
-    save_ann_index; the returned frame is partition-prunable on `bucket`."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_ann_meta.json")) as f:
-        meta = json.load(f)
-    return spark.read.parquet(path), meta["n_planes"], meta["seed"]
 
 
 def ivf_train_centroids(emb: DataFrame, n_lists: int = 16,
@@ -239,8 +199,7 @@ def build_ivf_index(emb: DataFrame, centroids: np.ndarray,
     vectorized-numpy path is the scale-correct choice here.
 
     Write the result ``partitionBy("list_id")`` (save_ivf_index) and probes
-    read only nprobe list directories — same pruning story as the LSH
-    bucket table, but with data-adaptive cells instead of random planes."""
+    read only nprobe list directories."""
     from .. import ensure_udf_serializable
 
     ensure_udf_serializable()
@@ -296,19 +255,4 @@ def ivf_search(ivf_index: DataFrame, centroids: np.ndarray,
     order = np.lexsort((np.arange(len(C)), -np.round(C @ q, 9)))
     probes = [int(j) for j in order[: min(nprobe, len(C))]]
     cand = ivf_index.where(F.col("list_id").isin(probes))
-    return knn_brute(cand, qvec, k=k, vec_col="embedding", id_col="vec_id")
-
-
-def ann_search(spark: SparkSession, ann_index: DataFrame, qvec: list[float],
-               k: int = 10, n_planes: int = 8, seed: int = 7,
-               multiprobe_hamming: int = 1) -> DataFrame:
-    """Probe the bucket of qvec (± buckets within hamming 1 — multiprobe
-    recovers boundary losses), exact cosine re-rank on candidates only."""
-    one = local_df(spark, [(qvec,)], "v array<double>")
-    qb = one.select(hyperplane_bucket(F.col("v"), n_planes, seed).alias("b")
-                    ).first()["b"]
-    probes = {qb}
-    if multiprobe_hamming >= 1:
-        probes |= {qb ^ (1 << j) for j in range(n_planes)}
-    cand = ann_index.where(F.col("bucket").isin(sorted(probes)))
     return knn_brute(cand, qvec, k=k, vec_col="embedding", id_col="vec_id")

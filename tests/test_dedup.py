@@ -342,77 +342,117 @@ def test_near_dup_check_probe_bucket_cap(spark):
     assert {r["dup_of"] for r in uncapped.collect()} == {1, 2, 3}
 
 
-def test_verify_vectorized_equals_inverted(spark, docs_idx):
-    """The two exact-verify plans (numpy sorted-array intersection vs
-    shingle-grain inverted-index joins) are the SAME function: identical
-    (doc_a, doc_b) sets and identical jaccard values on the fixture corpus
-    at a loose and a tight threshold. Both count distinct char-3-shingles
-    exactly — the hash domains differ (splitmix64 rolling vs xxhash64
-    string) but an injective-whp map cannot change a set intersection."""
-    from hybrid_search_engine_spark.operators.dedup import minhash_lsh_pairs
+def _pairs(df):
+    return {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in df.collect()}
+
+
+def test_verify_broadcast_equals_join(spark, docs_idx, monkeypatch):
+    """The two exact-verify plans (broadcast arrays + map-side numpy vs
+    the array join) are the SAME function: identical (doc_a, doc_b) sets
+    and identical jaccard values on the fixture corpus at a loose and a
+    tight threshold. A budget of 0 forces the join, 2⁴⁰ the broadcast."""
+    from hybrid_search_engine_spark.operators import dedup
 
     for thr in (0.5, 0.8):
-        vec = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-               for r in minhash_lsh_pairs(docs_idx, jaccard_threshold=thr,
-                                          verify="vectorized").collect()}
-        inv = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-               for r in minhash_lsh_pairs(docs_idx, jaccard_threshold=thr,
-                                          verify="inverted").collect()}
-        assert set(vec) == set(inv), thr
-        for pair, jv in vec.items():
-            assert abs(jv - inv[pair]) < 1e-12, (pair, jv, inv[pair])
-        bc = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-              for r in minhash_lsh_pairs(docs_idx, jaccard_threshold=thr,
-                                         verify="broadcast").collect()}
-        assert bc == vec, thr
+        got = {}
+        for budget in (0, 1 << 40):
+            monkeypatch.setattr(dedup, "VERIFY_BROADCAST_BUDGET", budget)
+            got[budget] = _pairs(dedup.minhash_lsh_pairs(
+                docs_idx, jaccard_threshold=thr))
+        assert got[0] == got[1 << 40], thr
+        assert len(got[0]) > 0, thr
 
 
-def test_verify_auto_tier_selection(spark, docs_idx):
-    """'auto' picks broadcast under the budget and the join plan above
-    it — and both routes produce the identical pair set (auto must never
-    change the answer, only the plan)."""
-    from hybrid_search_engine_spark.operators.dedup import minhash_lsh_pairs
+def test_verify_auto_tier_selection(spark, docs_idx, monkeypatch):
+    """The plan is picked from the measured array payload: broadcast
+    under VERIFY_BROADCAST_BUDGET, the array join above it — read at call
+    time, so patching the module constant moves the switch."""
+    from hybrid_search_engine_spark.operators import dedup
 
-    small_budget = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-                    for r in minhash_lsh_pairs(
-                        docs_idx, jaccard_threshold=0.5, verify="auto",
-                        broadcast_budget_bytes=0).collect()}
-    big_budget = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-                  for r in minhash_lsh_pairs(
-                      docs_idx, jaccard_threshold=0.5, verify="auto",
-                      broadcast_budget_bytes=1 << 40).collect()}
+    picked = []
+    for name in ("_verify_pairs_broadcast", "_verify_pairs_vectorized"):
+        real = getattr(dedup, name)
+
+        def spy(*args, _real=real, _name=name):
+            picked.append(_name)
+            return _real(*args)
+        monkeypatch.setattr(dedup, name, spy)
+
+    monkeypatch.setattr(dedup, "VERIFY_BROADCAST_BUDGET", 0)
+    small_budget = _pairs(dedup.minhash_lsh_pairs(docs_idx,
+                                                  jaccard_threshold=0.5))
+    monkeypatch.setattr(dedup, "VERIFY_BROADCAST_BUDGET", 1 << 40)
+    big_budget = _pairs(dedup.minhash_lsh_pairs(docs_idx,
+                                                jaccard_threshold=0.5))
+    assert picked == ["_verify_pairs_vectorized", "_verify_pairs_broadcast"]
     assert small_budget == big_budget
     assert len(big_budget) > 0
 
 
-def test_verify_vectorized_hand_valued(spark):
+def test_verify_vectorized_hand_valued(spark, monkeypatch):
     """Exact jaccard value on a hand-computable pair: 'abcdef' vs 'abcdez'
     have 3-shingle sets {abc,bcd,cde,def} and {abc,bcd,cde,dez} →
     jaccard = 3/5. Both verify plans must produce exactly 0.6, and an
     exact duplicate pair must produce exactly 1.0."""
-    from hybrid_search_engine_spark.operators.dedup import minhash_lsh_pairs
+    from hybrid_search_engine_spark.operators import dedup
 
     docs = spark.createDataFrame(
         [(1, "abcdef"), (2, "abcdez"), (3, "abcdef")],
         "doc_id long, text string")
-    for verify in ("vectorized", "inverted", "broadcast"):
-        got = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-               for r in minhash_lsh_pairs(docs, num_perm=32, bands=16,
-                                          jaccard_threshold=0.5,
-                                          verify=verify).collect()}
-        assert got.get((1, 3)) == 1.0, (verify, got)
+    for budget in (0, 1 << 40):
+        monkeypatch.setattr(dedup, "VERIFY_BROADCAST_BUDGET", budget)
+        got = _pairs(dedup.minhash_lsh_pairs(docs, num_perm=32, bands=16,
+                                             jaccard_threshold=0.5))
+        assert got.get((1, 3)) == 1.0, (budget, got)
         # (1,2)/(2,3) at 0.6 appear iff LSH banding collides them — if
         # present, the VALUE must be exact
         for pair in ((1, 2), (2, 3)):
             if pair in got:
-                assert got[pair] == 0.6, (verify, pair, got[pair])
+                assert got[pair] == 0.6, (budget, pair, got[pair])
 
 
-def test_verify_param_validation(spark, docs_idx):
+def test_verify_broadcast_missing_id_raises(spark):
+    """A candidate id with no shingle array fails loudly instead of
+    reading a neighbour's slice: one id sorts between present ids, one
+    past the end of the table."""
+    from pyspark.errors import PythonException
+
+    from hybrid_search_engine_spark.operators.dedup import (
+        _shingle_arr_udf,
+        _verify_pairs_broadcast,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "abcdef"), (3, "abcdez"), (5, "abcdef")],
+        "doc_id long, text string")
+    arrs = docs.select("doc_id",
+                       _shingle_arr_udf(3)(F.col("text")).alias("sh_arr"))
+    ok = spark.createDataFrame([(1, 5)], "doc_a long, doc_b long")
+    assert _pairs(_verify_pairs_broadcast(ok, arrs, arrs, 0.5)) == {
+        (1, 5): 1.0}
+    for a, b, missing in ((1, 2, "doc_b id 2"), (9, 3, "doc_a id 9")):
+        cand = spark.createDataFrame([(a, b)], "doc_a long, doc_b long")
+        with pytest.raises(PythonException, match=missing):
+            _verify_pairs_broadcast(cand, arrs, arrs, 0.5).collect()
+
+
+def test_lsh_pairs_result_lifetime(spark, docs_idx):
+    """minhash_lsh_pairs returns materialized pairs and releases its
+    intermediates: no cache-manager entry outlives the call, and the
+    result's own checkpoint is the only persisted RDD it adds, however
+    often the result is read."""
     from hybrid_search_engine_spark.operators.dedup import minhash_lsh_pairs
 
-    with pytest.raises(ValueError, match="verify"):
-        minhash_lsh_pairs(docs_idx, verify="nope")
+    jsc = spark.sparkContext._jsc
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    entries0 = cm.numCachedEntries()
+    rdds0 = jsc.getPersistentRDDs().size()
+    pairs = minhash_lsh_pairs(docs_idx, jaccard_threshold=0.5)
+    assert cm.numCachedEntries() == entries0
+    first = _pairs(pairs)
+    assert _pairs(pairs) == first and len(first) > 0
+    assert cm.numCachedEntries() == entries0
+    assert jsc.getPersistentRDDs().size() <= rdds0 + 1
 
 
 def test_cc_long_chain_vectorized_and_arrow_branch(spark, monkeypatch):

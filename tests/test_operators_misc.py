@@ -56,26 +56,6 @@ def test_knn_batch_matches_brute(spark, emb):
         assert [v for _, v in sorted(by_q[qid])] == [v for v, _ in want], qid
 
 
-def test_ann_lsh_recall(spark, emb):
-    from hybrid_search_engine_spark.operators.similarity import (
-        ann_search,
-        build_ann_index,
-        knn_brute,
-    )
-
-    df, rows = emb
-    idx = build_ann_index(df, n_planes=6).cache()
-    idx.count()
-    hits = 0
-    for probe in (5, 20, 40):
-        q = rows[probe][1]
-        exact = {r["vec_id"] for r in knn_brute(df, q, k=5).collect()}
-        approx = {r["vec_id"] for r in
-                  ann_search(spark, idx, q, k=5, n_planes=6).collect()}
-        hits += len(exact & approx)
-    assert hits >= 6  # ≥40% recall@5 over 3 probes with 6 planes + multiprobe
-
-
 def test_ivf_full_probe_equals_brute(spark, emb):
     """nprobe == n_lists makes IVF a partition of the corpus → exact."""
     from hybrid_search_engine_spark.operators.similarity import (

@@ -484,39 +484,6 @@ def test_result_cache_roundtrip_ttl_and_eviction(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# ANN index save/load round-trip (S6)
-# ---------------------------------------------------------------------------
-
-def test_ann_index_save_load_roundtrip(spark, tmp_path):
-    from hybrid_search_engine_spark.operators.similarity import (
-        ann_search,
-        build_ann_index,
-        knn_brute,
-        load_ann_index,
-        save_ann_index,
-    )
-
-    rng = np.random.RandomState(2)
-    vecs = rng.standard_normal((60, 8))
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(60)],
-        "vec_id long, embedding array<double>")
-    idx = build_ann_index(emb, n_planes=4, seed=7)
-    p = str(tmp_path / "ann")
-    save_ann_index(idx, p, n_planes=4, seed=7)
-    loaded, n_planes, seed = load_ann_index(spark, p)
-    assert (n_planes, seed) == (4, 7)
-
-    q = [float(x) for x in vecs[13]]
-    got = ann_search(spark, loaded, q, k=5, n_planes=n_planes, seed=seed)
-    rows = got.collect()
-    assert rows[0]["vec_id"] == 13  # the vector itself tops its own probe
-    # probe results are a subset of brute-force candidates by construction
-    brute = {r["vec_id"] for r in knn_brute(emb, q, k=60).collect()}
-    assert {r["vec_id"] for r in rows} <= brute
-
-
-# ---------------------------------------------------------------------------
 # stateful streaming sessionization (applyInPandasWithState)
 # ---------------------------------------------------------------------------
 
