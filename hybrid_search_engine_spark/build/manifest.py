@@ -94,7 +94,7 @@ def append_manifest(index_dir: str, records: list[dict]) -> None:
             f.write(json.dumps(r, sort_keys=True) + "\n")
 
 
-def _write_json_atomic(path: str, obj) -> None:
+def write_json_atomic(path: str, obj) -> None:
     """Write ``obj`` as JSON so a crash leaves the old file or the new one,
     never a torn one."""
     tmp = path + ".tmp"
@@ -221,7 +221,7 @@ def build_index(
         tfdl = term_frequencies_with_doclen(docs, n_partitions=p_stats,
                                             term_domain=term_domain)
         tfdl.write.mode("overwrite").parquet(tf_dir)
-        _write_json_atomic(tf_marker, fp)
+        write_json_atomic(tf_marker, fp)
         _log("tf table written")
     tf = spark.read.parquet(tf_dir)
 
@@ -326,7 +326,7 @@ def build_index(
             raise doc_stats_err[0]
         _log("stats tables written")
     if not simulate_crash:
-        _write_json_atomic(corpus_json, {
+        write_json_atomic(corpus_json, {
             "doc_count": n_docs, "avg_doc_len": avg_doc_len,
             "k1": k1, "b": b, "n_shards": n_shards,
             "block_size": block_size, "term_domain": term_domain,
@@ -358,8 +358,11 @@ class IndexReader:
     partitioning, so a single query is ONE stage (filter → explode → BM25
     → sum) plus the driver-side TakeOrdered merge, and the term filter
     skips cached batches by their min/max. Costs one upfront job and
-    executor memory for the blocks. Without the cache a query reads the
-    parquet and pays one exchange.
+    executor memory for the blocks. The cache of a hash-domain index also
+    holds each key as a string, so a query's generated code does not
+    depend on its terms and no query compiles new classes once each query
+    shape has run. Without the cache a query reads the parquet and pays
+    one exchange.
 
     ``cache_tf=True`` is kept for callers written against the former
     JVM-only tf-cache tier: the posting blocks now serve that tier, so it
@@ -382,6 +385,7 @@ class IndexReader:
         # no Spark job on the latency path); absent key = legacy/portable
         # string-domain index
         self._term_key = None
+        self._str_keys = False
         if self.corpus.get("term_domain", "string") == "hash":
             from ..functions.hashing import spark_xxhash64_str
             self._term_key = spark_xxhash64_str
@@ -392,13 +396,29 @@ class IndexReader:
             # exactly one task per core — ONE task wave
             p = max(1, min(int(self.corpus["n_shards"]),
                            spark.sparkContext.defaultParallelism))
+            # The term filter skips cached batches only while its keys are
+            # literals, and a bigint literal is written into the generated
+            # Java, so every query would compile new classes; a string
+            # literal is passed by reference. So the cache of a hash-domain
+            # index carries each key as a string too, sorted on it, and the
+            # scorers' view names that column "term".
+            self._str_keys = self._term_key is not None
+            if self._str_keys:
+                self.postings = self.postings.withColumn(
+                    "term_str", F.col("term").cast("string"))
             self.postings = (self.postings.repartition(p, "shard_id")
-                             .sortWithinPartitions("term").cache())
+                             .sortWithinPartitions("term_str" if self._str_keys
+                                                   else "term")
+                             .cache())
             self.postings.count()
+        view = self.postings
+        if self._str_keys:
+            view = view.select(F.col("term_str").alias("term"), "shard_id",
+                               "postings")
         # the scorers name the postings in SQL text; the view lives as long
         # as the reader (dropping a view uncaches its plan)
         self._view = f"hse_postings_{uuid.uuid4().hex}"
-        self.postings.createOrReplaceTempView(self._view)
+        view.createOrReplaceTempView(self._view)
         self._tstats_arg = self.term_stats
         if cache_term_stats:
             self._tstats_arg = {
@@ -411,7 +431,11 @@ class IndexReader:
             raise ValueError(f"mode must be 'pruned' or 'exact', got {mode!r}")
         from ..operators.score import query_weights
 
-        return query_weights(queries, self._tstats_arg, self._term_key)
+        weights = query_weights(queries, self._tstats_arg, self._term_key)
+        if self._str_keys:
+            weights = {qid: {str(t): v for t, v in w.items()}
+                       for qid, w in weights.items()}
+        return weights
 
     def search(self, query: str, k: int = 10, mode: str = "pruned"):
         """Top-k → (doc_id, score)."""

@@ -1,9 +1,12 @@
 """Exact BM25 scoring: the recompute-from-tf backstop and the index scorer.
 
-Two plans share one contribution expression (``bm25_contribution_sql``):
+Two plans share one contribution expression (``bm25_contribution_sql``)
+and one ranking order (``RANK_ORDER``):
 
 - ``score_query_terms``/``search``: query terms ⋈ tf ⋈ doc_stats, straight
-  from the statistics tables (contract backstop);
+  from the statistics tables (contract backstop). The query side is tiny,
+  so it is broadcast into the tf scan; the top-k is TakeOrderedAndProject
+  (bounded per-partition heap + driver merge).
 - ``search_postings``/``search_postings_batch``: the index query path. The
   posting blocks of the query terms are exploded and scored in whole-stage
   codegen, summed per (shard_id, doc_id) and merged to the top-k. Against
@@ -11,28 +14,31 @@ Two plans share one contribution expression (``bm25_contribution_sql``):
   a single query is one stage plus the driver's TakeOrdered merge, and a
   batch adds exactly one exchange, by query_id, for the per-query window.
 
-The core retrieval join (SURVEY.md J1): query terms ⋈ tf ON term. The query
-side is tiny → broadcast hash join; Catalyst prunes the tf scan to matching
-terms. Per-term contributions are column arithmetic (whole-stage codegen),
-summed per doc, then TakeOrderedAndProject gives the global top-k (bounded
-per-partition heap + driver merge — exactly the "bounded min-heap per
-partition merged to global top-k" shape).
+Every index query, single or batch, is ONE ``spark.sql`` text, top-k
+included, with no DataFrame call after it: each call on a DataFrame is
+analysed again and costs py4j round trips, which made up most of a warm
+query's driver time. The generated code of a query does not depend on its
+terms or weights either, so whole-stage codegen compiles nothing for a
+query it has not seen: weights ride in literal maps and string keys in
+the term filter, and Spark passes both to the generated Java as
+reference objects. (A bigint literal is written into the Java source, so
+IndexReader's cache of a hash-domain index carries its keys as strings;
+the cold parquet path keeps bigint keys for pushdown and compiles per
+query.) The term filter is an IN list of literals, which is what Spark
+needs to push it into parquet and to skip cached batches by min/max.
 
 Formula parity (math contract, /root/reference/search_engine/bm25.py:106-110):
     score(d, q) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
 with idf = ln((N − df + 0.5)/(df + 0.5) + 1), k1=1.5, b=0.75, stopwords
 removed (bm25.py:19-35). All arithmetic float64; ranking tie-break
 (-round(score,9), doc_id) per SURVEY.md §5.4.
-
-Multi-query batch path: a queries DataFrame joins the same way with the
-per-query top-k taken by window W3 instead of a global limit.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..localdf import local_df
@@ -40,7 +46,10 @@ from ..reference_semantics import tokenize
 
 K1_DEFAULT = 1.5
 B_DEFAULT = 0.75
-_TOKEN = re.compile(r"[a-z0-9_]+")
+_TOKEN = re.compile(r"[a-z0-9_]+|-[0-9]+")
+# The one ranking order (SURVEY.md §5.4): score rounded to 9 places, best
+# first, ties to the smaller doc_id. Every top-k in this module uses it.
+RANK_ORDER = "round(score, 9) DESC, doc_id ASC"
 
 
 def query_terms_df(spark: SparkSession, query: str, remove_stopwords: bool = True,
@@ -88,9 +97,10 @@ def bm25_contribution(k1: float = K1_DEFAULT, b: float = B_DEFAULT):
 
 
 def _sql_lit(v) -> str:
-    """SQL literal of a term key (bigint, or a query token) or a weight
-    (double). A string that is not a plain token is rejected rather than
-    quoted: query tokens are ``[a-z0-9_]+`` (reference_semantics.tokenize)."""
+    """SQL literal of a term key (bigint, a query token, or a hash key in
+    decimal) or a weight (double). Any other string is rejected rather
+    than quoted: query tokens are ``[a-z0-9_]+``
+    (reference_semantics.tokenize)."""
     if isinstance(v, float):
         return f"{v!r}D"
     if isinstance(v, int):
@@ -120,34 +130,14 @@ def score_query_terms(qterms: DataFrame, tf: DataFrame, tstats: DataFrame,
     )
 
 
-def topk_single(scores: DataFrame, k: int) -> DataFrame:
-    """Global top-k under the tie-break protocol → TakeOrderedAndProject."""
-    return (
-        scores.orderBy(F.round(F.col("score"), 9).desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select("doc_id", "score")
-    )
-
-
-def topk_batch(scores: DataFrame, k: int) -> DataFrame:
-    """Per-query top-k via window W3 (one shuffle by query_id)."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("score"), 9).desc(), F.col("doc_id").asc()
-    )
-    return (
-        scores.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
-
-
 def search(spark: SparkSession, query: str, tf: DataFrame, tstats: DataFrame,
            dstats: DataFrame, avg_doc_len: float, k: int = 10,
            k1: float = K1_DEFAULT, b: float = B_DEFAULT) -> DataFrame:
     """Single-query exact BM25 top-k (sparse: zero-score docs never surface)."""
     qt = query_terms_df(spark, query)
     scores = score_query_terms(qt, tf, tstats, dstats, avg_doc_len, k1, b)
-    return topk_single(scores, k)
+    return spark.sql(f"SELECT doc_id, score FROM {{scores}} "
+                     f"ORDER BY {RANK_ORDER} LIMIT {int(k)}", scores=scores)
 
 
 # ---------------------------------------------------------------------------
@@ -192,23 +182,20 @@ def query_weights(queries: list[tuple], tstats, term_key=None,
     return out
 
 
-def _index_scores(spark: SparkSession, blocks_sql: str, avg_doc_len: float,
-                  k1: float, b: float, keys: str = "", **frames) -> DataFrame:
-    """Posting blocks (``blocks_sql``: rows of *keys, shard_id, idf,
-    qweight, postings) → (*keys, shard_id, doc_id, score). Grouping on
+def _index_scores_sql(blocks_sql: str, avg_doc_len: float, k1: float,
+                      b: float, keys: str = "") -> str:
+    """SQL text: posting blocks (``blocks_sql``: rows of *keys, shard_id,
+    idf, qweight, postings) → (*keys, shard_id, doc_id, score). Grouping on
     shard_id lets a shard-partitioned input satisfy the aggregate without
-    an exchange. One SQL text, so building a query's plan is one parse and
-    one analysis instead of one per DataFrame call (measured ~100 → ~15 ms
-    of driver time per query). ``frames`` are DataFrames the text names as
-    ``{name}`` (spark.sql registers them as temp views for the call)."""
-    return spark.sql(f"""
+    an exchange."""
+    return f"""
         SELECT {keys}shard_id, doc_id,
                sum(({bm25_contribution_sql(k1, b)}) * qweight) AS score
         FROM (SELECT {keys}shard_id, idf, qweight,
                      {_sql_lit(float(avg_doc_len))} AS avgdl,
                      inline(postings)
               FROM ({blocks_sql}))
-        GROUP BY {keys}shard_id, doc_id""", **frames)
+        GROUP BY {keys}shard_id, doc_id"""
 
 
 def search_postings(spark: SparkSession, postings_view: str, weights: dict,
@@ -216,9 +203,9 @@ def search_postings(spark: SparkSession, postings_view: str, weights: dict,
                     b: float = B_DEFAULT) -> DataFrame:
     """One query's top-k → (doc_id, score) over the posting blocks in temp
     view ``postings_view``. ``weights``: term → (idf, qweight), non-empty
-    (``query_weights``). They ride as literal map expressions, so the plan
-    has no join: filter → explode → contribution → sum →
-    TakeOrderedAndProject."""
+    (``query_weights``), keyed in the view's term type. They ride as
+    literal map expressions, so the plan has no join: filter → explode →
+    contribution → sum → TakeOrderedAndProject."""
     terms = sorted(weights)
 
     def lit_map(i: int) -> str:
@@ -228,7 +215,10 @@ def search_postings(spark: SparkSession, postings_view: str, weights: dict,
     blocks = (f"SELECT shard_id, {lit_map(0)}[term] AS idf, "
               f"{lit_map(1)}[term] AS qweight, postings FROM {postings_view} "
               f"WHERE term IN ({', '.join(map(_sql_lit, terms))})")
-    return topk_single(_index_scores(spark, blocks, avg_doc_len, k1, b), k)
+    return spark.sql(f"""
+        SELECT doc_id, score
+        FROM ({_index_scores_sql(blocks, avg_doc_len, k1, b)})
+        ORDER BY {RANK_ORDER} LIMIT {int(k)}""")
 
 
 def search_postings_batch(spark: SparkSession, postings_view: str,
@@ -238,7 +228,7 @@ def search_postings_batch(spark: SparkSession, postings_view: str,
     """Many queries in one plan → (query_id, rank, doc_id, score).
     ``weights``: query_id → {term: (idf, qweight)}, non-empty. The
     (query_id, term, idf, qweight) table is broadcast-joined to the
-    blocks; the per-query top-k is the row_number window of topk_batch."""
+    blocks; the per-query top-k is a row_number window over RANK_ORDER."""
     terms = sorted({t for w in weights.values() for t in w})
     key_type = "bigint" if isinstance(terms[0], int) else "string"
     rows = [(qid, t, idf, qw) for qid, w in sorted(weights.items())
@@ -249,5 +239,10 @@ def search_postings_batch(spark: SparkSession, postings_view: str,
               f"q.qweight, p.postings FROM {postings_view} p "
               "JOIN {queries} q ON p.term = q.term "
               f"WHERE p.term IN ({', '.join(map(_sql_lit, terms))})")
-    return topk_batch(_index_scores(spark, blocks, avg_doc_len, k1, b,
-                                    "query_id, ", queries=queries), k)
+    scores = _index_scores_sql(blocks, avg_doc_len, k1, b, "query_id, ")
+    return spark.sql(f"""
+        SELECT query_id, rank, doc_id, score
+        FROM (SELECT query_id, doc_id, score, row_number() OVER (
+                  PARTITION BY query_id ORDER BY {RANK_ORDER}) AS rank
+              FROM ({scores}))
+        WHERE rank <= {int(k)}""", queries=queries)

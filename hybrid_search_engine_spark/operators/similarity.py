@@ -223,13 +223,15 @@ def build_ivf_index(emb: DataFrame, centroids: np.ndarray,
 def save_ivf_index(ivf_index: DataFrame, centroids: np.ndarray,
                    path: str) -> None:
     """Persist the IVF table partitioned by list_id + a sidecar with the
-    centroid matrix (the coarse quantizer IS the metadata)."""
-    import json
+    centroid matrix (the coarse quantizer IS the metadata). The sidecar is
+    replaced atomically: a crash mid-write leaves the previous one."""
     import os
 
+    from ..build.manifest import write_json_atomic
+
     ivf_index.write.partitionBy("list_id").mode("overwrite").parquet(path)
-    with open(os.path.join(path, "_ivf_meta.json"), "w") as f:
-        json.dump({"centroids": np.asarray(centroids).tolist()}, f)
+    write_json_atomic(os.path.join(path, "_ivf_meta.json"),
+                      {"centroids": np.asarray(centroids).tolist()})
 
 
 def load_ivf_index(spark: SparkSession, path: str):

@@ -80,6 +80,12 @@ def get_spark(
         # a million growing list buffers thrashes exactly where the sort
         # fallback is protective. The conservative default is the right
         # scale posture; leave it.
+        # NOT set: spark.sql.optimizer.inSetConversionThreshold=0. It turns
+        # every IN list into InSet, whose values the generated Java takes
+        # by reference, but a cached relation skips batches by min/max only
+        # for IN and =, not InSet (Spark 4.1), so a cached term filter
+        # would scan every batch. IndexReader keeps its cached keys as
+        # strings instead, whose literals are references in either form.
     )
     if jvm_opts:
         b = b.config("spark.driver.extraJavaOptions", jvm_opts)

@@ -455,6 +455,29 @@ def test_lsh_pairs_result_lifetime(spark, docs_idx):
     assert jsc.getPersistentRDDs().size() <= rdds0 + 1
 
 
+def test_lsh_pairs_signs_each_doc_once(spark, docs_idx, monkeypatch):
+    """The band self-join reads the band table twice; minhash_lsh_pairs
+    must still run the signature UDF over each document exactly once per
+    call (an accumulator counts the rows the UDF is given)."""
+    from pyspark.sql import functions as F
+
+    from hybrid_search_engine_spark.operators import dedup
+
+    sig_udf = dedup._minhash_sig_udf(16, 3)
+    rows = spark.sparkContext.accumulator(0)
+    sign = sig_udf.func
+
+    @F.pandas_udf(sig_udf.returnType)
+    def counted(s):
+        rows.add(len(s))
+        return sign(s)
+
+    monkeypatch.setattr(dedup, "_minhash_sig_udf", lambda *a: counted)
+    pairs = dedup.minhash_lsh_pairs(docs_idx, jaccard_threshold=0.5)
+    assert len(_pairs(pairs)) > 0
+    assert rows.value == docs_idx.count()
+
+
 def test_cc_long_chain_vectorized_and_arrow_branch(spark, monkeypatch):
     """Round-6 internals: the numeric CC finish is a numpy
     min-label-propagation loop (pointer jumping) and, above the literal

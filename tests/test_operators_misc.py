@@ -137,6 +137,50 @@ def test_ivf_save_load_roundtrip(spark, emb, tmp_path):
     assert m, f"no partition filter on list_id in scan:\n{plan}"
 
 
+def test_ivf_sidecar_write_is_atomic(spark, emb, tmp_path, monkeypatch):
+    """A sidecar write that dies inside json.dump (after writing part of
+    its output) leaves the previous ``_ivf_meta.json`` whole, and
+    save_ivf_index never leaves a torn one. (The overwrite of the parquet
+    table removes the previous sidecar before the new one is written, so
+    a save that fails there leaves none.)"""
+    import json
+    import os
+
+    from hybrid_search_engine_spark.build.manifest import write_json_atomic
+    from hybrid_search_engine_spark.operators.similarity import (
+        build_ivf_index,
+        ivf_train_centroids,
+        load_ivf_index,
+        save_ivf_index,
+    )
+
+    df, _ = emb
+    C = ivf_train_centroids(df, n_lists=4, sample_size=100)
+    idx = build_ivf_index(df, C)
+    p = str(tmp_path / "ivf")
+    meta = os.path.join(p, "_ivf_meta.json")
+    save_ivf_index(idx, C, p)
+
+    def torn_dump(obj, f):
+        f.write('{"centroids": [[0.')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError):
+        write_json_atomic(meta, {"centroids": (2 * C).tolist()})
+    monkeypatch.undo()
+    _, C2 = load_ivf_index(spark, p)
+    assert np.allclose(C, C2)
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError):
+        save_ivf_index(idx, 2 * C, p)
+    monkeypatch.undo()
+    if os.path.exists(meta):
+        _, C3 = load_ivf_index(spark, p)
+        assert np.allclose(C, C3)
+
+
 # ---------------------------------------------------------------------------
 # analysis
 # ---------------------------------------------------------------------------

@@ -621,5 +621,52 @@ def test_exact_cached_tier_is_single_stage(spark, extracted_1k, tmp_path):
         assert shuffles[0][0] == "hashpartitioning"
         assert shuffles[0][1].startswith("query_id#"), shuffles
         assert not [op for op in python_ops if op in batch], batch
+
+        # without the cache a single query reads the parquet and pays at
+        # most the one exchange of its (shard_id, doc_id) aggregate
+        cold = query_side(IndexReader(spark, idx).search(
+            "the quick brown fox jumps over", k=10))
+        assert len(re.findall(r"\bExchange ", cold)) <= 1, cold
+        assert "Join" not in cold
+    finally:
+        reader.postings.unpersist()
+
+
+def test_cached_query_code_is_query_invariant(spark, extracted_1k, tmp_path):
+    """Once each query shape has run, a query whose terms were never seen
+    compiles no new class: no term key, idf, qweight or k is written into
+    the generated Java (Janino compiles counted by CodegenMetrics). Hash
+    domain, the default, whose bigint keys the cached view carries as
+    strings; single queries of 1-4 terms, then a batch."""
+    from collections import Counter
+
+    from hybrid_search_engine_spark.build.manifest import IndexReader, build_index
+    from hybrid_search_engine_spark.reference_semantics import tokenize
+    from hybrid_search_engine_spark.sources.pages import pages_to_docs
+
+    docs = pages_to_docs(extracted_1k, extract=False)
+    idx = str(tmp_path / "idx")
+    build_index(spark, docs, idx, n_shards=4, block_size=32)
+    reader = IndexReader(spark, idx, cache_postings=True)
+    metric = (spark.sparkContext._jvm.org.apache.spark.metrics.source
+              .CodegenMetrics.METRIC_COMPILATION_TIME())
+    counts = Counter(t for r in docs.select("text").collect()
+                     for t in set(tokenize(r["text"], remove_stopwords=True)))
+    words = [t for t, n in counts.most_common() if n >= 3]
+    warm, fresh = words[:40], words[40:80]
+
+    def run(pool):
+        for i, n in zip((0, 1, 3, 6, 10, 15), (1, 2, 3, 4, 2, 3)):
+            q = " ".join(pool[i:i + n])
+            assert reader.search(q, k=10).collect(), q
+        batch = list(enumerate(" ".join(pool[i:i + 3])
+                               for i in range(20, 38, 3)))
+        assert reader.search_batch(batch, k=10).collect()
+
+    try:
+        run(warm)
+        before = metric.getCount()
+        run(fresh)
+        assert metric.getCount() == before
     finally:
         reader.postings.unpersist()

@@ -1,7 +1,6 @@
 """Exact-scorer parity vs the vendored oracle (SURVEY.md §5.2.1, §5.4)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from fixtures.gen_corpus import DEMO_QUERIES, all_queries
 from oracle.bm25_oracle import BM25Oracle
@@ -84,23 +83,3 @@ def _assert_topk_parity(spark, oracle, engine_stats, query, k):
     for r, (_, s) in zip(got, want):
         assert abs(r["score"] - s) <= 1e-6 * max(1.0, abs(s)), (query, r)
 
-
-def test_batch_topk_matches_single(spark, oracle, engine_stats):
-    from hybrid_search_engine_spark.operators.score import (
-        queries_terms_df,
-        score_query_terms,
-        topk_batch,
-    )
-
-    tf, dstats, tstats, scalars = engine_stats
-    qs = list(enumerate(DEMO_QUERIES))
-    qt = queries_terms_df(spark, qs)
-    scores = score_query_terms(qt, tf, tstats, dstats, scalars.avg_doc_len)
-    got = topk_batch(scores, k=10).collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], r["score"]))
-    for qid, query in qs:
-        want = oracle.topk_nonzero(query, k=10)
-        rows = sorted(by_q.get(qid, []))
-        assert [d for _, d, _ in rows] == [d for d, _ in want], query
