@@ -125,6 +125,11 @@ def done_shards(index_dir: str, fingerprint: dict) -> set:
     }
 
 
+def _stats_partitions(spark: SparkSession, n_docs: int) -> int:
+    return max(spark.sparkContext.defaultParallelism,
+               -(-n_docs // DOCS_PER_BUILD_PARTITION))
+
+
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -136,50 +141,49 @@ def build_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     fail_after_shards: int | None = None,
-    term_domain: str = "hash",
 ) -> IndexBuildResult:
     """Build (or resume) the full index for ``docs(doc_id, text, ...)``.
 
-    Writes postings parquet under ``index_dir/postings``, statistics under
-    ``index_dir/stats``, manifest at ``index_dir/_manifest.jsonl``.
+    Writes the tf table under ``index_dir/tf``, postings parquet under
+    ``index_dir/postings``, statistics under ``index_dir/stats``, manifest
+    at ``index_dir/_manifest.jsonl``.
+
+    Every table is keyed by ``xxhash64(term)`` bigints, not term strings:
+    the tf aggregation and the posting shuffle/sort run over fixed-width
+    keys (see stats.term_frequencies_with_doclen for the measured win and
+    the collision analysis), and ``IndexReader`` maps query tokens to the
+    same keys driver-side with a bit-identical xxhash64.
 
     ``fail_after_shards`` is a test hook: simulate a crash after N shards
-    completed (builds only those shards, records them, then raises).
-
-    ``term_domain``: "hash" (default — the engine tier) keys the tf table,
-    term_stats, and postings by ``xxhash64(term)`` bigints instead of term
-    strings; the tf aggregation and posting shuffle/sort then run over
-    fixed-width keys (the build's dominant memory-bandwidth consumer —
-    see stats.term_frequencies_with_doclen for the measured win and the
-    collision analysis). Queries through ``IndexReader`` are transparent:
-    corpus.json records the domain and the reader maps query tokens with
-    the bit-parity driver-side xxhash64 — rank-identity between the two
-    domains is pinned by test. "string" is the portable/debug tier
-    (postings introspectable by eye; the domain streaming segments use,
-    since compact_segments reads term values back out of blocks)."""
-    import sys
-
-    verbose = os.environ.get("HSE_BUILD_VERBOSE") == "1"
-
-    def _log(msg):
-        if verbose:
-            print(f"[build_index +{time.time() - t0:7.1f}s] {msg}",
-                  file=sys.stderr, flush=True)
-
+    completed (builds only those shards, records them, then raises)."""
     t0 = time.time()
     docs = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-
-    if term_domain not in ("string", "hash"):
-        raise ValueError(f"term_domain must be 'string' or 'hash', "
-                         f"got {term_domain!r}")
     fp = source_fingerprint(docs)  # one agg: count + content hash (fused)
-    # the term domain and the posting format are part of build lineage:
-    # shards/tf built in one domain or format must not satisfy a resume in
-    # another (keys or columns differ), so both ride inside the fingerprint
-    # every resume check compares
-    fp["term_domain"] = term_domain
-    fp["postings_format"] = POSTINGS_FORMAT
-    _log("fingerprint done")
+    # ONE exchange (raw docs by doc_id); the tail materializes it to
+    # parquet unless a crash-resume finds it already written
+    tf = term_frequencies_with_doclen(
+        docs, n_partitions=_stats_partitions(spark, fp["n_docs"]))
+    return _build_from_tf(spark, tf, index_dir, fp, fp["n_docs"], n_shards,
+                          k1, b, block_size, fail_after_shards, t0)
+
+
+def _build_from_tf(spark: SparkSession, tf: DataFrame, index_dir: str,
+                   fp: dict, n_docs: int, n_shards: int, k1: float, b: float,
+                   block_size: int, fail_after_shards: int | None,
+                   t0: float) -> IndexBuildResult:
+    """Every build stage from the tf table on, shared by ``build_index``
+    and ``streaming.ingest.compact_segments``: resume check, tf table,
+    term stats, doc stats, postings, shard metrics, manifest, corpus.json.
+
+    ``tf`` is the unmaterialized (doc_id, term, tf, doc_len) table of the
+    source that ``fp`` identifies; ``n_docs`` counts that source's docs,
+    token-empty ones included, which no tf row shows. ``t0`` is the
+    build's start time, for its elapsed time and rate."""
+    # the posting format is part of build lineage: shards or a tf table
+    # written in another format must not satisfy a resume (columns
+    # differ), so it rides inside the fingerprint every resume check
+    # compares
+    fp = {**fp, "postings_format": POSTINGS_FORMAT}
     done = done_shards(index_dir, fp)
     todo = [s for s in range(n_shards) if s not in done]
 
@@ -204,13 +208,9 @@ def build_index(
         todo = todo[:fail_after_shards]
         simulate_crash = True
 
-    # --- statistics: ONE exchange (raw docs by doc_id), materialized to
-    # parquet — the tf table is both the posting builder's input and build
-    # lineage (a crash-resume skips straight to the missing shards without
-    # re-tokenizing). At 100 TB this is the "persist tf as a table" step.
-    n_docs = fp["n_docs"]
-    p_stats = max(spark.sparkContext.defaultParallelism,
-                  -(-n_docs // DOCS_PER_BUILD_PARTITION))
+    # the tf table is both the posting builder's input and build lineage:
+    # a crash-resume skips straight to the missing shards without
+    # re-deriving it. At 100 TB this is the "persist tf as a table" step.
     tf_dir = os.path.join(index_dir, "tf")
     tf_marker = os.path.join(tf_dir, "_fingerprint.json")  # _-prefixed: scan-invisible
     tf_fresh = False
@@ -218,11 +218,8 @@ def build_index(
         with open(tf_marker) as f:
             tf_fresh = json.load(f) == fp
     if not tf_fresh:
-        tfdl = term_frequencies_with_doclen(docs, n_partitions=p_stats,
-                                            term_domain=term_domain)
-        tfdl.write.mode("overwrite").parquet(tf_dir)
+        tf.write.mode("overwrite").parquet(tf_dir)
         write_json_atomic(tf_marker, fp)
-        _log("tf table written")
     tf = spark.read.parquet(tf_dir)
 
     # term stats: vocabulary-sized agg over the tf table; written first,
@@ -240,7 +237,6 @@ def build_index(
     tstats = spark.read.parquet(tstats_path)
     total_tokens = obs.get["total_cf"] or 0
     avg_doc_len = total_tokens / n_docs if n_docs else 0.0
-    _log("statistics built")
 
     posting_path = os.path.join(index_dir, "postings")
 
@@ -271,11 +267,12 @@ def build_index(
     built = []
     if todo:
         postings = build_postings(
-            tf, None, tstats, avg_doc_len, n_shards=n_shards,
+            tf, tstats, avg_doc_len, n_shards=n_shards,
             k1=k1, b=b, block_size=block_size, shard_filter=todo,
             # encode granularity follows the statistics granularity so
             # per-task sort/encode footprints stay bounded as data grows
-            build_partitions=max(2 * n_shards, p_stats),
+            build_partitions=max(2 * n_shards,
+                                 _stats_partitions(spark, n_docs)),
         )
         # dynamic partition overwrite: only the shards in `todo` are
         # replaced; previously-completed shard dirs are untouched, and a
@@ -285,12 +282,10 @@ def build_index(
         if not done:
             shutil.rmtree(posting_path, ignore_errors=True)
         write_postings(postings, posting_path, mode="overwrite")
-        _log("postings written")
         # per-shard metrics from what we just wrote
         stored = read_postings(spark, posting_path).where(
             F.col("shard_id").isin(todo))
         metrics = {r["shard_id"]: r.asDict() for r in shard_metrics(stored).collect()}
-        _log("shard metrics collected")
         elapsed = time.time() - t0
         mean_postings = (
             sum(m["n_postings"] for m in metrics.values()) / max(len(metrics), 1)
@@ -324,19 +319,17 @@ def build_index(
         doc_stats_thread.join()
         if doc_stats_err:
             raise doc_stats_err[0]
-        _log("stats tables written")
     if not simulate_crash:
         write_json_atomic(corpus_json, {
             "doc_count": n_docs, "avg_doc_len": avg_doc_len,
             "k1": k1, "b": b, "n_shards": n_shards,
-            "block_size": block_size, "term_domain": term_domain,
-            "source_fingerprint": fp})
+            "block_size": block_size, "source_fingerprint": fp})
 
     elapsed = time.time() - t0
     result = IndexBuildResult(
         index_dir=index_dir, n_shards=n_shards, built_shards=built,
         skipped_shards=sorted(done), elapsed_s=elapsed,
-        docs_per_sec=(fp["n_docs"] * len(built) / n_shards) / elapsed if elapsed else 0.0,
+        docs_per_sec=(n_docs * len(built) / n_shards) / elapsed if elapsed else 0.0,
         avg_doc_len=avg_doc_len, doc_count=n_docs,
     )
     if simulate_crash:
@@ -358,11 +351,16 @@ class IndexReader:
     partitioning, so a single query is ONE stage (filter → explode → BM25
     → sum) plus the driver-side TakeOrdered merge, and the term filter
     skips cached batches by their min/max. Costs one upfront job and
-    executor memory for the blocks. The cache of a hash-domain index also
-    holds each key as a string, so a query's generated code does not
-    depend on its terms and no query compiles new classes once each query
-    shape has run. Without the cache a query reads the parquet and pays
-    one exchange.
+    executor memory for the blocks. The cache also holds each bigint key
+    as a string, so a query's generated code does not depend on its terms
+    and no query compiles new classes once each query shape has run.
+    Without the cache a query reads the parquet and pays one exchange.
+
+    Query tokens map to the index's ``xxhash64(term)`` keys driver-side
+    (``functions.hashing.spark_xxhash64_str``, bit-identical to Spark's),
+    so resolving a query runs no Spark job. An index whose postings are
+    keyed by term strings, as earlier builds could write, is rejected
+    with ``ValueError``: its keys would never match a query's.
 
     ``cache_tf=True`` is kept for callers written against the former
     JVM-only tf-cache tier: the posting blocks now serve that tier, so it
@@ -376,20 +374,18 @@ class IndexReader:
                  cache_tf: bool = False):
         self.spark = spark
         self.postings = read_postings(spark, os.path.join(index_dir, "postings"))
+        term_type = dict(self.postings.dtypes).get("term")
+        if term_type != "bigint":
+            raise ValueError(
+                f"{index_dir}: postings are keyed by {term_type} terms, not "
+                "xxhash64 bigints; rebuild the index with build_index")
         self.term_stats = spark.read.parquet(
             os.path.join(index_dir, "stats", "term_stats"))
         with open(os.path.join(index_dir, "stats", "corpus.json")) as f:
             self.corpus = json.load(f)
-        # hash-domain index (term_domain="hash"): query tokens map to the
-        # index's xxhash64 keys DRIVER-SIDE (bit-parity implementation —
-        # no Spark job on the latency path); absent key = legacy/portable
-        # string-domain index
-        self._term_key = None
-        self._str_keys = False
-        if self.corpus.get("term_domain", "string") == "hash":
-            from ..functions.hashing import spark_xxhash64_str
-            self._term_key = spark_xxhash64_str
-        if cache_postings or cache_tf:
+        self._cached = cache_postings or cache_tf
+        view = self.postings
+        if self._cached:
             # partition count = min(n_shards, total cores): hash-partitioning
             # by shard_id at ANY width satisfies the scorer's
             # ClusteredDistribution(shard_id, doc_id), and a query then runs
@@ -399,22 +395,17 @@ class IndexReader:
             # The term filter skips cached batches only while its keys are
             # literals, and a bigint literal is written into the generated
             # Java, so every query would compile new classes; a string
-            # literal is passed by reference. So the cache of a hash-domain
-            # index carries each key as a string too, sorted on it, and the
-            # scorers' view names that column "term".
-            self._str_keys = self._term_key is not None
-            if self._str_keys:
-                self.postings = self.postings.withColumn(
-                    "term_str", F.col("term").cast("string"))
-            self.postings = (self.postings.repartition(p, "shard_id")
-                             .sortWithinPartitions("term_str" if self._str_keys
-                                                   else "term")
+            # literal is passed by reference. So the cache carries each key
+            # as a string too, sorted on it, and the scorers' view names
+            # that column "term".
+            self.postings = (self.postings
+                             .withColumn("term_str", F.col("term").cast("string"))
+                             .repartition(p, "shard_id")
+                             .sortWithinPartitions("term_str")
                              .cache())
             self.postings.count()
-        view = self.postings
-        if self._str_keys:
-            view = view.select(F.col("term_str").alias("term"), "shard_id",
-                               "postings")
+            view = self.postings.select(F.col("term_str").alias("term"),
+                                        "shard_id", "postings")
         # the scorers name the postings in SQL text; the view lives as long
         # as the reader (dropping a view uncaches its plan)
         self._view = f"hse_postings_{uuid.uuid4().hex}"
@@ -431,8 +422,8 @@ class IndexReader:
             raise ValueError(f"mode must be 'pruned' or 'exact', got {mode!r}")
         from ..operators.score import query_weights
 
-        weights = query_weights(queries, self._tstats_arg, self._term_key)
-        if self._str_keys:
+        weights = query_weights(queries, self._tstats_arg)
+        if self._cached:
             weights = {qid: {str(t): v for t, v in w.items()}
                        for qid, w in weights.items()}
         return weights

@@ -1,13 +1,13 @@
 """Driver-side xxHash64 bit-compatible with Spark's ``F.xxhash64``.
 
-The hash-domain index tier (build/manifest.py ``term_domain="hash"``) keys
-the tf table, term_stats, and postings by ``xxhash64(term)`` instead of the
-term string — the tf aggregation and the posting shuffle then run over
-fixed 8-byte keys (measured −23% on the tokenize/agg stage at 1M docs,
-the build's dominant memory-bandwidth consumer; SCALE.md round-5 note).
-Query time, the driver must map each query token to the SAME 64-bit value
-WITHOUT launching a Spark job (single-query latency path), so this module
-reimplements the exact function Spark evaluates.
+The index (build/manifest.py ``build_index``) keys the tf table,
+term_stats, and postings by ``xxhash64(term)`` instead of the term string
+— the tf aggregation and the posting shuffle then run over fixed 8-byte
+keys (measured −23% on the tokenize/agg stage at 1M docs, the build's
+dominant memory-bandwidth consumer; SCALE.md §9). Query time, the driver
+must map each query token to the SAME 64-bit value WITHOUT launching a
+Spark job (single-query latency path), so this module reimplements the
+exact function Spark evaluates.
 
 What Spark computes (public source, so reproducible bit-for-bit):
 ``org.apache.spark.sql.catalyst.expressions.XxHash64`` applies the

@@ -44,11 +44,6 @@ def main(argv: list[str] | None = None) -> None:
                     help="input's text column is already extracted")
     ap.add_argument("--local-cores", type=int, default=None,
                     help="run without a cluster manager on local[N]")
-    ap.add_argument("--term-domain", default="hash",
-                    choices=["hash", "string"],
-                    help="index key domain: 'hash' (xxhash64 bigint keys — "
-                         "the engine tier, fixed-width agg/shuffle keys) "
-                         "or 'string' (portable/debug)")
     args = ap.parse_args(argv)
 
     from hybrid_search_engine_spark.build.manifest import build_index, read_manifest
@@ -64,7 +59,6 @@ def main(argv: list[str] | None = None) -> None:
     result = build_index(
         spark, docs, args.index_dir, n_shards=args.n_shards,
         k1=args.k1, b=args.b, block_size=args.block_size,
-        term_domain=args.term_domain,
     )
     shards = {r["shard_id"]: r for r in read_manifest(args.index_dir)
               if r.get("status") == "done"}

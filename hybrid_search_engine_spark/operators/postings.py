@@ -52,25 +52,21 @@ BLOCK_SIZE_DEFAULT = 128
 POSTINGS_FORMAT = "sql-blocks-1"
 
 
-def build_postings(tf: DataFrame, dstats: DataFrame | None, tstats: DataFrame,
+def build_postings(tf: DataFrame, tstats: DataFrame,
                    avgdl: float, n_shards: int = 32,
                    k1: float = 1.5, b: float = 0.75,
                    block_size: int = BLOCK_SIZE_DEFAULT,
                    build_partitions: int | None = None,
                    shard_filter: list[int] | None = None) -> DataFrame:
-    """→ posting-block DataFrame (shard_id, term, block_id, postings,
-    max_score), not yet written. ``shard_filter`` limits the build to
-    specific shards (resume path).
-
-    ``dstats=None`` when ``tf`` already carries a ``doc_len`` column
-    (stats.term_frequencies_with_doclen — the build path): skips the
-    doc_id join entirely, leaving the shard repartition as the ONLY
-    tf-grain shuffle in the posting build."""
-    enriched = tf if dstats is None else tf.join(dstats, "doc_id")
+    """(doc_id, term, tf, doc_len) → posting-block DataFrame (shard_id,
+    term, block_id, postings, max_score), not yet written. ``tf`` carries
+    ``doc_len`` (stats.term_frequencies_with_doclen), so no doc_id join
+    runs and the shard repartition is the ONLY tf-grain shuffle in the
+    posting build. ``shard_filter`` limits the build to specific shards
+    (resume path)."""
     shard_expr = F.pmod(F.hash(F.col("doc_id")), F.lit(n_shards)).cast("int")
     if shard_filter is not None:
-        enriched = enriched.where(
-            shard_expr.isin([int(s) for s in shard_filter]))
+        tf = tf.where(shard_expr.isin([int(s) for s in shard_filter]))
     # Partition by (shard_id, term_bucket), not shard_id alone: hashing
     # only n_shards distinct keys into n_shards partitions is balls-in-bins
     # (empty partitions + 3-4× stragglers). The sub-bucket on term keeps
@@ -81,7 +77,7 @@ def build_postings(tf: DataFrame, dstats: DataFrame | None, tstats: DataFrame,
     # tf and doc_len travel as int32 (doc_len < 2^31 by construction); idf
     # does not travel at all — the vocabulary-sized broadcast join runs
     # AFTER the exchange, so it is never duplicated onto shuffled rows
-    slim = enriched.select(
+    slim = tf.select(
         shard_expr.alias("shard_id"),
         F.pmod(F.xxhash64("term"), F.lit(sub)).cast("int").alias("term_bucket"),
         "term", "doc_id",

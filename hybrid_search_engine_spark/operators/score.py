@@ -22,10 +22,10 @@ terms or weights either, so whole-stage codegen compiles nothing for a
 query it has not seen: weights ride in literal maps and string keys in
 the term filter, and Spark passes both to the generated Java as
 reference objects. (A bigint literal is written into the Java source, so
-IndexReader's cache of a hash-domain index carries its keys as strings;
-the cold parquet path keeps bigint keys for pushdown and compiles per
-query.) The term filter is an IN list of literals, which is what Spark
-needs to push it into parquet and to skip cached batches by min/max.
+IndexReader's cache carries its xxhash64 keys as strings; the cold
+parquet path keeps bigint keys for pushdown and compiles per query.)
+The term filter is an IN list of literals, which is what Spark needs to
+push it into parquet and to skip cached batches by min/max.
 
 Formula parity (math contract, /root/reference/search_engine/bm25.py:106-110):
     score(d, q) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
@@ -46,7 +46,7 @@ from ..reference_semantics import tokenize
 
 K1_DEFAULT = 1.5
 B_DEFAULT = 0.75
-_TOKEN = re.compile(r"[a-z0-9_]+|-[0-9]+")
+_KEY = re.compile(r"-?[0-9]+")
 # The one ranking order (SURVEY.md §5.4): score rounded to 9 places, best
 # first, ties to the smaller doc_id. Every top-k in this module uses it.
 RANK_ORDER = "round(score, 9) DESC, doc_id ASC"
@@ -69,18 +69,6 @@ def query_terms_df(spark: SparkSession, query: str, remove_stopwords: bool = Tru
     return local_df(spark, rows, "query_id int, term string, qweight double")
 
 
-def queries_terms_df(spark: SparkSession, queries: list[tuple],
-                     remove_stopwords: bool = True) -> DataFrame:
-    """[(query_id, text)] → (query_id, term, qweight)."""
-    from collections import Counter
-
-    rows = []
-    for qid, text in queries:
-        for t, w in Counter(tokenize(text, remove_stopwords=remove_stopwords)).items():
-            rows.append((qid, t, float(w)))
-    return local_df(spark, rows, "query_id int, term string, qweight double")
-
-
 def bm25_contribution_sql(k1: float = K1_DEFAULT, b: float = B_DEFAULT) -> str:
     """SQL text of one (term, doc) partial score over columns tf, idf,
     doc_len and a literal avg_doc_len column ``avgdl`` — the one BM25
@@ -97,16 +85,15 @@ def bm25_contribution(k1: float = K1_DEFAULT, b: float = B_DEFAULT):
 
 
 def _sql_lit(v) -> str:
-    """SQL literal of a term key (bigint, a query token, or a hash key in
-    decimal) or a weight (double). Any other string is rejected rather
-    than quoted: query tokens are ``[a-z0-9_]+``
-    (reference_semantics.tokenize)."""
+    """SQL literal of a term key (bigint, or in decimal as the cached
+    view's string form) or a weight (double). Any other string is
+    rejected rather than quoted."""
     if isinstance(v, float):
         return f"{v!r}D"
     if isinstance(v, int):
         return f"{v}L"
-    if not _TOKEN.fullmatch(v):
-        raise ValueError(f"not a query token: {v!r}")
+    if not _KEY.fullmatch(v):
+        raise ValueError(f"not a term key: {v!r}")
     return f"'{v}'"
 
 
@@ -155,23 +142,24 @@ def resolve_term_idf(tstats, terms: list) -> dict:
     return {r["term"]: float(r["idf"]) for r in rows}
 
 
-def query_weights(queries: list[tuple], tstats, term_key=None,
+def query_weights(queries: list[tuple], tstats,
                   remove_stopwords: bool = True) -> dict:
-    """[(query_id, text)] → {query_id: {term: (idf, qweight)}}, with one
-    idf lookup for the whole batch. Duplicate query tokens add up into the
-    qweight (bm25.py:99-110); terms absent from the index are dropped, and
-    so are queries left with no term. ``term_key`` maps a token to the
-    index's key (hash domain: ``functions.hashing.spark_xxhash64_str``);
-    None = identity (string domain). It applies after tokenization, so
-    query weights follow the same collision-merge rule as the build."""
+    """[(query_id, text)] → {query_id: {key: (idf, qweight)}}, with one
+    idf lookup for the whole batch. Each token maps to the index's key,
+    ``functions.hashing.spark_xxhash64_str(token)``, after tokenization,
+    so query weights follow the same collision-merge rule as the build.
+    Duplicate query tokens add up into the qweight (bm25.py:99-110); terms
+    absent from the index are dropped, and so are queries left with no
+    term."""
     from collections import Counter
+
+    from ..functions.hashing import spark_xxhash64_str
 
     counts = {}
     for qid, text in queries:
-        toks = tokenize(text, remove_stopwords=remove_stopwords)
-        if term_key is not None:
-            toks = [term_key(t) for t in toks]
-        counts[int(qid)] = Counter(toks)
+        counts[int(qid)] = Counter(
+            spark_xxhash64_str(t)
+            for t in tokenize(text, remove_stopwords=remove_stopwords))
     terms = sorted({t for c in counts.values() for t in c})
     idf = resolve_term_idf(tstats, terms) if terms else {}
     out = {}

@@ -94,7 +94,7 @@ def term_frequencies_with_doclen(docs: DataFrame, text_col: str = "text",
                                  id_col: str = "doc_id",
                                  remove_stopwords: bool = True,
                                  n_partitions: int | None = None,
-                                 term_domain: str = "string") -> DataFrame:
+                                 term_domain: str = "hash") -> DataFrame:
     """A1+A5 fused: (doc_id, term, tf, doc_len) with ONE exchange — of raw
     docs, not tokens. The web-scale statistics plan used by the index build.
 
@@ -113,19 +113,20 @@ def term_frequencies_with_doclen(docs: DataFrame, text_col: str = "text",
     — spill + cache-miss regime, 11× cost for 5× docs (43s→472s, see
     BENCH/BASELINE.md). ~8k docs per task keeps maps ~50MB and linear.
 
-    ``term_domain="hash"`` replaces each token with ``xxhash64(token)``
-    (bigint) BEFORE the aggregation: the agg hash map then probes fixed
-    16-byte (doc_id, term) keys instead of string keys — a working-set cut
-    on the build's dominant, memory-bandwidth-bound stage (measured −23%
-    on this stage at 1M docs / 16 cores, interleaved A/B; SCALE.md
-    round-5). Query tokens map into the same domain driver-side via
-    ``functions.hashing.spark_xxhash64_str`` (bit-parity pinned by test),
-    so BM25 tf/df/idf — and therefore scores and ranks — are unchanged
-    unless two distinct vocabulary terms collide in 64 bits
+    ``term_domain="hash"`` (the index build's keys) replaces each token
+    with ``xxhash64(token)`` (bigint) BEFORE the aggregation: the agg hash
+    map then probes fixed 16-byte (doc_id, term) keys instead of string
+    keys — a working-set cut on the build's dominant, memory-bandwidth-
+    bound stage (measured −23% on this stage at 1M docs / 16 cores,
+    interleaved A/B; SCALE.md §9). Query tokens map into the same domain
+    driver-side via ``functions.hashing.spark_xxhash64_str`` (bit-parity
+    pinned by test), so BM25 tf/df/idf — and therefore scores and ranks —
+    are unchanged unless two distinct vocabulary terms collide in 64 bits
     (P ≈ V²/2⁶⁵: ~3·10⁻⁸ at V=10⁶; ~0.03 expected colliding PAIRS at a
     10⁹-term web vocabulary, each merging one pair of (usually rare)
-    terms — the documented trade of the engine tier;
-    ``term_domain="string"`` remains the portable/debug form)."""
+    terms). ``term_domain="string"`` keeps the term strings; only
+    ``build_statistics`` asks for it, because its contract rows compare
+    terms with the SQL oracle's."""
     from ..reference_semantics import STOPWORDS
 
     if term_domain not in ("string", "hash"):
@@ -152,22 +153,14 @@ def term_frequencies_with_doclen(docs: DataFrame, text_col: str = "text",
         "doc_len", F.sum("tf").over(Window.partitionBy("doc_id")))
 
 
-def doc_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-              remove_stopwords: bool = True, parity: bool = False) -> DataFrame:
-    """A5: (doc_id, doc_len) — token count after stopword removal."""
-    toks = tokenize_documents(docs, text_col, id_col,
-                              remove_stopwords=remove_stopwords, parity=parity)
-    return toks.select("doc_id", F.size("tokens").alias("doc_len"))
-
-
 def doc_stats_from_tf(tf: DataFrame) -> DataFrame:
     """A5 without re-tokenizing: doc_len = Σ tf per doc.
 
-    Identical to doc_stats because length is counted on the same
-    post-stopword token stream; saves a second pass over raw text.
+    Equals the post-stopword token count of each doc, because tf counts
+    the same token stream; saves a second pass over raw text.
     NOTE: drops docs with zero surviving tokens — callers that need them
-    (avgdl denominator counts empty docs too) must union them back or use
-    corpus_scalars(), which counts N from the docs table directly.
+    (avgdl denominator counts empty docs too) must count N from the docs
+    table directly, as build_statistics does.
     """
     return tf.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
 
@@ -184,26 +177,6 @@ def term_stats(tf: DataFrame, doc_count: int) -> DataFrame:
     )
 
 
-def corpus_scalars(docs: DataFrame, text_col: str = "text",
-                   remove_stopwords: bool = True) -> CorpusScalars:
-    """A3 in ONE aggregate job (no separate count action): N counts every
-    doc — token-empty included, matching the reference dividing by
-    len(documents) (bm25.py:52,71) — and avgdl = Σ post-stopword token
-    count / N, using the order-preserving filter so duplicate tokens count
-    toward length. Prefer ``build_statistics`` when tf is needed anyway
-    (its dstats ride the tf aggregation instead of re-tokenizing)."""
-    from ..functions.text import tokens_native_keep_order
-
-    agg = docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.size(tokens_native_keep_order(
-            F.col(text_col), remove_stopwords=remove_stopwords))).alias("total"),
-    ).first()
-    n = int(agg["n"])
-    total = int(agg["total"] or 0)
-    return CorpusScalars(doc_count=n, avg_doc_len=(total / n if n else 0.0))
-
-
 def build_statistics(docs: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id", remove_stopwords: bool = True,
                      parity: bool = False, doc_count: int | None = None,
@@ -218,8 +191,9 @@ def build_statistics(docs: DataFrame, text_col: str = "text",
     scheduling 4×cores near-empty tasks on toy inputs; doc_len rides the
     same partitioning, so doc_stats adds no exchange at all.
 
-    tf is cached across the downstream aggregations — at scale you'd
-    persist it to a table (the posting builder re-reads it anyway).
+    tf is keyed by term strings, which the contract rows built on it
+    compare with the SQL oracle's, and cached across the downstream
+    aggregations.
     ``doc_count`` skips the separate count job when the caller already
     knows N (e.g. from the fused fingerprint aggregate in build_index).
     """
@@ -233,7 +207,8 @@ def build_statistics(docs: DataFrame, text_col: str = "text",
         p = max(docs.sparkSession.sparkContext.defaultParallelism,
                 -(-doc_count // docs_per_partition))
         tfdl = term_frequencies_with_doclen(
-            docs, text_col, id_col, remove_stopwords, n_partitions=p).cache()
+            docs, text_col, id_col, remove_stopwords, n_partitions=p,
+            term_domain="string").cache()
         tf = tfdl.drop("doc_len")
         # doc_id-clustered cache → dropDuplicates needs no exchange
         dstats = tfdl.select("doc_id", "doc_len").dropDuplicates(["doc_id"])

@@ -16,11 +16,13 @@ Maps the reference's two quasi-streaming components (SURVEY.md §2.9):
   StreamingQueryListener/lastProgress; the per-shard manifest (build/
   manifest.py) carries lineage exactly as in batch.
 
-Incremental semantics (ST3): each micro-batch appends new docs' postings as
-a new SEGMENT directory (segment = the micro-batch id). Readers union all
-segments; `compact_segments` merges them back into the canonical sharded
-layout (the repartition+sortWithinPartitions merge job the reference never
-needed because it always rebuilt from scratch — indexer.py:245-285).
+Incremental semantics (ST3): each micro-batch builds a new SEGMENT
+directory (segment = the micro-batch id) with ``build_index`` — a complete
+index with its own tf table, in the same xxhash64 key domain as any other.
+`compact_segments` merges the segments back into one canonical sharded
+index by feeding the union of their tf tables through build_index's own
+stages (the merge job the reference never needed because it always rebuilt
+from scratch — indexer.py:245-285).
 
 CAVEAT (correctness at query time): BM25 global stats (df, idf, avgdl)
 computed per segment are LOCAL. Scoring across segments uses the merged
@@ -33,6 +35,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,26 +73,10 @@ def stream_pages(spark: SparkSession, src_dir: str) -> DataFrame:
     )
 
 
-def incremental_index_query(spark: SparkSession, src_dir: str,
-                            index_root: str, checkpoint_dir: str,
-                            n_shards: int = 8, available_now: bool = True):
-    """writeStream.foreachBatch: each micro-batch builds a posting SEGMENT
-    under index_root/segments/<batch_id>/ with its own manifest. Resumable:
-    checkpointLocation replays unfinished batches; the per-segment build is
-    idempotent (deterministic doc ids + dynamic partition overwrite)."""
-    from ..build.manifest import build_index
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        docs = pages_to_docs(batch_df)
-        if not docs.head(1):
-            return
-        seg_dir = os.path.join(index_root, "segments", f"{batch_id:06d}")
-        # segments stay in the portable string domain: compact_segments
-        # decodes term values back OUT of posting blocks, and its tf schema
-        # (and cross-segment df/idf merge) is defined over term strings
-        build_index(spark, docs, seg_dir, n_shards=n_shards,
-                    term_domain="string")
-
+def _start_ingest(spark: SparkSession, src_dir: str, checkpoint_dir: str,
+                  process_batch, available_now: bool):
+    """Start the pages stream with ``process_batch(batch_df, batch_id)`` run
+    per micro-batch; availableNow drains and stops, else a 2 s trigger."""
     w = (
         stream_pages(spark, src_dir).writeStream
         .foreachBatch(process_batch)
@@ -100,6 +87,41 @@ def incremental_index_query(spark: SparkSession, src_dir: str,
     else:
         w = w.trigger(processingTime="2 seconds")  # watcher debounce parity
     return w.start()
+
+
+def _index_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
+                 index_root: str, n_shards: int, keep=None):
+    """pages → docs → ``keep`` (a docs → docs filter, if given) → a segment
+    index under index_root/segments/<batch_id>/. Returns the indexed docs,
+    or None when the batch leaves none."""
+    from ..build.manifest import build_index
+
+    docs = pages_to_docs(batch_df)
+    if not docs.head(1):
+        return None
+    if keep is not None:
+        docs = keep(docs)
+        if not docs.head(1):
+            return None
+    build_index(spark, docs,
+                os.path.join(index_root, "segments", f"{batch_id:06d}"),
+                n_shards=n_shards)
+    return docs
+
+
+def incremental_index_query(spark: SparkSession, src_dir: str,
+                            index_root: str, checkpoint_dir: str,
+                            n_shards: int = 8, available_now: bool = True):
+    """writeStream.foreachBatch: each micro-batch builds a posting SEGMENT
+    under index_root/segments/<batch_id>/ with its own manifest. Resumable:
+    checkpointLocation replays unfinished batches; the per-segment build is
+    idempotent (deterministic doc ids + dynamic partition overwrite)."""
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        _index_batch(spark, batch_df, batch_id, index_root, n_shards)
+
+    return _start_ingest(spark, src_dir, checkpoint_dir, process_batch,
+                         available_now)
 
 
 def dedup_checked_ingest(spark: SparkSession, src_dir: str, index_root: str,
@@ -146,12 +168,7 @@ def dedup_checked_ingest(spark: SparkSession, src_dir: str, index_root: str,
     # a compaction crash mid-swap must not make the corpus look empty
     recover_dedup_state(index_root)
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..build.manifest import build_index
-
-        docs = pages_to_docs(batch_df)
-        if not docs.head(1):
-            return
+    def drop_near_dups(docs: DataFrame) -> DataFrame:
         intra = minhash_lsh_pairs(docs, jaccard_threshold=jaccard_threshold)
         docs = apply_dedup_action(docs, intra, action="skip")
         if os.path.isdir(bands_dir):
@@ -163,28 +180,18 @@ def dedup_checked_ingest(spark: SparkSession, src_dir: str, index_root: str,
                 jaccard_threshold=jaccard_threshold)
             docs = docs.join(flagged.select("doc_id").distinct(), "doc_id",
                              "left_anti")
-        docs = docs.localCheckpoint()  # one computation feeds three writes
-        if not docs.head(1):
+        return docs.localCheckpoint()  # one computation feeds three writes
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        docs = _index_batch(spark, batch_df, batch_id, index_root, n_shards,
+                            keep=drop_near_dups)
+        if docs is None:
             return
-        seg_dir = os.path.join(index_root, "segments", f"{batch_id:06d}")
-        # segments stay in the portable string domain: compact_segments
-        # decodes term values back OUT of posting blocks, and its tf schema
-        # (and cross-segment df/idf merge) is defined over term strings
-        build_index(spark, docs, seg_dir, n_shards=n_shards,
-                    term_domain="string")
         minhash_band_hashes(docs).write.mode("append").parquet(bands_dir)
         docs.select("doc_id", "text").write.mode("append").parquet(store_dir)
 
-    w = (
-        stream_pages(spark, src_dir).writeStream
-        .foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    else:
-        w = w.trigger(processingTime="2 seconds")
-    return w.start()
+    return _start_ingest(spark, src_dir, checkpoint_dir, process_batch,
+                         available_now)
 
 
 def recover_dedup_state(index_root: str) -> None:
@@ -322,80 +329,45 @@ def list_segments(index_root: str) -> list[str]:
 def compact_segments(spark: SparkSession, index_root: str, out_dir: str,
                      n_shards: int = 8, k1: float = 1.5, b: float = 0.75,
                      block_size: int = 128):
-    """Multi-segment merge (ST3): decode-free at the tf level is impossible
-    across segments (df/idf are global), so the merge recomputes global
-    stats from the segments' doc-level tf — implemented as: union segment
-    doc_stats + re-derive postings via the standard build over the union of
-    per-segment (doc_id, term, tf, doc_len) rows obtained by EXPLODING the
-    posting blocks, then the standard shard repartition + block build.
-    Cost is one shuffle of tf-grain data — the same as a fresh build minus
-    extraction and tokenization (the expensive parts at web scale)."""
-    from ..operators.postings import build_postings
-    from ..operators.stats import term_stats
+    """Multi-segment merge (ST3): df/idf/avgdl are global, so the merge
+    rebuilds the index from the union of the segments' tf tables, minus
+    tombstoned docs, through build_index's own stages from the tf table on
+    (term stats, postings, doc stats, shard metrics, manifest, corpus.json;
+    resumable like any build). Cost is one shuffle of tf-grain data — a
+    fresh build minus extraction and tokenization (the expensive parts at
+    web scale)."""
+    from ..build.manifest import _build_from_tf
 
+    t0 = time.time()
     segs = list_segments(index_root)
     if not segs:
         raise ValueError(f"no segments under {index_root}")
-
-    posting_paths = [os.path.join(s, "postings") for s in segs]
-    tf_full = (spark.read.parquet(*posting_paths)
-               .select("term", F.inline("postings")))
+    tf = spark.read.parquet(*[os.path.join(s, "tf") for s in segs])
+    # a doc lives in exactly one segment (deterministic ids, append-only
+    # batches), so the doc counts add up; each segment's corpus.json
+    # counts its token-empty docs too, which no tf row shows
+    n_docs = 0
+    for s in segs:
+        with open(os.path.join(s, "stats", "corpus.json")) as f:
+            n_docs += json.load(f)["doc_count"]
     # tombstones (deleted source docs — see tombstone_deleted_docs) are
     # applied HERE: compaction is the point where deletes become
-    # query-invisible. Anti-join at tf grain before stats/postings are
-    # recomputed, so df/idf/avgdl all reflect the post-delete corpus.
+    # query-invisible. The anti-join at tf grain runs before the stats and
+    # postings are rebuilt, so df/idf/avgdl all reflect the post-delete
+    # corpus. (A tombstoned doc that had zero post-stopword tokens never
+    # reached doc_stats and stays in the doc_count denominator — a bounded
+    # avgdl nuance, not a postings error.)
     tombs = read_tombstones(spark, index_root)
     n_tombstoned = 0
     if tombs is not None:
-        seg_docs = spark.read.parquet(
-            *[os.path.join(s, "stats", "doc_stats") for s in segs])
-        # count + doc_len mass of tombstoned docs, to correct the corpus
-        # scalars read from the segments' corpus.json below. (A tombstoned
-        # doc that had zero post-stopword tokens never reached doc_stats
-        # and stays in the doc_count denominator — a bounded avgdl nuance,
-        # not a postings error.)
-        hit = (seg_docs.join(tombs, "doc_id")
-               .agg(F.count(F.lit(1)).alias("n"),
-                    F.coalesce(F.sum("doc_len"), F.lit(0)).alias("len"))
-               .first())
-        n_tombstoned, tombstoned_len = int(hit["n"]), float(hit["len"])
-        tf_full = tf_full.join(tombs, "doc_id", "left_anti")
-    # exact dedup across segments is unnecessary: a doc lives in exactly one
-    # segment (deterministic ids, append-only batches); doc_len rides along,
-    # so the posting rebuild takes the fused no-join path (dstats=None)
-    tf = tf_full.select("doc_id", "term", "tf")
-    dstats = tf_full.select("doc_id", "doc_len").groupBy("doc_id").agg(
-        F.max("doc_len").alias("doc_len"))
-
-    # global scalars from the segment corpus.json files (doc counts include
-    # token-empty docs, which postings can't see)
-    n_docs, total_len = 0, 0.0
-    for s in segs:
-        with open(os.path.join(s, "stats", "corpus.json")) as f:
-            c = json.load(f)
-        n_docs += c["doc_count"]
-        total_len += c["avg_doc_len"] * c["doc_count"]
-    if n_tombstoned:
-        n_docs -= n_tombstoned
-        total_len -= tombstoned_len
-    avgdl = total_len / n_docs if n_docs else 0.0
-
-    tstats = term_stats(tf, n_docs)
-    postings = build_postings(tf_full, None, tstats, avgdl, n_shards=n_shards,
-                              k1=k1, b=b, block_size=block_size)
-    from ..operators.postings import write_postings
-
-    write_postings(postings, os.path.join(out_dir, "postings"))
-    tstats.write.mode("overwrite").parquet(
-        os.path.join(out_dir, "stats", "term_stats"))
-    dstats.write.mode("overwrite").parquet(
-        os.path.join(out_dir, "stats", "doc_stats"))
-    os.makedirs(os.path.join(out_dir, "stats"), exist_ok=True)
-    with open(os.path.join(out_dir, "stats", "corpus.json"), "w") as f:
-        json.dump({"doc_count": n_docs, "avg_doc_len": avgdl, "k1": k1,
-                   "b": b, "n_shards": n_shards, "block_size": block_size,
-                   "source_fingerprint": {"segments": len(segs),
-                                          "tombstoned": n_tombstoned}}, f)
+        n_tombstoned = spark.read.parquet(
+            *[os.path.join(s, "stats", "doc_stats") for s in segs]
+        ).join(tombs, "doc_id").count()
+        tf = tf.join(tombs, "doc_id", "left_anti")
+    fp = {"segments": [os.path.basename(s) for s in segs],
+          "tombstoned": n_tombstoned}
+    _build_from_tf(spark, tf, out_dir, fp, n_docs - n_tombstoned, n_shards,
+                   k1, b, block_size, None, t0)
     return out_dir
 
 

@@ -1,18 +1,17 @@
-"""Hash-domain index tier (build_index term_domain="hash", the default).
+"""The index's key domain: every table is keyed by ``xxhash64(term)``.
 
-Three pins:
+Pins:
 1. the driver-side pure-Python xxHash64 is bit-identical to Spark's
    ``F.xxhash64`` (strings across every length/remainder path of the
    algorithm, multi-byte UTF-8, and longs) — the query side depends on it;
-2. a hash-domain index is rank- AND score-identical to a string-domain
-   index of the same corpus on the single and the batch query API,
-   including OOV and all-stopword queries;
-3. the term domain is build lineage: a resume with the other domain
-   rebuilds instead of reusing shards keyed differently.
+2. the test corpus's vocabulary has no 64-bit collision;
+3. a build writes bigint keys, and IndexReader refuses an index keyed by
+   term strings. Rank and score parity of the index against the oracle
+   is pinned in test_postings.py.
 """
 
+import json
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 import pytest
@@ -64,54 +63,36 @@ def docs_small(spark, extracted_1k):
     return d
 
 
-@pytest.fixture(scope="module")
-def both_readers(spark, docs_small):
-    from hybrid_search_engine_spark.build.manifest import (
-        IndexReader,
-        build_index,
-    )
+def test_hash_domain_postings_term_is_bigint(spark, docs_small, tmp_path):
+    from hybrid_search_engine_spark.build.manifest import build_index
 
-    readers = {}
-    for dom in ("string", "hash"):
-        d = tempfile.mkdtemp(prefix=f"hse_dom_{dom}_")
-        build_index(spark, docs_small, d, n_shards=4, term_domain=dom)
-        readers[dom] = IndexReader(spark, d, cache_postings=True,
-                                   cache_tf=True)
-    return readers
+    d = str(tmp_path / "idx")
+    build_index(spark, docs_small, d, n_shards=4)
+    for table in ("tf", "postings", os.path.join("stats", "term_stats")):
+        tdt = dict(spark.read.parquet(os.path.join(d, table)).dtypes)["term"]
+        assert tdt == "bigint", (table, tdt)
 
 
-def _queries():
-    from fixtures.gen_corpus import all_queries
+def test_reader_rejects_string_keyed_postings(spark, tmp_path):
+    """An index keyed by term strings (as earlier builds could write) is
+    refused, not read as one whose keys never match a query's."""
+    from hybrid_search_engine_spark.build.manifest import IndexReader
 
-    return all_queries()[:5] + ["zzz_oov_term", "the of and"]
-
-
-QUERIES = _queries()
-
-
-def test_hash_domain_rank_and_score_identical(both_readers):
-    for q in QUERIES:
-        a = [(r["doc_id"], round(r["score"], 9)) for r in
-             both_readers["string"].search(q, k=10).collect()]
-        b = [(r["doc_id"], round(r["score"], 9)) for r in
-             both_readers["hash"].search(q, k=10).collect()]
-        assert a == b, q
-
-
-def test_hash_domain_batch_identical(both_readers):
-    batch = list(enumerate(QUERIES))
-    key = lambda rows: sorted(  # noqa: E731
-        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in rows)
-    assert key(both_readers["string"].search_batch(batch, k=10).collect()) \
-        == key(both_readers["hash"].search_batch(batch, k=10).collect())
-
-
-def test_hash_domain_postings_term_is_bigint(both_readers):
-    tdt = dict(both_readers["hash"].postings.dtypes)["term"]
-    assert tdt == "bigint", tdt
-    tdt = dict(both_readers["string"].postings.dtypes)["term"]
-    assert tdt == "string", tdt
+    d = str(tmp_path / "idx")
+    spark.createDataFrame(
+        [(0, "machine", 0, [(1, 2, 5)], 0.5)],
+        "shard_id int, term string, block_id int, "
+        "postings array<struct<doc_id: bigint, tf: int, doc_len: int>>, "
+        "max_score double",
+    ).write.partitionBy("shard_id").parquet(os.path.join(d, "postings"))
+    spark.createDataFrame([("machine", 1, 2, 0.7)],
+                          "term string, df bigint, cf bigint, idf double") \
+        .write.parquet(os.path.join(d, "stats", "term_stats"))
+    with open(os.path.join(d, "stats", "corpus.json"), "w") as f:
+        json.dump({"doc_count": 1, "avg_doc_len": 5.0, "k1": 1.5, "b": 0.75,
+                   "n_shards": 1, "block_size": 128}, f)
+    with pytest.raises(ValueError, match="bigint"):
+        IndexReader(spark, d)
 
 
 def test_no_vocabulary_collisions_on_corpus(spark, docs_small):
@@ -125,27 +106,3 @@ def test_no_vocabulary_collisions_on_corpus(spark, docs_small):
         F.count(F.lit(1)).alias("a"),
         F.countDistinct(F.xxhash64("term")).alias("b")).first()
     assert n_str == n_hash
-
-
-def test_term_domain_is_build_lineage(spark, docs_small):
-    """Same dir, same corpus, other domain → full rebuild, not a resume."""
-    from hybrid_search_engine_spark.build.manifest import build_index
-
-    d = tempfile.mkdtemp(prefix="hse_dom_switch_")
-    r1 = build_index(spark, docs_small, d, n_shards=4, term_domain="string")
-    assert r1.built_shards  # fresh build
-    r2 = build_index(spark, docs_small, d, n_shards=4, term_domain="string")
-    assert not r2.built_shards  # clean resume/no-op
-    r3 = build_index(spark, docs_small, d, n_shards=4, term_domain="hash")
-    assert sorted(r3.built_shards) == list(range(4))  # domain switch rebuilds
-    # and the tf table really switched domains
-    tf = spark.read.parquet(os.path.join(d, "tf"))
-    assert dict(tf.dtypes)["term"] == "bigint"
-
-
-def test_term_domain_validation(spark, docs_small):
-    from hybrid_search_engine_spark.build.manifest import build_index
-
-    with pytest.raises(ValueError, match="term_domain"):
-        build_index(spark, docs_small, tempfile.mkdtemp(),
-                    term_domain="nope")

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fixtures.gen_corpus import DEMO_QUERIES, all_queries
+from hybrid_search_engine_spark.functions.hashing import spark_xxhash64_str
 from oracle.bm25_oracle import BM25Oracle
 
 N_SHARDS = 8
@@ -34,8 +35,7 @@ def index_dir(spark, corpus, tmp_path_factory):
 
     df = spark.createDataFrame(list(corpus.items()), "doc_id long, text string")
     d = str(tmp_path_factory.mktemp("index") / "idx")
-    build_index(spark, df, d, n_shards=N_SHARDS, block_size=BLOCK_SIZE,
-                term_domain="string")
+    build_index(spark, df, d, n_shards=N_SHARDS, block_size=BLOCK_SIZE)
     return d
 
 
@@ -63,11 +63,12 @@ def _exploded(readers):
 
 def test_posting_blocks_roundtrip_vs_tf(readers, oracle):
     """Exploded blocks == the oracle's tf and doc lengths, for every
-    (term, doc) of the corpus (content equality after the shuffle, window
-    numbering and block aggregation)."""
-    got = {(r.term, int(r.doc_id)): (int(r.tf), int(r.doc_len))
+    (term, doc) of the corpus, the oracle's terms mapped to the index's
+    xxhash64 keys (content equality after the shuffle, window numbering
+    and block aggregation)."""
+    got = {(int(r.term), int(r.doc_id)): (int(r.tf), int(r.doc_len))
            for r in _exploded(readers).itertuples(index=False)}
-    want = {(term, did): (n, oracle.doc_len[did])
+    want = {(spark_xxhash64_str(term), did): (n, oracle.doc_len[did])
             for did, cnt in oracle.tf.items() for term, n in cnt.items()}
     assert got == want
 
@@ -84,7 +85,8 @@ def test_doc_ids_sorted_within_shard_term(readers, oracle):
 
     k1, b, avgdl = oracle.k1, oracle.b, oracle.avgdl
     tf, dl = pdf["tf"].astype(float), pdf["doc_len"].astype(float)
-    pdf["impact"] = (pdf["term"].map(oracle.idf) * tf * (k1 + 1.0)
+    idf = {spark_xxhash64_str(t): v for t, v in oracle.idf.items()}
+    pdf["impact"] = (pdf["term"].map(idf) * tf * (k1 + 1.0)
                      / (tf + k1 * (1.0 - b + b * dl / avgdl)))
     blocks = pdf.groupby(cell + ["block_id"]).agg(
         n=("doc_id", "size"), got=("max_score", "first"),

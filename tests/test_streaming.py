@@ -71,6 +71,21 @@ def test_incremental_ingest_and_compaction(spark, tmp_path_factory):
         for r, (_, s) in zip(got, want):
             assert abs(r["score"] - s) <= 1e-6 * max(1.0, abs(s))
 
+    # the compacted index is a build like any other: global corpus
+    # scalars, xxhash64 keys and one committed manifest record per shard
+    import json
+
+    from hybrid_search_engine_spark.build.manifest import read_manifest
+
+    with open(os.path.join(out, "stats", "corpus.json")) as f:
+        corpus = json.load(f)
+    assert corpus["doc_count"] == oracle.n_docs
+    assert corpus["avg_doc_len"] == oracle.avgdl
+    assert dict(reader.postings.dtypes)["term"] == "bigint"
+    done = [r["shard_id"] for r in read_manifest(out)
+            if r["status"] == "done"]
+    assert sorted(done) == [0, 1, 2, 3]
+
 
 def test_windowed_event_counts_stream_matches_batch(spark, tmp_path_factory):
     from hybrid_search_engine_spark.streaming.ingest import (
