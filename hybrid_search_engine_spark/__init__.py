@@ -5,9 +5,12 @@ A from-scratch rebuild of the query semantics of
 ``/root/reference``) on idiomatic Spark:
 
 - DataFrame/SQL plans everywhere; Catalyst/AQE pick physical strategies.
-- Text extraction/tokenization via vectorized Arrow pandas UDFs whose
-  pure-Python core (:mod:`.reference_semantics`) is shared with the test
-  oracle, making byte-parity per url a tautology enforced by tests.
+- Text extraction via vectorized Arrow pandas UDFs whose pure-Python core
+  (:mod:`.reference_semantics`) is shared with the test oracle, making
+  byte-parity per url a tautology enforced by tests.
+- One tokenize-and-count plan for BM25 statistics, JVM-native
+  (``operators/stats.py``): its tf rows carry each doc's length, so no
+  separate doc-length table is kept.
 - Doc-sharded posting blocks built in Spark SQL and stored as plain
   Parquet columns with a block-max bound (``operators/postings.py``).
 - One BM25 scorer: blocks exploded and scored in the JVM, single query or

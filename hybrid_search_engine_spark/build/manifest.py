@@ -16,8 +16,11 @@ checkpoints carrying lineage"):
 2. build only missing shards (`shard_filter` pushes a shard_id predicate
    into the build plan — the anti-join against done work);
 3. write with dynamic partition overwrite (idempotent per shard dir: a
-   re-run of a crashed shard replaces its files exactly);
-4. append manifest records only after the write commits.
+   re-run of a crashed shard replaces its files exactly); a build that can
+   reuse no shard first deletes the manifest and the postings, before it
+   overwrites any table;
+4. append manifest records only after the write commits; ``corpus.json``
+   (the "complete" marker) is written last.
 
 In production the manifest would be an Iceberg table and the fingerprint a
 source snapshot id; JSON-lines keeps the same protocol testable here.
@@ -30,6 +33,7 @@ import os
 import shutil
 import time
 import uuid
+from collections import Counter
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,18 +42,17 @@ from pyspark.sql import functions as F
 from ..operators.postings import (
     POSTINGS_FORMAT,
     build_postings,
-    read_postings,
     shard_metrics,
     write_postings,
 )
 from ..localdf import local_df
-from ..operators.stats import term_frequencies_with_doclen, term_stats
+from ..operators.stats import (
+    stats_partitions,
+    term_frequencies_with_doclen,
+    term_stats,
+)
 
 MANIFEST_NAME = "_manifest.jsonl"
-
-# granularity of the statistics stage: bounds the per-task aggregation-map
-# footprint independently of core count (see term_frequencies_with_doclen)
-DOCS_PER_BUILD_PARTITION = 8192
 
 
 @dataclass
@@ -125,11 +128,6 @@ def done_shards(index_dir: str, fingerprint: dict) -> set:
     }
 
 
-def _stats_partitions(spark: SparkSession, n_docs: int) -> int:
-    return max(spark.sparkContext.defaultParallelism,
-               -(-n_docs // DOCS_PER_BUILD_PARTITION))
-
-
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -144,9 +142,10 @@ def build_index(
 ) -> IndexBuildResult:
     """Build (or resume) the full index for ``docs(doc_id, text, ...)``.
 
-    Writes the tf table under ``index_dir/tf``, postings parquet under
-    ``index_dir/postings``, statistics under ``index_dir/stats``, manifest
-    at ``index_dir/_manifest.jsonl``.
+    Writes the tf table (which carries each doc's length) under
+    ``index_dir/tf``, postings parquet under ``index_dir/postings``, term
+    stats and ``corpus.json`` under ``index_dir/stats``, manifest at
+    ``index_dir/_manifest.jsonl``.
 
     Every table is keyed by ``xxhash64(term)`` bigints, not term strings:
     the tf aggregation and the posting shuffle/sort run over fixed-width
@@ -161,8 +160,7 @@ def build_index(
     fp = source_fingerprint(docs)  # one agg: count + content hash (fused)
     # ONE exchange (raw docs by doc_id); the tail materializes it to
     # parquet unless a crash-resume finds it already written
-    tf = term_frequencies_with_doclen(
-        docs, n_partitions=_stats_partitions(spark, fp["n_docs"]))
+    tf = term_frequencies_with_doclen(docs, fp["n_docs"])
     return _build_from_tf(spark, tf, index_dir, fp, fp["n_docs"], n_shards,
                           k1, b, block_size, fail_after_shards, t0)
 
@@ -173,7 +171,7 @@ def _build_from_tf(spark: SparkSession, tf: DataFrame, index_dir: str,
                    t0: float) -> IndexBuildResult:
     """Every build stage from the tf table on, shared by ``build_index``
     and ``streaming.ingest.compact_segments``: resume check, tf table,
-    term stats, doc stats, postings, shard metrics, manifest, corpus.json.
+    term stats, postings, shard metrics, manifest, corpus.json.
 
     ``tf`` is the unmaterialized (doc_id, term, tf, doc_len) table of the
     source that ``fp`` identifies; ``n_docs`` counts that source's docs,
@@ -208,6 +206,16 @@ def _build_from_tf(spark: SparkSession, tf: DataFrame, index_dir: str,
         todo = todo[:fail_after_shards]
         simulate_crash = True
 
+    posting_path = os.path.join(index_dir, "postings")
+    if not done:
+        # no shard of this source is reusable: drop the manifest and the
+        # postings BEFORE any table is overwritten, so a crash below never
+        # leaves an earlier source's records describing this build's files
+        # (and no shard dir of an earlier source or format survives)
+        if os.path.exists(_manifest_path(index_dir)):
+            os.remove(_manifest_path(index_dir))
+        shutil.rmtree(posting_path, ignore_errors=True)
+
     # the tf table is both the posting builder's input and build lineage:
     # a crash-resume skips straight to the missing shards without
     # re-deriving it. At 100 TB this is the "persist tf as a table" step.
@@ -238,32 +246,6 @@ def _build_from_tf(spark: SparkSession, tf: DataFrame, index_dir: str,
     total_tokens = obs.get["total_cf"] or 0
     avg_doc_len = total_tokens / n_docs if n_docs else 0.0
 
-    posting_path = os.path.join(index_dir, "postings")
-
-    # doc_stats depends only on the (already materialized) tf table — run
-    # its write CONCURRENTLY with the posting build instead of as a
-    # trailing serial stage (Spark schedules parallel jobs from separate
-    # threads in one session; FIFO pools interleave tasks). Saves one full
-    # job of wall-clock per build — part of the per-build fixed cost that
-    # strong-scaling runs pay 4× harder at 4× executors.
-    doc_stats_err: list = []
-    doc_stats_thread = None
-    if not simulate_crash:
-        import threading
-
-        def _write_doc_stats():
-            try:
-                (tf.select("doc_id", "doc_len").groupBy("doc_id")
-                 .agg(F.max("doc_len").alias("doc_len"))
-                 .write.mode("overwrite")
-                 .parquet(os.path.join(index_dir, "stats", "doc_stats")))
-            except BaseException as e:  # surfaced after join()
-                doc_stats_err.append(e)
-
-        doc_stats_thread = threading.Thread(target=_write_doc_stats,
-                                            name="doc_stats_write")
-        doc_stats_thread.start()
-
     built = []
     if todo:
         postings = build_postings(
@@ -272,18 +254,14 @@ def _build_from_tf(spark: SparkSession, tf: DataFrame, index_dir: str,
             # encode granularity follows the statistics granularity so
             # per-task sort/encode footprints stay bounded as data grows
             build_partitions=max(2 * n_shards,
-                                 _stats_partitions(spark, n_docs)),
+                                 stats_partitions(spark, n_docs)),
         )
         # dynamic partition overwrite: only the shards in `todo` are
         # replaced; previously-completed shard dirs are untouched, and a
-        # crashed shard's partial files are replaced exactly on retry. A
-        # build that reuses no shard starts empty, so no shard dir of an
-        # earlier source or format (e.g. one left empty now) survives it.
-        if not done:
-            shutil.rmtree(posting_path, ignore_errors=True)
+        # crashed shard's partial files are replaced exactly on retry
         write_postings(postings, posting_path, mode="overwrite")
         # per-shard metrics from what we just wrote
-        stored = read_postings(spark, posting_path).where(
+        stored = spark.read.parquet(posting_path).where(
             F.col("shard_id").isin(todo))
         metrics = {r["shard_id"]: r.asDict() for r in shard_metrics(stored).collect()}
         elapsed = time.time() - t0
@@ -291,6 +269,8 @@ def _build_from_tf(spark: SparkSession, tf: DataFrame, index_dir: str,
             sum(m["n_postings"] for m in metrics.values()) / max(len(metrics), 1)
         ) or 1
         now = time.time()
+        # one manifest read for the whole batch of records
+        attempts = Counter(r["shard_id"] for r in read_manifest(index_dir))
         records = []
         for s in todo:
             m = metrics.get(s, {"n_terms": 0, "n_blocks": 0, "n_postings": 0,
@@ -304,21 +284,14 @@ def _build_from_tf(spark: SparkSession, tf: DataFrame, index_dir: str,
                 "skew_ratio": round(m["n_postings"] / mean_postings, 4),
                 "source_fingerprint": fp,
                 "built_at": now,
-                "attempt": 1 + sum(
-                    1 for r in read_manifest(index_dir) if r["shard_id"] == s
-                ),
+                "attempt": 1 + attempts[s],
                 "elapsed_s": round(elapsed, 3),
             })
         append_manifest(index_dir, records)
         built = todo
 
-    # corpus scalars land only after the concurrent doc_stats write (and
-    # the postings above) committed — corpus.json is the "stats complete"
-    # marker the fast-resume path checks, so it must be written LAST
-    if doc_stats_thread is not None:
-        doc_stats_thread.join()
-        if doc_stats_err:
-            raise doc_stats_err[0]
+    # corpus.json is the "stats complete" marker the fast-resume path
+    # checks, so it lands only after the postings above committed
     if not simulate_crash:
         write_json_atomic(corpus_json, {
             "doc_count": n_docs, "avg_doc_len": avg_doc_len,
@@ -373,7 +346,7 @@ class IndexReader:
                  cache_postings: bool = False,
                  cache_tf: bool = False):
         self.spark = spark
-        self.postings = read_postings(spark, os.path.join(index_dir, "postings"))
+        self.postings = spark.read.parquet(os.path.join(index_dir, "postings"))
         term_type = dict(self.postings.dtypes).get("term")
         if term_type != "bigint":
             raise ValueError(

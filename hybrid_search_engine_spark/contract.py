@@ -59,16 +59,13 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.withColumn("text", F.coalesce(F.col("text"), F.lit("")))
 
 
-def _doc_tf(spark, sf_dir) -> DataFrame:
-    return stats_ops.term_frequencies(_docs(spark, sf_dir))
-
-
 # ---------------------------------------------------------------------------
 # A1: per-doc term frequency
 # ---------------------------------------------------------------------------
 
 def q_doc_term_tf(spark, sf_dir):
-    return _doc_tf(spark, sf_dir)
+    tf, tstats, scalars = _doc_statistics(spark, sf_dir)
+    return tf.select("doc_id", "term", "tf")
 
 
 SQL_DOC_TERM_TF = f"""
@@ -83,7 +80,7 @@ GROUP BY doc_id, term
 
 def q_term_stats(spark, sf_dir):
     # reuses the session-cached statistics (no separate count job per call)
-    tf, dstats, tstats, scalars = _doc_statistics(spark, sf_dir)
+    tf, tstats, scalars = _doc_statistics(spark, sf_dir)
     return tstats.select("term", "df", "cf", F.round("idf", 6).alias("idf_r"))
 
 
@@ -103,7 +100,10 @@ FROM tf, n GROUP BY term, n.n
 # ---------------------------------------------------------------------------
 
 def q_doc_stats(spark, sf_dir):
-    return stats_ops.doc_stats_from_tf(_doc_tf(spark, sf_dir))
+    # every tf row carries its doc's length; token-empty docs have no row,
+    # as in the oracle's GROUP BY over unnested tokens
+    tf, tstats, scalars = _doc_statistics(spark, sf_dir)
+    return tf.select("doc_id", "doc_len").distinct()
 
 
 SQL_DOC_STATS = f"""
@@ -141,9 +141,9 @@ _STATS_CACHE: dict = {}
 
 
 def _doc_statistics(spark, sf_dir):
-    """Session-scoped cache of (tf, dstats, tstats, scalars) per sf_dir —
-    several contract queries and the bench share them; statistics are
-    deterministic so reuse is safe."""
+    """Session-scoped cache of ``stats.build_statistics``' (tf, tstats,
+    scalars) per sf_dir — several contract queries and the bench share
+    them; statistics are deterministic so reuse is safe."""
     key = (spark.sparkContext.applicationId, sf_dir)
     got = _STATS_CACHE.get(key)
     if got is None:
@@ -154,9 +154,9 @@ def _doc_statistics(spark, sf_dir):
 
 
 def q_bm25_topk(spark, sf_dir, query: str = FLAGSHIP_QUERY, k: int = 10):
-    tf, dstats, tstats, scalars = _doc_statistics(spark, sf_dir)
-    res = score_ops.search(spark, query, tf, tstats, dstats,
-                           scalars.avg_doc_len, k=k)
+    tf, tstats, scalars = _doc_statistics(spark, sf_dir)
+    res = score_ops.search(spark, query, tf, tstats, scalars.avg_doc_len,
+                           k=k)
     return res.select("doc_id", F.round("score", 6).alias("score_r"))
 
 

@@ -774,9 +774,8 @@ FROM s GROUP BY user_id, session_id
 # ---------------------------------------------------------------------------
 
 def q_fuse_hybrid(spark, sf_dir):
-    from .contract import K1, B
+    from .contract import K1, B, _doc_statistics
     from .operators import score as score_ops
-    from .operators import stats as stats_ops
     from .operators.fusion import fuse_hybrid
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -792,18 +791,16 @@ def q_fuse_hybrid(spark, sf_dir):
         (_dot_lit(F.col("embedding"), qvec)
          / (_norm(F.col("embedding")) * F.lit(qn))).alias("sem_score"),
     )
-    docs = _docs(spark, sf_dir)
-    tf, dstats, tstats, scalars = stats_ops.build_statistics(docs)
+    tf, tstats, scalars = _doc_statistics(spark, sf_dir)
     qt = score_ops.query_terms_df(spark, FLAGSHIP_QUERY)
-    lex = score_ops.score_query_terms(qt, tf, tstats, dstats,
-                                      scalars.avg_doc_len, K1, B)
+    lex = score_ops.score_query_terms(qt, tf, tstats, scalars.avg_doc_len,
+                                      K1, B)
     lex = lex.select("query_id", "doc_id", F.col("score").alias("lex_score"))
     # dense parity mode: n_docs = corpus size, so the sparse lex side's
     # min is clamped to 0 exactly as the reference's dense score vectors
     # (core.py:264-268 + utils.py:57-71) would have it
-    n_docs = docs.count()
     fused = fuse_hybrid(sem, lex, 0.7, 0.3, query_col="query_id", k=20,
-                        n_docs=n_docs)
+                        n_docs=scalars.doc_count)
     return fused.select("doc_id", "rank",
                         F.round("hybrid_score", 6).alias("hybrid_r"))
 

@@ -4,23 +4,24 @@ Two tiers, chosen per call site:
 
 1. **Parity tier** (Arrow pandas UDFs wrapping
    :mod:`..reference_semantics`): used wherever the output is part of the
-   byte-identity contract — the `text` extraction column and the tokens that
-   feed BM25 statistics. Python-regex semantics exactly (unicode ``\\s``,
-   ``str.lower``), vectorized per Arrow batch, no per-row Python at the
-   plan level.
+   byte-identity contract — the `text` extraction column. Python-regex
+   semantics exactly (unicode ``\\s``, ``str.lower``), vectorized per Arrow
+   batch, no per-row Python at the plan level. ``tokenize_nostop_udf`` is
+   the reference tokenizer as a UDF, against which the native tier's
+   tokens are tested; BM25 statistics never run it.
 
 2. **Native tier** (pure ``pyspark.sql.functions`` column expressions):
    whole-stage-codegen'd JVM regexps for hot paths where we have proven (test
    ``tests/test_text.py::test_native_matches_parity_on_ascii``) the corpus
    alphabet makes them equivalent (ASCII corpora). At 100 TB the native tier
-   keeps extraction inside codegen and off the Python workers entirely.
+   keeps extraction inside codegen and off the Python workers entirely. The
+   BM25 statistics tokenize with the same expression
+   (``operators/stats.py::term_frequencies_with_doclen``).
 
 Reference semantics: /root/reference/search_engine/extractor.py:6-52.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import Column
@@ -75,16 +76,9 @@ def extract_text_udf(html: pd.Series, fallback: pd.Series) -> pd.Series:
     )
 
 
-def _make_tokenize_udf(remove_stopwords: bool):
-    @pandas_udf(T.ArrayType(T.StringType()))
-    def _tok(text: pd.Series) -> pd.Series:
-        return text.map(lambda s: tokenize(s, remove_stopwords=remove_stopwords))
-
-    return _tok
-
-
-tokenize_udf = _make_tokenize_udf(False)
-tokenize_nostop_udf = _make_tokenize_udf(True)
+@pandas_udf(T.ArrayType(T.StringType()))
+def tokenize_nostop_udf(text: pd.Series) -> pd.Series:
+    return text.map(lambda s: tokenize(s, remove_stopwords=True))
 
 
 # --------------------------------------------------------------------------
@@ -187,15 +181,3 @@ def doc_metadata_df(df, text_col: str = "text", keep: tuple = ("doc_id",)):
         .alias("avg_word_length"),
     )
 
-
-def tokenize_documents(df, text_col: str = "text", id_col: str = "doc_id",
-                       remove_stopwords: bool = True, parity: bool = False):
-    """→ DataFrame(doc_id, tokens). `parity=True` forces the pandas UDF."""
-    if parity:
-        from .. import ensure_udf_serializable
-
-        ensure_udf_serializable()
-        tok = (tokenize_nostop_udf if remove_stopwords else tokenize_udf)(F.col(text_col))
-    else:
-        tok = tokens_native_keep_order(text_col, remove_stopwords=remove_stopwords)
-    return df.select(F.col(id_col).alias("doc_id"), tok.alias("tokens"))

@@ -36,11 +36,16 @@ repeated-term phrases are handled by the same shifted-containment rule.
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..build.manifest import write_json_atomic
+from ..functions.hashing import spark_xxhash64_str
 from ..functions.text import tokens_native_keep_order
 from ..sources.registry import spread
 
@@ -150,9 +155,9 @@ def doc_term_positions(docs: DataFrame, text_col: str = "text") -> DataFrame:
     subsumes the frequency index.
 
     Round-6 note: a repartition(doc_id)-first variant (the
-    term_frequencies shape) was measured BOTH ways before being rejected
-    — 3.0-4.5 s → 0.87 s at 50k docs (fixed overhead) but 85-94 s →
-    100-158 s at 1M docs (interleaved A/B): the raw-doc exchange plus a
+    term_frequencies_with_doclen shape) was measured BOTH ways before
+    being rejected — 3.0-4.5 s → 0.87 s at 50k docs (fixed overhead) but
+    85-94 s → 100-158 s at 1M docs (interleaved A/B): the raw-doc exchange plus a
     single-phase ObjectHashAggregate over position lists loses to the
     two-phase partial agg once the per-task aggregation map is real, and
     query-tier plans filter terms before the aggregation anyway.
@@ -319,19 +324,23 @@ def save_positional_index(
     as the ANN bucket index (similarity.py) and the BM25 shard cache
     (build/manifest.py); n_buckets=256 keeps per-partition files
     fat enough for 128 MB row groups at web scale while still pruning
-    99.6% of the index per term. A JSON meta sidecar pins n_buckets (the
-    reader must hash with the SAME modulus)."""
-    import json as _json
-
+    99.6% of the index per term. A JSON sidecar ``<path>.meta`` pins
+    n_buckets (the reader must hash with the SAME modulus). The old
+    sidecar is removed before the parquet is overwritten and the new one
+    written atomically after it, so a crash in between leaves an index
+    the reader refuses, never one it hashes with a stale modulus."""
+    meta = path.rstrip("/") + ".meta"
+    if os.path.isdir(meta):  # the Spark-JSON-writer sidecar of older saves
+        shutil.rmtree(meta)
+    elif os.path.exists(meta):
+        os.remove(meta)
     out = positional_tf.withColumn(
         "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)))
     (out.repartition("bucket")
         .sortWithinPartitions("term", "doc_id")
         .write.mode("overwrite").partitionBy("bucket").parquet(path))
-    spark = positional_tf.sparkSession
-    meta = _json.dumps({"n_buckets": n_buckets, "format": "positional_tf_v1"})
-    spark.createDataFrame([(meta,)], "meta string").coalesce(1).write.mode(
-        "overwrite").json(path.rstrip("/") + ".meta")
+    write_json_atomic(meta, {"n_buckets": n_buckets,
+                             "format": "positional_tf_v1"})
 
 
 class PositionalIndex:
@@ -339,31 +348,19 @@ class PositionalIndex:
     queries with term-bucket partition pruning injected automatically."""
 
     def __init__(self, spark, path: str):
-        import json as _json
-
+        # a missing sidecar (a save that crashed after removing it) raises
+        with open(path.rstrip("/") + ".meta") as f:
+            self.n_buckets = int(json.load(f)["n_buckets"])
         self._df = spark.read.parquet(path)
-        meta_rows = spark.read.json(path.rstrip("/") + ".meta").collect()
-        self.n_buckets = _json.loads(meta_rows[0]["meta"])["n_buckets"]
-        self._bucket_cache: dict[str, int] = {}
 
     def _pruned(self, terms: list[str]) -> DataFrame:
         """Postings restricted to ``terms``' buckets — the bucket values
-        are literals, so the filter prunes partitions at plan time. The
-        1-row job computing them is Spark's own xxhash64 (a Python
-        reimplementation could drift); term→bucket is memoized per reader
-        (round 6) so a served query only pays the driver round-trip for
-        terms it has never seen — repeat queries plan with zero jobs."""
-        missing = [t for t in dict.fromkeys(terms)
-                   if t not in self._bucket_cache]
-        if missing:
-            row = self._df.sparkSession.range(1).select(
-                F.array(*[
-                    F.pmod(F.xxhash64(F.lit(t)), F.lit(self.n_buckets))
-                    for t in missing
-                ]).alias("bs")
-            ).first()
-            self._bucket_cache.update(zip(missing, row["bs"]))
-        buckets = sorted({self._bucket_cache[t] for t in terms})
+        are literals, so the filter prunes partitions at plan time. They
+        are computed driver-side with ``spark_xxhash64_str`` (bit-identical
+        to Spark's xxhash64, pinned by test); Python's ``%`` on the signed
+        key equals Spark's ``pmod``, so planning a query runs no job."""
+        buckets = sorted({spark_xxhash64_str(t) % self.n_buckets
+                          for t in terms})
         return self._df.where(F.col("bucket").isin(buckets)).drop("bucket")
 
     def phrase(self, phrase: str) -> DataFrame:

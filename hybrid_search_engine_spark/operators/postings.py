@@ -119,10 +119,6 @@ def write_postings(postings: DataFrame, path: str, mode: str = "overwrite") -> N
     )
 
 
-def read_postings(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def shard_metrics(postings: DataFrame) -> DataFrame:
     """Per-shard build metrics (skew evidence for the manifest): term,
     block and posting counts."""

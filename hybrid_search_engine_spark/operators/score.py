@@ -3,8 +3,9 @@
 Two plans share one contribution expression (``bm25_contribution_sql``)
 and one ranking order (``RANK_ORDER``):
 
-- ``score_query_terms``/``search``: query terms ⋈ tf ⋈ doc_stats, straight
-  from the statistics tables (contract backstop). The query side is tiny,
+- ``score_query_terms``/``search``: query terms ⋈ tf, straight from the
+  statistics tables (contract backstop). Every tf row carries its doc's
+  ``doc_len``, so there is no doc-length join. The query side is tiny,
   so it is broadcast into the tf scan; the top-k is TakeOrderedAndProject
   (bounded per-partition heap + driver merge).
 - ``search_postings``/``search_postings_batch``: the index query path. The
@@ -98,17 +99,19 @@ def _sql_lit(v) -> str:
 
 
 def score_query_terms(qterms: DataFrame, tf: DataFrame, tstats: DataFrame,
-                      dstats: DataFrame, avg_doc_len: float,
-                      k1: float = K1_DEFAULT, b: float = B_DEFAULT) -> DataFrame:
+                      avg_doc_len: float, k1: float = K1_DEFAULT,
+                      b: float = B_DEFAULT) -> DataFrame:
     """→ (query_id, doc_id, score) for all docs with ≥1 matching term.
+    ``tf``: (doc_id, term, tf, doc_len), as ``stats.build_statistics``
+    returns it.
 
-    Join order is chosen for scale: broadcast the query terms into the tf
-    scan (prunes to candidate postings), broadcast term_stats (vocabulary-
-    sized), then join doc lengths on the shrunken candidate set.
+    Join order is chosen for scale: broadcast term_stats (vocabulary-
+    sized) into the query terms, then the query terms into the tf scan
+    (prunes to candidate postings, which already carry doc_len).
     """
     qt = qterms.join(F.broadcast(tstats.select("term", "idf")), "term")
-    cand = tf.join(F.broadcast(qt), "term")
-    cand = cand.join(dstats, "doc_id").withColumn("avgdl", F.lit(float(avg_doc_len)))
+    cand = (tf.join(F.broadcast(qt), "term")
+            .withColumn("avgdl", F.lit(float(avg_doc_len))))
     contrib = (bm25_contribution(k1, b) * F.col("qweight")).alias("contrib")
     return (
         cand.select("query_id", "doc_id", contrib)
@@ -118,11 +121,11 @@ def score_query_terms(qterms: DataFrame, tf: DataFrame, tstats: DataFrame,
 
 
 def search(spark: SparkSession, query: str, tf: DataFrame, tstats: DataFrame,
-           dstats: DataFrame, avg_doc_len: float, k: int = 10,
-           k1: float = K1_DEFAULT, b: float = B_DEFAULT) -> DataFrame:
+           avg_doc_len: float, k: int = 10, k1: float = K1_DEFAULT,
+           b: float = B_DEFAULT) -> DataFrame:
     """Single-query exact BM25 top-k (sparse: zero-score docs never surface)."""
     qt = query_terms_df(spark, query)
-    scores = score_query_terms(qt, tf, tstats, dstats, avg_doc_len, k1, b)
+    scores = score_query_terms(qt, tf, tstats, avg_doc_len, k1, b)
     return spark.sql(f"SELECT doc_id, score FROM {{scores}} "
                      f"ORDER BY {RANK_ORDER} LIMIT {int(k)}", scores=scores)
 

@@ -1,4 +1,4 @@
-"""Corpus statistics for BM25: tf, df, idf, doc lengths, avgdl.
+"""Corpus statistics for BM25: tf, doc lengths, df, idf, avgdl.
 
 Semantics contract (reference file:line, math only):
 - per-doc tf:   bm25.py:62-64   (Counter per doc)      → A1
@@ -7,13 +7,13 @@ Semantics contract (reference file:line, math only):
 - idf:          bm25.py:76-81   ln((N-df+0.5)/(df+0.5)+1) → A4
 - doc length:   bm25.py:59-60   (post-stopword token count) → A5
 
-Scale notes: tf is one hash aggregation keyed (doc_id, term) — map-side
-partial aggregation collapses each document's tokens before the shuffle, so
-shuffle volume is distinct-(doc,term) pairs, not raw token count.  term_stats
-aggregates tf again by term (second, much smaller shuffle) and is
-broadcast-sized even at web scale (vocabulary ≪ corpus).  doc_stats rides the
-same first aggregation.  Nothing here collects to the driver except the two
-corpus scalars.
+One tokenize-and-count plan, ``term_frequencies_with_doclen``, computes
+A1 and A5 together for the index build and for the statistics the
+contract rows read: every (doc_id, term, tf) row carries its doc's
+``doc_len``, so no separate doc-length table exists. term_stats
+aggregates tf again by term (a second, much smaller shuffle) and is
+broadcast-sized even at web scale (vocabulary ≪ corpus). Nothing here
+collects to the driver except the two corpus scalars.
 """
 
 from __future__ import annotations
@@ -23,7 +23,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import tokenize_documents
+# granularity of the statistics stage: bounds the per-task aggregation-map
+# footprint independently of core count (see term_frequencies_with_doclen)
+DOCS_PER_PARTITION = 8192
 
 
 @dataclass(frozen=True)
@@ -32,71 +34,21 @@ class CorpusScalars:
     avg_doc_len: float
 
 
-def term_frequencies(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id", remove_stopwords: bool = True,
-                     parity: bool = False) -> DataFrame:
-    """A1: (doc_id, term, tf). One explode + one hash agg.
-
-    Hot path (parity=False): explode `regexp_extract_all` of the POSITIVE
-    class `[a-z0-9_]+` THEN filter with plain WHERE predicates — all inside
-    whole-stage codegen. Two measured pathologies are avoided here:
-    (a) `split` on the complement class `[^a-z0-9_]+` makes java.util.regex
-    evaluate a per-character negation lambda (CharPredicate.negate) — 244s
-    vs 36s for extract_all on the identical 1.2 GB corpus at 16 cores, 6.8×,
-    and it is the difference between a scaling and a flat tf stage;
-    (b) the array-lambda form — filter(tokens, x -> !array_contains) — is a
-    higher-order function Spark evaluates interpreted per element (measured
-    3× slower). Token multiset is identical to split-on-complement with
-    empties dropped: maximal `[a-z0-9_]+` runs either way. Order/duplicate
-    semantics don't matter here: BM25 statistics are bag-of-words.
-    """
-    if parity:
-        toks = tokenize_documents(docs, text_col, id_col,
-                                  remove_stopwords=remove_stopwords,
-                                  parity=True)
-        return (
-            toks.select("doc_id", F.explode("tokens").alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-    from ..reference_semantics import STOPWORDS
-
-    # Round 6 (guide §2.3 "shuffle keys and metadata instead of
-    # payloads" / the same shape as term_frequencies_with_doclen):
-    # repartition the RAW DOCS by doc_id FIRST. HashPartitioning(doc_id)
-    # satisfies the aggregation's ClusteredDistribution(doc_id, term), so
-    # the exchange moves ~input-sized doc rows and the explode + final
-    # aggregation run shuffle-free on top — no token-grain partial-agg
-    # rows are ever serialized (measured 1.74 s → 0.48 s for the sf1.0
-    # contract row at local[32]). The width is pinned at
-    # max(defaultParallelism, input splits): AQE's parallelism-first
-    # coalescing folds the ~15 MB bench exchange to ~1 MB partitions
-    # (~15 of them) and under-parallelizes the downstream explode+agg on
-    # a 32-core session (interleaved A/B: median 0.71 s auto vs 0.47 s
-    # pinned); the input-split term keeps the width growing with data
-    # size so a huge corpus is not forced into cores-count partitions.
-    part = docs.select(F.col(id_col).alias("doc_id"),
-                       F.col(text_col).alias("__text"))
-    par = max(docs.sparkSession.sparkContext.defaultParallelism,
-              part.rdd.getNumPartitions())
-    part = part.repartition(par, "doc_id")
-    exploded = part.select(
-        "doc_id",
-        F.explode(F.regexp_extract_all(
-            F.lower(F.col("__text")), F.lit(r"[a-z0-9_]+"), 0)).alias("term"),
-    )
-    if remove_stopwords:
-        exploded = exploded.where(~F.col("term").isin(sorted(STOPWORDS)))
-    return exploded.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+def stats_partitions(spark, n_docs: int) -> int:
+    """Width of the statistics stage: ``max(defaultParallelism,
+    ⌈n_docs / DOCS_PER_PARTITION⌉)``. Sized to the data, so the
+    per-task aggregation map stays bounded at web scale, and never
+    narrower than the session's cores, so a toy input neither idles
+    cores nor schedules 4×cores near-empty tasks."""
+    return max(spark.sparkContext.defaultParallelism,
+               -(-int(n_docs) // DOCS_PER_PARTITION))
 
 
-def term_frequencies_with_doclen(docs: DataFrame, text_col: str = "text",
-                                 id_col: str = "doc_id",
-                                 remove_stopwords: bool = True,
-                                 n_partitions: int | None = None,
+def term_frequencies_with_doclen(docs: DataFrame, n_docs: int,
                                  term_domain: str = "hash") -> DataFrame:
-    """A1+A5 fused: (doc_id, term, tf, doc_len) with ONE exchange — of raw
-    docs, not tokens. The web-scale statistics plan used by the index build.
+    """A1+A5 fused: ``docs(doc_id, text)`` → (doc_id, term, tf, doc_len)
+    with ONE exchange — of raw docs, not tokens. ``n_docs`` counts
+    ``docs`` and sets the exchange width (``stats_partitions``).
 
     Shape: ``repartition(P, doc_id)`` FIRST, then explode + aggregate.
     HashPartitioning(doc_id) satisfies the aggregation's
@@ -106,12 +58,22 @@ def term_frequencies_with_doclen(docs: DataFrame, text_col: str = "text",
     doc_len then rides the same partitioning as a window sum: no groupBy
     shuffle, no doc_id join downstream.
 
-    ``n_partitions`` directly bounds the per-task aggregation-map footprint
-    (groups/task ≈ distinct (doc,term) pairs / P). This is the fix for the
-    measured superlinearity of the naive explode→partial-agg plan: at 1M
-    docs / 16 input partitions each partial map held ~5.5M groups (~450MB)
-    — spill + cache-miss regime, 11× cost for 5× docs (43s→472s, see
+    P directly bounds the per-task aggregation-map footprint (groups/task
+    ≈ distinct (doc,term) pairs / P). This is the fix for the measured
+    superlinearity of the naive explode→partial-agg plan: at 1M docs / 16
+    input partitions each partial map held ~5.5M groups (~450MB) — spill
+    + cache-miss regime, 11× cost for 5× docs (43s→472s, see
     BENCH/BASELINE.md). ~8k docs per task keeps maps ~50MB and linear.
+
+    Tokens are the POSITIVE class ``[a-z0-9_]+`` extracted with
+    ``regexp_extract_all`` and exploded, then filtered with a plain WHERE
+    against the stopwords — all inside whole-stage codegen. Two measured
+    pathologies are avoided: ``split`` on the complement class makes
+    java.util.regex evaluate a per-character negation lambda (244 s vs
+    36 s on a 1.2 GB corpus at 16 cores), and the array-lambda form
+    ``filter(tokens, x -> !array_contains)`` is a higher-order function
+    Spark interprets per element (3× slower). The token multiset equals
+    the reference tokenizer's on ASCII text (``tests/test_text.py``).
 
     ``term_domain="hash"`` (the index build's keys) replaces each token
     with ``xxhash64(token)`` (bigint) BEFORE the aggregation: the agg hash
@@ -132,37 +94,19 @@ def term_frequencies_with_doclen(docs: DataFrame, text_col: str = "text",
     if term_domain not in ("string", "hash"):
         raise ValueError(f"term_domain must be 'string' or 'hash', "
                          f"got {term_domain!r}")
-    part = docs.select(F.col(id_col).alias("doc_id"),
-                       F.col(text_col).alias("text"))
-    if n_partitions:
-        part = part.repartition(int(n_partitions), "doc_id")
-    else:
-        part = part.repartition("doc_id")
+    part = docs.select("doc_id", "text").repartition(
+        stats_partitions(docs.sparkSession, n_docs), "doc_id")
     exploded = part.select(
         "doc_id",
         F.explode(F.regexp_extract_all(
             F.lower(F.col("text")), F.lit(r"[a-z0-9_]+"), 0)).alias("term"),
-    )
-    if remove_stopwords:
-        exploded = exploded.where(~F.col("term").isin(sorted(STOPWORDS)))
+    ).where(~F.col("term").isin(sorted(STOPWORDS)))
     if term_domain == "hash":
         exploded = exploded.select(
             "doc_id", F.xxhash64("term").alias("term"))
     tf = exploded.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     return tf.withColumn(
         "doc_len", F.sum("tf").over(Window.partitionBy("doc_id")))
-
-
-def doc_stats_from_tf(tf: DataFrame) -> DataFrame:
-    """A5 without re-tokenizing: doc_len = Σ tf per doc.
-
-    Equals the post-stopword token count of each doc, because tf counts
-    the same token stream; saves a second pass over raw text.
-    NOTE: drops docs with zero surviving tokens — callers that need them
-    (avgdl denominator counts empty docs too) must count N from the docs
-    table directly, as build_statistics does.
-    """
-    return tf.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
 
 
 def term_stats(tf: DataFrame, doc_count: int) -> DataFrame:
@@ -177,44 +121,17 @@ def term_stats(tf: DataFrame, doc_count: int) -> DataFrame:
     )
 
 
-def build_statistics(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id", remove_stopwords: bool = True,
-                     parity: bool = False, doc_count: int | None = None,
-                     docs_per_partition: int = 8192):
-    """One-pass build of (tf, doc_stats, term_stats, scalars).
-
-    Hot path (parity=False) uses ``term_frequencies_with_doclen``: ONE
-    doc-grain exchange sized to the DATA (P = max(defaultParallelism,
-    n_docs/docs_per_partition)), not to the session's shuffle-partition
-    default. That keeps the per-task aggregation map bounded at web scale
-    (the superlinearity fix — see term_frequencies_with_doclen) AND avoids
-    scheduling 4×cores near-empty tasks on toy inputs; doc_len rides the
-    same partitioning, so doc_stats adds no exchange at all.
-
-    tf is keyed by term strings, which the contract rows built on it
-    compare with the SQL oracle's, and cached across the downstream
-    aggregations.
-    ``doc_count`` skips the separate count job when the caller already
-    knows N (e.g. from the fused fingerprint aggregate in build_index).
-    """
-    if doc_count is None:
-        doc_count = docs.select(id_col).count()
-    if parity:
-        tf = term_frequencies(docs, text_col, id_col, remove_stopwords,
-                              parity).cache()
-        dstats = doc_stats_from_tf(tf)
-    else:
-        p = max(docs.sparkSession.sparkContext.defaultParallelism,
-                -(-doc_count // docs_per_partition))
-        tfdl = term_frequencies_with_doclen(
-            docs, text_col, id_col, remove_stopwords, n_partitions=p,
-            term_domain="string").cache()
-        tf = tfdl.drop("doc_len")
-        # doc_id-clustered cache → dropDuplicates needs no exchange
-        dstats = tfdl.select("doc_id", "doc_len").dropDuplicates(["doc_id"])
-    total = dstats.agg(F.sum("doc_len")).first()[0] or 0
+def build_statistics(docs: DataFrame):
+    """``docs(doc_id, text)`` → (tf, term_stats, scalars), with tf the
+    cached (doc_id, term, tf, doc_len) table keyed by term strings, which
+    the contract rows built on it compare with the SQL oracle's. A doc's
+    length is any of its tf rows' ``doc_len``; docs with no token left
+    after stopword removal have no tf row but count in N."""
+    doc_count = docs.count()
+    tf = term_frequencies_with_doclen(docs, doc_count,
+                                      term_domain="string").cache()
+    total = tf.agg(F.sum("tf")).first()[0] or 0
     scalars = CorpusScalars(
         doc_count=doc_count,
         avg_doc_len=(total / doc_count if doc_count else 0.0))
-    tstats = term_stats(tf, scalars.doc_count)
-    return tf, dstats, tstats, scalars
+    return tf, term_stats(tf, doc_count), scalars

@@ -19,6 +19,8 @@ Maps the reference's two quasi-streaming components (SURVEY.md §2.9):
 Incremental semantics (ST3): each micro-batch builds a new SEGMENT
 directory (segment = the micro-batch id) with ``build_index`` — a complete
 index with its own tf table, in the same xxhash64 key domain as any other.
+The tf table is a segment's one record of which docs it indexed and how
+long each is: `tombstone_deleted_docs` lists indexed doc ids from it, and
 `compact_segments` merges the segments back into one canonical sharded
 index by feeding the union of their tf tables through build_index's own
 stages (the merge job the reference never needed because it always rebuilt
@@ -273,8 +275,8 @@ def tombstone_deleted_docs(spark: SparkSession, src_dir: str,
     source directory leaves its docs in the index forever — so deletions
     are detected by LISTING: the doc ids derivable from the CURRENT source
     directory (``xxhash64(url)``, the same deterministic id the ingest
-    assigns) are anti-joined against the ids present in the segments'
-    doc_stats; indexed-but-no-longer-live ids are appended as tombstones
+    assigns) are anti-joined against the ids present in the segments' tf
+    tables; indexed-but-no-longer-live ids are appended as tombstones
     under ``index_root/tombstones/``.
 
     Tombstones take effect at ``compact_segments`` time, which drops the
@@ -293,9 +295,7 @@ def tombstone_deleted_docs(spark: SparkSession, src_dir: str,
         return 0
     live = (spark.read.schema(PAGES_SCHEMA).parquet(src_dir)
             .select(F.xxhash64("url").alias("doc_id")).distinct())
-    indexed = spark.read.parquet(
-        *[os.path.join(s, "stats", "doc_stats") for s in segs]
-    ).select("doc_id").distinct()
+    indexed = _segment_doc_ids(spark, segs)
     gone = indexed.join(live, "doc_id", "left_anti")
     ts_dir = os.path.join(index_root, "tombstones")
     existing = read_tombstones(spark, index_root)
@@ -316,6 +316,13 @@ def read_tombstones(spark: SparkSession, index_root: str):
     return spark.read.parquet(ts_dir).select("doc_id").distinct()
 
 
+def _segment_doc_ids(spark: SparkSession, segs: list[str]) -> DataFrame:
+    """Distinct doc ids indexed in ``segs``, from their tf tables (a doc
+    with no token left after stopword removal has no tf row)."""
+    return spark.read.parquet(
+        *[os.path.join(s, "tf") for s in segs]).select("doc_id").distinct()
+
+
 def list_segments(index_root: str) -> list[str]:
     seg_root = os.path.join(index_root, "segments")
     if not os.path.isdir(seg_root):
@@ -332,8 +339,8 @@ def compact_segments(spark: SparkSession, index_root: str, out_dir: str,
     """Multi-segment merge (ST3): df/idf/avgdl are global, so the merge
     rebuilds the index from the union of the segments' tf tables, minus
     tombstoned docs, through build_index's own stages from the tf table on
-    (term stats, postings, doc stats, shard metrics, manifest, corpus.json;
-    resumable like any build). Cost is one shuffle of tf-grain data — a
+    (term stats, postings, shard metrics, manifest, corpus.json; resumable
+    like any build). Cost is one shuffle of tf-grain data — a
     fresh build minus extraction and tokenization (the expensive parts at
     web scale)."""
     from ..build.manifest import _build_from_tf
@@ -354,15 +361,14 @@ def compact_segments(spark: SparkSession, index_root: str, out_dir: str,
     # applied HERE: compaction is the point where deletes become
     # query-invisible. The anti-join at tf grain runs before the stats and
     # postings are rebuilt, so df/idf/avgdl all reflect the post-delete
-    # corpus. (A tombstoned doc that had zero post-stopword tokens never
-    # reached doc_stats and stays in the doc_count denominator — a bounded
-    # avgdl nuance, not a postings error.)
+    # corpus. (A tombstoned doc that had zero post-stopword tokens has no
+    # tf row and stays in the doc_count denominator — a bounded avgdl
+    # nuance, not a postings error.)
     tombs = read_tombstones(spark, index_root)
     n_tombstoned = 0
     if tombs is not None:
-        n_tombstoned = spark.read.parquet(
-            *[os.path.join(s, "stats", "doc_stats") for s in segs]
-        ).join(tombs, "doc_id").count()
+        n_tombstoned = _segment_doc_ids(spark, segs).join(
+            tombs, "doc_id").count()
         tf = tf.join(tombs, "doc_id", "left_anti")
     fp = {"segments": [os.path.basename(s) for s in segs],
           "tombstoned": n_tombstoned}

@@ -71,6 +71,9 @@ def test_hash_domain_postings_term_is_bigint(spark, docs_small, tmp_path):
     for table in ("tf", "postings", os.path.join("stats", "term_stats")):
         tdt = dict(spark.read.parquet(os.path.join(d, table)).dtypes)["term"]
         assert tdt == "bigint", (table, tdt)
+    # doc lengths live in the tf table only: no doc_stats table
+    assert sorted(os.listdir(os.path.join(d, "stats"))) == [
+        "corpus.json", "term_stats"]
 
 
 def test_reader_rejects_string_keyed_postings(spark, tmp_path):
@@ -99,9 +102,10 @@ def test_no_vocabulary_collisions_on_corpus(spark, docs_small):
     """On the test corpus the 64-bit hash is collision-free (the analysis
     in term_frequencies_with_doclen says P≈V²/2⁶⁵; this pins it for the
     vocabulary every other test relies on)."""
-    from hybrid_search_engine_spark.operators.stats import term_frequencies
+    from hybrid_search_engine_spark.operators.stats import build_statistics
 
-    terms = term_frequencies(docs_small).select("term").distinct()
+    tf, _, _ = build_statistics(docs_small.select("doc_id", "text"))
+    terms = tf.select("term").distinct()
     n_str, n_hash = terms.agg(
         F.count(F.lit(1)).alias("a"),
         F.countDistinct(F.xxhash64("term")).alias("b")).first()

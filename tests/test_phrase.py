@@ -218,3 +218,91 @@ def test_phrase_match_scan_empty_list_raises(spark):
     docs = local_df(spark, [(1, "a b")], "doc_id long, text string")
     with pytest.raises(ValueError, match="no phrases"):
         phrase_match_scan(docs, [])
+
+
+def _small_positional(spark, terms):
+    rows = [(i, t, [1], 1) for i, t in enumerate(terms)]
+    return spark.createDataFrame(
+        rows, "doc_id long, term string, positions array<int>, tf int")
+
+
+def test_positional_buckets_match_spark_pmod(spark, tmp_path):
+    """The reader's driver-side bucket of every term equals the bucket
+    Spark's ``pmod(xxhash64(term), n)`` wrote it to — ASCII, non-ASCII
+    and empty terms — and the reader finds each term through it."""
+    from hybrid_search_engine_spark.functions.hashing import spark_xxhash64_str
+    from hybrid_search_engine_spark.operators.phrase import (
+        PositionalIndex,
+        save_positional_index,
+    )
+
+    terms = ["", "a", "spark", "window", "naïve", "日本語テキスト",
+             "z" * 33, "mixed日本a", "Ünïcödé"]
+    path = str(tmp_path / "pidx")
+    save_positional_index(_small_positional(spark, terms), path, n_buckets=7)
+    written = {r["term"]: r["bucket"]
+               for r in spark.read.parquet(path).collect()}
+    assert written == {t: spark_xxhash64_str(t) % 7 for t in terms}
+    idx = PositionalIndex(spark, path)
+    for t in terms:
+        assert [r["term"] for r in idx._pruned([t])
+                .where(F.col("term") == t).collect()] == [t], t
+
+
+def test_phrase_query_plans_without_a_job(spark, tmp_path):
+    """Building a phrase query's DataFrame on a fresh reader starts no
+    Spark job: the buckets are computed on the driver."""
+    from hybrid_search_engine_spark.operators.phrase import (
+        PositionalIndex,
+        save_positional_index,
+    )
+
+    path = str(tmp_path / "pidx")
+    save_positional_index(doc_term_positions(_planted_df(spark)), path,
+                          n_buckets=16)
+    idx = PositionalIndex(spark, path)
+    sc = spark.sparkContext
+    group = "phrase-plan-probe"
+    sc.setJobGroup(group, "phrase query planning")
+    try:
+        df = idx.phrase(PHRASES[0])
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(jobs) == []
+    assert df.count() > 0
+
+
+def test_positional_resave_crash_refuses_stale_meta(spark, tmp_path,
+                                                    monkeypatch):
+    """Re-saving with another ``n_buckets`` and crashing after the parquet
+    write must leave an index the reader refuses, not one it would hash
+    with the old modulus."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from hybrid_search_engine_spark.operators.phrase import (
+        PositionalIndex,
+        save_positional_index,
+    )
+
+    ptf = doc_term_positions(_planted_df(spark))
+    path = str(tmp_path / "pidx")
+    save_positional_index(ptf, path, n_buckets=16)
+    assert PositionalIndex(spark, path).n_buckets == 16
+
+    real = DataFrameWriter.parquet
+
+    def parquet_then_crash(self, *args, **kwargs):
+        real(self, *args, **kwargs)
+        raise RuntimeError("injected crash after the parquet write")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", parquet_then_crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            save_positional_index(ptf, path, n_buckets=5)
+    with pytest.raises(FileNotFoundError):
+        PositionalIndex(spark, path)
+
+    save_positional_index(ptf, path, n_buckets=5)
+    assert PositionalIndex(spark, path).n_buckets == 5

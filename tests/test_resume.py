@@ -24,9 +24,7 @@ def docs(spark, extracted_1k):
 
 def _content_hash(spark, index_dir):
     """Order-insensitive logical hash of the decoded posting content."""
-    from hybrid_search_engine_spark.operators.postings import read_postings
-
-    p = read_postings(spark, os.path.join(index_dir, "postings"))
+    p = spark.read.parquet(os.path.join(index_dir, "postings"))
     row = (
         p.select(
             F.xxhash64("shard_id", "term", "block_id", "postings",
@@ -192,17 +190,14 @@ def test_manifest_metrics_match_written_postings(spark, docs,
         build_index,
         read_manifest,
     )
-    from hybrid_search_engine_spark.operators.postings import (
-        read_postings,
-        shard_metrics,
-    )
+    from hybrid_search_engine_spark.operators.postings import shard_metrics
 
     d = os.path.join(str(tmp_path_factory.mktemp("obs_metrics")), "idx")
     build_index(spark, docs, d, n_shards=N_SHARDS, block_size=32)
 
     recorded = {r["shard_id"]: r for r in read_manifest(d)
                 if r["status"] == "done"}
-    stored = read_postings(spark, os.path.join(d, "postings"))
+    stored = spark.read.parquet(os.path.join(d, "postings"))
     recomputed = {r["shard_id"]: r.asDict()
                   for r in shard_metrics(stored).collect()}
 
@@ -214,3 +209,143 @@ def test_manifest_metrics_match_written_postings(spark, docs,
     # recorded as all-zero, exactly as the fallback form records them
     for s in set(recorded) - set(recomputed):
         assert recorded[s]["n_blocks"] == 0 and recorded[s]["n_terms"] == 0
+
+
+# ---------------------------------------------------------------------------
+# crash points at the build's write boundaries
+# ---------------------------------------------------------------------------
+
+class InjectedCrash(Exception):
+    pass
+
+
+def _index_state(spark, index_dir):
+    """Everything a resume must reproduce: the posting content
+    (``_content_hash``), the tf and term_stats tables' content and the
+    corpus scalars."""
+    def table_hash(name, cols):
+        row = (spark.read.parquet(os.path.join(index_dir, *name))
+               .select(F.xxhash64(*cols).alias("h"))
+               .agg(F.expr("bit_xor(h)").alias("s"),
+                    F.count(F.lit(1)).alias("c"))
+               .first())
+        return (row["s"], row["c"])
+
+    with open(os.path.join(index_dir, "stats", "corpus.json")) as f:
+        corpus = json.load(f)
+    return {
+        "postings": _content_hash(spark, index_dir),
+        "tf": table_hash(("tf",), ["doc_id", "term", "tf", "doc_len"]),
+        "term_stats": table_hash(("stats", "term_stats"),
+                                 ["term", "df", "cf", "idf"]),
+        "corpus": (corpus["doc_count"], corpus["avg_doc_len"]),
+    }
+
+
+@pytest.fixture(scope="module")
+def two_sources(spark, docs, tmp_path_factory):
+    """An earlier source (the even doc ids) and the current one, with the
+    state of a clean build of each."""
+    from hybrid_search_engine_spark.build.manifest import build_index
+
+    base = str(tmp_path_factory.mktemp("clean"))
+    sources = {"earlier": docs.where(F.col("doc_id") % 2 == 0), "current": docs}
+    clean = {}
+    for name, src in sources.items():
+        d = os.path.join(base, name)
+        build_index(spark, src, d, n_shards=4, block_size=32)
+        clean[name] = _index_state(spark, d)
+    return sources, clean
+
+
+def _raise_on_json(suffix):
+    from hybrid_search_engine_spark.build import manifest
+
+    real = manifest.write_json_atomic
+
+    def write_json_atomic(path, obj):
+        if path.endswith(suffix):
+            raise InjectedCrash(path)
+        real(path, obj)
+
+    return "write_json_atomic", write_json_atomic
+
+
+def _raise_always(name):
+    def crash(*args, **kwargs):
+        raise InjectedCrash(name)
+
+    return name, crash
+
+
+# (where the build of the current source crashes, which source the next
+# build is of). A crash before the manifest records a shard must leave
+# nothing that lets the earlier source's manifest describe the crashed
+# build's tables; a crash before corpus.json must not let the earlier
+# corpus.json stand for the current source.
+CRASH_POINTS = {
+    "after_tf_write": (lambda: _raise_on_json("_fingerprint.json"),
+                       "earlier"),
+    "after_term_stats_write": (lambda: _raise_always("build_postings"),
+                               "earlier"),
+    "after_postings_write": (lambda: _raise_always("append_manifest"),
+                             "earlier"),
+    "before_corpus_json": (lambda: _raise_on_json("corpus.json"),
+                           "current"),
+}
+
+
+@pytest.mark.parametrize("point", sorted(CRASH_POINTS))
+def test_resume_after_crash_point(spark, two_sources, tmp_path, monkeypatch,
+                                  point):
+    """An index of the earlier source; a build of the current source
+    crashes at ``point``; the next build must leave exactly the state of
+    a clean build of its source."""
+    from hybrid_search_engine_spark.build import manifest
+
+    sources, clean = two_sources
+    inject, resume_with = CRASH_POINTS[point]
+    d = str(tmp_path / "idx")
+    manifest.build_index(spark, sources["earlier"], d, n_shards=4,
+                         block_size=32)
+    with monkeypatch.context() as m:
+        m.setattr(manifest, *inject())
+        with pytest.raises(InjectedCrash):
+            manifest.build_index(spark, sources["current"], d, n_shards=4,
+                                 block_size=32)
+    manifest.build_index(spark, sources[resume_with], d, n_shards=4,
+                         block_size=32)
+    assert _index_state(spark, d) == clean[resume_with]
+
+
+def test_compaction_resumes_after_torn_postings_write(spark, docs, tmp_path,
+                                                      monkeypatch):
+    """A compaction crashes after committing half of its shards'
+    postings and before the manifest records any; re-running it must
+    equal a clean compaction."""
+    from hybrid_search_engine_spark.build import manifest
+    from hybrid_search_engine_spark.build.manifest import build_index
+    from hybrid_search_engine_spark.streaming.ingest import compact_segments
+
+    root = str(tmp_path / "root")
+    for i in range(2):
+        build_index(spark, docs.where(F.col("doc_id") % 2 == i),
+                    os.path.join(root, "segments", f"{i:06d}"), n_shards=2,
+                    block_size=32)
+    clean = str(tmp_path / "clean")
+    compact_segments(spark, root, clean, n_shards=4)
+
+    real = manifest.write_postings
+
+    def torn_write(postings, path, mode="overwrite"):
+        real(postings.where(F.col("shard_id") < 2), path, mode)
+        raise InjectedCrash("postings write")
+
+    out = str(tmp_path / "out")
+    with monkeypatch.context() as m:
+        m.setattr(manifest, "write_postings", torn_write)
+        with pytest.raises(InjectedCrash):
+            compact_segments(spark, root, out, n_shards=4)
+    assert os.path.isdir(os.path.join(out, "postings", "shard_id=0"))
+    compact_segments(spark, root, out, n_shards=4)
+    assert _index_state(spark, out) == _index_state(spark, clean)

@@ -28,25 +28,26 @@ def engine_stats(spark, corpus):
 
     docs, _ = corpus
     df = spark.createDataFrame(list(docs.items()), "doc_id long, text string")
-    tf, dstats, tstats, scalars = build_statistics(df)
-    return tf, dstats, tstats, scalars
+    return build_statistics(df)
 
 
 def test_corpus_stats_match(oracle, engine_stats):
-    tf, dstats, tstats, scalars = engine_stats
+    tf, tstats, scalars = engine_stats
     assert scalars.doc_count == oracle.n_docs
     assert abs(scalars.avg_doc_len - oracle.avgdl) < 1e-9
 
 
 def test_doc_lengths_match(oracle, engine_stats):
-    tf, dstats, _, _ = engine_stats
-    got = {r["doc_id"]: r["doc_len"] for r in dstats.collect()}
+    tf, _, _ = engine_stats
+    rows = tf.select("doc_id", "doc_len").distinct().collect()
+    got = {r["doc_id"]: r["doc_len"] for r in rows}
+    assert len(got) == len(rows)  # one length per doc across its tf rows
     for did, dl in oracle.doc_len.items():
         assert got.get(did, 0) == dl, did
 
 
 def test_df_idf_match(oracle, engine_stats):
-    _, _, tstats, _ = engine_stats
+    _, tstats, _ = engine_stats
     got = {r["term"]: (r["df"], r["idf"]) for r in tstats.collect()}
     assert set(got) == set(oracle.df)
     for t, d in oracle.df.items():
@@ -55,7 +56,7 @@ def test_df_idf_match(oracle, engine_stats):
 
 
 def test_tf_matches(oracle, engine_stats):
-    tf, _, _, _ = engine_stats
+    tf, _, _ = engine_stats
     got = {(r["doc_id"], r["term"]): r["tf"] for r in tf.collect()}
     want = {
         (did, t): c for did, cnt in oracle.tf.items() for t, c in cnt.items()
@@ -76,8 +77,8 @@ def test_topk_rank_identical_generated(spark, oracle, engine_stats):
 def _assert_topk_parity(spark, oracle, engine_stats, query, k):
     from hybrid_search_engine_spark.operators.score import search
 
-    tf, dstats, tstats, scalars = engine_stats
-    got = search(spark, query, tf, tstats, dstats, scalars.avg_doc_len, k=k).collect()
+    tf, tstats, scalars = engine_stats
+    got = search(spark, query, tf, tstats, scalars.avg_doc_len, k=k).collect()
     want = oracle.topk_nonzero(query, k=k)
     assert [r["doc_id"] for r in got] == [d for d, _ in want], query
     for r, (_, s) in zip(got, want):

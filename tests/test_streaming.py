@@ -85,6 +85,8 @@ def test_incremental_ingest_and_compaction(spark, tmp_path_factory):
     done = [r["shard_id"] for r in read_manifest(out)
             if r["status"] == "done"]
     assert sorted(done) == [0, 1, 2, 3]
+    assert sorted(os.listdir(os.path.join(out, "stats"))) == [
+        "corpus.json", "term_stats"]
 
 
 def test_windowed_event_counts_stream_matches_batch(spark, tmp_path_factory):
@@ -183,7 +185,7 @@ def test_dedup_checked_ingest_skips_near_dups_across_batches(
         .select(F.xxhash64("url").alias("id")).collect())}
 
     seg_docs = {r["doc_id"] for r in spark.read.parquet(
-        os.path.join(new_seg, "stats", "doc_stats")).select("doc_id").collect()}
+        os.path.join(new_seg, "tf")).select("doc_id").collect()}
     assert ids["http://a/4"] in seg_docs
     assert ids["http://a/3"] not in seg_docs  # near-dup skipped
 
@@ -335,9 +337,9 @@ def test_tombstoned_deletes_invisible_after_compaction(spark, tmp_path_factory):
     oracle = BM25Oracle().fit({idmap[u]: t for u, t in url_text.items()})
 
     reader = IndexReader(spark, out)
-    # doc_stats must not contain any tombstoned doc
+    # the compacted tf table must not contain any tombstoned doc
     remaining = {r["doc_id"] for r in spark.read.parquet(
-        os.path.join(out, "stats", "doc_stats")).select("doc_id").collect()}
+        os.path.join(out, "tf")).select("doc_id").collect()}
     assert not (remaining & tombs)
 
     for query in ["machine learning and AI", "the quick brown fox",
