@@ -5,14 +5,16 @@ record per completed shard:
 
     {"shard_id": 3, "status": "done", "n_terms":..., "n_blocks":...,
      "n_postings":..., "skew_ratio":...,
-     "source_fingerprint": {"n_docs":..., "max_warc_ts":...},
+     "source_fingerprint": {"n_docs":..., "id_hash":...,
+                            "postings_format":..., "n_shards":...},
      "built_at":..., "attempt":..., "elapsed_s":..., "docs_per_sec":...}
 
 Resume protocol (SURVEY.md §7.2.4, north rule "resumable from per-partition
 checkpoints carrying lineage"):
 
 1. read the manifest; `done` = shards with status=done AND matching source
-   fingerprint (a changed source invalidates every shard);
+   fingerprint (a changed source, posting format or shard count
+   invalidates every shard);
 2. build only missing shards (`shard_filter` pushes a shard_id predicate
    into the build plan — the anti-join against done work);
 3. write with dynamic partition overwrite (idempotent per shard dir: a
@@ -39,6 +41,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import spark_murmur3_int
 from ..operators.postings import (
     POSTINGS_FORMAT,
     build_postings,
@@ -132,7 +135,7 @@ def build_index(
     spark: SparkSession,
     docs: DataFrame,
     index_dir: str,
-    n_shards: int = 32,
+    n_shards: int | None = None,
     k1: float = 1.5,
     b: float = 0.75,
     block_size: int = 128,
@@ -153,6 +156,12 @@ def build_index(
     the collision analysis), and ``IndexReader`` maps query tokens to the
     same keys driver-side with a bit-identical xxhash64.
 
+    ``n_shards=None`` sizes the layout to the session: one shard per core
+    (``defaultParallelism``, a cluster's total executor cores), so each
+    (shard, term) posting list holds about df/cores docs and a cached
+    reader runs one shard per task. The shard count is build lineage: a
+    build over an index with another shard count rebuilds it.
+
     ``fail_after_shards`` is a test hook: simulate a crash after N shards
     completed (builds only those shards, records them, then raises)."""
     t0 = time.time()
@@ -165,8 +174,15 @@ def build_index(
                           k1, b, block_size, fail_after_shards, t0)
 
 
+def write_tf(tf: DataFrame, path: str) -> None:
+    """The tf table's write. A crash inside it leaves part of the files
+    and no ``_fingerprint.json``, so the next build rewrites the table."""
+    tf.write.mode("overwrite").parquet(path)
+
+
 def _build_from_tf(spark: SparkSession, tf: DataFrame, index_dir: str,
-                   fp: dict, n_docs: int, n_shards: int, k1: float, b: float,
+                   fp: dict, n_docs: int, n_shards: int | None,
+                   k1: float, b: float,
                    block_size: int, fail_after_shards: int | None,
                    t0: float) -> IndexBuildResult:
     """Every build stage from the tf table on, shared by ``build_index``
@@ -176,12 +192,16 @@ def _build_from_tf(spark: SparkSession, tf: DataFrame, index_dir: str,
     ``tf`` is the unmaterialized (doc_id, term, tf, doc_len) table of the
     source that ``fp`` identifies; ``n_docs`` counts that source's docs,
     token-empty ones included, which no tf row shows. ``t0`` is the
-    build's start time, for its elapsed time and rate."""
-    # the posting format is part of build lineage: shards or a tf table
-    # written in another format must not satisfy a resume (columns
-    # differ), so it rides inside the fingerprint every resume check
-    # compares
-    fp = {**fp, "postings_format": POSTINGS_FORMAT}
+    build's start time, for its elapsed time and rate. ``n_shards=None``
+    means one shard per core of the session."""
+    if n_shards is None:
+        n_shards = spark.sparkContext.defaultParallelism
+    # the posting format and the shard count are part of build lineage:
+    # shards written in another format (columns differ) or under another
+    # pmod(hash(doc_id), n_shards) (a doc would sit in two shards) must
+    # not satisfy a resume, so both ride inside the fingerprint every
+    # resume check compares
+    fp = {**fp, "postings_format": POSTINGS_FORMAT, "n_shards": n_shards}
     done = done_shards(index_dir, fp)
     todo = [s for s in range(n_shards) if s not in done]
 
@@ -226,7 +246,7 @@ def _build_from_tf(spark: SparkSession, tf: DataFrame, index_dir: str,
         with open(tf_marker) as f:
             tf_fresh = json.load(f) == fp
     if not tf_fresh:
-        tf.write.mode("overwrite").parquet(tf_dir)
+        write_tf(tf, tf_dir)
         write_json_atomic(tf_marker, fp)
     tf = spark.read.parquet(tf_dir)
 
@@ -310,6 +330,17 @@ def _build_from_tf(spark: SparkSession, tf: DataFrame, index_dir: str,
     return result
 
 
+def _slot_labels(p: int) -> list[int]:
+    """Label ``j`` is the smallest int that ``repartition(p, col)`` sends
+    to partition ``j``, i.e. with ``pmod(hash(label), p) == j``."""
+    labels: dict[int, int] = {}
+    v = 0
+    while len(labels) < p:
+        labels.setdefault(spark_murmur3_int(v) % p, v)
+        v += 1
+    return [labels[j] for j in range(p)]
+
+
 class IndexReader:
     """Query-side handle: postings + stats + corpus scalars.
 
@@ -318,15 +349,23 @@ class IndexReader:
     whenever the vocabulary fits driver memory. At web scale leave it False:
     queries then do a parquet point-lookup pruned by the term IN-list.
 
-    ``cache_postings=True`` caches the posting blocks hash-partitioned by
-    shard_id and term-sorted within each partition. The scorer's
-    ``groupBy(shard_id, doc_id)`` is then satisfied by the cache's
-    partitioning, so a single query is ONE stage (filter → explode → BM25
-    → sum) plus the driver-side TakeOrdered merge, and the term filter
-    skips cached batches by their min/max. Costs one upfront job and
-    executor memory for the blocks. The cache also holds each bigint key
-    as a string, so a query's generated code does not depend on its terms
-    and no query compiles new classes once each query shape has run.
+    ``cache_postings=True`` caches the posting blocks in
+    ``p = min(n_shards, cores)`` partitions, term-sorted within each.
+    Shard ``s`` goes to partition ``s mod p``: the cache stores, in place
+    of its shard_id, the slot label of that partition (the smallest int
+    that Spark's ``hash()`` sends there, ``_slot_labels``) and
+    hash-partitions by it, so each partition holds about n_shards/p whole
+    shards (one each at the default shard count). Hashing the raw ids
+    instead leaves partitions empty: 4 shard ids over 4 partitions filled
+    only 2. A doc lives in one shard, so the scorer's
+    ``groupBy(shard_id, doc_id)`` forms the same groups over the labels,
+    and the cache's partitioning satisfies it: a single query is ONE stage
+    (filter → explode → BM25 → sum) plus the driver-side TakeOrdered
+    merge, and the term filter skips cached batches by their min/max.
+    Costs one upfront job and executor memory for the blocks. The cache
+    also holds each bigint key as a string, so a query's generated code
+    does not depend on its terms and no query compiles new classes once
+    each query shape has run.
     Without the cache a query reads the parquet and pays one exchange.
 
     Query tokens map to the index's ``xxhash64(term)`` keys driver-side
@@ -360,11 +399,13 @@ class IndexReader:
         view = self.postings
         if self._cached:
             # partition count = min(n_shards, total cores): hash-partitioning
-            # by shard_id at ANY width satisfies the scorer's
+            # by the slot label at ANY width satisfies the scorer's
             # ClusteredDistribution(shard_id, doc_id), and a query then runs
             # exactly one task per core — ONE task wave
             p = max(1, min(int(self.corpus["n_shards"]),
                            spark.sparkContext.defaultParallelism))
+            slot = F.array(*[F.lit(x) for x in _slot_labels(p)])[
+                F.col("shard_id") % p]
             # The term filter skips cached batches only while its keys are
             # literals, and a bigint literal is written into the generated
             # Java, so every query would compile new classes; a string
@@ -373,6 +414,7 @@ class IndexReader:
             # that column "term".
             self.postings = (self.postings
                              .withColumn("term_str", F.col("term").cast("string"))
+                             .withColumn("shard_id", slot)
                              .repartition(p, "shard_id")
                              .sortWithinPartitions("term_str")
                              .cache())

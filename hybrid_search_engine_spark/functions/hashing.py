@@ -108,3 +108,28 @@ def spark_xxhash64_long(v: int) -> int:
     8-byte little-endian representation, seed 42, signed."""
     return _to_signed(xxhash64_bytes(
         (v & _MASK).to_bytes(8, "little")))
+
+
+_M32 = 0xFFFFFFFF
+
+
+def _rotl32(x: int, r: int) -> int:
+    return ((x << r) | (x >> (32 - r))) & _M32
+
+
+def spark_murmur3_int(v: int, seed: int = 42) -> int:
+    """Bit-identical to ``F.hash(int_col)``: Murmur3_x86_32 of one 4-byte
+    int, seed 42, as a SIGNED 32-bit int. Spark's ``HashPartitioning``
+    places a row in partition ``pmod(hash(keys), n)``, so this tells the
+    driver which partition an int key lands in without running a job."""
+    k = (v & _M32) * 0xCC9E2D51 & _M32
+    k = _rotl32(k, 15) * 0x1B873593 & _M32
+    h = _rotl32((seed & _M32) ^ k, 13)
+    h = (h * 5 + 0xE6546B64) & _M32
+    h ^= 4
+    h ^= h >> 16
+    h = h * 0x85EBCA6B & _M32
+    h ^= h >> 13
+    h = h * 0xC2B2AE35 & _M32
+    h ^= h >> 16
+    return h - (1 << 32) if h >= (1 << 31) else h

@@ -3,7 +3,7 @@
     spark-submit --py-files hse_spark.zip \\
         hybrid_search_engine_spark/jobs/build_index_job.py \\
         --input <path-or-table> --index-dir <dir> [--format parquet|table|…]
-        [--n-shards 32] [--k1 1.5] [--b 0.75] [--block-size 128]
+        [--n-shards N] [--k1 1.5] [--b 0.75] [--block-size 128]
         [--extract-partitions N] [--no-extract] [--local-cores N]
 
 Re-running after a crash resumes from the per-shard lineage manifest
@@ -33,7 +33,8 @@ def main(argv: list[str] | None = None) -> None:
                     help="pin an Iceberg snapshot (build lineage records "
                          "it; resume reads the same snapshot)")
     ap.add_argument("--index-dir", required=True)
-    ap.add_argument("--n-shards", type=int, default=32)
+    ap.add_argument("--n-shards", type=int, default=None,
+                    help="default: one shard per core of the session")
     ap.add_argument("--k1", type=float, default=1.5)
     ap.add_argument("--b", type=float, default=0.75)
     ap.add_argument("--block-size", type=int, default=128)

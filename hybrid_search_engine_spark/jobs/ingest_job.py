@@ -3,7 +3,7 @@
     spark-submit --py-files hse_spark.zip \\
         hybrid_search_engine_spark/jobs/ingest_job.py \\
         --source <pages-drop-dir> --index-root <dir> --checkpoint <dir>
-        [--n-shards 8] [--continuous] [--compact-to <dir>] [--local-cores N]
+        [--n-shards N] [--continuous] [--compact-to <dir>] [--local-cores N]
 
 Default is drain-and-stop (``trigger(availableNow=True)``): index every
 pages parquet file not yet recorded in the checkpoint as one or more
@@ -28,7 +28,8 @@ def main(argv: list[str] | None = None) -> None:
                     help="directory receiving pages parquet drops")
     ap.add_argument("--index-root", required=True)
     ap.add_argument("--checkpoint", required=True)
-    ap.add_argument("--n-shards", type=int, default=8)
+    ap.add_argument("--n-shards", type=int, default=None,
+                    help="default: one shard per core of the session")
     ap.add_argument("--continuous", action="store_true",
                     help="run until killed (2s trigger) instead of "
                          "drain-and-stop")

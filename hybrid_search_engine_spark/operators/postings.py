@@ -34,9 +34,13 @@ The doc-shard layout is simultaneously the query-time unit: each shard holds
 complete postings (all terms) for its doc subset, so a cache hash-partitioned
 by shard_id scores a query with no exchange (IndexReader).
 
-At 100 TB: n_shards scales with corpus size (target ~256 MB of postings per
-shard); the same plan runs unchanged — the repartition is the only full
-shuffle of (doc,term,tf)-grain data, everything downstream is shard-local.
+``build_index`` defaults n_shards to the session's cores
+(``defaultParallelism``; a cluster's total executor cores), so a (shard,
+term) cell holds about df/cores docs and blocks stay full. At 100 TB a
+build passes n_shards sized to the corpus instead (target ~256 MB of
+postings per shard); the same plan runs unchanged — the repartition is
+the only full shuffle of (doc,term,tf)-grain data, everything downstream
+is shard-local.
 """
 
 from __future__ import annotations

@@ -92,7 +92,7 @@ def _start_ingest(spark: SparkSession, src_dir: str, checkpoint_dir: str,
 
 
 def _index_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
-                 index_root: str, n_shards: int, keep=None):
+                 index_root: str, n_shards: int | None, keep=None):
     """pages → docs → ``keep`` (a docs → docs filter, if given) → a segment
     index under index_root/segments/<batch_id>/. Returns the indexed docs,
     or None when the batch leaves none."""
@@ -113,7 +113,8 @@ def _index_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
 
 def incremental_index_query(spark: SparkSession, src_dir: str,
                             index_root: str, checkpoint_dir: str,
-                            n_shards: int = 8, available_now: bool = True):
+                            n_shards: int | None = None,
+                            available_now: bool = True):
     """writeStream.foreachBatch: each micro-batch builds a posting SEGMENT
     under index_root/segments/<batch_id>/ with its own manifest. Resumable:
     checkpointLocation replays unfinished batches; the per-segment build is
@@ -127,7 +128,7 @@ def incremental_index_query(spark: SparkSession, src_dir: str,
 
 
 def dedup_checked_ingest(spark: SparkSession, src_dir: str, index_root: str,
-                         checkpoint_dir: str, n_shards: int = 8,
+                         checkpoint_dir: str, n_shards: int | None = None,
                          jaccard_threshold: float = 0.8,
                          available_now: bool = True):
     """S4 + P7 composed: streaming ingest that SKIPs near-duplicate pages
@@ -334,8 +335,8 @@ def list_segments(index_root: str) -> list[str]:
 
 
 def compact_segments(spark: SparkSession, index_root: str, out_dir: str,
-                     n_shards: int = 8, k1: float = 1.5, b: float = 0.75,
-                     block_size: int = 128):
+                     n_shards: int | None = None, k1: float = 1.5,
+                     b: float = 0.75, block_size: int = 128):
     """Multi-segment merge (ST3): df/idf/avgdl are global, so the merge
     rebuilds the index from the union of the segments' tf tables, minus
     tombstoned docs, through build_index's own stages from the tf table on

@@ -3,7 +3,9 @@
 Pins:
 1. the driver-side pure-Python xxHash64 is bit-identical to Spark's
    ``F.xxhash64`` (strings across every length/remainder path of the
-   algorithm, multi-byte UTF-8, and longs) — the query side depends on it;
+   algorithm, multi-byte UTF-8, and longs) — the query side depends on it
+   — and its Murmur3 to ``F.hash`` of an int, which places the cached
+   reader's shards;
 2. the test corpus's vocabulary has no 64-bit collision;
 3. a build writes bigint keys, and IndexReader refuses an index keyed by
    term strings. Rank and score parity of the index against the oracle
@@ -17,6 +19,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from hybrid_search_engine_spark.functions.hashing import (
+    spark_murmur3_int,
     spark_xxhash64_long,
     spark_xxhash64_str,
     xxhash64_bytes,
@@ -43,6 +46,15 @@ def test_xxhash64_long_parity_with_spark(spark):
         .select("v", F.xxhash64("v").alias("h")).collect()}
     for v in vals:
         assert spark_xxhash64_long(v) == got[v], v
+
+
+def test_murmur3_int_parity_with_spark(spark):
+    vals = [0, 1, -1, 2, 3, 7, 31, 42, 1000, 2 ** 31 - 1, -2 ** 31]
+    got = {r["v"]: r["h"] for r in spark.createDataFrame(
+        [(v,) for v in vals], "v int")
+        .select("v", F.hash("v").alias("h")).collect()}
+    for v in vals:
+        assert spark_murmur3_int(v) == got[v], v
 
 
 def test_xxhash64_reference_vectors():

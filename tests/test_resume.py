@@ -126,6 +126,56 @@ def test_resume_noop_when_complete(spark, docs, tmp_path_factory):
     assert sorted(res.skipped_shards) == [0, 1, 2, 3]
 
 
+def test_changed_shard_count_rebuilds(spark, docs, tmp_path_factory):
+    """The shard count is build lineage: a build with another n_shards
+    over a complete index rebuilds every shard under the new layout,
+    never mixing two (a doc would sit in two shards and come back
+    twice)."""
+    from collections import Counter
+
+    from hybrid_search_engine_spark.build.manifest import (
+        IndexReader,
+        build_index,
+    )
+    from hybrid_search_engine_spark.reference_semantics import tokenize
+
+    d = str(tmp_path_factory.mktemp("reshard"))
+    small = docs.orderBy("doc_id").limit(200)
+    build_index(spark, small, d, n_shards=4, block_size=32)
+
+    res = build_index(spark, small, d, n_shards=8, block_size=32)
+    assert sorted(res.built_shards) == list(range(8))
+    assert res.skipped_shards == []
+    # the term in the most docs, so all 20 hits are real matches
+    df = Counter(t for r in small.select("text").collect()
+                 for t in set(tokenize(r["text"], remove_stopwords=True)))
+    term = df.most_common(1)[0][0]
+    assert df[term] >= 20
+    hits = [r["doc_id"] for r in
+            IndexReader(spark, d).search(term, k=20).collect()]
+    assert len(hits) == 20 and len(set(hits)) == 20, hits
+
+    res = build_index(spark, small, d, n_shards=4, block_size=32)
+    assert sorted(res.built_shards) == [0, 1, 2, 3]
+    with open(os.path.join(d, "stats", "corpus.json")) as f:
+        assert json.load(f)["n_shards"] == 4
+    stored = spark.read.parquet(os.path.join(d, "postings"))
+    assert {r[0] for r in stored.select("shard_id").distinct().collect()} \
+        == {0, 1, 2, 3}
+
+
+def test_default_shard_count_follows_cores(spark, docs, tmp_path_factory):
+    from hybrid_search_engine_spark.build.manifest import build_index
+
+    d = str(tmp_path_factory.mktemp("default_shards"))
+    res = build_index(spark, docs.orderBy("doc_id").limit(200), d)
+    cores = spark.sparkContext.defaultParallelism
+    assert res.n_shards == cores
+    assert sorted(res.built_shards) == list(range(cores))
+    with open(os.path.join(d, "stats", "corpus.json")) as f:
+        assert json.load(f)["n_shards"] == cores
+
+
 def test_changed_source_invalidates(spark, docs, tmp_path_factory):
     from hybrid_search_engine_spark.build.manifest import build_index
 
@@ -271,6 +321,20 @@ def _raise_on_json(suffix):
     return "write_json_atomic", write_json_atomic
 
 
+def _torn_tf_write():
+    """The tf table's write commits part of its rows, then crashes."""
+    from hybrid_search_engine_spark.build import manifest
+
+    real = manifest.write_tf
+
+    def write_tf(tf, path):
+        real(tf.where(F.col("doc_id") % 3 == 0), path)
+        assert any(f.endswith(".parquet") for f in os.listdir(path))
+        raise InjectedCrash(path)
+
+    return "write_tf", write_tf
+
+
 def _raise_always(name):
     def crash(*args, **kwargs):
         raise InjectedCrash(name)
@@ -284,6 +348,7 @@ def _raise_always(name):
 # build's tables; a crash before corpus.json must not let the earlier
 # corpus.json stand for the current source.
 CRASH_POINTS = {
+    "mid_tf_write": (_torn_tf_write, "current"),
     "after_tf_write": (lambda: _raise_on_json("_fingerprint.json"),
                        "earlier"),
     "after_term_stats_write": (lambda: _raise_always("build_postings"),

@@ -3,6 +3,7 @@ recall, content fingerprints, simhash tf weighting, df_cap consistency,
 feedback logging, TZ-free hour strings, portable multimodal features."""
 
 import hashlib
+import os
 
 import numpy as np
 import pytest
@@ -628,6 +629,39 @@ def test_exact_cached_tier_is_single_stage(spark, extracted_1k, tmp_path):
             "the quick brown fox jumps over", k=10))
         assert len(re.findall(r"\bExchange ", cold)) <= 1, cold
         assert "Join" not in cold
+    finally:
+        reader.postings.unpersist()
+
+
+@pytest.mark.parametrize("n_shards", [4, 32])
+def test_cached_reader_places_shards_evenly(spark, extracted_1k, tmp_path,
+                                            n_shards):
+    """The postings cache puts shard s in partition s mod p, p =
+    min(n_shards, cores): each partition holds exactly the rows of its
+    shards, under one slot label (on 4 cores: one shard per partition
+    at 4 shards, 8 at 32). Hashing the shard ids themselves filled 2 of
+    4 partitions."""
+    from hybrid_search_engine_spark.build.manifest import IndexReader, build_index
+    from hybrid_search_engine_spark.sources.pages import pages_to_docs
+
+    docs = pages_to_docs(extracted_1k, extract=False)
+    idx = str(tmp_path / "idx")
+    build_index(spark, docs, idx, n_shards=n_shards, block_size=32)
+    reader = IndexReader(spark, idx, cache_postings=True)
+    try:
+        p = min(n_shards, spark.sparkContext.defaultParallelism)
+        parts = (reader.postings.select("shard_id").rdd.glom()
+                 .map(lambda rows: (len(rows), {r[0] for r in rows}))
+                 .collect())
+        assert len(parts) == p
+        rows = {r["shard_id"]: r["count"] for r in spark.read.parquet(
+            os.path.join(idx, "postings")).groupBy("shard_id").count()
+            .collect()}
+        assert sorted(rows) == list(range(n_shards))
+        for j, (n_rows, labels) in enumerate(parts):
+            shards = [s for s in rows if s % p == j]
+            assert len(labels) == 1, (j, labels)
+            assert n_rows == sum(rows[s] for s in shards), j
     finally:
         reader.postings.unpersist()
 
