@@ -79,8 +79,7 @@ def main() -> None:
     out["n_crawl_rows"] = n_crawls
     spark.sparkContext.setJobDescription("url_dedup 1M")
     t0 = time.time()
-    noop(keep_latest_by_canonical_url(crawls, url_col="url",
-                                      ts_col="warc_ts"))
+    noop(keep_latest_by_canonical_url(crawls, ts_col="warc_ts"))
     out["url_dedup_s"] = round(time.time() - t0, 2)
     out["url_dedup_rows_per_sec"] = round(n_crawls / out["url_dedup_s"], 1)
 

@@ -139,11 +139,10 @@ def build_index(
     k1: float = 1.5,
     b: float = 0.75,
     block_size: int = 128,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     fail_after_shards: int | None = None,
 ) -> IndexBuildResult:
-    """Build (or resume) the full index for ``docs(doc_id, text, ...)``.
+    """Build (or resume) the full index for ``docs(doc_id, text, ...)``;
+    other columns are ignored.
 
     Writes the tf table (which carries each doc's length) under
     ``index_dir/tf``, postings parquet under ``index_dir/postings``, term
@@ -165,7 +164,7 @@ def build_index(
     ``fail_after_shards`` is a test hook: simulate a crash after N shards
     completed (builds only those shards, records them, then raises)."""
     t0 = time.time()
-    docs = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    docs = docs.select("doc_id", "text")
     fp = source_fingerprint(docs)  # one agg: count + content hash (fused)
     # ONE exchange (raw docs by doc_id); the tail materializes it to
     # parquet unless a crash-resume finds it already written

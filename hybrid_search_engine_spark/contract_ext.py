@@ -572,7 +572,7 @@ def _sql_lang_detect_wide():
 
 
 def q_quality(spark, sf_dir):
-    return quality_metrics(_docs(spark, sf_dir), "text", keep=("doc_id",))
+    return quality_metrics(_docs(spark, sf_dir), keep=("doc_id",))
 
 
 _STOPLIST = "[" + ",".join(f"'{w}'" for w in LANG_FUNCTION_WORDS["en"]) + "]"
@@ -799,8 +799,7 @@ def q_fuse_hybrid(spark, sf_dir):
     # dense parity mode: n_docs = corpus size, so the sparse lex side's
     # min is clamped to 0 exactly as the reference's dense score vectors
     # (core.py:264-268 + utils.py:57-71) would have it
-    fused = fuse_hybrid(sem, lex, 0.7, 0.3, query_col="query_id", k=20,
-                        n_docs=scalars.doc_count)
+    fused = fuse_hybrid(sem, lex, 0.7, 0.3, k=20, n_docs=scalars.doc_count)
     return fused.select("doc_id", "rank",
                         F.round("hybrid_score", 6).alias("hybrid_r"))
 
@@ -1752,8 +1751,7 @@ def q_url_dedup(spark, sf_dir):
 
     urls = q_url_canonical(spark, sf_dir).select(
         "doc_id", "url", F.col("doc_id").alias("crawl_ts"))
-    return keep_latest_by_canonical_url(
-        urls, url_col="url", ts_col="crawl_ts", id_col="doc_id")
+    return keep_latest_by_canonical_url(urls, ts_col="crawl_ts")
 
 
 def _sql_url_dedup():

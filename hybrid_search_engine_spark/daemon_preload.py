@@ -19,8 +19,9 @@ lazily if one is missing — but the module itself must be importable at
 daemon launch, so ``session.get_spark`` only enables it when the package
 directory is visible to executors (it also sets
 ``spark.executorEnv.PYTHONPATH``; a distributed cluster without a shared
-filesystem should ship the package via ``--py-files`` or set
-``HSE_NO_DAEMON_PRELOAD=1``).
+filesystem should ship the package via ``--py-files`` or pass
+``get_spark(extra_conf={"spark.python.daemon.module": "pyspark.daemon"})``
+to use the stock daemon).
 """
 
 try:  # pragma: no cover - exercised in forked daemons, not in pytest's proc

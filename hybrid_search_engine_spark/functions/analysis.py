@@ -496,8 +496,7 @@ def _lang_hits_udf():
     return _hits
 
 
-def detect_language_df(df, text_col: str = "text", key_col: str = "doc_id",
-                       out_col: str = "lang_detected"):
+def detect_language_df(df):
     """Scale form of :func:`detect_language`: identical output (tested for
     equivalence), different plan — and since round 6 a fully ROW-LOCAL
     one: script counts come from one vectorized codepoint pass
@@ -508,19 +507,19 @@ def detect_language_df(df, text_col: str = "text", key_col: str = "doc_id",
     through a broadcast join, two groupBys and a join back (~1.5 s warm
     of the ~4 s row at sf1.0, plus two exchanges; before round 5 the
     Column form's 31 per-row set-membership passes were 6× slower still).
-    ``key_col`` is kept for API compatibility (no longer used to join).
 
-    Returns ``df`` minus ``text_col`` plus ``out_col``. Reference
+    Input: any frame with a ``text`` column, e.g. docs(doc_id, text).
+    Returns ``df`` minus ``text`` plus ``lang_detected``. Reference
     semantics model: language.py:66-138 (same two-tier rule as the Column
     form; equivalence pinned by tests)."""
     # row-local since round 6: widen a narrow scan first (no-op at real
     # scale; measured 1.82 -> 0.83 s at sf1.0 on the 2-split parquet)
     df = spread(df)
-    c = F.coalesce(F.col(text_col), F.lit(""))
+    c = F.coalesce(F.col("text"), F.lit(""))
     script_names = list(LANG_SCRIPT_RANGES)
     names = ([f"__c_{n}" for n in LANG_SCRIPT_RANGES]
              + [f"__d_{n}" for n in DISTINCTIVE_CHARS])
-    out_cols = [col for col in df.columns if col != text_col]
+    out_cols = [col for col in df.columns if col != "text"]
     lang_lit = F.array(*[F.lit(l) for l in LANG_FUNCTION_WORDS])
     # bind the token array, then evaluate BOTH batch UDFs in one
     # projection (independent pandas UDFs in the same select share one
@@ -586,7 +585,7 @@ def detect_language_df(df, text_col: str = "text", key_col: str = "doc_id",
         F.element_at(lang_lit,
                      (F.element_at(F.col("__lat"), 2) + 1).cast("int")))
     out = F.when(nl_max > F.col("__c_latin"), script_pick).otherwise(latin_pick)
-    return joined.select(*out_cols, out.alias(out_col))
+    return joined.select(*out_cols, out.alias("lang_detected"))
 
 
 _QUALITY_INTS_UDF = None
@@ -655,11 +654,11 @@ def _quality_ints_udf():
     return _ints
 
 
-def quality_metrics(df, text_col: str = "text",
-                    keep: tuple = ("doc_id",)):
-    """Web-text quality gates: char/token counts, mean word length,
-    stopword ratio, non-alnum ratio, uniqueness, digit ratio, plus a
-    composite is_quality flag — appended to the ``keep`` columns.
+def quality_metrics(df, keep: tuple = ("doc_id",)):
+    """docs(doc_id, text) → web-text quality gates: char/token counts,
+    mean word length, stopword ratio, non-alnum ratio, uniqueness, digit
+    ratio, plus a composite is_quality flag — appended to the ``keep``
+    columns (any columns of ``df`` besides ``text``).
 
     Round-6 shape (guide §7.2 "duplicated subtrees"): a DataFrame-level
     two-stage bind instead of one wide Column list. The old single-select
@@ -684,7 +683,7 @@ def quality_metrics(df, text_col: str = "text",
     # (see sources.registry.spread; measured 1.76 -> 0.71 s at sf1.0,
     # whose documents.parquet arrives as 2 row-group splits)
     df = spread(df)
-    c = F.coalesce(F.col(text_col), F.lit(""))
+    c = F.coalesce(F.col("text"), F.lit(""))
     keep = list(keep)
     stage1 = df.select(*keep, c.alias("__t"),
                        tokens_native(c, remove_stopwords=False).alias("__tk"))
@@ -885,8 +884,9 @@ def _rep_stats_udf():
     return _stats
 
 
-def repetition_metrics(df, text_col: str = "text", id_col: str = "doc_id"):
-    """→ one row per doc: Gopher-style repetition quality signals.
+def repetition_metrics(df):
+    """docs(doc_id, text) → one row per doc: Gopher-style repetition
+    quality signals.
 
     Columns: ``n_tokens``, ``max_token_frac`` (count of the most frequent
     token / n_tokens), ``top_bigram_frac`` / ``top_trigram_frac`` (count of
@@ -918,8 +918,8 @@ def repetition_metrics(df, text_col: str = "text", id_col: str = "doc_id"):
     # measured 1.79 -> 0.61 s at sf1.0 on the 2-split driver parquet)
     df = spread(df)
     base = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.coalesce(tokens_native_keep_order(F.col(text_col)),
+        "doc_id",
+        F.coalesce(tokens_native_keep_order(F.col("text")),
                    F.array().cast("array<string>")).alias("__toks"))
     stats = base.select(
         "doc_id",

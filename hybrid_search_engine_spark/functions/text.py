@@ -128,7 +128,7 @@ def preprocess_native(col: Column | str) -> Column:
 # Extraction stage (input_hint pipeline: html:binary → text:string)
 # --------------------------------------------------------------------------
 
-def with_extracted_text(df, html_col: str = "html", text_col: str = "text"):
+def with_extracted_text(df):
     """pages(url, warc_ts, html, text, lang) → same with `text` populated.
 
     Parity invariant (BASELINE.json input_hint): text == byte-identical
@@ -138,7 +138,7 @@ def with_extracted_text(df, html_col: str = "html", text_col: str = "text"):
     from .. import ensure_udf_serializable
 
     ensure_udf_serializable()
-    return df.withColumn(text_col, extract_text_udf(F.col(html_col), F.col(text_col)))
+    return df.withColumn("text", extract_text_udf(F.col("html"), F.col("text")))
 
 
 def doc_metadata_cols(text_col: str = "text") -> list[Column]:
@@ -157,20 +157,21 @@ def doc_metadata_cols(text_col: str = "text") -> list[Column]:
     ]
 
 
-def doc_metadata_df(df, text_col: str = "text", keep: tuple = ("doc_id",)):
-    """``keep`` + the four doc_metadata columns, with the token array
+def doc_metadata_df(docs):
+    """docs(doc_id, text) → (doc_id, char_count, word_count, unique_words,
+    avg_word_length): the four doc_metadata columns, with the token array
     BOUND as a projected attribute first (round 6, guide §7.2): the
     Column-list form re-runs the tokenizer regexp once per output column
     that references it (word_count, unique_words, avg_word_length —
     measured 1.8 s vs 0.9 s over 50k docs at sf1.0). Same output as
-    ``df.select(*keep, *doc_metadata_cols(text_col))``."""
-    c = F.coalesce(F.col(text_col), F.lit(""))
-    s1 = df.select(*keep, c.alias("__t"),
-                   tokens_native(F.col(text_col)).alias("__tk"))
+    ``docs.select("doc_id", *doc_metadata_cols("text"))``."""
+    c = F.coalesce(F.col("text"), F.lit(""))
+    s1 = docs.select("doc_id", c.alias("__t"),
+                     tokens_native(F.col("text")).alias("__tk"))
     tk = F.col("__tk")
     n_tok = F.size(tk)
     return s1.select(
-        *keep,
+        "doc_id",
         F.length(F.col("__t")).alias("char_count"),
         n_tok.alias("word_count"),
         F.size(F.array_distinct(tk)).alias("unique_words"),

@@ -61,10 +61,11 @@ def bool_query_scan(
     should: list[str] = (),
     must_not: list[str] = (),
     min_should: int = 0,
-    text_col: str = "text",
 ) -> DataFrame:
+    """docs(doc_id, text) → (doc_id, n_should int) for the matching docs
+    (semantics in the module docstring)."""
     _validate(must, should, must_not)
-    toks = F.array_distinct(tokens_native(text_col))
+    toks = F.array_distinct(tokens_native("text"))
     # scan tier is shuffle-free: widen a narrow scan first (no-op at
     # real scale — see sources.registry.spread)
     base = spread(docs).select("doc_id", toks.alias("toks"))

@@ -23,12 +23,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _hash8(col, seed: int):
-    """First 8 hex chars of md5(seed ':' key) — a uniform 32-bit value in
-    fixed-width lowercase hex, safe to compare as a string."""
-    c = col if not isinstance(col, str) else F.col(col)
+def _hash8(seed: int):
+    """First 8 hex chars of md5(seed ':' doc_id) — a uniform 32-bit value
+    in fixed-width lowercase hex, safe to compare as a string."""
     return F.substring(F.md5(F.concat(F.lit(f"{seed}:"),
-                                      c.cast("string"))), 1, 8)
+                                      F.col("doc_id").cast("string"))), 1, 8)
 
 
 def _thresholds(weights: dict[str, float]) -> list[tuple[str, str]]:
@@ -47,11 +46,11 @@ def _thresholds(weights: dict[str, float]) -> list[tuple[str, str]]:
 
 
 def split_dataset(df: DataFrame, weights: dict[str, float] | None = None,
-                  key_col: str = "doc_id", seed: int = 0,
-                  out_col: str = "split") -> DataFrame:
-    """Add ``out_col`` ∈ weights.keys(), assigned by hashed key — every
-    row lands in exactly one split, stable across runs, partitionings and
-    cluster sizes. Default 80/10/10 train/val/test."""
+                  seed: int = 0) -> DataFrame:
+    """df(doc_id, ...) → the same plus ``split`` ∈ weights.keys(),
+    assigned by hashed doc_id — every row lands in exactly one split,
+    stable across runs, partitionings and cluster sizes. Default 80/10/10
+    train/val/test."""
     weights = weights or {"train": 0.8, "val": 0.1, "test": 0.1}
     ths = _thresholds(weights)
     # bind the hash as a projected column so the md5 evaluates once per
@@ -60,18 +59,18 @@ def split_dataset(df: DataFrame, weights: dict[str, float] | None = None,
     expr = F.lit(ths[-1][0])
     for name, th in reversed(ths[:-1]):
         expr = F.when(h < F.lit(th), F.lit(name)).otherwise(expr)
-    return (df.withColumn("__h8", _hash8(key_col, seed))
-            .withColumn(out_col, expr)
+    return (df.withColumn("__h8", _hash8(seed))
+            .withColumn("split", expr)
             .drop("__h8"))
 
 
 def deterministic_sample(df: DataFrame, fraction: float,
-                         key_col: str = "doc_id", seed: int = 0) -> DataFrame:
-    """Keep a stable ``fraction`` of rows by hashed key. Unlike
-    ``DataFrame.sample`` this is reproducible independent of partitioning
-    and retriggers, and two samples at fractions f1 < f2 are NESTED
-    (the f1 sample is a subset of the f2 sample) — the property needed
-    for scaling-law data ladders.
+                         seed: int = 0) -> DataFrame:
+    """df(doc_id, ...) → a stable ``fraction`` of its rows by hashed
+    doc_id. Unlike ``DataFrame.sample`` this is reproducible independent
+    of partitioning and retriggers, and two samples at fractions f1 < f2
+    are NESTED (the f1 sample is a subset of the f2 sample) — the
+    property needed for scaling-law data ladders.
 
     Quantization: the threshold is ``fraction`` rounded down to a multiple
     of 2**-32, capped one code below 1.0 — so any fraction < 1.0 excludes
@@ -82,4 +81,4 @@ def deterministic_sample(df: DataFrame, fraction: float,
     if fraction >= 1.0:
         return df
     th = f"{min(int(fraction * 2**32), 2**32 - 1):08x}"
-    return df.where(_hash8(key_col, seed) < F.lit(th))
+    return df.where(_hash8(seed) < F.lit(th))

@@ -64,10 +64,10 @@ def py_token_ngrams(tokens: list[str], n: int) -> list[str]:
             for i in range(max(len(tokens) - n + 1, 0))]
 
 
-def exploded_token_ngrams(docs: DataFrame, n: int, text_col: str = "text",
+def exploded_token_ngrams(docs: DataFrame, n: int,
                           hashed: bool = False) -> DataFrame:
-    """→ (doc_id, gram): every token ``n``-gram of every doc, one row per
-    POSITION (multiset semantics, same rows as exploding
+    """docs(doc_id, text) → (doc_id, gram): every token ``n``-gram of every
+    doc, one row per POSITION (multiset semantics, same rows as exploding
     ``token_ngrams``/``token_ngram_hashes`` — pinned by test).
 
     Round-6 shape (guide §4.1 "prefer built-ins"/codegen): explode the
@@ -89,7 +89,7 @@ def exploded_token_ngrams(docs: DataFrame, n: int, text_col: str = "text",
     # (no-op at real scale; span_dedup 2.76 -> 2.05 s / decontaminate
     # 1.02 -> 0.56 s at sf1.0 on the 2-split parquet)
     base = spread(docs).select(
-        "doc_id", tokens_native_keep_order(text_col).alias("__toks"))
+        "doc_id", tokens_native_keep_order("text").alias("__toks"))
     if hashed:
         base = base.select(
             "doc_id",
@@ -150,12 +150,11 @@ def contamination_flags(
     docs: DataFrame,
     probes: DataFrame,
     n: int = 8,
-    text_col: str = "text",
     broadcast_probes: bool = True,
     hashed: bool = False,
 ) -> DataFrame:
-    """(doc_id, n_hits bigint, n_probes bigint) for docs sharing ≥1 token
-    ``n``-gram with the probe set.
+    """docs(doc_id, text) → (doc_id, n_hits bigint, n_probes bigint) for
+    docs sharing ≥1 token ``n``-gram with the probe set.
 
     ``probes`` is a DataFrame with a string column ``probe`` holding raw
     benchmark text; its n-grams are derived here with the SAME tokenizer,
@@ -182,7 +181,7 @@ def contamination_flags(
         probe_grams = broadcast(probe_grams)
     # corpus side: positions-explode + codegen gram build (round-6 — see
     # exploded_token_ngrams docstring for the measured win)
-    doc_grams = exploded_token_ngrams(docs, n, text_col, hashed=hashed)
+    doc_grams = exploded_token_ngrams(docs, n, hashed=hashed)
     return (
         doc_grams.join(probe_grams, "gram")
         .groupBy("doc_id")
@@ -196,11 +195,11 @@ def contamination_flags(
 def shared_span_flags(
     docs: DataFrame,
     n: int = 8,
-    text_col: str = "text",
     hashed: bool = False,
 ) -> DataFrame:
-    """Cross-document span duplication: flag docs containing a verbatim
-    ``n``-token span that also occurs in at least one OTHER document.
+    """Cross-document span duplication over docs(doc_id, text): flag docs
+    containing a verbatim ``n``-token span that also occurs in at least
+    one OTHER document.
 
     The fixed-n practical form of substring-level dedup (Lee et al. 2022
     use suffix arrays for arbitrary-length spans; production pipelines
@@ -234,7 +233,7 @@ def shared_span_flags(
     """
     from pyspark.sql import Window
 
-    dg = exploded_token_ngrams(docs, n, text_col, hashed=hashed)
+    dg = exploded_token_ngrams(docs, n, hashed=hashed)
     per_gram_doc = (
         dg.repartition("gram")
         .groupBy("gram", "doc_id")

@@ -57,28 +57,29 @@ def norm_content(col) -> F.Column:
 # exact
 # ---------------------------------------------------------------------------
 
-def exact_duplicates(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """→ (doc_id, canonical_doc_id, is_duplicate): sha2-256 groups over
-    lower().strip()-normalized content (deduplication.py:111-125), min id
-    canonical. One window over the hash — a single shuffle."""
+def exact_duplicates(docs: DataFrame) -> DataFrame:
+    """docs(doc_id, text) → (doc_id, canonical_doc_id, is_duplicate):
+    sha2-256 groups over lower().strip()-normalized content
+    (deduplication.py:111-125), min id canonical. One window over the
+    hash — a single shuffle."""
     w = Window.partitionBy("content_hash")
     return (
         docs.withColumn("content_hash",
-                        F.sha2(norm_content(F.col(text_col)), 256))
-        .withColumn("canonical_doc_id", F.min(id_col).over(w))
+                        F.sha2(norm_content(F.col("text")), 256))
+        .withColumn("canonical_doc_id", F.min("doc_id").over(w))
         .select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             "canonical_doc_id",
-            (F.col(id_col) != F.col("canonical_doc_id")).alias("is_duplicate"),
+            (F.col("doc_id") != F.col("canonical_doc_id"))
+            .alias("is_duplicate"),
         )
     )
 
 
 def apply_dedup_action(docs: DataFrame, pairs: DataFrame,
-                       action: str = "flag", id_col: str = "doc_id"
-                       ) -> DataFrame:
-    """P7 policy (reference: DeduplicationEngine.check_and_handle,
+                       action: str = "flag") -> DataFrame:
+    """docs(doc_id, ...), pairs(doc_a, doc_b) → docs with a policy applied.
+    P7 policy (reference: DeduplicationEngine.check_and_handle,
     deduplication.py:196-241 — actions SKIP/MERGE/FLAG):
 
     - "skip":  drop near-duplicate docs (keep the canonical = smallest id
@@ -89,17 +90,17 @@ def apply_dedup_action(docs: DataFrame, pairs: DataFrame,
     simhash_near_pairs, ngram_jaccard_pairs).
     """
     canon = (
-        pairs.select(F.col("doc_b").alias(id_col),
+        pairs.select(F.col("doc_b").alias("doc_id"),
                      F.col("doc_a").alias("cand"))
-        .groupBy(id_col).agg(F.min("cand").alias("canonical_doc_id"))
+        .groupBy("doc_id").agg(F.min("cand").alias("canonical_doc_id"))
     )
     if action == "skip":
-        return docs.join(canon.select(id_col), id_col, "left_anti")
-    out = docs.join(canon, id_col, "left")
+        return docs.join(canon.select("doc_id"), "doc_id", "left_anti")
+    out = docs.join(canon, "doc_id", "left")
     return out.withColumn(
         "is_duplicate", F.col("canonical_doc_id").isNotNull()
     ).withColumn(
-        "canonical_doc_id", F.coalesce("canonical_doc_id", F.col(id_col))
+        "canonical_doc_id", F.coalesce("canonical_doc_id", F.col("doc_id"))
     )
 
 
@@ -232,10 +233,9 @@ def _md5_minhash_udf(num_perm: int, k: int):
     return sig_udf
 
 
-def minhash_signatures(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", num_perm: int = 16,
+def minhash_signatures(docs: DataFrame, num_perm: int = 16,
                        shingle_k: int = 3) -> DataFrame:
-    """→ (doc_id, sig array<string>[num_perm]).
+    """docs(doc_id, text) → (doc_id, sig array<string>[num_perm]).
 
     Portable (SQL-replayable) tier. sig_i is the min, over the doc's
     shingle multiset, of an 8-hex-char SLICE of a salted md5: shingle →
@@ -255,8 +255,7 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
     plan, including its ``spread`` note, is in git history)."""
     docs = spread(docs)
     udf = _md5_minhash_udf(num_perm, shingle_k)
-    return docs.select(F.col(id_col).alias("doc_id"),
-                       udf(F.col(text_col)).alias("sig"))
+    return docs.select("doc_id", udf(F.col("text")).alias("sig"))
 
 
 def _splitmix64(z):
@@ -407,10 +406,10 @@ def _shingle_arr_udf(k: int):
     return arr_udf
 
 
-def minhash_signatures_fast(docs: DataFrame, text_col: str = "text",
-                            id_col: str = "doc_id", num_perm: int = 16,
+def minhash_signatures_fast(docs: DataFrame, num_perm: int = 16,
                             shingle_k: int = 3) -> DataFrame:
-    """→ (doc_id, sig array<bigint>[num_perm]) — engine-tier signature.
+    """docs(doc_id, text) → (doc_id, sig array<bigint>[num_perm]) —
+    engine-tier signature.
 
     Fully vectorized per-row plan (``_minhash_sig_udf``): zero explode,
     zero shuffle, zero interpreted expressions. The explode+groupBy
@@ -428,16 +427,15 @@ def minhash_signatures_fast(docs: DataFrame, text_col: str = "text",
     `minhash_sig` oracle row."""
     udf = _minhash_sig_udf(num_perm, shingle_k)
     # zero-shuffle plan: widen a narrow scan first (no-op at real scale)
-    return spread(docs).select(F.col(id_col).alias("doc_id"),
-                               udf(F.col(text_col)).alias("sig"))
+    return spread(docs).select("doc_id", udf(F.col("text")).alias("sig"))
 
 
-def minhash_band_hashes(docs: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", num_perm: int = 16,
+def minhash_band_hashes(docs: DataFrame, num_perm: int = 16,
                         bands: int = 4, shingle_k: int = 3,
                         signatures: str = "fast",
                         band_bucket_cap: int = 0) -> DataFrame:
-    """→ (doc_id, band_id, band_hash): the LSH probe table. Shared by the
+    """docs(doc_id, text) → (doc_id, band_id, band_hash): the LSH probe
+    table. Shared by the
     batch self-join (``minhash_lsh_pairs``) and the incremental probe
     (``near_dup_check_incremental``); persist it (parquet, partitioned or
     bucketed by band_hash) to dedup a stream against an existing corpus
@@ -446,14 +444,13 @@ def minhash_band_hashes(docs: DataFrame, text_col: str = "text",
     table and cap at probe time instead."""
     rows_per_band = num_perm // bands
     if signatures == "fast":
-        sig = minhash_signatures_fast(docs, text_col, id_col, num_perm,
-                                      shingle_k)
+        sig = minhash_signatures_fast(docs, num_perm, shingle_k)
 
         def band_hash(bnd):
             return F.xxhash64(*[F.col("sig")[bnd * rows_per_band + r]
                                 for r in range(rows_per_band)])
     else:
-        sig = minhash_signatures(docs, text_col, id_col, num_perm, shingle_k)
+        sig = minhash_signatures(docs, num_perm, shingle_k)
 
         def band_hash(bnd):
             return F.md5(F.concat_ws("|", *[
@@ -500,6 +497,15 @@ def _cap_buckets(banded: DataFrame, cap: int) -> DataFrame:
             .drop("bucket_n"))
 
 
+def _jaccard(xa: np.ndarray, xb: np.ndarray) -> float:
+    """Exact set Jaccard of two sorted-distinct int64 arrays; two empty
+    sets are identical (1.0). The one per-pair kernel of both verify
+    plans."""
+    inter = np.intersect1d(xa, xb, assume_unique=True).size
+    denom = xa.size + xb.size - inter
+    return inter / denom if denom else 1.0
+
+
 _JACCARD_UDF: list = []
 
 
@@ -516,14 +522,9 @@ def _jaccard_of_arrays():
 
     @F.pandas_udf(DoubleType())
     def jacc(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = np.empty(len(a), np.float64)
-        for i, (xa, xb) in enumerate(zip(a, b)):
-            xa = np.asarray(xa, np.int64)
-            xb = np.asarray(xb, np.int64)
-            inter = np.intersect1d(xa, xb, assume_unique=True).size
-            denom = xa.size + xb.size - inter
-            out[i] = inter / denom if denom else 1.0
-        return pd.Series(out)
+        return pd.Series(
+            [_jaccard(np.asarray(xa, np.int64), np.asarray(xb, np.int64))
+             for xa, xb in zip(a, b)], dtype=np.float64)
 
     _JACCARD_UDF.append(jacc)
     return jacc
@@ -616,13 +617,9 @@ def _verify_pairs_broadcast(cand: DataFrame, arrs_a: DataFrame,
             ib = _lut_rows(ids_b, b["doc_b"].to_numpy(), "doc_b")
             sa, ea = offs_a[ia].tolist(), offs_a[ia + 1].tolist()
             sb, eb = offs_b[ib].tolist(), offs_b[ib + 1].tolist()
-            j = np.empty(m, np.float64)
-            for i in range(m):
-                xa = buf_a[sa[i]:ea[i]]
-                xb = buf_b[sb[i]:eb[i]]
-                inter = np.intersect1d(xa, xb, assume_unique=True).size
-                denom = xa.size + xb.size - inter
-                j[i] = inter / denom if denom else 1.0
+            j = np.fromiter(
+                (_jaccard(buf_a[sa[i]:ea[i]], buf_b[sb[i]:eb[i]])
+                 for i in range(m)), np.float64, m)
             out = b.assign(jaccard=j)
             yield out[out["jaccard"] >= jaccard_threshold]
 
@@ -654,14 +651,14 @@ def _verify_pairs_vectorized(cand: DataFrame, arrs_a: DataFrame,
 
 
 def _verify_pairs(cand: DataFrame, left: DataFrame, right: DataFrame,
-                  text_col: str, id_col: str, shingle_k: int,
-                  jaccard_threshold: float) -> DataFrame:
+                  shingle_k: int, jaccard_threshold: float) -> DataFrame:
     """→ (doc_a, doc_b, jaccard), materialized: the candidate pairs
     ``cand(doc_a, doc_b)`` whose exact set Jaccard of distinct char
     k-shingles is ≥ ``jaccard_threshold``. doc_a's text is read from
-    ``left``, doc_b's from ``right``; pass the same frame for both sides
-    of a self-join and its arrays are built once. The one verify of
-    ``minhash_lsh_pairs`` and ``near_dup_check_incremental``.
+    ``left(doc_id, text)``, doc_b's from ``right(doc_id, text)``; pass the
+    same frame for both sides of a self-join and its arrays are built
+    once. The one verify of ``minhash_lsh_pairs`` and
+    ``near_dup_check_incremental``.
 
     Verify cost is O(candidates), not O(corpus): each side is semi-joined
     to the ids that appear in some candidate pair before its sorted
@@ -683,12 +680,12 @@ def _verify_pairs(cand: DataFrame, left: DataFrame, right: DataFrame,
     held = [cand.persist()]
 
     def arrays(frame, cols):
-        ids = cand.select(F.col(cols[0]).alias(id_col))
+        ids = cand.select(F.col(cols[0]).alias("doc_id"))
         for c in cols[1:]:
-            ids = ids.union(cand.select(F.col(c).alias(id_col)))
-        arrs = (frame.join(ids.distinct(), id_col, "left_semi")
-                .select(F.col(id_col).alias("doc_id"),
-                        _shingle_arr_udf(shingle_k)(F.col(text_col))
+            ids = ids.union(cand.select(F.col(c).alias("doc_id")))
+        arrs = (frame.join(ids.distinct(), "doc_id", "left_semi")
+                .select("doc_id",
+                        _shingle_arr_udf(shingle_k)(F.col("text"))
                         .alias("sh_arr"))
                 .persist())
         held.append(arrs)
@@ -711,13 +708,13 @@ def _verify_pairs(cand: DataFrame, left: DataFrame, right: DataFrame,
             df.unpersist()
 
 
-def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", num_perm: int = 16,
+def minhash_lsh_pairs(docs: DataFrame, num_perm: int = 16,
                       bands: int = 4, shingle_k: int = 3,
                       jaccard_threshold: float = 0.8,
                       band_bucket_cap: int = 200,
                       signatures: str = "fast") -> DataFrame:
-    """→ (doc_a, doc_b, jaccard) near-duplicate pairs, materialized.
+    """docs(doc_id, text) → (doc_a, doc_b, jaccard) near-duplicate pairs,
+    materialized.
 
     Pipeline: signatures → explode into `bands` band-hashes → self-equi-join
     on (band_id, band_hash) with doc_a < doc_b → exact shingle-Jaccard
@@ -747,8 +744,8 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
     # it signs every document twice (a 4,000-page pass: 14.7 → 12.9 s of
     # executor time once persisted). It is held for the call only:
     # _verify_pairs returns materialized pairs.
-    banded = minhash_band_hashes(docs, text_col, id_col, num_perm, bands,
-                                 shingle_k, signatures,
+    banded = minhash_band_hashes(docs, num_perm, bands, shingle_k,
+                                 signatures,
                                  band_bucket_cap=band_bucket_cap).persist()
     try:
         cand = (
@@ -758,27 +755,25 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
                     F.col("b.doc_id").alias("doc_b"))
             .distinct()
         )
-        return _verify_pairs(cand, docs, docs, text_col, id_col, shingle_k,
-                             jaccard_threshold)
+        return _verify_pairs(cand, docs, docs, shingle_k, jaccard_threshold)
     finally:
         banded.unpersist()
 
 
 def near_dup_check_incremental(new_docs: DataFrame, corpus_docs: DataFrame,
                                band_table: DataFrame | None = None,
-                               text_col: str = "text",
-                               id_col: str = "doc_id", num_perm: int = 16,
+                               num_perm: int = 16,
                                bands: int = 4, shingle_k: int = 3,
                                jaccard_threshold: float = 0.8,
                                probe_bucket_cap: int = 200,
                                signatures: str = "fast") -> DataFrame:
-    """→ (doc_id, dup_of, jaccard), materialized: for each NEW doc, the
-    existing corpus docs it near-duplicates — the reference's per-insert
-    dedup check (DeduplicationEngine.check_and_handle,
-    deduplication.py:196-241) re-expressed as a batch probe, the shape a
-    streaming ingest needs: run it per micro-batch in ``foreachBatch`` and
-    append the surviving docs' ``minhash_band_hashes`` rows to the
-    persisted band table.
+    """new_docs(doc_id, text), corpus_docs(doc_id, text) → (doc_id, dup_of,
+    jaccard), materialized: for each NEW doc, the existing corpus docs it
+    near-duplicates — the reference's per-insert dedup check
+    (DeduplicationEngine.check_and_handle, deduplication.py:196-241)
+    re-expressed as a batch probe, the shape a streaming ingest needs: run
+    it per micro-batch in ``foreachBatch`` and append the surviving docs'
+    ``minhash_band_hashes`` rows to the persisted band table.
 
     Plan: band-hash only the NEW docs (the corpus is never re-signed when
     ``band_table`` is supplied), equi-join the probes against the table on
@@ -793,12 +788,11 @@ def near_dup_check_incremental(new_docs: DataFrame, corpus_docs: DataFrame,
     Feed the output to ``apply_dedup_action`` (rename dup_of → doc_a,
     doc_id → doc_b) for SKIP/MERGE/FLAG policy."""
     if band_table is None:
-        band_table = minhash_band_hashes(
-            corpus_docs, text_col, id_col, num_perm, bands, shingle_k,
-            signatures)
+        band_table = minhash_band_hashes(corpus_docs, num_perm, bands,
+                                         shingle_k, signatures)
     band_table = _cap_buckets(band_table, probe_bucket_cap)
-    probes = minhash_band_hashes(new_docs, text_col, id_col, num_perm,
-                                 bands, shingle_k, signatures)
+    probes = minhash_band_hashes(new_docs, num_perm, bands, shingle_k,
+                                 signatures)
     cand = (probes.select(F.col("doc_id").alias("doc_a"),
                           "band_id", "band_hash")
             .join(band_table.select(F.col("doc_id").alias("doc_b"),
@@ -806,8 +800,8 @@ def near_dup_check_incremental(new_docs: DataFrame, corpus_docs: DataFrame,
                   ["band_id", "band_hash"])
             .where(F.col("doc_a") != F.col("doc_b"))
             .select("doc_a", "doc_b").distinct())
-    return (_verify_pairs(cand, new_docs, corpus_docs, text_col, id_col,
-                          shingle_k, jaccard_threshold)
+    return (_verify_pairs(cand, new_docs, corpus_docs, shingle_k,
+                          jaccard_threshold)
             .select(F.col("doc_a").alias("doc_id"),
                     F.col("doc_b").alias("dup_of"), "jaccard"))
 
@@ -816,18 +810,18 @@ def near_dup_check_incremental(new_docs: DataFrame, corpus_docs: DataFrame,
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash64(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-              ) -> DataFrame:
-    """→ (doc_id, simhash bigint): sign-sum of xxhash64 token bits weighted
-    by tf. Pure aggregation: explode tokens → per (doc, bit) majority vote
-    via SUM over ±tf → assemble 64 bits. Shuffle = one groupBy(doc_id).
+def simhash64(docs: DataFrame) -> DataFrame:
+    """docs(doc_id, text) → (doc_id, simhash bigint): sign-sum of xxhash64
+    token bits weighted by tf. Pure aggregation: explode tokens → per
+    (doc, bit) majority vote via SUM over ±tf → assemble 64 bits.
+    Shuffle = one groupBy(doc_id).
 
     Tokens come from the order/duplicate-preserving filter (NOT
     ``tokens_native``, whose array_except dedups) so tf weighting is real:
     'cat cat cat dog' weights the cat-hash bits 3×."""
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens_native_keep_order(F.col(text_col), remove_stopwords=True)
+        "doc_id",
+        F.explode(tokens_native_keep_order(F.col("text"), remove_stopwords=True)
                   ).alias("term"),
     ).groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     h = toks.withColumn("h", F.xxhash64("term"))
@@ -847,13 +841,12 @@ def simhash64(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     return agg.select("doc_id", sim.alias("simhash"))
 
 
-def simhash_near_pairs(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", max_hamming: int = 3
-                       ) -> DataFrame:
-    """→ (doc_a, doc_b, hamming ≤ max_hamming) via 4×16-bit block LSH:
-    pairs within hamming ≤ 3 of a 64-bit hash must agree on ≥1 of 4 blocks
-    (pigeonhole) — join per block, verify with bit_count(xor)."""
-    sh = simhash64(docs, text_col, id_col)
+def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """docs(doc_id, text) → (doc_a, doc_b, hamming ≤ max_hamming) via
+    4×16-bit block LSH: pairs within hamming ≤ 3 of a 64-bit hash must
+    agree on ≥1 of 4 blocks (pigeonhole) — join per block, verify with
+    bit_count(xor)."""
+    sh = simhash64(docs)
     blocks = sh.select(
         "doc_id", "simhash",
         F.explode(F.array(*[
@@ -901,11 +894,11 @@ def token_ngrams(col, n: int = 2):
     return ngrams_of(tokens_native(col, remove_stopwords=False), n)
 
 
-def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", n: int = 2,
+def ngram_jaccard_pairs(docs: DataFrame, n: int = 2,
                         threshold: float = 0.5,
                         df_cap: int = 500) -> DataFrame:
-    """→ (doc_a, doc_b, jaccard ≥ threshold) over token n-gram sets.
+    """docs(doc_id, text) → (doc_a, doc_b, jaccard ≥ threshold) over token
+    n-gram sets.
 
     Inverted-style candidate generation: explode distinct n-grams, drop
     boilerplate n-grams with df > df_cap (skew guard), self-join on the
@@ -917,8 +910,8 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
     and denominator are consistent: the score is the exact Jaccard of the
     non-boilerplate grams, not a mixed-denominator underestimate."""
     grams = (docs.select(
-        F.col(id_col).alias("doc_id"),
-        tokens_native(F.col(text_col), remove_stopwords=False).alias("__toks"))
+        "doc_id",
+        tokens_native(F.col("text"), remove_stopwords=False).alias("__toks"))
         .select("doc_id",
                 F.explode(F.array_distinct(
                     ngrams_of(F.col("__toks"), n))).alias("g")))
@@ -961,13 +954,16 @@ def _norm(a):
                               lambda acc, v: acc + v.cast("double") * v))
 
 
-def embedding_near_dup_pairs(emb: DataFrame, vec_col: str = "embedding",
-                             id_col: str = "vec_id",
-                             threshold: float = 0.95,
-                             n_planes: int = 8, seed: int = 7,
-                             multiprobe_hamming: int = 1,
-                             n_tables: int = 3) -> DataFrame:
-    """→ (id_a, id_b, cosine ≥ threshold).
+# embedding_near_dup_pairs' LSH: the number of independent plane sets;
+# table t's planes are seeded EMB_LSH_SEED + t
+EMB_LSH_TABLES = 3
+EMB_LSH_SEED = 7
+
+
+def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
+                             n_planes: int = 8,
+                             multiprobe_hamming: int = 1) -> DataFrame:
+    """emb(vec_id, embedding) → (id_a, id_b, cosine ≥ threshold).
 
     Bucketed candidate generation: random-hyperplane sign hashes (same
     deterministic plane family as similarity.hyperplane_bucket), verify
@@ -980,17 +976,17 @@ def embedding_near_dup_pairs(emb: DataFrame, vec_col: str = "embedding",
     Two standard recall levers, both on by default:
     - **multiprobe** (hamming-1): each
       vector also probes the n_planes buckets one sign-flip away;
-    - **multi-table** (``n_tables`` independent plane sets, union of
-      candidates): per-table miss rates multiply — with hamming-1 probes
+    - **multi-table** (``EMB_LSH_TABLES`` independent plane sets, union
+      of candidates): per-table miss rates multiply — with hamming-1 probes
       and 3 tables the miss rate at cosine 0.95 is ~0.2³ ≈ 1%.
 
-    Cost: probe side is n_tables·(n_planes+1)× rows, but the join stays
-    bucket-equi (key = (table_id, bucket)), candidates dedup before the
-    verify, and the verify stays candidate-only. ``n_planes=0`` is the
+    Cost: probe side is EMB_LSH_TABLES·(n_planes+1)× rows, but the join
+    stays bucket-equi (key = (table_id, bucket)), candidates dedup before
+    the verify, and the verify stays candidate-only. ``n_planes=0`` is the
     exact mode (one bucket — full self-join; small inputs only)."""
     from .similarity import hyperplane_bucket
 
-    vid, v = F.col(id_col).alias("vid"), F.col(vec_col).alias("v")
+    vid, v = F.col("vec_id").alias("vid"), F.col("embedding").alias("v")
     if n_planes <= 0:
         sig = emb.select(vid, v, F.lit(0).alias("table_id"),
                          F.lit(0).alias("bucket"))
@@ -999,9 +995,9 @@ def embedding_near_dup_pairs(emb: DataFrame, vec_col: str = "embedding",
         tables = F.array(*[
             F.struct(
                 F.lit(t).alias("table_id"),
-                hyperplane_bucket(F.col(vec_col), n_planes, seed + t
-                                  ).alias("bucket"))
-            for t in range(max(1, n_tables))
+                hyperplane_bucket(F.col("embedding"), n_planes,
+                                  EMB_LSH_SEED + t).alias("bucket"))
+            for t in range(EMB_LSH_TABLES)
         ])
         sig = (emb.select(vid, v, F.explode(tables).alias("tb"))
                .select("vid", "v", "tb.table_id", "tb.bucket"))
@@ -1034,38 +1030,40 @@ def embedding_near_dup_pairs(emb: DataFrame, vec_col: str = "embedding",
 # transitive closure: near-dup pairs -> dedup groups
 # ---------------------------------------------------------------------------
 
-def _cc_local(e: DataFrame) -> DataFrame:
-    """Driver-side finish for a driver-sized edge set: collect the edges,
-    label every node with its component's minimum id, ship the (node,
-    component) map back. Preserves the edge columns' Spark types by
-    building the result schema from the input's.
+# connected_components' bound on distributed star rounds; a graph that
+# has not converged by then raises
+MAX_CC_ROUNDS = 50
 
-    Numeric ids take a fully vectorized numpy path (round-6): factorize
-    nodes with np.unique, then min-label propagation with pointer jumping
-    (lab ← min(lab, neighbor lab); lab ← lab[lab]) until fixpoint.
-    Labels only decrease and always name an index inside the same
-    component, so the fixpoint is constant-per-component and equals the
-    component's min index (the min-index node can never adopt a larger
-    label). Pointer jumping makes chains converge in O(log n) rounds —
-    the 0.9M-edge bench graph converges in 3 rounds at ~25 ms/round where
-    the python path-halving loop cost ~1.0 s. Non-numeric ids (string
-    doc ids in generic callers) keep the python union-find loop.
+
+def _cc_local(pdf, e: DataFrame) -> DataFrame:
+    """Driver-side finish for a driver-sized edge set: label every node
+    of the collected edges ``pdf`` with its component's minimum id and
+    ship the (node, component) map back. ``e`` supplies the session and
+    the edge columns' Spark types (the result schema is built from the
+    input's); the limit-probe in connected_components passes the frame it
+    already collected as its threshold gate, so no second collect job
+    runs.
+
+    Vectorized numpy pass (round-6): factorize nodes with np.unique, then
+    min-label propagation with pointer jumping (lab ← min(lab, neighbor
+    lab); lab ← lab[lab]) until fixpoint. Labels only decrease and always
+    name an index inside the same component, so the fixpoint is
+    constant-per-component and equals the component's min index (the
+    min-index node can never adopt a larger label). Pointer jumping makes
+    chains converge in O(log n) rounds — the 0.9M-edge bench graph
+    converges in 3 rounds at ~25 ms/round where a python path-halving
+    loop cost ~1.0 s. The same pass serves every id type: np.unique sorts
+    an object array of strings in code-point order, which is the order
+    Spark's min over UTF-8 strings uses, so the min index names the min
+    id.
 
     The result map is returned as a JVM-literal relation when small
     (localdf) and as an Arrow-backed local relation otherwise — never a
     Python-RDD leaf, which would fork a python worker on EVERY downstream
     action (measured ~0.5 s/action at the 31k-node bench graph)."""
-    # Arrow collect: tolist() converts numpy scalars back to python
-    # ints/strs so min/max and the local_df rows stay plain types
-    return _cc_local_pdf(e.toPandas(), e)
-
-
-def _cc_local_pdf(pdf, e: DataFrame) -> DataFrame:
-    """`_cc_local` on already-collected edges (the limit-probe in
-    connected_components collects them as its threshold gate — reusing
-    that frame here saves a second collect job). ``e`` supplies the
-    session and the edge columns' Spark types."""
     from pyspark.sql import types as T
+
+    from ..localdf import MAX_LITERAL_ROWS, local_df
 
     schema = T.StructType([
         T.StructField("node", e.schema[0].dataType, True),
@@ -1075,60 +1073,39 @@ def _cc_local_pdf(pdf, e: DataFrame) -> DataFrame:
 
     u = pdf.iloc[:, 0].to_numpy()
     v = pdf.iloc[:, 1].to_numpy()
-    if np.issubdtype(u.dtype, np.number) and np.issubdtype(v.dtype,
-                                                           np.number):
-        nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
-        iu, iv = inv[:len(u)], inv[len(u):]
-        lab = np.arange(len(nodes))
-        while True:
-            prev = lab
-            lab = lab.copy()
-            np.minimum.at(lab, iu, prev[iv])
-            np.minimum.at(lab, iv, prev[iu])
-            lab = np.minimum(lab, lab[lab])
-            lab = np.minimum(lab, lab[lab])
-            if np.array_equal(lab, prev):
-                break
-        out = pd.DataFrame({"node": nodes, "component": nodes[lab]})
-        from ..localdf import MAX_LITERAL_ROWS, local_df
-
-        if len(out) <= MAX_LITERAL_ROWS:
-            return local_df(
-                spark,
-                list(zip(out["node"].tolist(), out["component"].tolist())),
-                schema)
-        # Arrow path (engine session): becomes a JVM LocalRelation — no
-        # python fork per action. Non-Arrow sessions fall back to the
-        # regular conversion inside createDataFrame.
-        return spark.createDataFrame(out, schema=schema)
-
-    parent: dict = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in zip(pdf.iloc[:, 0].tolist(), pdf.iloc[:, 1].tolist()):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    rows = [(n, find(n)) for n in parent]
-    from ..localdf import local_df
-
-    return local_df(e.sparkSession, rows, schema)
+    nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    iu, iv = inv[:len(u)], inv[len(u):]
+    lab = np.arange(len(nodes))
+    while True:
+        prev = lab
+        lab = lab.copy()
+        np.minimum.at(lab, iu, prev[iv])
+        np.minimum.at(lab, iv, prev[iu])
+        lab = np.minimum(lab, lab[lab])
+        lab = np.minimum(lab, lab[lab])
+        if np.array_equal(lab, prev):
+            break
+    out = pd.DataFrame({"node": nodes, "component": nodes[lab]})
+    if len(out) <= MAX_LITERAL_ROWS:
+        # tolist() converts numpy scalars back to python ints/strs so the
+        # local_df rows stay plain types
+        return local_df(
+            spark,
+            list(zip(out["node"].tolist(), out["component"].tolist())),
+            schema)
+    # Arrow path (engine session): becomes a JVM LocalRelation — no
+    # python fork per action. Non-Arrow sessions fall back to the
+    # regular conversion inside createDataFrame.
+    return spark.createDataFrame(out, schema=schema)
 
 
-def connected_components(pairs: DataFrame, a_col: str = "doc_a",
-                         b_col: str = "doc_b",
-                         max_rounds: int = 50,
+def connected_components(pairs: DataFrame,
                          local_threshold: int = 1_000_000,
-                         reliable_checkpoint_dir: str | None = None,
                          round_stats: list | None = None) -> DataFrame:
-    """→ (node, component): component = min node id reachable in the
-    undirected near-dup pair graph — the exact transitive closure that
-    ``apply_dedup_action``'s one-hop canonical map approximates.
+    """pairs(doc_a, doc_b) → (node, component): component = min node id
+    reachable in the undirected near-dup pair graph — the exact
+    transitive closure that ``apply_dedup_action``'s one-hop canonical
+    map approximates.
 
     Near-dup relations chain (A≈B, B≈C with A,C below threshold), so a
     correct "keep one per duplicate set" policy needs connected
@@ -1156,7 +1133,7 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     callers left-join and coalesce to the node's own id.
 
     ``local_threshold``: when the edges fit in this many rows, the graph
-    is finished with a driver-side union-find instead of distributed
+    is finished driver-side (``_cc_local``) instead of distributed
     rounds. Before the first round the gate is one probe that collects
     at most ``local_threshold + 1`` RAW canonical edge rows, duplicate
     rows included, not the distinct edge set: heavily duplicated input
@@ -1171,11 +1148,11 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     fixed-overhead jobs; below ~10⁶ edges that overhead dwarfs the O(E)
     local pass (warm-measured on a 253-edge graph: 3.0 s of round
     scheduling vs 1.1 s local finish; re-measured round 6 at 0.9M edges:
-    the path-halving loop itself is 0.8 s where ONE distributed round is
+    a python path-halving loop was 0.8 s where ONE distributed round is
     ~10 s of shuffle jobs). The default (raised 500k → 1M in round 6, in
     line with the "~10⁶" crossover above) bounds the driver at ~16 MB of
-    Arrow-collected edges plus a ≤2M-entry parent dict (~200 MB
-    transient) — comfortably inside any practical driver, and far below
+    Arrow-collected edges plus a few ≤2M-entry label arrays —
+    comfortably inside any practical driver, and far below
     spark.driver.maxResultSize's 1 GB default; pass 0 to force the
     fully-distributed path.
 
@@ -1184,24 +1161,15 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     job (equal distinct counts + empty difference ⇒ identical edge
     sets), so a hash-sum collision between different edge sets cannot
     terminate the loop early — a collision merely costs one extra round.
+    More than ``MAX_CC_ROUNDS`` rounds raise.
 
     Reliability at cluster scale: ``localCheckpoint`` stores truncated
     lineage in executor-local storage — if an executor dies
     mid-iteration the job fails and must restart (acceptable here: the
-    loop is minutes, and the star rounds are deterministic). Set
-    ``reliable_checkpoint_dir`` (an HDFS/S3 path) to use replicated
-    ``checkpoint()`` instead, the standard trade for multi-hour
-    1000-executor runs.
+    loop is minutes, and the star rounds are deterministic).
     """
-    if reliable_checkpoint_dir is not None:
-        pairs.sparkSession.sparkContext.setCheckpointDir(
-            reliable_checkpoint_dir)
-        _ckpt = lambda df: df.checkpoint()  # noqa: E731 — replicated
-    else:
-        _ckpt = lambda df: df.localCheckpoint()  # noqa: E731
-
     canon = (
-        pairs.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
+        pairs.select(F.col("doc_a").alias("x"), F.col("doc_b").alias("y"))
         .where(F.col("x") != F.col("y"))
         .select(F.greatest("x", "y").alias("u"), F.least("x", "y").alias("v")))
     if local_threshold:
@@ -1211,9 +1179,9 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
         # canonical edges — no distinct, no checkpoint (round-6: the
         # distinct exchange + eager localCheckpoint materialization cost
         # ~1.5 s of the bench pipeline and the local finish doesn't need
-        # either: np.minimum.at and the union-find are idempotent over
-        # duplicate edges). The gate is therefore on raw edge rows — a
-        # caller feeding heavily-duplicated pairs may take the
+        # either: np.minimum.at is idempotent over duplicate edges). The
+        # gate is therefore on raw edge rows — a caller feeding
+        # heavily-duplicated pairs may take the
         # distributed path where distinct rows would have fit locally;
         # that path distincts first and re-checks, so it still finishes
         # local, just without the saved jobs.
@@ -1222,8 +1190,8 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
             return canon.limit(0).select(F.col("u").alias("node"),
                                          F.col("v").alias("component"))
         if len(probe) <= local_threshold:
-            return _cc_local_pdf(probe, canon)
-    e = _ckpt(canon.distinct())
+            return _cc_local(probe, canon)
+    e = canon.distinct().localCheckpoint()
     n = e.count()
     if n == 0:
         return e.select(F.col("u").alias("node"), F.col("v").alias("component"))
@@ -1231,9 +1199,9 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     import time as _time
 
     prev_sig = None
-    for _round in range(max_rounds):
+    for _round in range(MAX_CC_ROUNDS):
         if local_threshold and n <= local_threshold:
-            return _cc_local(e)
+            return _cc_local(e.toPandas(), e)
         _t0 = _time.time()
         # large-star: for every node u with m = min(N(u) ∪ {u}), connect
         # each strictly-larger neighbor to m. Output edges are (bigger,
@@ -1256,7 +1224,7 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
               .select(F.greatest("x", "y").alias("u"),
                       F.least("x", "y").alias("v"))
               .distinct())
-        e2 = _ckpt(e2)
+        e2 = e2.localCheckpoint()
         row = e2.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
@@ -1276,7 +1244,8 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
         prev_sig = sig
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds")
+            f"connected_components did not converge in {MAX_CC_ROUNDS} "
+            f"rounds")
     # fixpoint of both stars = star graph: every edge is (node, root).
     # Roots only ever appear on the v side — emit them mapped to themselves.
     return (e.select(F.col("u").alias("node"), F.col("v").alias("component"))
@@ -1284,14 +1253,14 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
                             F.col("v").alias("component")).distinct()))
 
 
-def dedup_groups(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
-                 a_col: str = "doc_a", b_col: str = "doc_b") -> DataFrame:
-    """→ (doc_id, group_id): every doc labeled with the min doc id of its
-    near-dup connected component; docs with no near-dup pair get their
-    own id. Keeping ``group_id == doc_id`` rows implements transitive
-    SKIP; grouping by ``group_id`` gives the duplicate clusters."""
-    comp = connected_components(pairs, a_col=a_col, b_col=b_col)
-    return (docs.select(F.col(id_col).alias("doc_id"))
+def dedup_groups(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """docs(doc_id, ...), pairs(doc_a, doc_b) → (doc_id, group_id): every
+    doc labeled with the min doc id of its near-dup connected component;
+    docs with no near-dup pair get their own id. Keeping
+    ``group_id == doc_id`` rows implements transitive SKIP; grouping by
+    ``group_id`` gives the duplicate clusters."""
+    comp = connected_components(pairs)
+    return (docs.select("doc_id")
             .join(comp.withColumnRenamed("node", "doc_id"), "doc_id", "left")
             .select("doc_id",
                     F.coalesce("component", F.col("doc_id")).alias("group_id")))

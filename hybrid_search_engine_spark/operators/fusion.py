@@ -33,11 +33,12 @@ def minmax_normalize(df: DataFrame, score_col: str, out_col: str,
 
 
 def fuse_hybrid(sem: DataFrame, lex: DataFrame, w_sem: float = 0.7,
-                w_lex: float = 0.3, id_col: str = "doc_id",
-                query_col: str | None = "query_id", k: int | None = None,
+                w_lex: float = 0.3, k: int | None = None,
                 n_docs: int | None = None) -> DataFrame:
-    """Full outer join of the two score tables, min-max normalize each side
-    per query, weighted sum, optional per-query top-k.
+    """sem(query_id, doc_id, sem_score), lex(query_id, doc_id, lex_score)
+    → (query_id, doc_id, sem_n, lex_n, hybrid_score[, rank]): full outer
+    join of the two score tables, min-max normalize each side per query,
+    weighted sum, optional per-query top-k.
 
     **Dense parity mode** (``n_docs`` = corpus size): the reference
     normalizes DENSE all-docs score vectors (core.py:264-268 building
@@ -59,19 +60,18 @@ def fuse_hybrid(sem: DataFrame, lex: DataFrame, w_sem: float = 0.7,
     the candidate set, not the corpus, is the universe."""
     if abs(w_sem + w_lex - 1.0) > 1e-9:
         raise ValueError("weights must sum to 1.0 (core.py:232)")
-    keys = [query_col, id_col] if query_col else [id_col]
-    part = [query_col] if query_col else []
+    keys = ["query_id", "doc_id"]
 
     def side_stats(df: DataFrame, score_col: str):
         """Per-query (mn, mx, fill): dense-clamped bounds + the normalized
         value of an absent doc's 0.0 score."""
-        g = df.groupBy(*part)
-        st = g.agg(F.min(score_col).alias("mn"), F.max(score_col).alias("mx"),
-                   F.count(F.lit(1)).alias("cnt"))
+        st = df.groupBy("query_id").agg(
+            F.min(score_col).alias("mn"), F.max(score_col).alias("mx"),
+            F.count(F.lit(1)).alias("cnt"))
         if n_docs is not None:
             sparse = F.col("cnt") < F.lit(int(n_docs))
             st = st.select(
-                *part,
+                "query_id",
                 F.when(sparse, F.least(F.col("mn"), F.lit(0.0)))
                 .otherwise(F.col("mn")).alias("mn"),
                 F.when(sparse, F.greatest(F.col("mx"), F.lit(0.0)))
@@ -80,12 +80,12 @@ def fuse_hybrid(sem: DataFrame, lex: DataFrame, w_sem: float = 0.7,
             fill = F.when(F.col("mx") == F.col("mn"), F.lit(1.0)).otherwise(
                 (F.lit(0.0) - F.col("mn")) / (F.col("mx") - F.col("mn")))
         else:
-            st = st.select(*part, "mn", "mx")
+            st = st.select("query_id", "mn", "mx")
             fill = F.lit(0.0)
         return st.withColumn("fill", fill)
 
     def normalize(df: DataFrame, score_col: str, out: str, st: DataFrame):
-        j = df.join(F.broadcast(st), part) if part else df.crossJoin(F.broadcast(st))
+        j = df.join(F.broadcast(st), "query_id")
         normed = F.when(F.col("mx") == F.col("mn"), F.lit(1.0)).otherwise(
             (F.col(score_col) - F.col("mn")) / (F.col("mx") - F.col("mn")))
         return j.select(*keys, normed.alias(out))
@@ -94,16 +94,11 @@ def fuse_hybrid(sem: DataFrame, lex: DataFrame, w_sem: float = 0.7,
     s = normalize(sem, "sem_score", "sem_n", st_s)
     l = normalize(lex, "lex_score", "lex_n", st_l)
     joined = s.join(l, keys, "full_outer")
-    fill_s = st_s.select(*part, F.col("fill").alias("sem_fill"))
-    fill_l = st_l.select(*part, F.col("fill").alias("lex_fill"))
-    if part:
-        joined = (joined.join(F.broadcast(fill_s), part, "left")
-                  .join(F.broadcast(fill_l), part, "left"))
-    else:
-        joined = (joined.crossJoin(F.broadcast(fill_s))
-                  .crossJoin(F.broadcast(fill_l)))
+    fill_s = st_s.select("query_id", F.col("fill").alias("sem_fill"))
+    fill_l = st_l.select("query_id", F.col("fill").alias("lex_fill"))
     joined = (
-        joined
+        joined.join(F.broadcast(fill_s), "query_id", "left")
+        .join(F.broadcast(fill_l), "query_id", "left")
         .withColumn("sem_n", F.coalesce("sem_n", "sem_fill", F.lit(0.0)))
         .withColumn("lex_n", F.coalesce("lex_n", "lex_fill", F.lit(0.0)))
         .withColumn("hybrid_score",
@@ -111,8 +106,8 @@ def fuse_hybrid(sem: DataFrame, lex: DataFrame, w_sem: float = 0.7,
         .drop("sem_fill", "lex_fill")
     )
     if k is not None:
-        w = Window.partitionBy(*(part or [F.lit(1)])).orderBy(
-            F.round(F.col("hybrid_score"), 9).desc(), F.col(id_col).asc())
+        w = Window.partitionBy("query_id").orderBy(
+            F.round(F.col("hybrid_score"), 9).desc(), F.col("doc_id").asc())
         joined = (joined.withColumn("rank", F.row_number().over(w))
                   .where(F.col("rank") <= k))
     return joined

@@ -81,7 +81,6 @@ def partial_ratio(a: str, b: str) -> float:
 
 
 def lexical_fuzzy_scores(candidates: DataFrame, query: str,
-                         text_col: str = "text",
                          w_fuzzy: float = 0.7, w_overlap: float = 0.3
                          ) -> DataFrame:
     """candidates(doc_id, text, …) → + lexical_score (core.py:191 weights)."""
@@ -98,10 +97,10 @@ def lexical_fuzzy_scores(candidates: DataFrame, query: str,
 
     overlap = (
         F.size(F.array_intersect(
-            F.array_distinct(tokens_native(text_col)),
+            F.array_distinct(tokens_native("text")),
             F.array(*[F.lit(t) for t in q_tokens]))).cast("double") / qlen
     )
     return candidates.withColumn(
         "lexical_score",
-        F.lit(w_fuzzy) * fuzzy_udf(F.col(text_col)) + F.lit(w_overlap) * overlap,
+        F.lit(w_fuzzy) * fuzzy_udf(F.col("text")) + F.lit(w_overlap) * overlap,
     )

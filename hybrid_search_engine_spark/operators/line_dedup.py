@@ -42,12 +42,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dedup_lines(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id", line_sep: str = "\n",
+def dedup_lines(docs: DataFrame, line_sep: str = "\n",
                 max_occurrences: int = 1) -> DataFrame:
-    """→ (id_col, text, n_lines, n_removed): ``text`` with every line
-    whose corpus-wide frequency exceeds ``max_occurrences`` removed,
-    remaining lines re-joined with ``line_sep`` in original order.
+    """docs(doc_id, text) → (doc_id, text, n_lines, n_removed): ``text``
+    with every line whose corpus-wide frequency exceeds
+    ``max_occurrences`` removed, remaining lines re-joined with
+    ``line_sep`` in original order.
 
     Documents whose lines are all removed (or that were empty) come back
     with ``text = ''`` — dropping them is a caller policy, not this
@@ -57,10 +57,10 @@ def dedup_lines(docs: DataFrame, text_col: str = "text",
         raise ValueError(f"max_occurrences must be >= 1, "
                          f"got {max_occurrences}")
     lines = docs.select(
-        F.col(id_col).alias("__id"),
+        F.col("doc_id").alias("__id"),
         # \Q..\E: line_sep is a LITERAL separator (Spark split takes a
         # regex; the DuckDB oracle's string_split is literal — keep parity)
-        F.posexplode(F.split(F.col(text_col), f"\\Q{line_sep}\\E"))
+        F.posexplode(F.split(F.col("text"), f"\\Q{line_sep}\\E"))
         .alias("i", "line"))
     freq = lines.groupBy("line").agg(F.count(F.lit(1)).alias("__c"))
     tagged = lines.join(freq, "line")
@@ -76,9 +76,9 @@ def dedup_lines(docs: DataFrame, text_col: str = "text",
               .otherwise(0)).alias("n_removed"))
     # restore docs that exploded to nothing (empty text has one '' line so
     # this is belt-and-braces for null text) and project the final shape
-    return (docs.select(F.col(id_col))
-            .join(rebuilt, F.col(id_col) == F.col("__id"), "left")
-            .select(id_col,
+    return (docs.select("doc_id")
+            .join(rebuilt, F.col("doc_id") == F.col("__id"), "left")
+            .select("doc_id",
                     F.coalesce("__text", F.lit("")).alias("text"),
                     F.coalesce("n_lines", F.lit(0)).cast("long"
                                                          ).alias("n_lines"),

@@ -87,13 +87,13 @@ def _lm_score_udf(logp_bc):
 
 
 def unigram_logprob(
-    docs: DataFrame, text_col: str = "text", round_to: int | None = 6
+    docs: DataFrame, round_to: int | None = 6
 ) -> DataFrame:
-    """(doc_id, n_tokens bigint, avg_nll double) for every doc with ≥1
-    token. ``round_to`` rounds the float output (contract convention: 6
-    decimals so summation-order ulps can't flip a value hash); pass None
-    for raw doubles."""
-    toks = tokens_native_keep_order(text_col)
+    """docs(doc_id, text) → (doc_id, n_tokens bigint, avg_nll double) for
+    every doc with ≥1 token. ``round_to`` rounds the float output
+    (contract convention: 6 decimals so summation-order ulps can't flip a
+    value hash); pass None for raw doubles."""
+    toks = tokens_native_keep_order("text")
     base = spread(docs).select("doc_id", toks.alias("__toks"))
     cf_df = (
         base.select(F.explode("__toks").alias("term"))

@@ -67,27 +67,21 @@ def mmr_select(emb: np.ndarray, rel: np.ndarray, lambda_param: float,
     return out
 
 
-def mmr_rerank(candidates: DataFrame, k: int, lambda_param: float = 0.5,
-               query_col: str | None = "query_id", id_col: str = "doc_id",
-               score_col: str = "score", vec_col: str = "embedding"
+def mmr_rerank(candidates: DataFrame, k: int, lambda_param: float = 0.5
                ) -> DataFrame:
-    """→ (query_id, doc_id, score, diversity_rank): per-query greedy MMR.
+    """candidates(query_id, doc_id, score, embedding) → (query_id, doc_id,
+    score, diversity_rank): per-query greedy MMR.
 
-    ``candidates`` must carry an embedding column; rank order within a pool
-    is (round(score,9) desc, id) — the engine's standard total order. The
-    relevance fed to the λ-tradeoff is min-max normalized per pool with the
-    reference's +1e-8 denominator (pipelines.py:588)."""
+    Rank order within a pool is (round(score,9) desc, id) — the engine's
+    standard total order. The relevance fed to the λ-tradeoff is min-max
+    normalized per pool with the reference's +1e-8 denominator
+    (pipelines.py:588)."""
     from .. import ensure_udf_serializable
 
     ensure_udf_serializable()
-    qcol = query_col or "__q"
-    df = candidates
-    if query_col is None:
-        df = df.withColumn(qcol, F.lit(0))
-    df = df.select(F.col(qcol).alias("query_id"),
-                   F.col(id_col).alias("doc_id"),
-                   F.col(score_col).cast("double").alias("score"),
-                   F.col(vec_col).alias("emb"))
+    df = candidates.select("query_id", "doc_id",
+                           F.col("score").cast("double").alias("score"),
+                           F.col("embedding").alias("emb"))
 
     schema = T.StructType([
         T.StructField("query_id", T.IntegerType(), False),

@@ -107,19 +107,17 @@ def phrase_starts(toks: Column, terms: list[str]) -> Column:
     return F.filter(token_positions(toks, terms[0]), _qualifies)
 
 
-def phrase_match_scan(
-    docs: DataFrame, phrases: list[str], text_col: str = "text"
-) -> DataFrame:
-    """Scan-tier matcher: (phrase, doc_id, n_matches, first_pos) for every
-    document containing each phrase at least once. One corpus scan for ALL
-    phrases (the per-phrase matchers are stacked into a single inline'd
-    struct array), all-JVM, shuffle-free."""
+def phrase_match_scan(docs: DataFrame, phrases: list[str]) -> DataFrame:
+    """docs(doc_id, text) → scan-tier matcher: (phrase, doc_id, n_matches,
+    first_pos) for every document containing each phrase at least once.
+    One corpus scan for ALL phrases (the per-phrase matchers are stacked
+    into a single inline'd struct array), all-JVM, shuffle-free."""
     if not phrases:
         # an empty list would build explode(array()) and fail later with
         # an opaque Catalyst error on the struct-field access (round-5
         # advice) — fail fast instead, matching phrase_starts' term guard
         raise ValueError("no phrases")
-    toks = tokens_native_keep_order(text_col)
+    toks = tokens_native_keep_order("text")
     # scan tier is shuffle-free: widen a narrow scan first (no-op at
     # real scale — see sources.registry.spread)
     base = spread(docs).select("doc_id", toks.alias("toks"))
@@ -144,8 +142,9 @@ def phrase_match_scan(
     )
 
 
-def doc_term_positions(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Positional postings: (doc_id, term, positions array<int>, tf int).
+def doc_term_positions(docs: DataFrame) -> DataFrame:
+    """docs(doc_id, text) → positional postings: (doc_id, term, positions
+    array<int>, tf int).
 
     Same single token-grain shuffle shape as the BM25 tf build
     (operators/stats.py) — posexplode → groupBy(doc_id, term) — with the
@@ -162,7 +161,7 @@ def doc_term_positions(docs: DataFrame, text_col: str = "text") -> DataFrame:
     two-phase partial agg once the per-task aggregation map is real, and
     query-tier plans filter terms before the aggregation anyway.
     """
-    toks = tokens_native_keep_order(text_col)
+    toks = tokens_native_keep_order("text")
     return (
         docs.select("doc_id", F.posexplode(toks).alias("idx", "term"))
         .groupBy("doc_id", "term")
@@ -187,12 +186,12 @@ def _near_min_gap(pos_a: Column, pos_b: Column) -> Column:
 
 def near_match_scan(
     docs: DataFrame, term_a: str, term_b: str, slop: int,
-    text_col: str = "text",
 ) -> DataFrame:
-    """Ordered NEAR/k: docs where ``term_b`` occurs after ``term_a`` with
-    at most ``slop`` tokens between them (gap = pos_b - pos_a - 1 ≤ slop).
-    Returns (doc_id, min_gap int). Scan tier — shuffle-free JVM HOFs."""
-    toks = tokens_native_keep_order(text_col)
+    """Ordered NEAR/k over docs(doc_id, text): docs where ``term_b`` occurs
+    after ``term_a`` with at most ``slop`` tokens between them (gap =
+    pos_b - pos_a - 1 ≤ slop). Returns (doc_id, min_gap int). Scan tier —
+    shuffle-free JVM HOFs."""
+    toks = tokens_native_keep_order("text")
     base = spread(docs).select("doc_id", toks.alias("toks"))
     # bind pos_b through a single-element transform: the inner per-q
     # lambda in _near_min_gap would otherwise re-derive b's positions for

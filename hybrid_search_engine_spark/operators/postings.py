@@ -57,7 +57,7 @@ POSTINGS_FORMAT = "sql-blocks-1"
 
 
 def build_postings(tf: DataFrame, tstats: DataFrame,
-                   avgdl: float, n_shards: int = 32,
+                   avgdl: float, n_shards: int,
                    k1: float = 1.5, b: float = 0.75,
                    block_size: int = BLOCK_SIZE_DEFAULT,
                    build_partitions: int | None = None,

@@ -43,23 +43,24 @@ def _norm(col):
                               lambda acc, v: acc + v.cast("double") * v))
 
 
-def knn_brute(emb: DataFrame, qvec: list[float], k: int = 10,
-              vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
-    """→ (vec_id, cosine) exact top-k, deterministic tie-break on id."""
+def knn_brute(emb: DataFrame, qvec: list[float], k: int = 10) -> DataFrame:
+    """emb(vec_id, embedding) → (vec_id, cosine) exact top-k,
+    deterministic tie-break on id."""
     qn = float(np.sqrt(np.dot(qvec, qvec))) or 1.0
-    cos = _dot_lit(F.col(vec_col), qvec) / (_norm(F.col(vec_col)) * F.lit(qn))
+    cos = _dot_lit(F.col("embedding"), qvec) / (
+        _norm(F.col("embedding")) * F.lit(qn))
     return (
-        emb.select(F.col(id_col).alias("vec_id"), cos.alias("cosine"))
+        emb.select("vec_id", cos.alias("cosine"))
         .orderBy(F.round(F.col("cosine"), 9).desc(), F.col("vec_id").asc())
         .limit(k)
     )
 
 
 def knn_batch_pandas(spark: SparkSession, emb: DataFrame,
-                     queries: dict[int, list[float]], k: int = 10,
-                     vec_col: str = "embedding", id_col: str = "vec_id"
+                     queries: dict[int, list[float]], k: int = 10
                      ) -> DataFrame:
-    """→ (query_id, rank, vec_id, cosine): all queries in one Arrow pass.
+    """emb(vec_id, embedding) → (query_id, rank, vec_id, cosine): all
+    queries in one Arrow pass.
 
     Per partition: candidates = top-k of Q · Eᵀ — numpy matmul over the
     Arrow batch; ≤k rows per (partition, query) survive to the global
@@ -84,10 +85,10 @@ def knn_batch_pandas(spark: SparkSession, emb: DataFrame,
         for pdf in batches:
             if pdf.empty:
                 continue
-            E = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             E /= np.maximum(np.linalg.norm(E, axis=1, keepdims=True), 1e-12)
             sims = qm @ E.T  # (Q, N)
-            ids = pdf[id_col].to_numpy(np.int64)
+            ids = pdf["vec_id"].to_numpy(np.int64)
             takes = min(k, ids.size)
             # HALF_UP to 9 decimals, matching Spark's round() (np.round is
             # half-even and can disagree at the k-th boundary)
@@ -102,7 +103,8 @@ def knn_batch_pandas(spark: SparkSession, emb: DataFrame,
                                 "vec_id": np.concatenate(out_i),
                                 "cosine": np.concatenate(out_c)})
 
-    local = emb.select(id_col, vec_col).mapInPandas(fn, schema=out_schema)
+    local = emb.select("vec_id", "embedding").mapInPandas(fn,
+                                                          schema=out_schema)
     w = Window.partitionBy("query_id").orderBy(
         F.round(F.col("cosine"), 9).desc(), F.col("vec_id").asc())
     return (
@@ -145,10 +147,10 @@ def hyperplane_bucket(vec_col, n_planes: int = 8, seed: int = 7):
 
 def ivf_train_centroids(emb: DataFrame, n_lists: int = 16,
                         sample_size: int = 4096, iters: int = 10,
-                        seed: int = 7, vec_col: str = "embedding",
-                        id_col: str = "vec_id") -> np.ndarray:
-    """Spherical k-means coarse quantizer for the IVF index — the analogue
-    of FAISS's IndexIVF training (reference sidecar: core.py:244-252).
+                        seed: int = 7) -> np.ndarray:
+    """emb(vec_id, embedding) → spherical k-means coarse quantizer for the
+    IVF index — the analogue of FAISS's IndexIVF training (reference
+    sidecar: core.py:244-252).
 
     Trains on a DETERMINISTIC hash-ordered sample collected to the driver:
     ``orderBy(xxhash64(id, seed)).limit(sample_size)`` is a TakeOrdered (no
@@ -161,15 +163,15 @@ def ivf_train_centroids(emb: DataFrame, n_lists: int = 16,
     Returns a (n_lists, dim) float64 matrix of L2-normalized centroids
     (spherical k-means: assignment by max dot == max cosine)."""
     sample = (
-        emb.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)))
+        emb.select("vec_id", "embedding")
+        .orderBy(F.xxhash64(F.col("vec_id"), F.lit(seed)))
         .limit(sample_size)
         .collect()
     )
     if not sample:
         raise ValueError(
             "cannot train IVF centroids on an empty embedding table")
-    X = np.array([r[vec_col] for r in sample], dtype=np.float64)
+    X = np.array([r["embedding"] for r in sample], dtype=np.float64)
     X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     n_lists = min(n_lists, len(X))
     rng = np.random.RandomState(seed)
@@ -187,16 +189,15 @@ def ivf_train_centroids(emb: DataFrame, n_lists: int = 16,
     return C
 
 
-def build_ivf_index(emb: DataFrame, centroids: np.ndarray,
-                    vec_col: str = "embedding", id_col: str = "vec_id"
-                    ) -> DataFrame:
-    """→ (list_id int, vec_id, embedding): each vector assigned to its
-    nearest (max-cosine) centroid. One Arrow pandas-UDF pass — assignment is
-    a dense (batch × dim) @ (dim × n_lists) matmul + argmax per batch; a
-    native per-centroid F.aggregate expression would emit n_lists × dim
-    codegen terms and trip the Janino method-size fallback at realistic
-    list counts (FAISS uses k ≈ √N lists, thousands at web scale), so the
-    vectorized-numpy path is the scale-correct choice here.
+def build_ivf_index(emb: DataFrame, centroids: np.ndarray) -> DataFrame:
+    """emb(vec_id, embedding) → (list_id int, vec_id, embedding): each
+    vector assigned to its nearest (max-cosine) centroid. One Arrow
+    pandas-UDF pass — assignment is a dense (batch × dim) @ (dim ×
+    n_lists) matmul + argmax per batch; a native per-centroid F.aggregate
+    expression would emit n_lists × dim codegen terms and trip the Janino
+    method-size fallback at realistic list counts (FAISS uses k ≈ √N
+    lists, thousands at web scale), so the vectorized-numpy path is the
+    scale-correct choice here.
 
     Write the result ``partitionBy("list_id")`` (save_ivf_index) and probes
     read only nprobe list directories."""
@@ -214,10 +215,7 @@ def build_ivf_index(emb: DataFrame, centroids: np.ndarray,
         return pd.Series(np.argmax(X @ C.T, axis=1).astype(np.int32))
 
     return emb.select(
-        assign(F.col(vec_col)).alias("list_id"),
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-    )
+        assign(F.col("embedding")).alias("list_id"), "vec_id", "embedding")
 
 
 def save_ivf_index(ivf_index: DataFrame, centroids: np.ndarray,
@@ -257,4 +255,4 @@ def ivf_search(ivf_index: DataFrame, centroids: np.ndarray,
     order = np.lexsort((np.arange(len(C)), -np.round(C @ q, 9)))
     probes = [int(j) for j in order[: min(nprobe, len(C))]]
     cand = ivf_index.where(F.col("list_id").isin(probes))
-    return knn_brute(cand, qvec, k=k, vec_col="embedding", id_col="vec_id")
+    return knn_brute(cand, qvec, k=k)

@@ -51,13 +51,13 @@ def split_paragraphs(text_col) -> Column:
     return F.filter(parts, lambda x: x != "")
 
 
-def chunk_documents(docs: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id", mode: str = "sentence",
+def chunk_documents(docs: DataFrame, mode: str = "sentence",
                     chunk_tokens: int = 64, overlap: int = 16,
                     max_sentences: int = 1, overlap_sentences: int = 0,
                     window_chars: int = 512, overlap_chars: int = 128
                     ) -> DataFrame:
-    """→ (doc_id, chunk_id, chunk_text). mode ∈ sentence|paragraph|fixed|chars.
+    """docs(doc_id, text) → (doc_id, chunk_id, chunk_text).
+    mode ∈ sentence|paragraph|paragraph_merged|fixed|chars.
 
     sentence mode with ``max_sentences`` > 1 groups consecutive sentences
     into space-joined windows stepping ``max_sentences - overlap_sentences``
@@ -74,16 +74,15 @@ def chunk_documents(docs: DataFrame, text_col: str = "text",
 
     All modes are native sequence/transform/posexplode plans — no UDF."""
     if mode in ("sentence", "paragraph"):
-        parts = (split_sentences(text_col) if mode == "sentence"
-                 else split_paragraphs(text_col))
+        parts = (split_sentences("text") if mode == "sentence"
+                 else split_paragraphs("text"))
         if mode == "sentence" and max_sentences > 1:
             step = max_sentences - overlap_sentences
             if step <= 0:  # chunker.py:69-71 degenerate-overlap guard
                 step = max_sentences
             # bind the sentence array once — referencing `parts` inside the
             # per-window lambdas would re-run the split per window position
-            base = docs.select(F.col(id_col).alias("doc_id"),
-                               parts.alias("__parts"))
+            base = docs.select("doc_id", parts.alias("__parts"))
             p = F.col("__parts")
             n = F.size(p)
             starts = F.filter(
@@ -97,22 +96,19 @@ def chunk_documents(docs: DataFrame, text_col: str = "text",
             return base.select(
                 "doc_id",
                 F.posexplode(chunks).alias("chunk_id", "chunk_text"))
-        ex = docs.select(F.col(id_col).alias("doc_id"),
-                         F.posexplode(parts).alias("chunk_id", "chunk_text"))
-        return ex
+        return docs.select(
+            "doc_id", F.posexplode(parts).alias("chunk_id", "chunk_text"))
     if mode == "paragraph_merged":
         from pyspark.sql import types as T
 
         udf = _paragraph_merge_udf()
         return docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.posexplode(udf(F.coalesce(
-                F.col(text_col) if isinstance(text_col, str) else text_col,
-                F.lit("")))).alias("chunk_id", "chunk_text"))
+            "doc_id",
+            F.posexplode(udf(F.coalesce(F.col("text"), F.lit(""))))
+            .alias("chunk_id", "chunk_text"))
     if mode == "chars":
         step = max(1, window_chars - overlap_chars)
-        c = F.coalesce(F.col(text_col) if isinstance(text_col, str)
-                       else text_col, F.lit(""))
+        c = F.coalesce(F.col("text"), F.lit(""))
         n = F.length(c)
         starts = F.filter(
             F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)), F.lit(step)),
@@ -123,19 +119,18 @@ def chunk_documents(docs: DataFrame, text_col: str = "text",
                 c.substr(i + 1, F.lit(window_chars)), F.lit(PY_WS))),
             lambda x: x != "")
         return docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.posexplode(windows).alias("chunk_id", "chunk_text"))
+            "doc_id", F.posexplode(windows).alias("chunk_id", "chunk_text"))
     if mode != "fixed":
         raise ValueError(mode)
     step = max(1, chunk_tokens - overlap)
-    toks = tokens_native(text_col)
+    toks = tokens_native("text")
     starts = F.sequence(
         F.lit(0),
         F.greatest(F.size(toks) - 1, F.lit(0)),
         F.lit(step),
     )
     return (
-        docs.select(F.col(id_col).alias("doc_id"), toks.alias("toks"),
+        docs.select("doc_id", toks.alias("toks"),
                     F.posexplode(starts).alias("chunk_id", "start"))
         .where(F.col("start") < F.size("toks"))
         .select(
@@ -209,11 +204,12 @@ def _paragraph_merge_udf():
     return _merge
 
 
-def best_chunk_per_doc(chunk_scores: DataFrame, id_col: str = "doc_id",
-                       score_col: str = "score") -> DataFrame:
-    """Parent-doc dedup keeping the best chunk (pipelines.py:166-183, W2)."""
-    w = Window.partitionBy(id_col).orderBy(
-        F.col(score_col).desc(), F.col("chunk_id").asc())
+def best_chunk_per_doc(chunk_scores: DataFrame) -> DataFrame:
+    """chunk_scores(doc_id, chunk_id, score, ...) → the same rows, one per
+    doc: parent-doc dedup keeping the best chunk (pipelines.py:166-183,
+    W2)."""
+    w = Window.partitionBy("doc_id").orderBy(
+        F.col("score").desc(), F.col("chunk_id").asc())
     return (chunk_scores.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1).drop("rn"))
 
@@ -247,11 +243,12 @@ def snippet(text_col, query_terms: list[str], radius_chars: int = 80
     return F.substring(c, start.cast("int"), 2 * radius_chars)
 
 
-def extract_snippets(df: DataFrame, query: str, text_col: str = "text",
-                     snippet_length: int = 150, max_snippets: int = 3,
-                     out_col: str = "snippets") -> DataFrame:
-    """SO5 full form: per-row multi-position snippets with overlap
-    suppression (reference highlighter.py:68-145).
+def extract_snippets(df: DataFrame, query: str,
+                     snippet_length: int = 150, max_snippets: int = 3
+                     ) -> DataFrame:
+    """df(text, ...) → the same plus ``snippets``: SO5 full form, per-row
+    multi-position snippets with overlap suppression (reference
+    highlighter.py:68-145).
 
     Semantics note: the reference checks overlap against ``used_positions``
     while collecting positions (highlighter.py:94-99), but only populates
@@ -317,8 +314,8 @@ def extract_snippets(df: DataFrame, query: str, text_col: str = "text",
     def _snips(s: pd.Series) -> pd.Series:
         return s.map(one)
 
-    return df.withColumn(out_col, _snips(F.coalesce(F.col(text_col),
-                                                    F.lit(""))))
+    return df.withColumn("snippets", _snips(F.coalesce(F.col("text"),
+                                                       F.lit(""))))
 
 
 # ---------------------------------------------------------------------------

@@ -25,25 +25,25 @@ from pyspark.sql import functions as F
 from ..functions.url import canonicalize_url
 
 
-def keep_latest_by_canonical_url(df: DataFrame, url_col: str = "url",
-                                 ts_col: str = "warc_ts",
-                                 id_col: str = "doc_id") -> DataFrame:
-    """→ one row per canonical URL: (id_col, canon_url, ts_col, n_crawls).
+def keep_latest_by_canonical_url(df: DataFrame,
+                                 ts_col: str = "warc_ts") -> DataFrame:
+    """df(doc_id, url, ts_col) → one row per canonical URL: (doc_id,
+    canon_url, ts_col, n_crawls).
 
-    Newest ``ts_col`` wins; ``id_col`` (descending) breaks ties so the
+    Newest ``ts_col`` wins; ``doc_id`` (descending) breaks ties so the
     result is deterministic under timestamp collisions. ``n_crawls`` is
     the group size — the signal a pipeline uses to audit re-crawl rates.
     """
-    canon = df.select(F.col(id_col), F.col(ts_col),
-                      canonicalize_url(F.col(url_col)).alias("canon_url"))
+    canon = df.select("doc_id", F.col(ts_col),
+                      canonicalize_url(F.col("url")).alias("canon_url"))
     w = Window.partitionBy("canon_url")
     ranked = canon.select(
-        id_col, "canon_url", ts_col,
+        "doc_id", "canon_url", ts_col,
         F.row_number().over(
-            w.orderBy(F.col(ts_col).desc(), F.col(id_col).desc())
+            w.orderBy(F.col(ts_col).desc(), F.col("doc_id").desc())
         ).alias("__rn"),
         F.count(F.lit(1)).over(w).alias("n_crawls"))
     return (ranked.where(F.col("__rn") == 1)
-            .select(id_col, "canon_url",
+            .select("doc_id", "canon_url",
                     F.col(ts_col).cast("long").alias(ts_col),
                     F.col("n_crawls").cast("long").alias("n_crawls")))

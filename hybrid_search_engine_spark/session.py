@@ -6,6 +6,12 @@ skew), Arrow on (every parity UDF is a pandas UDF), shuffle partitions sized
 to cores rather than the 200 default (at 100 TB you'd size these to
 ~target-partition-bytes instead; see operators/postings.py for the explicit
 repartition the posting builder does on its own key).
+
+Every setting made here can be overridden through
+``get_spark(extra_conf={...})``, which is applied last: e.g.
+``spark.driver.extraJavaOptions`` / ``spark.executor.extraJavaOptions``
+for other JVM flags, or ``spark.python.daemon.module="pyspark.daemon"``
+to turn the worker-daemon preload off.
 """
 
 from __future__ import annotations
@@ -13,6 +19,21 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# ParallelGC + raised GCLocker retries: G1's GCLocker thrashes against
+# Arrow/compression JNI critical sections at high local thread counts
+# ("Retried waiting for GCLocker too often") — measured 23% faster builds
+# and much lower run-to-run variance. Single-JVM artifact; harmless on
+# real executors.
+DRIVER_JVM_OPTS = ("-XX:+UseParallelGC -XX:+UnlockDiagnosticVMOptions "
+                   "-XX:GCLockerRetryAllocationCount=100")
+# Executor JVMs of a local-cluster master get G1, NOT the driver's
+# ParallelGC: ParallelGC exists to stop GCLocker thrash in the
+# one-big-heap local[32] driver; a 4-core executor JVM never hits that,
+# and G1's concurrent cycles cut measured K=4 build GC from 486 s to 31 s
+# on byte-identical work (bench_multijvm A/B, round 4) — GC was the
+# dominant per-doc inflation at 4× executors.
+EXECUTOR_JVM_OPTS = "-XX:+UseG1GC"
 
 
 def default_driver_memory() -> str:
@@ -46,16 +67,6 @@ def get_spark(
     # excess back together whenever partitions come out small, so the only
     # cost of the higher initial number is scheduling a few more tasks.
     shuffle_partitions = shuffle_partitions or max(4 * cores, 16)
-    # ParallelGC + raised GCLocker retries: G1's GCLocker thrashes against
-    # Arrow/compression JNI critical sections at high local thread counts
-    # ("Retried waiting for GCLocker too often") — measured 23% faster builds
-    # and much lower run-to-run variance. Single-JVM artifact; harmless on
-    # real executors.
-    jvm_opts = os.environ.get(
-        "HSE_JVM_OPTS",
-        "-XX:+UseParallelGC -XX:+UnlockDiagnosticVMOptions "
-        "-XX:GCLockerRetryAllocationCount=100",
-    )
     b = (
         SparkSession.builder.master(master or f"local[{cores}]")
         .appName(app)
@@ -68,6 +79,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
+        .config("spark.driver.extraJavaOptions", DRIVER_JVM_OPTS)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -87,8 +99,6 @@ def get_spark(
         # would scan every batch. IndexReader keeps its cached keys as
         # strings instead, whose literals are references in either form.
     )
-    if jvm_opts:
-        b = b.config("spark.driver.extraJavaOptions", jvm_opts)
     # PySpark 4 forks FRESH python workers for every Arrow-UDF job (no
     # cross-job reuse even with spark.python.worker.reuse=true — measured),
     # and each fork pays the pandas+pyarrow import (~250 ms CPU × one per
@@ -98,25 +108,16 @@ def get_spark(
     # daemon module must be importable by the executor-side python at
     # daemon launch, hence the explicit PYTHONPATH (local/local-cluster
     # share this filesystem; on a distributed cluster ship the package via
-    # --py-files or disable with HSE_NO_DAEMON_PRELOAD=1).
-    if not os.environ.get("HSE_NO_DAEMON_PRELOAD"):
-        pkg_parent = os.path.dirname(
-            os.path.dirname(os.path.abspath(__file__)))
-        b = (
-            b.config("spark.python.daemon.module",
-                     "hybrid_search_engine_spark.daemon_preload")
-            .config("spark.executorEnv.PYTHONPATH", pkg_parent)
-        )
+    # --py-files, or pass extra_conf={"spark.python.daemon.module":
+    # "pyspark.daemon"} to turn the preload off).
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    b = (
+        b.config("spark.python.daemon.module",
+                 "hybrid_search_engine_spark.daemon_preload")
+        .config("spark.executorEnv.PYTHONPATH", pkg_parent)
+    )
     if master and master.startswith("local-cluster"):
-        # Executor JVMs get G1, NOT the driver's ParallelGC: ParallelGC
-        # exists to stop GCLocker thrash in the one-big-heap local[32]
-        # driver; a 4-core executor JVM never hits that, and G1's
-        # concurrent cycles cut measured K=4 build GC from 486 s to 31 s
-        # on byte-identical work (bench_multijvm A/B, round 4) — GC was
-        # the dominant per-doc inflation at 4× executors.
-        exec_opts = os.environ.get("HSE_EXEC_JVM_OPTS", "-XX:+UseG1GC")
-        if exec_opts:
-            b = b.config("spark.executor.extraJavaOptions", exec_opts)
+        b = b.config("spark.executor.extraJavaOptions", EXECUTOR_JVM_OPTS)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

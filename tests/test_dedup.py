@@ -193,10 +193,10 @@ def _uf_components(edges):
     return {n: find(n) for n in parent}
 
 
-def _cc_spark(spark, edges, local_threshold=500_000):
+def _cc_spark(spark, edges, local_threshold=500_000, id_type="long"):
     from hybrid_search_engine_spark.operators.dedup import connected_components
 
-    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    df = spark.createDataFrame(edges, f"doc_a {id_type}, doc_b {id_type}")
     out = connected_components(df, local_threshold=local_threshold)
     return {r["node"]: r["component"] for r in out.collect()}
 
@@ -479,12 +479,13 @@ def test_lsh_pairs_signs_each_doc_once(spark, docs_idx, monkeypatch):
 
 
 def test_cc_long_chain_vectorized_and_arrow_branch(spark, monkeypatch):
-    """Round-6 internals: the numeric CC finish is a numpy
-    min-label-propagation loop (pointer jumping) and, above the literal
-    cap, the component map returns as an Arrow-backed relation. A long
-    path graph stresses propagation convergence; patching the literal cap
-    to 0 forces the Arrow createDataFrame branch. Both must agree with
-    the python union-find oracle."""
+    """Round-6 internals: the CC finish is a numpy min-label-propagation
+    loop (pointer jumping) and, above the literal cap, the component map
+    returns as an Arrow-backed relation. A long path graph stresses
+    propagation convergence; patching the literal cap to 0 forces the
+    Arrow createDataFrame branch. Both must agree with the python
+    union-find oracle, for numeric ids and for string ids (the path
+    5-6-...-305 as strings has min "10", not "5")."""
     from hybrid_search_engine_spark import localdf
 
     n = 300
@@ -492,8 +493,13 @@ def test_cc_long_chain_vectorized_and_arrow_branch(spark, monkeypatch):
     edges += [(1000 + i, 1000 + (i * 7) % 50) for i in range(50)]
     edges = [(a, b) for a, b in edges if a != b]  # CC drops self-loops
     want = _uf_components(edges)
+    str_edges = [(str(a + 5), str(b + 5)) for a, b in edges]
+    want_str = _uf_components(str_edges)
+    assert want_str["5"] == "10"
 
     assert _cc_spark(spark, edges, 500_000) == want
+    assert _cc_spark(spark, str_edges, 500_000, "string") == want_str
 
     monkeypatch.setattr(localdf, "MAX_LITERAL_ROWS", 0)
     assert _cc_spark(spark, edges, 500_000) == want
+    assert _cc_spark(spark, str_edges, 500_000, "string") == want_str

@@ -267,8 +267,7 @@ def test_quality_columns(spark):
         ("junk", "!!! ??? ### $$$ %%%"),
         ("empty", ""),
     ], "id string, text string")
-    rows = {r["id"]: r for r in quality_metrics(df, "text",
-                                                keep=("id",)).collect()}
+    rows = {r["id"]: r for r in quality_metrics(df, keep=("id",)).collect()}
     assert rows["good"]["is_quality"]
     assert not rows["junk"]["is_quality"]
     assert not rows["empty"]["is_quality"]
