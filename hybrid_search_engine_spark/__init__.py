@@ -20,6 +20,9 @@ A from-scratch rebuild of the query semantics of
 - Training-data-pipeline operators: dedup (exact / MinHash-LSH / SimHash /
   n-gram Jaccard / embedding-cosine), similarity search, text analysis,
   multimodal plumbing (``operators/``).
+- UDFs ship by value: importing the package registers it for by-value
+  cloudpickle pickling (below), so Python workers need no import path to
+  it, and no module that defines a UDF has to do anything for it.
 
 Nothing in this package imports from or depends on the reference repo; the
 reference is cited in docstrings (file:line) purely as the semantics contract.
@@ -27,34 +30,14 @@ reference is cited in docstrings (file:line) purely as the semantics contract.
 
 __version__ = "0.1.0"
 
+import sys
 
-def ensure_udf_serializable() -> None:
-    """Register this package's modules for by-value cloudpickle pickling.
+from pyspark import cloudpickle
 
-    Spark's Python workers unpickle UDFs in separate processes whose
-    sys.path need not include this repo (e.g. a driver running from another
-    cwd). By-value registration embeds the referenced functions in the UDF
-    payload instead of importing them by module name on the worker —
-    removing the deployment requirement entirely for local/driver use.
-    (For spark-submit on a real cluster you'd ship the package via
-    --py-files and skip this.) Idempotent; called by every module that
-    defines a UDF/mapInPandas/applyInPandas function.
-    """
-    import sys
-
-    try:
-        from pyspark import cloudpickle
-    except Exception:  # pragma: no cover
-        try:
-            import cloudpickle
-        except Exception:
-            return
-    reg = getattr(cloudpickle, "register_pickle_by_value", None)
-    if reg is None:  # old cloudpickle — fall back to name-based pickling
-        return
-    for name, mod in list(sys.modules.items()):
-        if mod is not None and name.startswith(__name__):
-            try:
-                reg(mod)
-            except Exception:
-                pass
+# Pickle this package's functions by value, so a Python worker needs no
+# import path to the repo (a driver started from another cwd, a vanilla
+# SparkSession). Registering the package covers every submodule, also ones
+# imported later. It must happen at import: PySpark pickles a UDF's command
+# once, at its first use, and reuses that payload. For spark-submit on a
+# cluster, ship the package with --py-files instead.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

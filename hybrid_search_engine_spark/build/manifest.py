@@ -6,15 +6,16 @@ record per completed shard:
     {"shard_id": 3, "status": "done", "n_terms":..., "n_blocks":...,
      "n_postings":..., "skew_ratio":...,
      "source_fingerprint": {"n_docs":..., "id_hash":...,
-                            "postings_format":..., "n_shards":...},
+                            "postings_format":..., "n_shards":...,
+                            "k1":..., "b":..., "block_size":...},
      "built_at":..., "attempt":..., "elapsed_s":..., "docs_per_sec":...}
 
 Resume protocol (SURVEY.md §7.2.4, north rule "resumable from per-partition
 checkpoints carrying lineage"):
 
 1. read the manifest; `done` = shards with status=done AND matching source
-   fingerprint (a changed source, posting format or shard count
-   invalidates every shard);
+   fingerprint (a changed source, posting format, shard count or BM25
+   parameter invalidates every shard);
 2. build only missing shards (`shard_filter` pushes a shard_id predicate
    into the build plan — the anti-join against done work);
 3. write with dynamic partition overwrite (idempotent per shard dir: a
@@ -195,12 +196,15 @@ def _build_from_tf(spark: SparkSession, tf: DataFrame, index_dir: str,
     means one shard per core of the session."""
     if n_shards is None:
         n_shards = spark.sparkContext.defaultParallelism
-    # the posting format and the shard count are part of build lineage:
-    # shards written in another format (columns differ) or under another
-    # pmod(hash(doc_id), n_shards) (a doc would sit in two shards) must
-    # not satisfy a resume, so both ride inside the fingerprint every
-    # resume check compares
-    fp = {**fp, "postings_format": POSTINGS_FORMAT, "n_shards": n_shards}
+    # the posting format, the shard count and the BM25 parameters are part
+    # of build lineage: shards written in another format (columns differ),
+    # under another pmod(hash(doc_id), n_shards) (a doc would sit in two
+    # shards), or with another k1/b/block_size (block maxima and block
+    # boundaries are baked into the postings) must not satisfy a resume,
+    # so all of them ride inside the fingerprint every resume check
+    # compares
+    fp = {**fp, "postings_format": POSTINGS_FORMAT, "n_shards": n_shards,
+          "k1": k1, "b": b, "block_size": block_size}
     done = done_shards(index_dir, fp)
     todo = [s for s in range(n_shards) if s not in done]
 

@@ -1,6 +1,7 @@
 """Text-analysis operators for training-data pipelines.
 
-All native column expressions (codegen'd, no Python workers):
+Native column expressions, plus Arrow-vectorized counters where one
+codepoint or token pass replaces a regex scan per class:
 
 - language-ID heuristic (stopword-hit ratio per language's function-word
   list + script detection by unicode-range counts; reference semantics
@@ -13,6 +14,8 @@ All native column expressions (codegen'd, no Python workers):
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 import pandas as pd
@@ -240,9 +243,7 @@ def _parse_char_class(pat: str) -> list[tuple[int, int]]:
     return out
 
 
-_SCRIPT_COUNTS_UDF = None
-
-
+@functools.cache
 def script_counts_onepass():
     """Arrow-vectorized one-pass counter for ALL script + distinctive
     char classes (33: 24 scripts + 9 distinctive): → array<int> ordered
@@ -255,9 +256,6 @@ def script_counts_onepass():
     all classes, then an (intervals × classes) 0/1 matrix resolves
     overlaps (the cyrillic distinctive chars sit INSIDE the cyrillic
     script range, so buckets are sets, not a partition)."""
-    global _SCRIPT_COUNTS_UDF
-    if _SCRIPT_COUNTS_UDF is not None:
-        return _SCRIPT_COUNTS_UDF
     from pyspark.sql.types import ArrayType, IntegerType
 
     buckets = [_parse_char_class(p)
@@ -291,7 +289,6 @@ def script_counts_onepass():
         out = (per_iv @ member).astype(np.int32)
         return pd.Series(list(out))
 
-    _SCRIPT_COUNTS_UDF = _counts
     return _counts
 
 # Unicode-aware token class FOR LANGUAGE ID ONLY (\p{L} is the unicode
@@ -307,132 +304,14 @@ def lang_tokens(col: Column | str) -> Column:
     return F.regexp_extract_all(F.lower(c), F.lit(LANG_TOKEN_CLASS), 0)
 
 
-def _hit_ratio(toks: Column, words: list[str]) -> Column:
-    # t.isin(...) compiles to an In over a literal list, which the
-    # optimizer rewrites to InSet (hash-set membership) — O(1) per token
-    # vs the O(|words|) interpreted array_contains scan this replaced
-    # (measured 3× on the WHERE-predicate family, operators/stats.py).
-    return F.when(
-        F.size(toks) > 0,
-        F.size(F.filter(toks, lambda t: t.isin(*words))).cast("double")
-        / F.size(toks),
-    ).otherwise(F.lit(0.0))
-
-
-def detect_language(text_col) -> Column:
-    """Two-tier language ID, all native expressions (reference semantics
-    model: language.py:66-138 wraps langdetect, ~50 languages; this covers
-    64 web languages deterministically):
-
-    1. script tier — per-char counts for 23 non-latin scripts; if the best
-       non-latin script outnumbers latin letters, map script → language
-       (``SCRIPT_LANG``). Multi-language scripts refine further: han with
-       any kana present → ja, else zh-cn/zh-tw by simplified/traditional
-       character counts; cyrillic → ru/uk/bg/sr/mk and arabic → ar/fa/ur
-       by distinctive-character counts (``DISTINCTIVE_CHARS``);
-       devanagari → hi/mr/ne by grammatical-marker word counts
-       (``DISTINCTIVE_SEQS``).
-    2. latin tier — argmax over 32 per-language function-word hit ratios
-       (``LANG_FUNCTION_WORDS``, dict order breaks ties, earliest wins)
-       on the unicode-aware ``lang_tokens`` tokenizer; 'und'
-       (undetermined) when nothing scores above the 0.02 floor.
-    """
-    c = F.coalesce(F.col(text_col) if isinstance(text_col, str) else text_col,
-                   F.lit(""))
-    toks = lang_tokens(c)
-
-    # The per-language ratios and per-script counts are the expensive
-    # subexpressions. Evaluate each EXACTLY ONCE by packing them into two
-    # arrays and binding the pair through a single-element transform():
-    # inside the lambda every reference is a variable lookup, not a
-    # re-expansion of the underlying expression tree. (The previous
-    # accumulating when-chain embedded each prior best_score twice per
-    # language — a 2^n_langs expression blowup that took ~11 s for 500 rows
-    # in analysis + interpreted evaluation.)
-    script_names = list(LANG_SCRIPT_RANGES)  # index 0 = latin
-    assert script_names[1:] == list(SCRIPT_LANG)  # shared order = tie-break
-    dist_names = list(DISTINCTIVE_CHARS)
-    seq_names = list(DISTINCTIVE_SEQS)
-    scores = F.array(*[_hit_ratio(toks, ws)
-                       for ws in LANG_FUNCTION_WORDS.values()])
-    # one counts array: the script ranges, then the distinctive char
-    # classes, then the devanagari word-sequence markers — every
-    # regexp_count evaluated once
-    counts = F.array(*([F.regexp_count(c, F.lit(pat)).cast("int")
-                        for pat in LANG_SCRIPT_RANGES.values()]
-                       + [F.regexp_count(c, F.lit(pat)).cast("int")
-                          for pat in DISTINCTIVE_CHARS.values()]
-                       + [F.regexp_count(c, F.lit(pat)).cast("int")
-                          for pat in DISTINCTIVE_SEQS.values()]))
-    lang_lit = F.array(*[F.lit(l) for l in LANG_FUNCTION_WORDS])
-    script_lit = F.array(*[F.lit(code) for code in SCRIPT_LANG.values()])
-    kana_pos = script_names.index("kana") + 1  # 1-based into counts
-    n_scripts = len(script_names)
-
-    def pick(x):
-        s, cnt = x["s"], x["n"]
-
-        def dist(code):  # 1-based position of a DISTINCTIVE_CHARS count
-            return F.element_at(cnt, n_scripts + dist_names.index(code) + 1)
-
-        def seq(code):  # 1-based position of a DISTINCTIVE_SEQS count
-            return F.element_at(
-                cnt, n_scripts + len(dist_names) + seq_names.index(code) + 1)
-
-        latin_n = F.element_at(cnt, 1)
-        nonlatin = F.slice(cnt, 2, n_scripts - 1)
-        nl_max = F.array_max(nonlatin)
-        # latin tier: earliest argmax over the 0.02 floor (array_position
-        # returns the FIRST occurrence — same tie-break as the old loop)
-        mx = F.array_max(s)
-        latin_pick = F.when(mx <= F.lit(0.02), F.lit("und")).otherwise(
-            F.element_at(lang_lit, F.array_position(s, mx).cast("int")))
-        # script tier: earliest maximal non-latin script, then the
-        # within-script refinements (order documented on DISTINCTIVE_CHARS)
-        script0 = F.element_at(
-            script_lit, F.array_position(nonlatin, nl_max).cast("int"))
-        cyr_pick = (
-            F.when(dist("mk") > 0, F.lit("mk"))
-            .when(dist("sr") > 0, F.lit("sr"))
-            .when((dist("uk") > 0) & (dist("uk") >= dist("ru")), F.lit("uk"))
-            .when(dist("ru") > 0, F.lit("ru"))
-            .when(dist("bg") > 0, F.lit("bg"))
-            .otherwise(F.lit("ru")))
-        ar_pick = (
-            F.when(dist("ur") > 0, F.lit("ur"))
-            .when(dist("fa") > 0, F.lit("fa"))
-            .otherwise(F.lit("ar")))
-        zh_pick = F.when(dist("zht") > dist("zhs"),
-                         F.lit("zh-tw")).otherwise(F.lit("zh-cn"))
-        dev_pick = (
-            F.when(seq("ne") > 0, F.lit("ne"))
-            .when(seq("mr") > 0, F.lit("mr"))
-            .otherwise(F.lit("hi")))
-        script_pick = (
-            F.when((script0 == "zh") & (F.element_at(cnt, kana_pos) > 0),
-                   F.lit("ja"))
-            .when(script0 == "zh", zh_pick)
-            .when(script0 == "ru", cyr_pick)
-            .when(script0 == "ar", ar_pick)
-            .when(script0 == "hi", dev_pick)
-            .otherwise(script0))
-        return F.when(nl_max > latin_n, script_pick).otherwise(latin_pick)
-
-    packed = F.array(F.struct(scores.alias("s"), counts.alias("n")))
-    return F.element_at(F.transform(packed, pick), 1)
-
-
-_LANG_HITS_UDF = None
-
-
+@functools.cache
 def _lang_hits_udf():
     """Arrow-vectorized latin tier: token array → [best_cnt, best_idx]
     (bigint) where best_cnt is the highest per-language function-word hit
     COUNT in the row and best_idx the 0-based LANG_FUNCTION_WORDS dict
     index attaining it (earliest wins ties — np.argmax returns the first
     maximum over dict-ordered columns, the same tie-break as the join
-    form's max(struct(cnt, pri, lang)) and the Column form's
-    array_position). Exact integer counts; the 0.02 ratio floor and the
+    form's max(struct(cnt, pri, lang)) it replaced). Exact integer counts; the 0.02 ratio floor and the
     language-string lookup stay in Spark.
 
     One batch pass: factorize tokens, look up each DISTINCT token's
@@ -440,9 +319,6 @@ def _lang_hits_udf():
     pairs, np.add.at histogram. Replaces the explode → broadcast join →
     two groupBys → join-back subplan (~1.5 s warm at sf1.0, plus its two
     exchanges) with a row-local projection."""
-    global _LANG_HITS_UDF
-    if _LANG_HITS_UDF is not None:
-        return _LANG_HITS_UDF
     from pyspark.sql.types import ArrayType, LongType
 
     word2langs: dict[str, np.ndarray] = {}
@@ -492,31 +368,46 @@ def _lang_hits_udf():
                 out[:, 1] = best_idx
         return pd.Series(list(out))
 
-    _LANG_HITS_UDF = _hits
     return _hits
 
 
 def detect_language_df(df):
-    """Scale form of :func:`detect_language`: identical output (tested for
-    equivalence), different plan — and since round 6 a fully ROW-LOCAL
-    one: script counts come from one vectorized codepoint pass
-    (``script_counts_onepass``) and the latin tier's per-language hit
-    argmax from one vectorized token pass (``_lang_hits_udf``), both
-    batched into a single ArrowEvalPython node. Zero exchanges, zero
-    joins, one corpus scan — the previous shape exploded every token
-    through a broadcast join, two groupBys and a join back (~1.5 s warm
-    of the ~4 s row at sf1.0, plus two exchanges; before round 5 the
-    Column form's 31 per-row set-membership passes were 6× slower still).
+    """Two-tier language ID (reference semantics model: language.py:66-138
+    wraps langdetect, ~50 languages; this covers 64 web languages
+    deterministically):
+
+    1. script tier — per-char counts for 23 non-latin scripts; if the best
+       non-latin script outnumbers latin letters, map script → language
+       (``SCRIPT_LANG``). Multi-language scripts refine further: han with
+       any kana present → ja, else zh-cn/zh-tw by simplified/traditional
+       character counts; cyrillic → ru/uk/bg/sr/mk and arabic → ar/fa/ur
+       by distinctive-character counts (``DISTINCTIVE_CHARS``);
+       devanagari → hi/mr/ne by grammatical-marker word counts
+       (``DISTINCTIVE_SEQS``).
+    2. latin tier — argmax over 32 per-language function-word hit ratios
+       (``LANG_FUNCTION_WORDS``, dict order breaks ties, earliest wins)
+       on the unicode-aware ``lang_tokens`` tokenizer; 'und'
+       (undetermined) when nothing scores above the 0.02 floor.
+
+    Since round 6 the plan is fully ROW-LOCAL: script counts come from
+    one vectorized codepoint pass (``script_counts_onepass``) and the
+    latin tier's per-language hit argmax from one vectorized token pass
+    (``_lang_hits_udf``), both batched into a single ArrowEvalPython
+    node. Zero exchanges, zero joins, one corpus scan — the previous
+    shape exploded every token through a broadcast join, two groupBys
+    and a join back (~1.5 s warm of the ~4 s row at sf1.0, plus two
+    exchanges; before round 5 a per-row Column form's 31 set-membership
+    passes were 6× slower still).
 
     Input: any frame with a ``text`` column, e.g. docs(doc_id, text).
-    Returns ``df`` minus ``text`` plus ``lang_detected``. Reference
-    semantics model: language.py:66-138 (same two-tier rule as the Column
-    form; equivalence pinned by tests)."""
+    Returns ``df`` minus ``text`` plus ``lang_detected``. Checked by the
+    ``lang_detect`` and ``lang_detect_wide`` oracle rows."""
     # row-local since round 6: widen a narrow scan first (no-op at real
     # scale; measured 1.82 -> 0.83 s at sf1.0 on the 2-split parquet)
     df = spread(df)
     c = F.coalesce(F.col("text"), F.lit(""))
-    script_names = list(LANG_SCRIPT_RANGES)
+    script_names = list(LANG_SCRIPT_RANGES)  # index 0 = latin
+    assert script_names[1:] == list(SCRIPT_LANG)  # shared order = tie-break
     names = ([f"__c_{n}" for n in LANG_SCRIPT_RANGES]
              + [f"__d_{n}" for n in DISTINCTIVE_CHARS])
     out_cols = [col for col in df.columns if col != "text"]
@@ -588,9 +479,7 @@ def detect_language_df(df):
     return joined.select(*out_cols, out.alias("lang_detected"))
 
 
-_QUALITY_INTS_UDF = None
-
-
+@functools.cache
 def _quality_ints_udf():
     """Arrow-vectorized integer numerators for the quality gates:
     (text, tokens) → [n_alnum, n_digit, n_stop, n_uniq, sum_tok_len]
@@ -601,9 +490,6 @@ def _quality_ints_udf():
     to the expression form) cannot drift. Replaces two regexp_count
     passes and three interpreted array HOFs (filter/isin,
     array_distinct, aggregate) with one batch pass (guide §4.2)."""
-    global _QUALITY_INTS_UDF
-    if _QUALITY_INTS_UDF is not None:
-        return _QUALITY_INTS_UDF
     from pyspark.sql.types import ArrayType, LongType
 
     stop_set = frozenset(STOPWORDS)
@@ -650,7 +536,6 @@ def _quality_ints_udf():
             np.add.at(out[:, 4], trow, tok_len)
         return pd.Series(list(out))
 
-    _QUALITY_INTS_UDF = _ints
     return _ints
 
 
@@ -803,9 +688,7 @@ def rolling_prefix_hash(text_col, prefix_chars: int = 256) -> Column:
 # repetition signals (Gopher-style, Rae et al. 2021 appendix A1.1)
 # ---------------------------------------------------------------------------
 
-_REP_STATS_UDF = None
-
-
+@functools.cache
 def _rep_stats_udf():
     """Arrow-vectorized per-doc repetition stats: token array →
     [mx1, dup1, mx2, dup2, mx3, dup3] (bigint), where for each n-gram
@@ -820,9 +703,6 @@ def _rep_stats_udf():
     keys for all rows at once, lexsort by (row, gram), run-length counts,
     and per-row max / dup via ``reduceat`` — the same vectorized shape as
     ``script_counts_onepass``/``_rolling_shingle_hashes``."""
-    global _REP_STATS_UDF
-    if _REP_STATS_UDF is not None:
-        return _REP_STATS_UDF
     from pyspark.sql.types import ArrayType, LongType
 
     @F.pandas_udf(ArrayType(LongType()))
@@ -880,7 +760,6 @@ def _rep_stats_udf():
                     np.where(counts >= 2, counts, 0), rb)
         return pd.Series(list(out))
 
-    _REP_STATS_UDF = _stats
     return _stats
 
 

@@ -135,9 +135,6 @@ def with_extracted_text(df):
     ``preprocess_text(strip_html(html))`` per url; NULL html rows keep their
     preprocessed existing text.
     """
-    from .. import ensure_udf_serializable
-
-    ensure_udf_serializable()
     return df.withColumn("text", extract_text_udf(F.col("html"), F.col("text")))
 
 

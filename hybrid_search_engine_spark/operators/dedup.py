@@ -28,6 +28,8 @@ degenerate bands).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -133,9 +135,7 @@ def char_shingles(col, k: int = 3):
     return shingles_of(norm_content(col), k)
 
 
-_MD5_SIG_UDFS: dict = {}
-
-
+@functools.cache
 def _md5_minhash_udf(num_perm: int, k: int):
     """Arrow-vectorized md5 MinHash: text → array<string>[num_perm] of
     8-hex-char slices — BIT-IDENTICAL to the explode + md5 + min plan it
@@ -151,9 +151,6 @@ def _md5_minhash_udf(num_perm: int, k: int):
     digest slices with minimum.reduceat. String min over fixed-width
     lowercase hex == numeric min over the big-endian uint32 slice, so
     minima are computed numerically and formatted back with '%08x'."""
-    key = (num_perm, k)
-    if key in _MD5_SIG_UDFS:
-        return _MD5_SIG_UDFS[key]
     import hashlib
 
     from pyspark.sql.types import ArrayType, StringType
@@ -229,7 +226,6 @@ def _md5_minhash_udf(num_perm: int, k: int):
                for r in range(n)]
         return pd.Series(out)
 
-    _MD5_SIG_UDFS[key] = sig_udf
     return sig_udf
 
 
@@ -266,8 +262,6 @@ def _splitmix64(z):
     z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
     return z ^ (z >> np.uint64(31))
 
-
-_SIG_UDFS: dict = {}
 
 _B = np.uint64(1099511628211)  # FNV64 prime — rolling-hash base
 
@@ -319,6 +313,7 @@ def _rolling_shingle_hashes(s: pd.Series, k: int):
     return H, out_off
 
 
+@functools.cache
 def _minhash_sig_udf(num_perm: int, k: int):
     """Arrow-vectorized per-row MinHash: text → array<bigint>[num_perm].
 
@@ -326,13 +321,7 @@ def _minhash_sig_udf(num_perm: int, k: int):
     pass per batch), then per permutation i sig_i = min over the row's
     shingles of splitmix64(h ^ seed_i) via minimum.reduceat. min over a
     multiset equals min over the set, so no distinct pass is needed."""
-    key = (num_perm, k)
-    if key in _SIG_UDFS:
-        return _SIG_UDFS[key]
     from pyspark.sql.types import ArrayType, LongType
-
-    from .. import ensure_udf_serializable
-    ensure_udf_serializable()
 
     seeds = _splitmix64(np.arange(1, num_perm + 1, dtype=np.uint64))
 
@@ -367,13 +356,10 @@ def _minhash_sig_udf(num_perm: int, k: int):
             sig[i] = np.minimum.reduceat(z, out_off)
         return pd.Series(list(sig.T.astype(np.int64)))
 
-    _SIG_UDFS[key] = sig_udf
     return sig_udf
 
 
-_ARR_UDFS: dict = {}
-
-
+@functools.cache
 def _shingle_arr_udf(k: int):
     """Arrow-vectorized per-row shingle SET: text → sorted distinct
     array<bigint> of the row's k-gram rolling hashes — the verify-side doc
@@ -384,12 +370,7 @@ def _shingle_arr_udf(k: int):
     (P ≈ |union|²/2⁶⁵ ≈ 10⁻¹³ for 10⁴-shingle docs; a collision perturbs
     that pair's jaccard by 1/|union|). Identical shingle sets hash
     identically, so exact duplicates stay J = 1.0 bit for bit."""
-    if k in _ARR_UDFS:
-        return _ARR_UDFS[k]
     from pyspark.sql.types import ArrayType, LongType
-
-    from .. import ensure_udf_serializable
-    ensure_udf_serializable()
 
     @F.pandas_udf(ArrayType(LongType()))
     def arr_udf(s: pd.Series) -> pd.Series:
@@ -402,7 +383,6 @@ def _shingle_arr_udf(k: int):
         return pd.Series([np.unique(Hs[bounds[r]:bounds[r + 1]])
                           for r in range(n)])
 
-    _ARR_UDFS[k] = arr_udf
     return arr_udf
 
 
@@ -506,19 +486,12 @@ def _jaccard(xa: np.ndarray, xb: np.ndarray) -> float:
     return inter / denom if denom else 1.0
 
 
-_JACCARD_UDF: list = []
-
-
+@functools.cache
 def _jaccard_of_arrays():
     """Exact set Jaccard of two sorted-distinct int64 arrays per row
     (``_shingle_arr_udf`` output). numpy sorted-merge intersection —
     ~tens of µs per pair at web-page shingle counts."""
-    if _JACCARD_UDF:
-        return _JACCARD_UDF[0]
     from pyspark.sql.types import DoubleType
-
-    from .. import ensure_udf_serializable
-    ensure_udf_serializable()
 
     @F.pandas_udf(DoubleType())
     def jacc(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -526,7 +499,6 @@ def _jaccard_of_arrays():
             [_jaccard(np.asarray(xa, np.int64), np.asarray(xb, np.int64))
              for xa, xb in zip(a, b)], dtype=np.float64)
 
-    _JACCARD_UDF.append(jacc)
     return jacc
 
 
@@ -598,9 +570,6 @@ def _verify_pairs_broadcast(cand: DataFrame, arrs_a: DataFrame,
     cost 1.0-1.4 s at 128 partitions vs ~0.5 s at 32 — guide §4's
     "fewer, larger batches" applied to task granularity)."""
     from pyspark.sql import types as T
-
-    from .. import ensure_udf_serializable
-    ensure_udf_serializable()
 
     pack_a = _packed_arrays(arrs_a)
     pack_b = pack_a if arrs_b is arrs_a else _packed_arrays(arrs_b)
@@ -762,11 +731,8 @@ def minhash_lsh_pairs(docs: DataFrame, num_perm: int = 16,
 
 def near_dup_check_incremental(new_docs: DataFrame, corpus_docs: DataFrame,
                                band_table: DataFrame | None = None,
-                               num_perm: int = 16,
-                               bands: int = 4, shingle_k: int = 3,
                                jaccard_threshold: float = 0.8,
-                               probe_bucket_cap: int = 200,
-                               signatures: str = "fast") -> DataFrame:
+                               probe_bucket_cap: int = 200) -> DataFrame:
     """new_docs(doc_id, text), corpus_docs(doc_id, text) → (doc_id, dup_of,
     jaccard), materialized: for each NEW doc, the existing corpus docs it
     near-duplicates — the reference's per-insert dedup check
@@ -785,14 +751,18 @@ def near_dup_check_incremental(new_docs: DataFrame, corpus_docs: DataFrame,
     table buckets at probe time (a boilerplate band shared by millions of
     corpus docs would otherwise fan every probe out by that bucket size).
 
+    One band layout: the probes are ``minhash_band_hashes(new_docs)`` with
+    its defaults (fast signatures, 16 permutations in 4 bands, 3-char
+    shingles), the layout ``dedup_checked_ingest`` writes to its band
+    table. A ``band_table`` built with any other layout joins nothing and
+    reports no duplicates.
+
     Feed the output to ``apply_dedup_action`` (rename dup_of → doc_a,
     doc_id → doc_b) for SKIP/MERGE/FLAG policy."""
     if band_table is None:
-        band_table = minhash_band_hashes(corpus_docs, num_perm, bands,
-                                         shingle_k, signatures)
+        band_table = minhash_band_hashes(corpus_docs)
     band_table = _cap_buckets(band_table, probe_bucket_cap)
-    probes = minhash_band_hashes(new_docs, num_perm, bands, shingle_k,
-                                 signatures)
+    probes = minhash_band_hashes(new_docs)
     cand = (probes.select(F.col("doc_id").alias("doc_a"),
                           "band_id", "band_hash")
             .join(band_table.select(F.col("doc_id").alias("doc_b"),
@@ -800,8 +770,8 @@ def near_dup_check_incremental(new_docs: DataFrame, corpus_docs: DataFrame,
                   ["band_id", "band_hash"])
             .where(F.col("doc_a") != F.col("doc_b"))
             .select("doc_a", "doc_b").distinct())
-    return (_verify_pairs(cand, new_docs, corpus_docs, shingle_k,
-                          jaccard_threshold)
+    return (_verify_pairs(cand, new_docs, corpus_docs, shingle_k=3,
+                          jaccard_threshold=jaccard_threshold)
             .select(F.col("doc_a").alias("doc_id"),
                     F.col("doc_b").alias("dup_of"), "jaccard"))
 

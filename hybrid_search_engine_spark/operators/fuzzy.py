@@ -84,10 +84,8 @@ def lexical_fuzzy_scores(candidates: DataFrame, query: str,
                          w_fuzzy: float = 0.7, w_overlap: float = 0.3
                          ) -> DataFrame:
     """candidates(doc_id, text, …) → + lexical_score (core.py:191 weights)."""
-    from .. import ensure_udf_serializable
     from ..reference_semantics import tokenize
 
-    ensure_udf_serializable()
     q_tokens = sorted(set(tokenize(query)))
     qlen = max(len(q_tokens), 1)
 

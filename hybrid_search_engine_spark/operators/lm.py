@@ -57,9 +57,6 @@ def _lm_score_udf(logp_bc):
     size(tokenize(text)) > 0 filter gets pushed to the scan and
     re-evaluates the tokenizer a second time (observed in the plan).
     Empty rows yield (0, NaN) and are filtered out by the caller."""
-    from .. import ensure_udf_serializable
-
-    ensure_udf_serializable()
 
     @F.pandas_udf("n_tokens bigint, avg_nll double")
     def score(toks: pd.Series) -> pd.DataFrame:

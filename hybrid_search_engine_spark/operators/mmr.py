@@ -76,9 +76,6 @@ def mmr_rerank(candidates: DataFrame, k: int, lambda_param: float = 0.5
     standard total order. The relevance fed to the λ-tradeoff is min-max
     normalized per pool with the reference's +1e-8 denominator
     (pipelines.py:588)."""
-    from .. import ensure_udf_serializable
-
-    ensure_udf_serializable()
     df = candidates.select("query_id", "doc_id",
                            F.col("score").cast("double").alias("score"),
                            F.col("embedding").alias("emb"))

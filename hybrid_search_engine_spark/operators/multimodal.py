@@ -144,9 +144,6 @@ def extract_features(media: DataFrame, batch_rows: int = 64,
 
     mapInPandas with an explicit small batch bound: payloads are big, so the
     per-batch row count — not Spark's default 10k — governs worker memory."""
-    from .. import ensure_udf_serializable
-
-    ensure_udf_serializable()
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

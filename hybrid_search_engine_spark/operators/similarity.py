@@ -68,9 +68,6 @@ def knn_batch_pandas(spark: SparkSession, emb: DataFrame,
     global merge (round-half-up(cosine, 9) desc, vec_id asc), so pruning is
     lossless: batch-local top-k under a total order commutes with the
     global top-k."""
-    from .. import ensure_udf_serializable
-
-    ensure_udf_serializable()
     qids = sorted(queries)
     qm = np.array([queries[q] for q in qids], dtype=np.float64)
     qm /= np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
@@ -201,9 +198,6 @@ def build_ivf_index(emb: DataFrame, centroids: np.ndarray) -> DataFrame:
 
     Write the result ``partitionBy("list_id")`` (save_ivf_index) and probes
     read only nprobe list directories."""
-    from .. import ensure_udf_serializable
-
-    ensure_udf_serializable()
     C = np.asarray(centroids, dtype=np.float64)
 
     @F.pandas_udf("int")

@@ -13,6 +13,7 @@ native Spark expressions (SURVEY.md §2 F4-F6, SO5, A9/T7).
 
 from __future__ import annotations
 
+import functools
 import re
 
 import pandas as pd
@@ -183,24 +184,15 @@ def merge_paragraph_chunks(text: str, min_length: int = 50,
     return chunks
 
 
-_PARA_UDF = []
-
-
+@functools.cache
 def _paragraph_merge_udf():
-    if _PARA_UDF:
-        return _PARA_UDF[0]
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
-
-    from .. import ensure_udf_serializable
-
-    ensure_udf_serializable()
 
     @pandas_udf(T.ArrayType(T.StringType()))
     def _merge(s: pd.Series) -> pd.Series:
         return s.map(lambda t: merge_paragraph_chunks(t or ""))
 
-    _PARA_UDF.append(_merge)
     return _merge
 
 
@@ -264,10 +256,8 @@ def extract_snippets(df: DataFrame, query: str,
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
-    from .. import ensure_udf_serializable
     from ..reference_semantics import tokenize
 
-    ensure_udf_serializable()
     tokens = sorted(set(tokenize(query.lower())))
     tok_res = [re.compile(r"\b" + re.escape(t) + r"\b") for t in tokens]
     mark_re = (re.compile("(?i)\\b(" + "|".join(re.escape(t) for t in tokens)

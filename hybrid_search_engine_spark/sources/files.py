@@ -52,9 +52,6 @@ def discover_documents(spark: SparkSession, data_dir: str,
     One distributed binaryFile scan; the glob filter prunes at listing time
     so non-matching files are never opened.
     """
-    from .. import ensure_udf_serializable
-
-    ensure_udf_serializable()
     glob = "*.{" + ",".join(e.lstrip(".") for e in extensions) + "}"
     raw = (
         spark.read.format("binaryFile")

@@ -1,14 +1,17 @@
 """Table loaders for the driver testdata and the engine's pages corpus.
 
-The north-rule input is an *Iceberg* table of web pages. Every consumer in
-this repo goes through :func:`load_pages` / :func:`load_table`, so the
-storage format is a one-line swap here: ``format="iceberg"`` reads a
-catalog table (snapshot-pinnable — the build manifest's
-``source_fingerprint`` becomes the snapshot id, see SCALE.md §5), while
-the sandbox default stays parquet. The Iceberg runtime jars are not
-installed in this environment, so the iceberg path raises a clear error
-here rather than an opaque ClassNotFound mid-plan; the test pins that
-behavior.
+The north-rule input is an *Iceberg* table of web pages. The contract
+queries read through :func:`load_table`, and the jobs' ``--format iceberg``
+through :func:`load_pages`: ``format="iceberg"`` reads a catalog table
+(snapshot-pinnable — the build manifest's ``source_fingerprint`` becomes
+the snapshot id, see SCALE.md §5), while the sandbox default stays
+parquet. Other readers do not come here: ``jobs/`` reads every other format
+with ``spark.read.format``, ``streaming/ingest.py`` reads its segment and
+dedup state as parquet, and ``perfbench/`` reads its generated corpora as
+parquet, so moving those to another format means changing them too.
+The Iceberg runtime jars are not installed in this environment, so the
+iceberg path raises a clear error here rather than an opaque
+ClassNotFound mid-plan; the test pins that behavior.
 """
 
 from __future__ import annotations

@@ -186,7 +186,9 @@ def test_ivf_sidecar_write_is_atomic(spark, emb, tmp_path, monkeypatch):
 # ---------------------------------------------------------------------------
 
 def test_detect_language(spark):
-    from hybrid_search_engine_spark.functions.analysis import detect_language
+    from hybrid_search_engine_spark.functions.analysis import (
+        detect_language_df,
+    )
 
     df = spark.createDataFrame([
         (1, "the cat is on the mat and it is happy with this"),
@@ -195,8 +197,8 @@ def test_detect_language(spark):
         (4, "el perro es grande y la casa es blanca con el gato"),
         (5, "zqx wvu kjh"),
     ], "id int, text string")
-    got = {r["id"]: r["lang"] for r in
-           df.select("id", detect_language("text").alias("lang")).collect()}
+    got = {r["id"]: r["lang_detected"] for r in
+           detect_language_df(df).collect()}
     assert got == {1: "en", 2: "de", 3: "fr", 4: "es", 5: "und"}
 
 
@@ -207,23 +209,25 @@ def test_detect_language_wide(spark):
     64 languages, exceeding langdetect's 55 (reference
     language.py:66-138)."""
     from hybrid_search_engine_spark.contract_ext import LANG_PHRASES
-    from hybrid_search_engine_spark.functions.analysis import detect_language
+    from hybrid_search_engine_spark.functions.analysis import (
+        detect_language_df,
+    )
 
     df = spark.createDataFrame(
         [(i, lang, phrase) for i, (lang, phrase) in enumerate(LANG_PHRASES)],
         "id int, expected string, text string")
-    rows = df.select("id", "expected",
-                     detect_language("text").alias("lang")).collect()
-    assert all(r["lang"] == r["expected"] for r in rows), [
-        (r["id"], r["expected"], r["lang"]) for r in rows
-        if r["lang"] != r["expected"]]
+    rows = detect_language_df(df).collect()
+    assert len(rows) == len(LANG_PHRASES)
+    assert all(r["lang_detected"] == r["expected"] for r in rows), [
+        (r["id"], r["expected"], r["lang_detected"]) for r in rows
+        if r["lang_detected"] != r["expected"]]
     # pure-han chinese vs han+kana japanese disambiguation; han without
     # any simplified/traditional signal defaults to zh-cn
     mixed = spark.createDataFrame(
         [(0, "日本語のテキストです"), (1, "中文文本没有假名")],
         "id int, text string")
-    got = {r["id"]: r["l"] for r in
-           mixed.select("id", detect_language("text").alias("l")).collect()}
+    got = {r["id"]: r["lang_detected"] for r in
+           detect_language_df(mixed).collect()}
     assert got == {0: "ja", 1: "zh-cn"}
 
 
@@ -232,7 +236,6 @@ def test_detect_language_subtier_tails(spark):
     simplified/traditional characters, hi/mr/ne split by within-devanagari
     grammatical markers."""
     from hybrid_search_engine_spark.functions.analysis import (
-        detect_language,
         detect_language_df,
     )
 
@@ -251,9 +254,6 @@ def test_detect_language_subtier_tails(spark):
     df = spark.createDataFrame([(i, t) for i, t, _ in rows],
                                "doc_id int, text string")
     want = {i: lang for i, _, lang in rows}
-    col_form = {r["doc_id"]: r["l"] for r in
-                df.select("doc_id", detect_language("text").alias("l")).collect()}
-    assert col_form == want
     df_form = {r["doc_id"]: r["lang_detected"]
                for r in detect_language_df(df).collect()}
     assert df_form == want
@@ -466,33 +466,21 @@ def test_autocomplete(spark):
         ("machine learning", 3), ("machine vision", 1)]
 
 
-def test_detect_language_df_equivalence(spark, sf_dir):
-    """The join-plan detect_language_df must agree with the Column form on
-    every fixture phrase (all 60 languages + und/mixed cases) and on the
-    real sf documents table."""
-    from hybrid_search_engine_spark.contract_ext import LANG_PHRASES
+def test_detect_language_df_edge_rows(spark):
+    """Rows no fixture phrase covers: no function word, empty text, han
+    with kana, and a latin mix whose ratio ties break to the earliest
+    language."""
     from hybrid_search_engine_spark.functions.analysis import (
-        detect_language,
         detect_language_df,
     )
 
-    rows = [(i, p) for i, (_, p) in enumerate(LANG_PHRASES)]
-    rows += [(900, "zqx wvu kjh"), (901, ""), (902, "日本語のテキストです"),
-             (903, "mixed the and und der text 123")]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
-    col_form = {r["doc_id"]: r["l"] for r in
-                df.select("doc_id", detect_language("text").alias("l")).collect()}
-    df_form = {r["doc_id"]: r["lang_detected"] for r in
-               detect_language_df(df).collect()}
-    assert col_form == df_form
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .select("doc_id", "text")
-    a = {r["doc_id"]: r["l"] for r in
-         docs.select("doc_id", detect_language("text").alias("l")).collect()}
-    b = {r["doc_id"]: r["lang_detected"] for r in
-         detect_language_df(docs).collect()}
-    assert a == b
+    df = spark.createDataFrame(
+        [(900, "zqx wvu kjh"), (901, ""), (902, "日本語のテキストです"),
+         (903, "mixed the and und der text 123")],
+        "doc_id int, text string")
+    got = {r["doc_id"]: r["lang_detected"] for r in
+           detect_language_df(df).collect()}
+    assert got == {900: "und", 901: "und", 902: "ja", 903: "en"}
 
 
 def test_script_counts_onepass_matches_regexp(spark, sf_dir):

@@ -29,34 +29,20 @@ Tolerance: the reference materializes scores as float32
 relative absorbs only that cast, not real formula drift.
 """
 
-import importlib
 import os
-import sys
-import types
 
 import numpy as np
 import pandas as pd
 import pytest
 
-REF_PKG_DIR = "/root/reference/search_engine"
-
-
-def _load_reference_bm25():
-    """Import reference bm25 as part of a synthetic package so its
-    relative `.extractor` import resolves without running the real
-    package __init__ (which imports polars/fastapi/etc.)."""
-    if "ref_search_engine" not in sys.modules:
-        pkg = types.ModuleType("ref_search_engine")
-        pkg.__path__ = [REF_PKG_DIR]
-        sys.modules["ref_search_engine"] = pkg
-    return importlib.import_module("ref_search_engine.bm25")
+from tests.refload import load
 
 
 @pytest.fixture(scope="module")
 def ref_fit(sf_dir):
     """Reference BM25 fitted on the contract documents table, plus the
     row-position -> doc_id mapping that defines the reference's docIDs."""
-    bm25 = _load_reference_bm25()
+    bm25 = load("bm25")
     pdf = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"),
                           columns=["doc_id", "text"])
     texts = pdf["text"].fillna("").tolist()

@@ -10,6 +10,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from oracle.bm25_oracle import BM25Oracle
+
 N_SHARDS = 8
 
 
@@ -162,6 +164,47 @@ def test_changed_shard_count_rebuilds(spark, docs, tmp_path_factory):
     stored = spark.read.parquet(os.path.join(d, "postings"))
     assert {r[0] for r in stored.select("shard_id").distinct().collect()} \
         == {0, 1, 2, 3}
+
+
+@pytest.mark.parametrize("change", [{"k1": 1.2}, {"block_size": 16}],
+                         ids=["k1", "block_size"])
+def test_changed_bm25_params_rebuild(spark, docs, tmp_path_factory, change):
+    """k1, b and block_size are build lineage: block maxima and block
+    boundaries are baked into the postings, so a build with another value
+    over a complete index rebuilds every shard instead of taking the no-op
+    resume, and scores under the new value."""
+    from hybrid_search_engine_spark.build.manifest import (
+        IndexReader,
+        build_index,
+        read_manifest,
+    )
+
+    d = str(tmp_path_factory.mktemp("bm25_params"))
+    small = docs.orderBy("doc_id").limit(200)
+    build_index(spark, small, d, n_shards=4, k1=1.5, block_size=32)
+    blocks_before = sum(r["n_blocks"] for r in read_manifest(d))
+
+    params = {"k1": 1.5, "block_size": 32, **change}
+    res = build_index(spark, small, d, n_shards=4, **params)
+    assert sorted(res.built_shards) == [0, 1, 2, 3]
+    with open(os.path.join(d, "stats", "corpus.json")) as f:
+        corpus = json.load(f)
+    assert {k: corpus[k] for k in params} == params
+    blocks_after = sum(r["n_blocks"] for r in read_manifest(d))
+    if "block_size" in change:  # smaller blocks: the layout really changed
+        assert blocks_after > blocks_before
+
+    oracle = BM25Oracle(k1=params["k1"]).fit(
+        {r["doc_id"]: r["text"] for r in small.collect()})
+    reader = IndexReader(spark, d)
+    (t1, _), (t2, _) = oracle.df.most_common(2)
+    for query in [t1, f"{t1} {t2}"]:
+        got = reader.search(query, k=10).collect()
+        want = oracle.topk_nonzero(query, k=10)
+        assert want, query
+        assert [r["doc_id"] for r in got] == [i for i, _ in want], query
+        for r, (_, s) in zip(got, want):
+            assert abs(r["score"] - s) <= 1e-6 * max(1.0, abs(s)), (query, r)
 
 
 def test_default_shard_count_follows_cores(spark, docs, tmp_path_factory):

@@ -14,6 +14,11 @@ packaging bug (missing module, relative import, driver-only path
 assumption) fails here and nowhere else.
 
 Skipped when no spark-submit binary is on PATH / in the pyspark install.
+
+The second check is the opposite deployment: a plain SparkSession whose
+driver has the repo on ``sys.path`` and nothing else — no ``PYTHONPATH``,
+no ``--py-files``, a cwd outside the repo. The Python workers cannot import
+the package there, so every UDF must reach them pickled by value.
 """
 
 import json
@@ -84,3 +89,51 @@ def test_spark_submit_pyfiles_local_cluster(tmp_path, pages_1k_path):
              if "Executor added" in ln]
     workers = {ln.split(" on ")[1].split()[0] for ln in added if " on " in ln}
     assert len(workers) >= 2, added[:5]
+
+
+_BY_VALUE_SCRIPT = """
+import json, sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+spark = SparkSession.builder.master("local[1]").getOrCreate()
+from hybrid_search_engine_spark.functions.text import tokenize_nostop_udf
+from hybrid_search_engine_spark.operators.dedup import minhash_signatures_fast
+docs = spark.createDataFrame({rows!r}, "doc_id long, text string")
+# the module-level UDF runs first: its pickled command is fixed at its
+# first use, before any factory below has been called
+toks = sorted([r["doc_id"], r["t"]] for r in docs.select(
+    "doc_id", tokenize_nostop_udf(F.col("text")).alias("t")).collect())
+sigs = sorted([r["doc_id"], r["sig"]]
+              for r in minhash_signatures_fast(docs).collect())
+print(json.dumps({{"toks": toks, "sigs": sigs}}))
+spark.stop()
+"""
+
+
+def test_udfs_ship_by_value_without_import_path(tmp_path):
+    """A driver outside the repo, with PYTHONPATH unset and the repo only
+    on its own sys.path, runs a module-level UDF (tokenize_nostop_udf) and
+    then a factory-built one (minhash_signatures_fast): the workers import
+    nothing of the package, so both must be pickled by value."""
+    import pandas as pd
+
+    from hybrid_search_engine_spark.operators.dedup import _minhash_sig_udf
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    rows = [(1, "The quick brown fox"), (2, "jumps over the lazy dog")]
+    script = tmp_path / "drive.py"
+    script.write_text(_BY_VALUE_SCRIPT.format(repo=repo, rows=rows))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(PYSPARK_PYTHON=sys.executable,
+               PYSPARK_DRIVER_PYTHON=sys.executable)
+    proc = subprocess.run([sys.executable, str(script)], cwd=str(tmp_path),
+                          capture_output=True, text=True, timeout=400,
+                          env=env)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["toks"] == [[1, ["quick", "brown", "fox"]],
+                           [2, ["jumps", "over", "lazy", "dog"]]]
+    want = _minhash_sig_udf(16, 3).func(pd.Series([t for _, t in rows]))
+    assert got["sigs"] == [[i, [int(v) for v in sig]]
+                           for (i, _), sig in zip(rows, want)]
